@@ -115,34 +115,40 @@ object DeletionVectors {
     val spark = doomed.sparkSession
     val live = doomed
       .select(col("bucket"), col("__file").as("file_name"), col("__pos").as("pos"))
-    val tmp = s"$root/.delta-tmp-${java.util.UUID.randomUUID}"
-    live.coalesce(1).write.mode("overwrite").parquet(tmp)
+    val tmp = new Path(s"$root/.delta-tmp-${java.util.UUID.randomUUID}")
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(root).getFileSystem(conf)
-    val parts = fs.listStatus(new Path(tmp)).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-    val n = parts.map { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try {
-        var rows = 0L
-        val it = reader.getFooter.getBlocks.iterator()
-        while (it.hasNext) rows += it.next().getRowCount
-        rows
-      } finally reader.close()
-    }.sum
-    if (n > 0) {
-      val dels = new Path(s"$root/deletes")
-      fs.mkdirs(dels)
-      // Spark names each part `part-<task>-<jobUUID>`, unique per write
-      // job, so renaming into the shared sidecar dir cannot collide
-      parts.foreach { p =>
-        if (!fs.rename(p, new Path(dels, p.getName)))
-          throw new java.io.IOException(s"dv append: could not commit $p")
+    // the tmp dir never outlives the call: a failed write, footer read or
+    // rename still deletes it (readers never see it — it is dot-prefixed —
+    // but each failure would otherwise leak one dir under the table root)
+    try {
+      live.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val parts = fs.listStatus(tmp).map(_.getPath)
+        .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      require(parts.length <= 1,
+        s"dv append: coalesce(1) must commit one part file, found ${parts.length} in $tmp")
+      val n = parts.map { p =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        try {
+          var rows = 0L
+          val it = reader.getFooter.getBlocks.iterator()
+          while (it.hasNext) rows += it.next().getRowCount
+          rows
+        } finally reader.close()
+      }.sum
+      if (n > 0) {
+        val dels = new Path(s"$root/deletes")
+        fs.mkdirs(dels)
+        // Spark names each part `part-<task>-<jobUUID>`, unique per write
+        // job, so renaming into the shared sidecar dir cannot collide
+        parts.foreach { p =>
+          if (!fs.rename(p, new Path(dels, p.getName)))
+            throw new java.io.IOException(s"dv append: could not commit $p")
+        }
       }
-    }
-    fs.delete(new Path(tmp), true)
-    n
+      n
+    } finally fs.delete(tmp, true)
   }
 
   /** Merge-on-read scan: data files minus the positions the sidecar has

@@ -5,6 +5,9 @@ import org.apache.spark.ml.linalg.{Vector => MLVector}
 import org.apache.spark.mllib.clustering.GraftLocalKMeans
 import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Drop-in for `new ml.KMeans()...fit(prepared)` on the engine's
   * SAMPLE-SCALE fit inputs (every trained layout collapses its fit input
@@ -29,10 +32,24 @@ object LocalKMeansFit {
   def fit(prepared: DataFrame, featuresCol: String, predictionCol: String,
           k: Int, seed: Long, maxIter: Int = 20,
           distanceMeasure: String = "euclidean"): KMeansModel = {
+    val parts = numPartitions(prepared.queryExecution.executedPlan)
+    require(parts == 1, s"LocalKMeansFit.fit needs a single-partition input " +
+      s"(repartition(1)); got $parts partitions — collect order would not be MLlib's fold order")
     val points = prepared.select(featuresCol).collect()
       .map(r => OldVectors.fromML(r.getAs[MLVector](0)))
     val centers =
       GraftLocalKMeans.fit(points, k, maxIter, seed, distanceMeasure)
     GraftKMeansBridge.model(centers, distanceMeasure, featuresCol, predictionCol)
+  }
+
+  /** Planned output partition count, read without starting a Spark job:
+    * through an adaptive plan's input plan (its own partitioning is only
+    * known once stages run) and a cached relation's cached plan. 0 when
+    * the plan does not fix it (e.g. a bare file scan).
+    */
+  private def numPartitions(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => numPartitions(a.inputPlan)
+    case m: InMemoryTableScanExec => numPartitions(m.relation.cachedPlan)
+    case other => other.outputPartitioning.numPartitions
   }
 }

@@ -2,15 +2,15 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal, Not, Round, RowNumber, SortOrder, WindowExpression}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Limit, LocalRelation, LogicalPlan, Project, Sort, Window}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Descending, Expression, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Limit, LogicalPlan, Sort, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, LongType}
 
-import graft.expressions.CosineSimilarity
+import graft.operators.Hnsw.Ef
+import graft.plans.RewriteSupport._
 
 /** Transparent GRAPH ANN: the HNSW sibling of [[IvfTopKRewrite]]. A user
   * writes the exact top-k —
@@ -64,7 +64,7 @@ import graft.expressions.CosineSimilarity
   * probe failure (mis-registered dirs, deleted artifacts) logs and falls
   * through to the exact scan instead of failing the user's query.
   */
-object HnswGraphRegistry {
+object HnswGraphRegistry extends PathRegistry {
 
   /** One registered graph index over a corpus table path: the id and
     * embedding column names of the indexed table and the graph dirs
@@ -72,188 +72,106 @@ object HnswGraphRegistry {
     */
   final case class Entry(idCol: String, embCol: String, edgesDir: String,
                          metaDir: String)
+  type E = Entry
 
-  private val registry = new ConcurrentHashMap[String, Entry]()
-  private val probeMemo =
-    new ConcurrentHashMap[(String, Long, Seq[Double], Int), Seq[Long]]()
-  private val batchMemo =
-    new ConcurrentHashMap[(String, Long, Seq[(Long, Seq[Double])], Int), Seq[(Long, Long)]]()
-  private val rangeMemo =
-    new ConcurrentHashMap[(String, Long, Seq[Double], Double), Seq[Long]]()
-  private val rangeBatchMemo =
-    new ConcurrentHashMap[(String, Long, Seq[(Long, Seq[Double])], Double), Seq[(Long, Long)]]()
-  private val generation = new ConcurrentHashMap[String, java.lang.Long]()
-
-  private def canon(path: String): String = RewriteSupport.canon(path)
+  /** Memoized walks keyed by (graph dir, generation, face — None = the
+    * top-Ef beam, Some(t) = the range pool —, the element type of the
+    * arrays the walk scores, panel). The element type must stay in the
+    * key: the single faces cast the literal query to `array<float>` while
+    * a batch panel is walked in its ORIGINAL type, and a double panel and
+    * a float query with equal values can rank round-6 ties differently.
+    */
+  private[plans] val walkMemo =
+    new ConcurrentHashMap[(String, Long, Option[Double], DataType, Seq[(Long, Seq[Double])]), Seq[(Long, Long)]]()
 
   def register(corpusPath: String, idCol: String, embCol: String,
                edgesDir: String, metaDir: String): Unit =
-    registry.put(canon(corpusPath),
-      Entry(idCol, embCol, canon(edgesDir), metaDir))
+    put(corpusPath, Entry(idCol, embCol, canon(edgesDir), metaDir))
 
-  /** Re-arm a PERSISTED registration (IndexCatalog.load): the entry
-    * verbatim plus its mutation generation, so catalog rows — and every
-    * memo freshness key — read identically across a JVM restart.
+  /** Re-arm a PERSISTED registration (IndexCatalog.load) with its graph
+    * dir's mutation generation.
     */
-  def restore(corpusPath: String, e: Entry, gen: Long): Unit = {
-    registry.put(canon(corpusPath), e.copy(edgesDir = canon(e.edgesDir)))
-    if (gen > 0) generation.put(canon(e.edgesDir), gen)
-  }
-
-  /** Drop one registration (the SQL `DROP INDEX` face); the graph
-    * artifacts stay on disk — unregistering stops the rewrites/serving,
-    * it does not delete an index a re-register can re-arm.
-    */
-  def unregister(corpusPath: String): Unit = registry.remove(canon(corpusPath))
-
-  def lookup(rootPaths: Seq[String]): Option[Entry] =
-    rootPaths.iterator.map(p => Option(registry.get(canon(p))))
-      .collectFirst { case Some(e) => e }
-
-  /** Registered (canon table path, entry) rows — the catalog face. */
-  def entries: Seq[(String, Entry)] = {
-    import scala.jdk.CollectionConverters._
-    registry.asScala.toSeq.sortBy(_._1)
-  }
+  def restore(corpusPath: String, e: Entry, gen: Long): Unit =
+    restoreEntry(corpusPath, e.copy(edgesDir = canon(e.edgesDir)), e.edgesDir, gen)
 
   /** Current generation of a graph dir (0 = never mutated) — exposed for
     * the catalog; bumped by [[invalidate]].
     */
-  def generationOfDir(edgesDir: String): Long = generationOf(canon(edgesDir))
+  def generationOfDir(edgesDir: String): Long = generation(edgesDir)
 
-  def isEmpty: Boolean = registry.isEmpty
-
-  def clear(): Unit = {
-    registry.clear(); probeMemo.clear(); batchMemo.clear(); rangeMemo.clear()
-    rangeBatchMemo.clear(); generation.clear()
-    // the batch rules' own probe memos (successes AND declines) hold
-    // results computed against entries this clear just dropped — purge
-    // with them, the IvfIndexRegistry.clear() discipline
-    HnswBatchTopKRewrite.probeMemo.clear()
-    HnswRangeBatchRewrite.probeMemo.clear()
-  }
+  override def clear(): Unit = { super.clear(); walkMemo.clear() }
 
   /** Invalidate memoized probes for a graph whose artifact just mutated —
-    * called by Hnsw.appendToGraph/deleteFromGraph/compactGraph. Bumping
-    * the GENERATION (not just purging) closes the check-then-act race: a
-    * walk that started before the mutation can only insert under the old
-    * generation's key, which no post-mutation lookup ever reads. The old
-    * entries are purged too (they are driver metadata, but no reason to
-    * keep them).
+    * called by Hnsw.appendToGraph/deleteFromGraph/compactGraph: the
+    * generation bump makes every in-flight walk insert under a dead key,
+    * and the old entries are purged too.
     */
-  def invalidate(edgesDir: String): Unit = {
+  override def invalidate(edgesDir: String): Unit = {
+    super.invalidate(edgesDir)
     val dir = canon(edgesDir)
-    generation.merge(dir, 1L, (a, b) => a + b)
-    val it = probeMemo.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == dir) it.remove()
-    val bit = batchMemo.keySet().iterator()
-    while (bit.hasNext) if (bit.next()._1 == dir) bit.remove()
-    val rit = rangeMemo.keySet().iterator()
-    while (rit.hasNext) if (rit.next()._1 == dir) rit.remove()
-    val rbit = rangeBatchMemo.keySet().iterator()
-    while (rbit.hasNext) if (rbit.next()._1 == dir) rbit.remove()
+    walkMemo.keySet().removeIf(_._1 == dir)
   }
-
-  private def generationOf(edgesDir: String): Long =
-    Option(generation.get(edgesDir)).map(_.longValue).getOrElse(0L)
 
   /** The graph-index probe: run the bounded beam walk for the literal
     * query vector, return the FULL final beam's ids (≤ Ef, rnk order).
-    * Memoized per (graph, generation, qVec, Ef) — the optimizer may
-    * visit the same plan more than once (fixed-point batches, AQE
-    * re-planning) and the walk is a pure function of (graph, qVec)
-    * within a generation. The walk itself runs OUTSIDE the map (a
-    * seconds-long Spark job must not hold a ConcurrentHashMap bin lock
-    * against concurrent planning threads); a racing duplicate walk is
-    * idempotent and putIfAbsent keeps one result.
     */
-  def beamIds(spark: SparkSession, e: Entry, qVec: Array[Double]): Seq[Long] = {
-    val key = (e.edgesDir, generationOf(e.edgesDir), qVec.toSeq,
-      graft.operators.Hnsw.Ef)
-    Option(probeMemo.get(key)).getOrElse {
-      import spark.implicits._
-      import org.apache.spark.sql.functions.col
-      val qdf = Seq((0L, qVec.toSeq)).toDF("qid", "q_emb")
-        .select(col("qid"), col("q_emb").cast("array<float>").as("q_emb"))
-      val walked = graft.operators.Hnsw.searchIn(spark, e.edgesDir, e.metaDir,
-          qdf, k = graft.operators.Hnsw.Ef)
-        .orderBy(col("rnk")).collect().map(_.getLong(1)).toSeq
-      RewriteSupport.boundedPut(probeMemo, key, walked)
-      walked
-    }
-  }
+  def beamIds(spark: SparkSession, e: Entry, qVec: Array[Double]): Seq[Long] =
+    walk(spark, e, Seq((0L, qVec.toSeq)), FloatType, None)(floatQuery(spark, qVec)).map(_._2)
 
   /** The RANGE graph probe: run the bounded range walk (schedule +
     * bounded range hops, Hnsw.searchRangeIn) for the literal query
-    * vector, return every visited id with round-6 sim ≥ t. Same
-    * memoization/locking posture as [[beamIds]]; the result is bounded
-    * by the walk's own caps (≤ Ef + RangeHops·RangeBeamCap·MaxDegree
+    * vector, return every visited id with round-6 sim ≥ t — bounded by
+    * the walk's own caps (≤ Ef + RangeHops·RangeBeamCap·MaxDegree
     * driver-metadata ids), independent of corpus size.
     */
   def rangeIds(spark: SparkSession, e: Entry, qVec: Array[Double],
-               t: Double): Seq[Long] = {
-    val key = (e.edgesDir, generationOf(e.edgesDir), qVec.toSeq, t)
-    Option(rangeMemo.get(key)).getOrElse {
-      import spark.implicits._
-      import org.apache.spark.sql.functions.col
-      val qdf = Seq((0L, qVec.toSeq)).toDF("qid", "q_emb")
-        .select(col("qid"), col("q_emb").cast("array<float>").as("q_emb"))
-      val walked = graft.operators.Hnsw.searchRangeIn(spark, e.edgesDir,
-          e.metaDir, qdf, t)
-        .orderBy(col("vec_id")).collect().map(_.getLong(1)).toSeq
-      RewriteSupport.boundedPut(rangeMemo, key, walked)
+               t: Double): Seq[Long] =
+    walk(spark, e, Seq((0L, qVec.toSeq)), FloatType, Some(t))(floatQuery(spark, qVec)).map(_._2)
+
+  private def floatQuery(spark: SparkSession, qVec: Array[Double]): DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    Seq((0L, qVec.toSeq)).toDF("qid", "q_emb")
+      .select(col("qid"), col("q_emb").cast("array<float>").as("q_emb"))
+  }
+
+  /** THE memoized graph walk, both faces and any panel size: ONE bounded
+    * walk for the whole panel (every hop's pass shared, per-qid beams or
+    * frontiers) returning every (qid, id) pair — the top-Ef beam in rnk
+    * order when `t` is None, else every visited id with round-6 sim ≥ t
+    * in id order. `qdf` holds the panel as (qid, q_emb) with `elem` its
+    * element type, built only on a memo miss. Memoized per (graph,
+    * generation, face, element type, panel): the optimizer may visit the
+    * same plan more than once (fixed-point batches, AQE re-planning) and
+    * the walk is a pure function of those within a generation. The walk
+    * runs OUTSIDE the map (a seconds-long Spark job must not hold a
+    * ConcurrentHashMap bin lock against concurrent planning threads); a
+    * racing duplicate walk is idempotent and putIfAbsent keeps one.
+    */
+  def walk(spark: SparkSession, e: Entry, panel: Seq[(Long, Seq[Double])],
+           elem: DataType, t: Option[Double])(qdf: => DataFrame): Seq[(Long, Long)] = {
+    import org.apache.spark.sql.functions.col
+    val key = (e.edgesDir, generationOfDir(e.edgesDir), t, elem, panel)
+    Option(walkMemo.get(key)).getOrElse {
+      val walked = (t match {
+        case None => graft.operators.Hnsw.searchIn(spark, e.edgesDir, e.metaDir, qdf, k = Ef)
+          .orderBy(col("qid"), col("rnk"))
+        case Some(th) => graft.operators.Hnsw.searchRangeIn(spark, e.edgesDir, e.metaDir, qdf, th)
+          .orderBy(col("qid"), col("vec_id"))
+      }).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      boundedPut(walkMemo, key, walked)
       walked
     }
   }
 
-  /** The BATCH RANGE graph probe ([[rangeIds]] at N queries): ONE
-    * bounded range walk for the whole panel (schedule descent + capped
-    * range hops, per-qid frontiers — Hnsw.searchRangeIn already takes a
-    * panel), returning every (qid, visited id with round-6 sim ≥ t)
-    * pair. Memoized per (graph, generation, canonical panel, t); `qdf`
-    * carries the panel in its ORIGINAL element type so the walk scores
-    * the exact arrays the user's predicate re-scores. Same locking
-    * posture as every probe: the walk runs outside any map lock.
+  /** [[walk]] over a collected batch panel ([[RewriteSupport.panelProbe]]),
+    * walked in its original element type; an empty result declines.
     */
-  def rangeIdsBatch(spark: SparkSession, e: Entry,
-                    panel: Seq[(Long, Seq[Double])],
-                    qdf: org.apache.spark.sql.DataFrame,
-                    t: Double): Seq[(Long, Long)] = {
-    val key = (e.edgesDir, generationOf(e.edgesDir), panel, t)
-    Option(rangeBatchMemo.get(key)).getOrElse {
-      import org.apache.spark.sql.functions.col
-      val walked = graft.operators.Hnsw.searchRangeIn(spark, e.edgesDir,
-          e.metaDir, qdf, t)
-        .orderBy(col("qid"), col("vec_id")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      RewriteSupport.boundedPut(rangeBatchMemo, key, walked)
-      walked
-    }
-  }
-
-  /** The BATCH graph probe ([[beamIds]] at N queries): ONE bounded walk
-    * for the whole panel — every hop's pass is shared, per-qid beams —
-    * returning every (qid, beam id) pair (≤ Ef per qid). Memoized per
-    * (graph, generation, panel, Ef) with the panel canonicalized to
-    * sorted (qid, doubles); `qdf` carries the panel in its ORIGINAL
-    * element type so the walk's round-6 cosine scores the exact arrays
-    * the user's query ranks. Same locking posture as [[beamIds]]: the
-    * walk runs outside any map lock, a racing duplicate is idempotent.
-    */
-  def beamIdsBatch(spark: SparkSession, e: Entry,
-                   panel: Seq[(Long, Seq[Double])],
-                   qdf: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] = {
-    val key = (e.edgesDir, generationOf(e.edgesDir), panel,
-      graft.operators.Hnsw.Ef)
-    Option(batchMemo.get(key)).getOrElse {
-      import org.apache.spark.sql.functions.col
-      val walked = graft.operators.Hnsw.searchIn(spark, e.edgesDir, e.metaDir,
-          qdf, k = graft.operators.Hnsw.Ef)
-        .orderBy(col("qid"), col("rnk")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
-      RewriteSupport.boundedPut(batchMemo, key, walked)
-      walked
-    }
+  private[plans] def walkPanel(spark: SparkSession, e: Entry, panel: Seq[(Long, Seq[Double])],
+                               pinned: () => DataFrame, t: Option[Double]): Option[Seq[(Long, Long)]] = {
+    val qdf = pinned()
+    val elem = qdf.schema("q_emb").dataType.asInstanceOf[ArrayType].elementType
+    Some(walk(spark, e, panel, elem, t)(qdf)).filter(_.nonEmpty)
   }
 }
 
@@ -269,7 +187,7 @@ case class HnswTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     plan.transformDown {
       case limit @ Limit(le @ Literal(k: Int, IntegerType),
           sort @ Sort(SortOrder(ref: AttributeReference, Descending, _, _) +: tail, true, child, _))
-          if k <= graft.operators.Hnsw.Ef =>
+          if k <= Ef =>
         tryRewrite(ref, tail, k, child) match {
           // Rebuild via Limit.apply — the extractor matched
           // GlobalLimit(LocalLimit(sort)); see IvfTopKRewrite for why
@@ -280,110 +198,34 @@ case class HnswTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** sim expression behind the sort attribute: require the WALK'S OWN
-    * ranking form — `round(cosine_sim(<column>, <literal vector>), 6)`
-    * (either argument order). A different rounding scale (or the raw
-    * cosine) resolves round-6 ties differently over the full corpus than
-    * over the 16-id beam, so anything else falls through.
-    */
-  private def simQueryVector(e: Expression): Option[(AttributeReference, Array[Double])] = e match {
-    case r: Round => r.scale match {
-      case Literal(6, IntegerType) => r.child match {
-        case CosineSimilarity(a: AttributeReference, l: Literal) =>
-          RewriteSupport.literalVec(l).map((a, _))
-        case CosineSimilarity(l: Literal, a: AttributeReference) =>
-          RewriteSupport.literalVec(l).map((a, _))
-        case _ => None
-      }
-      case _ => None
-    }
-    case _ => None
-  }
-
-  /** The plan between the sort and the scan must be a pure
-    * Project/Filter spine ending at THE registered relation — any other
-    * operator (join, aggregate, sample, distinct, set op) shapes the row
-    * set in ways the injected id set cannot account for.
-    */
-  private def pureSpine(p: LogicalPlan): Boolean = {
-    import org.apache.spark.sql.execution.datasources.LogicalRelation
-    p match {
-      case _: LogicalRelation => true
-      case pr: Project => pureSpine(pr.child)
-      case f: Filter => pureSpine(f.child)
-      case _ => false
-    }
-  }
-
-  /** Benign-id-exclusion audit of the spine's Filter conditions — the
-    * ONE definition in [[RewriteSupport.benignExclusions]], shared with
-    * the batch face.
-    */
-  private def benignExclusions(conds: Seq[Expression],
-                               idAttr: AttributeReference): Option[Int] =
-    RewriteSupport.benignExclusions(conds, idAttr)
-
   private def tryRewrite(ref: AttributeReference, sortTail: Seq[SortOrder],
-                         k: Int, child: LogicalPlan): Option[LogicalPlan] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val simExpr = child.collect { case p: Project => p.projectList }.flatten
-      .collectFirst { case a: Alias if a.exprId == ref.exprId => a.child }
+                         k: Int, child: LogicalPlan): Option[LogicalPlan] =
     for {
-      (simAttr, qVec) <- simExpr.flatMap(simQueryVector)
-      if pureSpine(child)
-      rel <- child.collectFirst {
-        case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
-          if HnswGraphRegistry.lookup(fs.location.rootPaths.map(_.toString)).isDefined => r
-      }
-      entry <- HnswGraphRegistry.lookup(
-        rel.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString))
+      // the walk's own ranking form only: round-6 (see Round6)
+      (simAttr, qVec) <- aliasOf(ref, child).flatMap(cosineUnder(_, Round6)).flatMap(literalCosine)
+      (rel, conds) <- spineTo[LogicalRelation](child)
+      entry <- HnswGraphRegistry.lookupRel(rel)
       idAttr <- rel.output.find(_.name == entry.idCol)
-      // any trailing sort key must be the walk's own tiebreak: the
-      // registered id, ascending — a different secondary key resolves
-      // sim ties over the full corpus, which 16 beam ids cannot replay
-      if sortTail.isEmpty || (sortTail match {
-        case Seq(SortOrder(a: AttributeReference, Ascending, _, _)) =>
-          a.exprId == idAttr.exprId
-        case _ => false
-      })
+      if idTiebreak(sortTail, idAttr)
       // the ranked column must BE the indexed embedding column — another
       // vector column on the same table ranks differently (wrong-index
       // hijack) and must keep its exact scan
-      if rel.output.exists(o => o.exprId == simAttr.exprId && o.name == entry.embCol)
+      if isColumn(rel, simAttr, entry.embCol)
       // idempotence under the fixed-point optimizer batch: fire once —
       // the ONE shared matcher, conjunct-granular (a benign `id <> 5`
       // exclusion must not read as the injected prune) and covering the
       // EqualTo form OptimizeIn folds a 1-element In into
-      if !child.exists {
-        case f: Filter => RewriteSupport.idPrunePredicate(idAttr)(f.condition)
-        case _ => false
-      }
+      if !conds.exists(idPrunePredicate(idAttr))
       // user predicates: provably benign id exclusions only, with enough
       // beam headroom that the filtered top-k is still inside it
-      exCount <- benignExclusions(
-        child.collect { case f: Filter => f.condition }, idAttr)
-      if k + exCount <= graft.operators.Hnsw.Ef
-      // the probe itself: a mis-registered or since-deleted artifact must
-      // fail the REWRITE (fall through to the exact scan), never the
-      // user's query; an empty beam (nothing to inject) falls through too
-      ids <- try {
-        val b = HnswGraphRegistry.beamIds(spark, entry, qVec)
-        if (b.nonEmpty) Some(b) else None
-      } catch {
-        case scala.util.control.NonFatal(ex) =>
-          logWarning(s"HnswTopKRewrite: graph probe failed for " +
-            s"${entry.edgesDir} — serving the exact scan", ex)
-          None
-      }
+      exCount <- benignExclusions(conds, idAttr)
+      if k + exCount <= Ef
+      ids <- probed("HnswTopKRewrite", entry.edgesDir)(HnswGraphRegistry.beamIds(spark, entry, qVec))
     } yield {
       logInfo(s"HnswTopKRewrite: pruning ${rel.simpleString(50)} to " +
         s"${entry.idCol} IN (${ids.length} graph-served ids)")
-      child.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          Filter(In(idAttr, ids.map(Literal(_))), r)
-      }
+      pruneAt(child, rel, inList(idAttr, ids))
     }
-  }
 }
 
 /** Batch-face transparent graph rewrite — [[HnswTopKRewrite]] at N queries
@@ -423,226 +265,56 @@ case class HnswTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   */
 case class HnswBatchTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (HnswGraphRegistry.isEmpty) return plan
     plan.transformDown {
       case f @ Filter(cond, w: Window) =>
-        tryRewrite(cond, w) match {
-          case Some(nw) => Filter(cond, nw)
-          case None     => f
-        }
+        tryRewrite(cond, w).map(Filter(cond, _)).getOrElse(f)
     }
   }
-
-  /** The window→join spine: Project/Filter only, conditions accumulated
-    * for the benign-exclusion audit.
-    */
-  private def spineJoin(p: LogicalPlan): Option[(Join, Seq[Expression])] = p match {
-    case j: Join => Some((j, Nil))
-    case pr: Project => spineJoin(pr.child)
-    case fl: Filter => spineJoin(fl.child).map { case (j, cs) => (j, fl.condition +: cs) }
-    case _ => None
-  }
-
-  /** The join→relation spine on the corpus side, same accumulation. */
-  private def corpusSpine(p: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] = p match {
-    case r: LogicalRelation => Some((r, Nil))
-    case pr: Project => corpusSpine(pr.child)
-    case fl: Filter => corpusSpine(fl.child).map { case (r, cs) => (r, fl.condition +: cs) }
-    case _ => None
-  }
-
-  private def registered(r: LogicalRelation): Option[HnswGraphRegistry.Entry] =
-    r.relation match {
-      case fs: HadoopFsRelation =>
-        HnswGraphRegistry.lookup(fs.location.rootPaths.map(_.toString))
-      case _ => None
-    }
 
   private def tryRewrite(cond: Expression, w: Window): Option[LogicalPlan] = {
     val child = w.child
     for {
-      // the one window expression: row_number, aliased; the filter bound
-      // references it
-      rnkAlias <- w.windowExpressions match {
-        case Seq(a @ Alias(WindowExpression(_: RowNumber, _), _)) => Some(a)
-        case _ => None
-      }
-      k <- RewriteSupport.rankBound(cond,
-        rnkAlias.toAttribute.asInstanceOf[AttributeReference])
-      if k >= 1 && k <= graft.operators.Hnsw.Ef
-      qidAttr <- w.partitionSpec match {
-        case Seq(a: AttributeReference) => Some(a)
-        case _ => None
-      }
-      simRef <- w.orderSpec.headOption.collect {
-        case SortOrder(a: AttributeReference, Descending, _, _) => a
-      }
-      // idempotence under the fixed-point optimizer batch: our own
-      // injected semi-join carries the marker — the node tag, backed by
-      // the rebuild-proof attribute-metadata stamp (round-13: name
-      // matching is GONE; see RewriteSupport.MarkerMetaKey for the
-      // measured tag-stripping sequence that made a second line
-      // necessary, and ExtensionsSpec's marker-survival pin)
-      if !child.exists {
-        case j: Join if j.joinType == LeftSemi => j.right match {
-          case lr: LocalRelation =>
-            RewriteSupport.injectedMarkerOf(lr).isDefined
-          case _ => false
-        }
-        case _ => false
-      }
-      (join, spineConds) <- spineJoin(child)
-      if (join.joinType == Inner || join.joinType == Cross) && join.condition.isEmpty
-      // orient the join: the registered corpus side vs the query side
-      (corpus, querySide) <- (corpusSpine(join.left), corpusSpine(join.right)) match {
-        case (Some((r, cs)), _) if registered(r).isDefined => Some(((r, cs), join.right))
-        case (_, Some((r, cs))) if registered(r).isDefined => Some(((r, cs), join.left))
-        case _ => None
-      }
-      (rel, corpusConds) = corpus
-      entry <- registered(rel)
+      (k, qidAttr, simRef) <- rankWindow(cond, w)
+      if k <= Ef
+      // idempotence under the fixed-point optimizer batch: an injected
+      // semi-join is already below
+      if injectedMarkers(child).isEmpty
+      (join, spineConds) <- spineTo[Join](child)
+      if join.condition.isEmpty
+      (rel, corpusConds, entry, querySide) <- orient(join, HnswGraphRegistry.lookupRel)
       idAttr <- rel.output.find(_.name == entry.idCol)
+      embAttr <- rel.output.find(_.name == entry.embCol)
       // the ranked expression: the walk's own round-6 cosine between the
       // REGISTERED embedding column and a query-side attribute
-      simExpr <- child.collect { case p: Project => p.projectList }.flatten
-        .collectFirst { case a: Alias if a.exprId == simRef.exprId => a.child }
-      qEmbAttr <- simExpr match {
-        case r: Round => (r.scale, r.child) match {
-          case (Literal(6, IntegerType), CosineSimilarity(a: AttributeReference, b: AttributeReference)) =>
-            val aIsCorpus = rel.output.exists(o => o.exprId == a.exprId && o.name == entry.embCol)
-            val bIsCorpus = rel.output.exists(o => o.exprId == b.exprId && o.name == entry.embCol)
-            if (aIsCorpus && querySide.outputSet.contains(b)) Some(b)
-            else if (bIsCorpus && querySide.outputSet.contains(a)) Some(a)
-            else None
-          case _ => None
-        }
-        case _ => None
-      }
+      qEmbAttr <- aliasOf(simRef, child).flatMap(cosineUnder(_, Round6))
+        .flatMap(queryVector(_, embAttr, querySide))
       // the partition key is the query side's, and both join keys of the
       // injected semi-join must be visible at the injection point
       if querySide.outputSet.contains(qidAttr)
       if child.outputSet.contains(idAttr) && child.outputSet.contains(qidAttr)
       if qidAttr.dataType == LongType && idAttr.dataType == LongType
-      // tiebreak: none, or the registered id ascending (the walk's own)
-      if w.orderSpec.tail.isEmpty || (w.orderSpec.tail match {
-        case Seq(SortOrder(a: AttributeReference, Ascending, _, _)) =>
-          a.exprId == idAttr.exprId
-        case _ => false
-      })
+      if idTiebreak(w.orderSpec.tail, idAttr)
       // every predicate on the window→join and join→corpus spines must be
       // a provably benign id exclusion within the beam headroom; the
       // QUERY side's own filters are untouched panel selection (the probe
       // executes them verbatim)
-      exCount <- RewriteSupport.benignExclusions(spineConds ++ corpusConds, idAttr)
-      if k + exCount <= graft.operators.Hnsw.Ef
-      // a query side containing the registered TABLE is a self-join —
-      // its "panel" is the corpus, not an API batch. Compared by
-      // registered root path, not reference equality: DeduplicateRelations
-      // gives a self-join's duplicate side a fresh LogicalRelation
-      // instance, so an `eq` check can never fire (review finding)
-      relPaths = rel.relation.asInstanceOf[HadoopFsRelation].location
-        .rootPaths.map(p => RewriteSupport.canon(p.toString)).toSet
-      if !querySide.exists {
-        case r: LogicalRelation => r.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths
-            .map(p => RewriteSupport.canon(p.toString)).exists(relPaths)
-          case _ => false
-        }
-        case _ => false
+      exCount <- benignExclusions(spineConds ++ corpusConds, idAttr)
+      if k + exCount <= Ef
+      if !selfJoin(rel, querySide)
+      pairs <- panelProbe(spark, "HnswBatchTopKRewrite", HnswGraphRegistry.panelMemo,
+          (entry.edgesDir, HnswGraphRegistry.generationOfDir(entry.edgesDir)),
+          querySide, Some(qidAttr), qEmbAttr) {
+        HnswGraphRegistry.walkPanel(spark, entry, _, _, None)
       }
-      pairs <- probe(querySide, qidAttr, qEmbAttr, entry)
     } yield {
       logInfo(s"HnswBatchTopKRewrite: pruning ${rel.simpleString(50)} to " +
         s"${pairs.length} graph-served (qid, ${entry.idCol}) pairs")
-      // two-stage prune: a SUPERSET id filter above the corpus relation
-      // (the union of every qid's beam — ≤ Ef·|panel| ids) pushes into
-      // the parquet scan as row-group/file pruning, exactly like the
-      // single face's Filter(In); the per-qid LEFT SEMI against the
-      // (qid, id) literal table then refines each qid to ITS beam. The
-      // scan reads beam-sized I/O instead of |panel| full corpus passes.
-      val allIds = pairs.map(_._2).distinct.sorted
-      val pruned = child.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          Filter(In(idAttr, allIds.map(Literal(_))), r)
-      }
-      val qRef = RewriteSupport.markerAttr("__graft_qid", LongType, "hnsw-batch")
-      val vRef = RewriteSupport.markerAttr("__graft_vid", LongType, "hnsw-batch")
-      val local = LocalRelation(Seq(qRef, vRef),
-        pairs.map { case (q, v) => InternalRow(q, v) })
-      local.setTagValue(RewriteSupport.InjectedMarker, "hnsw-batch")
-      val semi = Join(pruned, local, LeftSemi,
-        Some(And(EqualTo(qidAttr, qRef), EqualTo(idAttr, vRef))), JoinHint.NONE)
-      w.copy(child = semi)
+      w.copy(child = semiJoinPrune(child, rel, qidAttr, idAttr, pairs, "hnsw-batch",
+        ("__graft_qid", "__graft_vid"), LongType))
     }
   }
-
-  /** Execute the query-side subplan (API-sized panel — the documented
-    * rewrite-time probe class, capped `limit(4097)` INTO the collect like
-    * every panel probe), canonicalize it, and run the batch walk. Any
-    * failure — unexecutable subplan, over-cap/empty panel, null vectors,
-    * duplicate qids, dead graph artifacts, empty beam — falls through to
-    * the exact plan. MEMOIZED at the rule level INCLUDING declines (the
-    * IvfBatchTopKRewrite posture): the optimizer revisits the shape every
-    * fixed-point iteration, and without a decline slot each visit re-ran
-    * the panel collect. Keyed on (graph dir + generation, canonicalized
-    * projected panel plan, panel input-files digest) — value equality
-    * with freshness, never an identity hash — bounded, and purged by
-    * HnswGraphRegistry.clear().
-    */
-  private def probe(querySide: LogicalPlan, qidAttr: AttributeReference,
-                    qEmbAttr: AttributeReference,
-                    entry: HnswGraphRegistry.Entry): Option[Seq[(Long, Long)]] = {
-    val proj = Project(Seq(Alias(qidAttr, "qid")(), Alias(qEmbAttr, "q_emb")()),
-      querySide)
-    val key = (entry.edgesDir, HnswGraphRegistry.generationOfDir(entry.edgesDir),
-      proj.canonicalized: LogicalPlan, RewriteSupport.inputFilesDigest(querySide))
-    Option(HnswBatchTopKRewrite.probeMemo.get(key)).getOrElse {
-      var transient = false
-      val computed = try {
-        val qdf = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, proj)
-        val rows = qdf.limit(4097).collect()
-        if (rows.isEmpty || rows.length > 4096 ||
-            rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else {
-          val qids = rows.map(_.getLong(0))
-          if (qids.distinct.length != qids.length) None
-          else {
-            val panel = rows.map { r =>
-              (r.getLong(0), r.getSeq[Any](1).map {
-                case f: Float => f.toDouble
-                case d: Double => d
-                case n: Number => n.doubleValue()
-              }.toSeq)
-            }.sortBy(_._1).toSeq
-            val pinned = spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), qdf.schema)
-            val pairs = HnswGraphRegistry.beamIdsBatch(spark, entry, panel, pinned)
-            if (pairs.nonEmpty) Some(pairs) else None
-          }
-        }
-      } catch {
-        case scala.util.control.NonFatal(ex) =>
-          logWarning(s"HnswBatchTopKRewrite: batch probe failed for " +
-            s"${entry.edgesDir} — serving the exact scan", ex)
-          transient = !RewriteSupport.probeFailureExhausted(key)
-          None
-      }
-      // decline-by-SHAPE memoizes; decline-by-EXCEPTION does not — a
-      // transient failure (executor loss, FS blip) must not pin the
-      // exact scan for the rest of the generation (round-13 review)
-      if (!transient)
-        RewriteSupport.boundedPut(HnswBatchTopKRewrite.probeMemo, key, computed)
-      computed
-    }
-  }
-}
-
-object HnswBatchTopKRewrite {
-  private[plans] val probeMemo =
-    new ConcurrentHashMap[(String, Long, LogicalPlan, Long), Option[Seq[(Long, Long)]]]()
 }
 
 /** Transparent GRAPH range (threshold) search — the rewrite face of
@@ -687,74 +359,28 @@ object HnswBatchTopKRewrite {
   */
 case class HnswRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (HnswGraphRegistry.isEmpty) return plan
     plan.transformDown {
       case f @ Filter(cond, child) =>
-        tryRewrite(cond, child) match {
-          case Some(newChild) => Filter(cond, newChild)
-          case None => f
-        }
+        tryRewrite(cond, child).map(Filter(cond, _)).getOrElse(f)
     }
   }
 
-  private def spine(p: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] = p match {
-    case r: LogicalRelation => Some((r, Nil))
-    case pr: Project => spine(pr.child)
-    case fl: Filter => spine(fl.child).map { case (r, cs) => (r, fl.condition +: cs) }
-    case _ => None
-  }
-
-  private def tryRewrite(cond: Expression, child: LogicalPlan): Option[LogicalPlan] = {
+  private def tryRewrite(cond: Expression, child: LogicalPlan): Option[LogicalPlan] =
     for {
-      (rel, spineConds) <- spine(child)
-      entry <- rel.relation match {
-        case fs: HadoopFsRelation =>
-          HnswGraphRegistry.lookup(fs.location.rootPaths.map(_.toString))
-        case _ => None
-      }
+      (rel, spineConds) <- spineTo[LogicalRelation](child)
+      entry <- HnswGraphRegistry.lookupRel(rel)
       embAttr <- rel.output.find(_.name == entry.embCol)
       idAttr <- rel.output.find(_.name == entry.idCol)
-      // idempotence: our own injected id-IN (or the top-k rules') — the
-      // ONE shared matcher (RewriteSupport.idPrunePredicate), covering
-      // the OptimizeIn-folded EqualTo and checked against BOTH the
-      // matched condition (CombineFilters merges the injected filter up
-      // into it before the next fixed-point iteration) and the child
-      // spine — the exact drift class the IVF rules' cellPrunePredicate
-      // already closed once (round-11 advisor)
-      idPred = RewriteSupport.idPrunePredicate(idAttr)
-      if !idPred(cond)
-      if !child.exists {
-        case f: Filter => idPred(f.condition)
-        case _ => false
-      }
-      // exact-rule precedence — by REGISTRY state, not plan state: a
-      // radii-armed IVF registration on this relation means its owner
-      // chose PROVABLY-EXACT threshold serving, so this approximate rule
-      // must decline outright (a plan-state check alone inverts the
-      // precedence: this rule is injected first, so on the first
-      // optimizer pass no cell filter can exist yet and the walk's id-IN
-      // would constrain a query the exact rule's contract promises full
-      // results for — caught by an in-round review probe). The
-      // plan-state check stays as a second line for a scan pre-pruned by
-      // any other path, matching the EqualTo form OptimizeIn folds a
-      // single-cell IN into.
-      if !IvfIndexRegistry.lookup(rel.relation
-          .asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString))
-        .exists { ie =>
-          ie.radii.nonEmpty || rel.output.find(_.name == ie.cellCol).exists { cellAttr =>
-            val cellPred = RewriteSupport.cellPrunePredicate(cellAttr)
-            child.exists {
-              case f: Filter => cellPred(f.condition)
-              case _ => false
-            }
-          }
-        }
-      // the walk's own ranking form only — round-6 (allowRaw = false)
-      matches = RewriteSupport.thresholdMatches(cond, child, embAttr,
-        allowRaw = false)
+      // idempotence: our own injected id-IN (or the top-k rules'),
+      // checked against BOTH the matched condition (CombineFilters merges
+      // the injected filter up into it before the next fixed-point
+      // iteration) and the child spine
+      if !idPrunePredicate(idAttr)(cond) && !spineConds.exists(idPrunePredicate(idAttr))
+      if !IvfIndexRegistry.ownsRange(rel, child)
+      ths = literalThresholds(conjuncts(cond), child, embAttr, Round6)
+      matches = ths.flatMap(_._2)
       if matches.nonEmpty
       (qVec, t) = matches.maxBy(_._2)
       // every OTHER predicate — the matched Filter's non-threshold
@@ -762,31 +388,13 @@ case class HnswRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // exclusion: an arbitrary row filter (lang = 'en') under walk-served
       // candidates compounds recall loss invisibly; that is the explicit
       // ACORN face's job (Hnsw.searchFiltered), not a rewrite's
-      others = RewriteSupport.conjuncts(cond).filter { c =>
-        val m = RewriteSupport.thresholdConjunct(c, allowRaw = false)
-          .orElse(RewriteSupport.thresholdConjunct(
-            RewriteSupport.resolveThresholdAlias(c, child), allowRaw = false))
-        !m.exists(_._1.exprId == embAttr.exprId)
-      }
-      _ <- RewriteSupport.benignExclusions(others ++ spineConds, idAttr)
-      ids <- try {
-        val r = HnswGraphRegistry.rangeIds(spark, entry, qVec, t)
-        if (r.nonEmpty) Some(r) else None
-      } catch {
-        case scala.util.control.NonFatal(ex) =>
-          logWarning(s"HnswRangeRewrite: range probe failed for " +
-            s"${entry.edgesDir} — serving the exact scan", ex)
-          None
-      }
+      _ <- benignExclusions(ths.collect { case (c, None) => c } ++ spineConds, idAttr)
+      ids <- probed("HnswRangeRewrite", entry.edgesDir)(HnswGraphRegistry.rangeIds(spark, entry, qVec, t))
     } yield {
       logInfo(s"HnswRangeRewrite: pruning ${rel.simpleString(50)} to " +
         s"${entry.idCol} IN (${ids.length} range-walked ids) at t=$t")
-      child.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          Filter(In(idAttr, ids.map(Literal(_))), r)
-      }
+      pruneAt(child, rel, inList(idAttr, ids))
     }
-  }
 }
 
 /** BATCH face of the transparent graph range rewrite — [[HnswRangeRewrite]]
@@ -829,246 +437,59 @@ case class HnswRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   */
 case class HnswRangeBatchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (HnswGraphRegistry.isEmpty) plan else rewriteRangeJoins(plan)(tryRewrite)
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (HnswGraphRegistry.isEmpty) return plan
-    plan.transformDown {
-      // pre-pushdown shape: the threshold still sits in a Filter above
-      // the join
-      case f @ Filter(cond, child) if spineJoin(child).isDefined =>
-        val (join, spineConds) = spineJoin(child).get
-        tryRewrite(cond, join, spineConds, child) match {
-          case Some(newChild) => Filter(cond, newChild)
-          case None => f
-        }
-      // post-pushdown shape: PushPredicateThroughJoin moved the
-      // both-sides threshold INTO the join condition
-      case j: Join if j.condition.isDefined =>
-        tryRewrite(j.condition.get, j, Nil, j) match {
-          case Some(newJoin) => newJoin
-          case None => j
-        }
-    }
-  }
-
-  /** Filter→join spine, CONDITIONS ACCUMULATED for the benign-exclusion
-    * audit — an intermediate Filter the optimizer could not combine (a
-    * non-deterministic predicate) would otherwise ride between the
-    * threshold and the join unaudited (review finding; the batch top-k
-    * rule's spineJoin already accumulates).
-    */
-  private def spineJoin(p: LogicalPlan): Option[(Join, Seq[Expression])] = p match {
-    case j: Join => Some((j, Nil))
-    case pr: Project => spineJoin(pr.child)
-    case fl: Filter => spineJoin(fl.child).map { case (j, cs) => (j, fl.condition +: cs) }
-    case _ => None
-  }
-
-  private def corpusSpine(p: LogicalPlan): Option[(LogicalRelation, Seq[Expression])] = p match {
-    case r: LogicalRelation => Some((r, Nil))
-    case pr: Project => corpusSpine(pr.child)
-    case fl: Filter => corpusSpine(fl.child).map { case (r, cs) => (r, fl.condition +: cs) }
-    case _ => None
-  }
-
-  private def registered(r: LogicalRelation): Option[HnswGraphRegistry.Entry] =
-    r.relation match {
-      case fs: HadoopFsRelation =>
-        HnswGraphRegistry.lookup(fs.location.rootPaths.map(_.toString))
-      case _ => None
-    }
-
-  /** `searchRoot` scopes alias resolution, the idempotence scan, and the
-    * injection: the Filter's child for the pre-pushdown shape, the Join
-    * itself for the condition-carried shape.
-    */
-  private def tryRewrite(cond: Expression, join: Join,
-                         spineConds: Seq[Expression],
-                         searchRoot: LogicalPlan): Option[LogicalPlan] = {
+  private def tryRewrite(cond: Expression, join: Join, spineConds: Seq[Expression],
+                         searchRoot: LogicalPlan): Option[LogicalPlan] =
     for {
-      _ <- Some(())
-      if join.joinType == Inner || join.joinType == Cross
-      // orient: the graph-registered corpus side vs the query side
-      (corpus, querySide) <- (corpusSpine(join.left), corpusSpine(join.right)) match {
-        case (Some((r, cs)), _) if registered(r).isDefined => Some(((r, cs), join.right))
-        case (_, Some((r, cs))) if registered(r).isDefined => Some(((r, cs), join.left))
-        case _ => None
-      }
-      (rel, corpusConds) = corpus
-      entry <- registered(rel)
+      (rel, corpusConds, entry, querySide) <- orient(join, HnswGraphRegistry.lookupRel)
       embAttr <- rel.output.find(_.name == entry.embCol)
       idAttr <- rel.output.find(_.name == entry.idCol)
       // idempotence: our own injected semi-join marker, plus the
-      // superset id-IN through the ONE shared matcher (cond AND spine —
-      // CombineFilters/pushdown can carry it either place)
-      if !searchRoot.exists {
-        case j: Join if j.joinType == LeftSemi => j.right match {
-          case lr: LocalRelation =>
-            // marker = tag OR attribute metadata (round-13, name-free;
-            // ExtensionsSpec pins survival through the full optimizer)
-            RewriteSupport.injectedMarkerOf(lr).contains("hnsw-range-batch")
-          case _ => false
-        }
-        case _ => false
-      }
-      idPred = RewriteSupport.idPrunePredicate(idAttr)
-      if !idPred(cond)
-      if !searchRoot.exists {
-        case f: Filter => idPred(f.condition)
-        case _ => false
-      }
-      // exact-rule precedence by REGISTRY state (see HnswRangeRewrite):
-      // a radii-armed IVF registration owns threshold serving on this
-      // table; a cell prune already in the plan is the second line
-      if !IvfIndexRegistry.lookup(rel.relation
-          .asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString))
-        .exists { ie =>
-          ie.radii.nonEmpty || rel.output.find(_.name == ie.cellCol).exists { cellAttr =>
-            val cellPred = RewriteSupport.cellPrunePredicate(cellAttr)
-            searchRoot.exists {
-              case f: Filter => cellPred(f.condition)
-              case _ => false
-            }
-          }
-        }
+      // superset id-IN (cond AND spine — CombineFilters/pushdown can
+      // carry it either place)
+      if !injectedMarkers(searchRoot).contains("hnsw-range-batch")
+      if !idPrunePredicate(idAttr)(cond) && !filterExists(searchRoot)(idPrunePredicate(idAttr))
+      if !IvfIndexRegistry.ownsRange(rel, searchRoot)
       // every conjunct to audit: the matched condition PLUS — in the
       // Filter-above-join shape — the inner join's OWN ON condition (the
       // condition-carried shape folds it into `cond` already; skipping
       // it here let an equi-join fire unaudited and silently compound
       // recall loss — review finding)
-      allConds = RewriteSupport.conjuncts(cond) ++
-        (if (searchRoot eq join) Nil
-         else join.condition.map(RewriteSupport.conjuncts).getOrElse(Nil))
+      ths = pairThresholds(conjuncts(cond) ++
+        (if (searchRoot eq join) Nil else join.condition.map(conjuncts).getOrElse(Nil)),
+        searchRoot, embAttr, Round6)
       // the threshold conjuncts ranking the registered column against a
-      // query-side attribute — round-6 ONLY (the walk's own cut); with
-      // several, the TIGHTEST t probes (the conjunction keeps only rows
-      // ≥ max(t) either way)
-      matches = allConds
-        .flatMap(c => RewriteSupport.thresholdPairConjunct(c, searchRoot,
-          allowRaw = false))
-        .collect {
-          case (a, b, t) if a.exprId == embAttr.exprId &&
-            querySide.outputSet.contains(b) => (b, t)
-          case (b, a, t) if a.exprId == embAttr.exprId &&
-            querySide.outputSet.contains(b) => (b, t)
-        }
+      // query-side attribute; with several, the TIGHTEST t probes (the
+      // conjunction keeps only rows ≥ max(t) either way)
+      matches = ths.collect { case (_, Some((q, t))) if querySide.outputSet.contains(q) => (q, t) }
       if matches.nonEmpty
       (qAttr, t) = matches.maxBy(_._2)
       // every NON-threshold conjunct — matched condition, join condition,
       // and the corpus spine — must be a provably benign id exclusion
-      // (no count bound: there is no LIMIT to starve; an excluded id
-      // just leaves the pool)
-      others = allConds.filter { c =>
-        !RewriteSupport.thresholdPairConjunct(c, searchRoot, allowRaw = false)
-          .exists { case (a, b, _) =>
-            a.exprId == embAttr.exprId || b.exprId == embAttr.exprId }
-      }
-      _ <- RewriteSupport.benignExclusions(others ++ spineConds ++ corpusConds,
-        idAttr)
+      // (no count bound: there is no LIMIT to starve)
+      _ <- benignExclusions(ths.collect { case (c, None) => c } ++ spineConds ++ corpusConds, idAttr)
       // the panel-side qid: the query side's single non-vector output of
       // Long type visible at the injection point — the semi-join key
-      qidAttr <- {
-        val cands = querySide.output.collect {
-          case a: AttributeReference
-            if a.dataType == org.apache.spark.sql.types.LongType &&
-              a.exprId != qAttr.exprId && searchRoot.outputSet.contains(a) => a
-        }
-        if (cands.length == 1) Some(cands.head) else None
+      qidAttr <- querySide.output.collect {
+        case a: AttributeReference if a.dataType == LongType &&
+          a.exprId != qAttr.exprId && searchRoot.outputSet.contains(a) => a
+      } match {
+        case Seq(a) => Some(a)
+        case _ => None
       }
       if searchRoot.outputSet.contains(idAttr)
-      // a query side containing the registered TABLE is a self-join —
-      // canonical root paths (DeduplicateRelations clones one side)
-      relPaths = rel.relation.asInstanceOf[HadoopFsRelation].location
-        .rootPaths.map(p => RewriteSupport.canon(p.toString)).toSet
-      if !querySide.exists {
-        case r: LogicalRelation => r.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths
-            .map(p => RewriteSupport.canon(p.toString)).exists(relPaths)
-          case _ => false
-        }
-        case _ => false
+      if !selfJoin(rel, querySide)
+      pairs <- panelProbe(spark, "HnswRangeBatchRewrite", HnswGraphRegistry.panelMemo,
+          (entry.edgesDir, HnswGraphRegistry.generationOfDir(entry.edgesDir), t),
+          querySide, Some(qidAttr), qAttr) {
+        HnswGraphRegistry.walkPanel(spark, entry, _, _, Some(t))
       }
-      pairs <- probe(querySide, qidAttr, qAttr, entry, t)
     } yield {
       logInfo(s"HnswRangeBatchRewrite: pruning ${rel.simpleString(50)} to " +
         s"${pairs.length} range-walked (qid, ${entry.idCol}) pairs at t=$t")
-      val allIds = pairs.map(_._2).distinct.sorted
-      val pruned = searchRoot.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          Filter(In(idAttr, allIds.map(Literal(_))), r)
-      }
-      val qRef = RewriteSupport.markerAttr("__graft_rqid", LongType, "hnsw-range-batch")
-      val vRef = RewriteSupport.markerAttr("__graft_rvid", LongType, "hnsw-range-batch")
-      val local = LocalRelation(Seq(qRef, vRef),
-        pairs.map { case (q, v) => InternalRow(q, v) })
-      local.setTagValue(RewriteSupport.InjectedMarker, "hnsw-range-batch")
-      Join(pruned, local, LeftSemi,
-        Some(And(EqualTo(qidAttr, qRef), EqualTo(idAttr, vRef))), JoinHint.NONE)
+      semiJoinPrune(searchRoot, rel, qidAttr, idAttr, pairs, "hnsw-range-batch",
+        ("__graft_rqid", "__graft_rvid"), LongType)
     }
-  }
-
-  /** Execute the query side projecting (qid, panel vector) — API-sized,
-    * capped INTO the collect — then ONE batch range walk through the
-    * memoized registry probe. Any failure (over-cap/empty panel, nulls,
-    * duplicate qids, dead artifacts, empty pool) falls through to the
-    * exact plan.
-    */
-  private def probe(querySide: LogicalPlan, qidAttr: AttributeReference,
-                    qEmbAttr: AttributeReference,
-                    entry: HnswGraphRegistry.Entry,
-                    t: Double): Option[Seq[(Long, Long)]] = {
-    val proj = Project(Seq(Alias(qidAttr, "qid")(), Alias(qEmbAttr, "q_emb")()),
-      querySide)
-    // rule-level memo INCLUDING declines (the IvfRangeBatchRewrite
-    // posture — round-12 advisor: a declined probe re-ran the panel
-    // collect on every fixed-point visit, and the registry-level memo
-    // keys retain full panel vectors): keyed on graph dir + generation,
-    // the canonicalized projected panel plan, the panel's input-files
-    // digest, and t; bounded; purged by HnswGraphRegistry.clear().
-    val key = (entry.edgesDir, HnswGraphRegistry.generationOfDir(entry.edgesDir),
-      proj.canonicalized: LogicalPlan, RewriteSupport.inputFilesDigest(querySide), t)
-    Option(HnswRangeBatchRewrite.probeMemo.get(key)).getOrElse {
-      var transient = false
-      val computed = try {
-        val qdf = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, proj)
-        val rows = qdf.limit(4097).collect()
-        if (rows.isEmpty || rows.length > 4096 ||
-            rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else {
-          val qids = rows.map(_.getLong(0))
-          if (qids.distinct.length != qids.length) None
-          else {
-            val panel = rows.map { r =>
-              (r.getLong(0), r.getSeq[Any](1).map {
-                case f: Float => f.toDouble
-                case d: Double => d
-                case n: Number => n.doubleValue()
-              }.toSeq)
-            }.sortBy(_._1).toSeq
-            val pinned = spark.createDataFrame(
-              java.util.Arrays.asList(rows: _*), qdf.schema)
-            val pairs = HnswGraphRegistry.rangeIdsBatch(spark, entry, panel, pinned, t)
-            if (pairs.nonEmpty) Some(pairs) else None
-          }
-        }
-      } catch {
-        case scala.util.control.NonFatal(ex) =>
-          logWarning(s"HnswRangeBatchRewrite: batch range probe failed for " +
-            s"${entry.edgesDir} — serving the exact scan", ex)
-          transient = !RewriteSupport.probeFailureExhausted(key)
-          None
-      }
-      // decline-by-shape memoizes; decline-by-exception does not (see
-      // HnswBatchTopKRewrite.probe)
-      if (!transient)
-        RewriteSupport.boundedPut(HnswRangeBatchRewrite.probeMemo, key, computed)
-      computed
-    }
-  }
-}
-
-object HnswRangeBatchRewrite {
-  private[plans] val probeMemo =
-    new ConcurrentHashMap[(String, Long, LogicalPlan, Long, Double), Option[Seq[(Long, Long)]]]()
 }

@@ -3,14 +3,13 @@ package graft.plans
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Round, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, Limit, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Descending, EqualTo, Expression, In, InSet, Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Limit, LogicalPlan, Sort, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
-import graft.expressions.CosineSimilarity
+import graft.plans.RewriteSupport._
 
 /** Transparent ANN: a Catalyst optimizer rule that rewrites exact top-k
   * vector search over an IVF-laid-out table into probe-and-prune.
@@ -31,7 +30,7 @@ import graft.expressions.CosineSimilarity
   * 1.0 when the true neighbor lives outside the probed cell), so it never
   * fires on unregistered tables, and the exact scan remains the oracle.
   */
-object IvfIndexRegistry {
+object IvfIndexRegistry extends PathRegistry {
 
   /** One registered IVF index: partition (cell) column name + per-cell
     * medoid vectors, held driver-side. `embCol` (when known) lets the
@@ -103,10 +102,7 @@ object IvfIndexRegistry {
       if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
     }
   }
-
-  private val registry = new ConcurrentHashMap[String, Entry]()
-
-  private def canon(path: String): String = RewriteSupport.canon(path)
+  type E = Entry
 
   /** Build + register the index for a cell-partitioned parquet table: one
     * medoid (min-id member) per cell, collected to the driver. At real
@@ -128,7 +124,7 @@ object IvfIndexRegistry {
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1).toSeq
-    registry.put(canon(path), Entry(cellCol, medoids, Some(embCol),
+    put(path, Entry(cellCol, medoids, Some(embCol),
       idCol = Some(idCol),
       fingerprint = tableFingerprint(spark, path, Seq(idCol, cellCol)),
       splitCap = splitCap, rebuildable = true, nprobe = nprobe))
@@ -158,7 +154,7 @@ object IvfIndexRegistry {
     */
   def registerCentroids(path: String, cellCol: String,
                         centroids: Seq[(Int, Array[Double])]): Unit =
-    registry.put(canon(path), Entry(cellCol, centroids.sortBy(_._1)))
+    put(path, Entry(cellCol, centroids.sortBy(_._1)))
 
   /** [[registerCentroids]] WITH staleness capture (round-11 verdict #3):
     * records the (id, cell) membership fingerprint at registration so
@@ -174,7 +170,7 @@ object IvfIndexRegistry {
                         nprobe: Int = 1): Unit = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     purgeStats(path)
-    registry.put(canon(path), Entry(cellCol, centroids.sortBy(_._1),
+    put(path, Entry(cellCol, centroids.sortBy(_._1),
       embCol = Some(embCol),
       idCol = Some(idCol),
       fingerprint = tableFingerprint(spark, path, Seq(idCol, cellCol)),
@@ -197,13 +193,9 @@ object IvfIndexRegistry {
                                  // range-armed index could only be
                                  // refused, never served)
                                  idCol: Option[String] = None): Unit =
-    registry.put(canon(path),
+    put(path,
       Entry(cellCol, centroids.sortBy(_._1), Some(embCol), radii,
         idCol = idCol))
-
-  def lookup(rootPaths: Seq[String]): Option[Entry] =
-    rootPaths.iterator.map(p => Option(registry.get(canon(p))))
-      .collectFirst { case Some(e) => e }
 
   /** Re-arm a PERSISTED registration (IndexCatalog.load): the entry
     * verbatim — medoids, radii, fingerprint, splitCap, splitBlocked —
@@ -214,54 +206,39 @@ object IvfIndexRegistry {
     */
   def restore(path: String, e: Entry, gen: Long): Unit = {
     purgeStats(path)
-    registry.put(canon(path), e)
-    if (gen > 0) generation.put(canon(path), gen)
+    restoreEntry(path, e, path, gen)
   }
 
-  /** Drop one registration (the SQL `DROP INDEX` face) — artifacts stay
-    * on disk, like the graph twin.
-    */
-  def unregister(path: String): Unit = registry.remove(canon(path))
-
-  /** Registered (canon table path, entry) rows — the catalog face. */
-  def entries: Seq[(String, Entry)] = {
-    import scala.jdk.CollectionConverters._
-    registry.asScala.toSeq.sortBy(_._1)
-  }
-
-  def isEmpty: Boolean = registry.isEmpty
-
-  def clear(): Unit = {
-    registry.clear()
-    generation.clear()
-    statsCache.clear()
-    // the batch rules' probe memos hold admissions computed against
-    // entries this clear just dropped — purge with them (round-11 advisor:
-    // stale slots keyed by dead entries accumulated unboundedly across a
-    // long session)
-    IvfRangeBatchRewrite.probeMemo.clear()
-    IvfBatchTopKRewrite.probeMemo.clear()
-  }
+  // the panel memo (purged by the shared clear) holds admissions computed
+  // against entries a clear drops; so does the stats cache
+  override def clear(): Unit = { super.clear(); statsCache.clear() }
 
   // --- staleness / maintenance (round-11 verdict #3) ------------------------
 
-  private val generation = new ConcurrentHashMap[String, java.lang.Long]()
-
   /** Mutation generation of a layout path (0 = never mutated in this
-    * JVM) — bumped by [[invalidate]], surfaced by the catalog.
+    * JVM) — bumped by [[invalidate]] (a layout append/compaction/split; a
+    * cheap no-op for unregistered paths), surfaced by the catalog. The
+    * probe memos need no purge on a bump: they are keyed on the entry's
+    * metadata VALUES, which a layout mutation without re-registration
+    * does not change (that unchanged-metadata-over-drifted-data gap is
+    * exactly what the catalog's fingerprint decision surfaces).
     */
-  def generationOfPath(path: String): Long =
-    Option(generation.get(canon(path))).map(_.longValue).getOrElse(0L)
+  def generationOfPath(path: String): Long = generation(path)
 
-  /** Record a layout mutation (append/compaction/split) — called by the
-    * layout maintenance verbs, a cheap no-op for unregistered paths. The
-    * probe memos need no purge: they are keyed on the entry's metadata
-    * VALUES, which a layout mutation without re-registration does not
-    * change (that unchanged-metadata-over-drifted-data gap is exactly
-    * what the catalog's fingerprint decision surfaces).
+  /** Exact-rule precedence over the graph range rules, by REGISTRY state:
+    * a radii-armed registration on `rel` means its owner chose
+    * PROVABLY-EXACT threshold serving, so the approximate graph rules
+    * must decline outright (a plan-state check alone inverts the
+    * precedence: the graph rules are injected first, so on the first
+    * optimizer pass no cell filter can exist yet). A cell prune already
+    * in `scope` (the EqualTo form OptimizeIn folds a single-cell IN into
+    * included) is the second line, for a scan pre-pruned by any path.
     */
-  def invalidate(path: String): Unit =
-    generation.merge(canon(path), 1L, (a, b) => a + b)
+  private[plans] def ownsRange(rel: LogicalRelation, scope: LogicalPlan): Boolean =
+    lookupRel(rel).exists { e =>
+      e.radii.nonEmpty || rel.output.find(_.name == e.cellCol)
+        .exists(c => filterExists(scope)(cellPrunePredicate(c)))
+    }
 
   /** Maintenance verb: refresh a MEDOID-BACKED registration from the
     * live table — recompute the per-cell medoids and re-snapshot the
@@ -272,7 +249,7 @@ object IvfIndexRegistry {
     */
   def rebuild(spark: SparkSession, path: String): Boolean = {
     import org.apache.spark.sql.functions.col
-    Option(registry.get(canon(path))) match {
+    get(path) match {
       case Some(e) if e.rebuildable && e.idCol.isDefined && e.embCol.isDefined =>
         val fp = tableFingerprint(spark, path, Seq(e.idCol.get, e.cellCol))
         if (fp == e.fingerprint) false // healed concurrently — report noop
@@ -288,7 +265,7 @@ object IvfIndexRegistry {
           // radii (if any) were measured against the OLD geometry — a
           // rebuild drops them rather than serve a stale exactness bound;
           // split-blocked verdicts were reached on that geometry too
-          registry.put(canon(path),
+          put(path,
             e.copy(medoids = medoids, fingerprint = fp, radii = Map.empty,
               splitBlocked = Set.empty))
           true
@@ -306,7 +283,7 @@ object IvfIndexRegistry {
     * split; under-cap (or unarmed / non-medoid) registrations noop.
     */
   def splitHottest(spark: SparkSession, path: String): Boolean = {
-    Option(registry.get(canon(path))) match {
+    get(path) match {
       case Some(e) if e.splitCap.isDefined && e.idCol.isDefined && e.embCol.isDefined =>
         splitCandidate(spark, path, e) match {
           case Some((cell, _)) =>
@@ -322,13 +299,13 @@ object IvfIndexRegistry {
               // unsplittable so the decision converges to serve instead of
               // re-attempting a full-layout rewrite on every tick
               // (round-12 advisor)
-              registry.put(canon(path),
+              put(path,
                 e.copy(splitBlocked = e.splitBlocked + cell))
               false
             } else {
               val medoids = (e.medoids.filterNot(_._1 == cell) ++ subs)
                 .sortBy(_._1)
-              registry.put(canon(path), e.copy(medoids = medoids,
+              put(path, e.copy(medoids = medoids,
                 fingerprint = tableFingerprint(spark, path, Seq(e.idCol.get, e.cellCol)),
                 radii = Map.empty))
               true
@@ -359,9 +336,8 @@ object IvfIndexRegistry {
     new ConcurrentHashMap[(String, Long), (String, Option[Seq[(Int, Long)]])]()
 
   private def purgeStats(path: String): Unit = {
-    val p = canon(path)
-    val it = statsCache.keySet().iterator()
-    while (it.hasNext) if (it.next()._1 == p) it.remove()
+    val p = RewriteSupport.canon(path)
+    statsCache.keySet().removeIf(_._1 == p)
   }
 
   /** The per-cell counts are the FULL (cells-sized, tiny) list sorted
@@ -373,7 +349,7 @@ object IvfIndexRegistry {
   private[plans] def currentStats(spark: SparkSession, path: String,
                                   e: Entry): (String, Option[Seq[(Int, Long)]]) = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    val key = (canon(path), generationOfPath(path))
+    val key = (RewriteSupport.canon(path), generationOfPath(path))
     Option(statsCache.get(key)).getOrElse {
       val fp = tableFingerprint(spark, path, Seq(e.idCol.get, e.cellCol))
       val counts = e.splitCap.map { _ =>
@@ -383,7 +359,7 @@ object IvfIndexRegistry {
           .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
       }
       val v = (fp, counts)
-      RewriteSupport.boundedPut(statsCache, key, v)
+      boundedPut(statsCache, key, v)
       v
     }
   }
@@ -437,50 +413,20 @@ case class IvfTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** sim expression behind the sort attribute: unwrap round() and require
-    * cosine_sim(<column>, <literal vector>) (either argument order). The
-    * ranked column attribute comes back with the vector so the caller can
-    * verify it IS the registered embedding column (wrong-index hijack
-    * guard — a second vector column on the same table ranks by different
-    * geometry and must keep its exact scan).
+  /** The pure Project/Filter spine from the sort down to the scan is the
+    * HnswTopKRewrite guard, generalized to this rule in round 11; unlike
+    * that rule, row-level FILTERS stay admissible with no benign-exclusion
+    * audit — the prune keeps a whole cell, so user predicates act within
+    * the full candidate cell rather than starving a k-id beam: the
+    * standard filtered-search composition of a vector database. The sim
+    * may carry any rounding (the whole-cell prune re-ranks with the
+    * user's own expression).
     */
-  private def simQueryVector(e: Expression): Option[(AttributeReference, Array[Double])] = e match {
-    case r: Round => simQueryVector(r.child)
-    case CosineSimilarity(a: AttributeReference, l: Literal) =>
-      RewriteSupport.literalVec(l).map((a, _))
-    case CosineSimilarity(l: Literal, a: AttributeReference) =>
-      RewriteSupport.literalVec(l).map((a, _))
-    case _ => None
-  }
-
-  /** Pure Project/Filter spine from the sort down to the scan — a join,
-    * aggregate, sample, or distinct shapes the candidate row set in ways
-    * a single-cell prune cannot account for (the HnswTopKRewrite guard,
-    * generalized to this rule in round 11; unlike that rule, row-level
-    * FILTERS stay admissible with no benign-exclusion audit — the prune
-    * keeps a whole cell, so user predicates act within the full candidate
-    * cell rather than starving a k-id beam: the standard filtered-search
-    * composition of a vector database).
-    */
-  private def pureSpine(p: LogicalPlan): Boolean = p match {
-    case _: LogicalRelation => true
-    case pr: Project => pureSpine(pr.child)
-    case f: Filter => pureSpine(f.child)
-    case _ => false
-  }
-
-  private def tryRewrite(ref: AttributeReference, child: LogicalPlan): Option[LogicalPlan] = {
-    val simExpr = child.collect { case p: Project => p.projectList }.flatten
-      .collectFirst { case a: Alias if a.exprId == ref.exprId => a.child }
+  private def tryRewrite(ref: AttributeReference, child: LogicalPlan): Option[LogicalPlan] =
     for {
-      (simAttr, qVec) <- simExpr.flatMap(simQueryVector)
-      if pureSpine(child)
-      rel <- child.collectFirst {
-        case r @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _)
-          if IvfIndexRegistry.lookup(fs.location.rootPaths.map(_.toString)).isDefined => r
-      }
-      entry <- IvfIndexRegistry.lookup(
-        rel.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString))
+      (simAttr, qVec) <- aliasOf(ref, child).flatMap(cosineUnder(_, AnyRound)).flatMap(literalCosine)
+      (rel, conds) <- spineTo[LogicalRelation](child)
+      entry <- IvfIndexRegistry.lookupRel(rel)
       // index precedence: the graph rewrite (injected FIRST — see
       // GraftExtensions) outranks this rule on a table carrying both
       // indexes, but only when it actually FIRED: its In/InSet filter on
@@ -499,41 +445,26 @@ case class IvfTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // predicate (which makes the graph rule decline — In is not a benign
       // exclusion) therefore no longer reads as "the graph fired", and the
       // cell prune still serves instead of a silent full exact scan.
-      if !HnswGraphRegistry.lookup(
-        rel.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString))
-        .exists { ge =>
-          val gIdAttr = rel.output.find(_.name == ge.idCol)
-          child.exists {
-            case f: Filter => f.condition.exists {
-              case In(a: AttributeReference, vs) =>
-                gIdAttr.exists(_.exprId == a.exprId) &&
-                  vs.length <= graft.operators.Hnsw.Ef
-              case InSet(a: AttributeReference, vs) =>
-                gIdAttr.exists(_.exprId == a.exprId) &&
-                  vs.size <= graft.operators.Hnsw.Ef
-              case _ => false
-            }
-            case _ => false
-          }
-        }
+      if !HnswGraphRegistry.lookupRel(rel).exists { ge =>
+        val gIdAttr = rel.output.find(_.name == ge.idCol)
+        conds.exists(_.exists {
+          case In(a: AttributeReference, vs) =>
+            gIdAttr.exists(_.exprId == a.exprId) && vs.length <= graft.operators.Hnsw.Ef
+          case InSet(a: AttributeReference, vs) =>
+            gIdAttr.exists(_.exprId == a.exprId) && vs.size <= graft.operators.Hnsw.Ef
+          case _ => false
+        })
+      }
       // ranked-column guard (when the registration recorded the indexed
-      // embedding column): the cosine's attribute must BE that column of
-      // the registered relation, matched by exprId — a same-named column
-      // from elsewhere on the plan can never pass
-      if entry.embCol.forall(n =>
-        rel.output.exists(o => o.exprId == simAttr.exprId && o.name == n))
+      // embedding column): the cosine's attribute must BE that column
+      if entry.embCol.forall(isColumn(rel, simAttr, _))
       cellAttr <- rel.output.find(_.name == entry.cellCol)
       // idempotence under the fixed-point optimizer batch: fire once —
       // through the ONE shared matcher (In/InSet AND the EqualTo form;
       // round-13 third review pass: the EqualTo-only guard was blind to
       // this rule's OWN multi-probe In injection and re-fired every
-      // iteration, stacking duplicate prunes), exprId-matched against the
-      // registered relation's resolved cell column
-      cellPred = RewriteSupport.cellPrunePredicate(cellAttr)
-      if !child.exists {
-        case f: Filter => cellPred(f.condition)
-        case _ => false
-      }
+      // iteration, stacking duplicate prunes)
+      if !conds.exists(cellPrunePredicate(cellAttr))
       // multi-probe must still PRUNE: nprobe ≥ cells is the exact scan —
       // injecting an all-cells IN would be plan noise (and idempotence
       // bait), so fall through
@@ -542,17 +473,12 @@ case class IvfTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       val cells = entry.bestCells(qVec, entry.nprobe)
       logInfo(s"IvfTopKRewrite: pruning ${rel.simpleString(50)} to " +
         s"${entry.cellCol} IN (${cells.mkString(",")})")
-      child.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          // EqualTo for the 1-probe case (the historical shape every plan
-          // pin checks); IN for multi-probe — cellPrunePredicate matches
-          // both, so idempotence/precedence guards are unchanged
-          Filter(
-            if (cells.size == 1) EqualTo(cellAttr, Literal(cells.head))
-            else In(cellAttr, cells.map(Literal(_))), r)
-      }
+      // EqualTo for the 1-probe case (the historical shape every plan
+      // pin checks); IN for multi-probe — cellPrunePredicate matches
+      // both, so idempotence/precedence guards are unchanged
+      pruneAt(child, rel,
+        if (cells.size == 1) EqualTo(cellAttr, Literal(cells.head)) else inList(cellAttr, cells))
     }
-  }
 }
 
 /** Transparent, PROVABLY-EXACT threshold (range) search — the rewrite face
@@ -605,28 +531,16 @@ case class IvfRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (IvfIndexRegistry.isEmpty) return plan
     plan.transformDown {
       case f @ Filter(cond, child) =>
-        tryRewrite(cond, child) match {
-          case Some(newChild) => Filter(cond, newChild)
-          case None => f
-        }
+        tryRewrite(cond, child).map(Filter(cond, _)).getOrElse(f)
     }
   }
 
-  /** Pure Project/Filter spine down to the registered relation. */
-  private def spineRelation(p: LogicalPlan): Option[LogicalRelation] = p match {
-    case r: LogicalRelation => Some(r)
-    case pr: Project => spineRelation(pr.child)
-    case f: Filter => spineRelation(f.child)
-    case _ => None
-  }
-
-  private def tryRewrite(cond: Expression, child: LogicalPlan): Option[LogicalPlan] = {
+  private def tryRewrite(cond: Expression, child: LogicalPlan): Option[LogicalPlan] =
     for {
-      rel <- spineRelation(child)
-      entry <- registeredOf(rel)
+      (rel, conds) <- spineTo[LogicalRelation](child)
+      entry <- IvfIndexRegistry.lookupRel(rel)
       if entry.radii.nonEmpty
-      embColName <- entry.embCol
-      embAttr <- rel.output.find(_.name == embColName)
+      embAttr <- entry.embCol.flatMap(n => rel.output.find(_.name == n))
       cellAttr <- rel.output.find(_.name == entry.cellCol)
       // idempotence under the fixed-point batch: our own injected In —
       // INCLUDING the EqualTo form OptimizeIn folds a single-admitted-cell
@@ -634,37 +548,19 @@ case class IvfRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // CombineFilters merges the injected filter before the next batch
       // iteration (missing either re-fired the rule and stacked a
       // duplicate prune; caught by an in-round review probe)
-      cellPred = RewriteSupport.cellPrunePredicate(cellAttr)
-      if !cellPred(cond)
-      if !child.exists {
-        case f: Filter => cellPred(f.condition)
-        case _ => false
-      }
+      if !cellPrunePredicate(cellAttr)(cond) && !conds.exists(cellPrunePredicate(cellAttr))
       // the raw (unrounded) cosine is admissible here: the bound's slack
       // covers float noise directly, no rounding band to account for
-      matches = RewriteSupport.thresholdMatches(cond, child, embAttr,
-        allowRaw = true)
+      matches = literalThresholds(conjuncts(cond), child, embAttr, Round6OrRaw).flatMap(_._2)
       if matches.nonEmpty
       (qVec, t) = matches.maxBy(_._2)
-      admitted = graft.operators.Ann.admittedCells(
-        entry.medoids, entry.radii, qVec, t)
+      admitted = graft.operators.Ann.admittedCells(entry.medoids, entry.radii, qVec, t)
       // an all-cells IN list is plan noise for zero I/O saved
       if admitted.size < entry.medoids.size
     } yield {
       logInfo(s"IvfRangeRewrite: pruning ${rel.simpleString(50)} to " +
         s"${entry.cellCol} IN (${admitted.size}/${entry.medoids.size} cells) at t=$t")
-      child.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          Filter(In(cellAttr, admitted.map(Literal(_))), r)
-      }
-    }
-  }
-
-  private def registeredOf(r: LogicalRelation): Option[IvfIndexRegistry.Entry] =
-    r.relation match {
-      case fs: HadoopFsRelation =>
-        IvfIndexRegistry.lookup(fs.location.rootPaths.map(_.toString))
-      case _ => None
+      pruneAt(child, rel, inList(cellAttr, admitted))
     }
 }
 
@@ -698,187 +594,42 @@ case class IvfRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
   */
 case class IvfRangeBatchRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
-  import org.apache.spark.sql.catalyst.plans.logical.Join
+  override def apply(plan: LogicalPlan): LogicalPlan =
+    if (IvfIndexRegistry.isEmpty) plan else rewriteRangeJoins(plan)(tryRewrite)
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (IvfIndexRegistry.isEmpty) return plan
-    plan.transformDown {
-      // pre-pushdown shape: the threshold still sits in a Filter above
-      // the join
-      case f @ Filter(cond, child) if spineJoin(child).isDefined =>
-        tryRewrite(cond, spineJoin(child).get, child) match {
-          case Some(newChild) => Filter(cond, newChild)
-          case None => f
-        }
-      // post-pushdown shape: PushPredicateThroughJoin moved the
-      // both-sides threshold INTO the join condition, leaving no Filter
-      // node to match (the shape the fixture query actually optimizes to)
-      case j: Join if j.condition.isDefined =>
-        tryRewrite(j.condition.get, j, j) match {
-          case Some(newJoin) => newJoin
-          case None => j
-        }
-    }
-  }
-
-  private def spineJoin(p: LogicalPlan): Option[Join] = p match {
-    case j: Join => Some(j)
-    case pr: Project => spineJoin(pr.child)
-    case fl: Filter => spineJoin(fl.child)
-    case _ => None
-  }
-
-  private def corpusSpine(p: LogicalPlan): Option[LogicalRelation] = p match {
-    case r: LogicalRelation => Some(r)
-    case pr: Project => corpusSpine(pr.child)
-    case fl: Filter => corpusSpine(fl.child)
-    case _ => None
-  }
-
-  private def registeredOf(r: LogicalRelation): Option[IvfIndexRegistry.Entry] =
-    r.relation match {
-      case fs: HadoopFsRelation =>
-        IvfIndexRegistry.lookup(fs.location.rootPaths.map(_.toString))
-      case _ => None
-    }
-
-  /** `searchRoot` is the subtree returned with the cell prune injected:
-    * the Filter's child for the pre-pushdown shape, the Join itself for
-    * the post-pushdown (condition-carried) shape; it also scopes the
-    * alias resolution and the idempotence scan.
+  /** The panel probe folds the union of per-row admissions, memoized per
+    * (entry metadata VALUES, t) — a re-registration with retrained
+    * metadata gets fresh slots by construction.
     */
-  private def tryRewrite(cond: Expression, join: Join,
-                         searchRoot: LogicalPlan): Option[LogicalPlan] = {
+  private def tryRewrite(cond: Expression, join: Join, spineConds: Seq[Expression],
+                         searchRoot: LogicalPlan): Option[LogicalPlan] =
     for {
-      _ <- Some(())
-      if join.joinType == Inner || join.joinType == Cross
-      // orient: the registered radii-armed corpus side vs the query side
-      (rel, querySide) <- (corpusSpine(join.left), corpusSpine(join.right)) match {
-        case (Some(r), _) if registeredOf(r).exists(_.radii.nonEmpty) => Some((r, join.right))
-        case (_, Some(r)) if registeredOf(r).exists(_.radii.nonEmpty) => Some((r, join.left))
-        case _ => None
-      }
-      entry <- registeredOf(rel)
-      embColName <- entry.embCol
-      embAttr <- rel.output.find(_.name == embColName)
+      (rel, _, entry, querySide) <- orient(join, IvfIndexRegistry.lookupRel(_).filter(_.radii.nonEmpty))
+      embAttr <- entry.embCol.flatMap(n => rel.output.find(_.name == n))
       cellAttr <- rel.output.find(_.name == entry.cellCol)
       // idempotence incl. the OptimizeIn-folded EqualTo and the
-      // CombineFilters-merged condition — the ONE shared matcher (this
-      // drift class already bit once)
-      cellPred = RewriteSupport.cellPrunePredicate(cellAttr)
-      if !cellPred(cond)
-      if !searchRoot.exists {
-        case f: Filter => cellPred(f.condition)
-        case _ => false
-      }
+      // CombineFilters-merged condition — the ONE shared matcher
+      if !cellPrunePredicate(cellAttr)(cond) && !filterExists(searchRoot)(cellPrunePredicate(cellAttr))
       // the threshold conjuncts ranking the registered column against a
       // query-side attribute; with several, the TIGHTEST t still admits
       // a union that is a superset for the conjunction
-      matches = RewriteSupport.conjuncts(cond)
-        .flatMap(c => RewriteSupport.thresholdPairConjunct(c, searchRoot,
-          allowRaw = true))
-        .collect {
-          case (a, b, t) if a.exprId == embAttr.exprId &&
-            querySide.outputSet.contains(b) => (b, t)
-          case (b, a, t) if a.exprId == embAttr.exprId &&
-            querySide.outputSet.contains(b) => (b, t)
-        }
+      matches = pairThresholds(conjuncts(cond), searchRoot, embAttr, Round6OrRaw)
+        .collect { case (_, Some((q, t))) if querySide.outputSet.contains(q) => (q, t) }
       if matches.nonEmpty
       (qAttr, t) = matches.maxBy(_._2)
-      // a query side containing the registered TABLE is a self-join —
-      // its "panel" is the corpus, not an API batch. Compared by
-      // registered root path, NOT reference equality: the analyzer's
-      // DeduplicateRelations gives a self-join's duplicate side a fresh
-      // LogicalRelation instance, so an `eq` check never fires (review
-      // finding)
-      relPaths = rel.relation.asInstanceOf[HadoopFsRelation].location
-        .rootPaths.map(p => RewriteSupport.canon(p.toString)).toSet
-      if !querySide.exists {
-        case r: LogicalRelation => r.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths
-            .map(p => RewriteSupport.canon(p.toString)).exists(relPaths)
-          case _ => false
-        }
-        case _ => false
+      if !selfJoin(rel, querySide)
+      union <- panelProbe(spark, "IvfRangeBatchRewrite", IvfIndexRegistry.panelMemo,
+          (IvfIndexRegistry.entryKey(entry), t), querySide, None, qAttr) { (panel, _) =>
+        Some(panel.flatMap { case (_, v) =>
+          graft.operators.Ann.admittedCells(entry.medoids, entry.radii, v.toArray, t)
+        }.distinct.sorted)
       }
-      union <- probe(querySide, qAttr, entry, t)
       if union.size < entry.medoids.size
     } yield {
       logInfo(s"IvfRangeBatchRewrite: pruning ${rel.simpleString(50)} to " +
         s"${entry.cellCol} IN (${union.size}/${entry.medoids.size} cells) at t=$t")
-      searchRoot.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          Filter(In(cellAttr, union.map(Literal(_))), r)
-      }
+      pruneAt(searchRoot, rel, inList(cellAttr, union))
     }
-  }
-
-  /** Execute the query side projecting the panel vectors (API-sized, the
-    * documented rewrite-time probe class) and fold the union of per-row
-    * admissions. Any failure falls through to the exact plan. MEMOIZED
-    * per (registration instance, canonical panel plan, t) — declines
-    * included: the optimizer revisits the same shape on every
-    * fixed-point iteration and in BOTH matched shapes, and without the
-    * memo each visit re-ran the panel-collect Spark job inside
-    * optimization (review finding). Keyed on VALUE equality (round-11
-    * advisor — the prior (identityHashCode, semanticHash) key could
-    * collide two different panels into one admitted-cell union, silently
-    * dropping qualifying rows from a rewrite documented as provably
-    * exact): the entry's metadata values + the CANONICALIZED projected
-    * panel plan (true structural equality, exprIds normalized — not a
-    * 32-bit hash) + the panel's input-files digest (a canonicalized
-    * plan alone reads EQUAL across a data change to the same table —
-    * rootPaths-only relation equality — and would serve stale
-    * admissions; review finding) + t. Bounded (RewriteSupport
-    * .ProbeMemoCap) and purged by IvfIndexRegistry.clear().
-    */
-  private def probe(querySide: LogicalPlan, qAttr: AttributeReference,
-                    entry: IvfIndexRegistry.Entry, t: Double): Option[Seq[Int]] = {
-    val proj = Project(Seq(Alias(qAttr, "q_emb")()), querySide)
-    val key = (IvfIndexRegistry.entryKey(entry), proj.canonicalized,
-      RewriteSupport.inputFilesDigest(querySide), t)
-    // the beamIds locking posture: the panel job runs OUTSIDE the map (a
-    // Spark job must not hold a ConcurrentHashMap bin lock against
-    // concurrent planning threads); a racing duplicate is idempotent
-    Option(IvfRangeBatchRewrite.probeMemo.get(key)).getOrElse {
-      var transient = false
-      val computed = try {
-        val qdf = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, proj)
-        // cap BEFORE the collect: limit(cap+1) bounds what ever lands on
-        // the driver, then over-cap falls through — collecting first and
-        // checking after would be the very blowup the cap documents
-        // (an OutOfMemoryError is not NonFatal; review finding)
-        val rows = qdf.limit(4097).collect()
-        if (rows.isEmpty || rows.length > 4096 || rows.exists(_.isNullAt(0)))
-          None
-        else Some(rows.flatMap { r =>
-          val v = r.getSeq[Any](0).map {
-            case f: Float => f.toDouble
-            case d: Double => d
-            case n: Number => n.doubleValue()
-          }.toArray
-          graft.operators.Ann.admittedCells(entry.medoids, entry.radii, v, t)
-        }.distinct.sorted.toSeq)
-      } catch {
-        case scala.util.control.NonFatal(ex) =>
-          logWarning(s"IvfRangeBatchRewrite: panel probe failed — serving " +
-            s"the exact scan", ex)
-          transient = !RewriteSupport.probeFailureExhausted(key)
-          None
-      }
-      // decline-by-shape memoizes; decline-by-exception does not (see
-      // HnswBatchTopKRewrite.probe)
-      if (!transient)
-        RewriteSupport.boundedPut(IvfRangeBatchRewrite.probeMemo, key, computed)
-      computed
-    }
-  }
-}
-
-object IvfRangeBatchRewrite {
-  private[plans] val probeMemo =
-    new ConcurrentHashMap[((String, Seq[(Int, Seq[Double])], Map[Int, Double], Int), LogicalPlan, Long, Double), Option[Seq[Int]]]()
 }
 
 /** BATCH face of the transparent IVF top-k rewrite — [[IvfTopKRewrite]]
@@ -935,118 +686,37 @@ object IvfRangeBatchRewrite {
   */
 case class IvfBatchTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.{RowNumber, WindowExpression}
-  import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftSemi}
-  import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, LocalRelation, Window}
-  import org.apache.spark.sql.types.LongType
-
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (IvfIndexRegistry.isEmpty) return plan
     plan.transformDown {
       case f @ Filter(cond, w: Window) =>
-        tryRewrite(cond, w) match {
-          case Some(nw) => Filter(cond, nw)
-          case None     => f
-        }
+        tryRewrite(cond, w).map(Filter(cond, _)).getOrElse(f)
     }
   }
-
-  private def spineJoin(p: LogicalPlan): Option[Join] = p match {
-    case j: Join => Some(j)
-    case pr: Project => spineJoin(pr.child)
-    case fl: Filter => spineJoin(fl.child)
-    case _ => None
-  }
-
-  private def corpusSpine(p: LogicalPlan): Option[LogicalRelation] = p match {
-    case r: LogicalRelation => Some(r)
-    case pr: Project => corpusSpine(pr.child)
-    case fl: Filter => corpusSpine(fl.child)
-    case _ => None
-  }
-
-  private def registered(r: LogicalRelation): Option[IvfIndexRegistry.Entry] =
-    r.relation match {
-      case fs: HadoopFsRelation =>
-        IvfIndexRegistry.lookup(fs.location.rootPaths.map(_.toString))
-      case _ => None
-    }
-
-  /** Our own (or the graph batch rule's) injected semi-join marker —
-    * NAME-FREE as of round 13 (closing the round-12 verdict's note): the
-    * node tag, backed by the rebuild-proof attribute-metadata stamp
-    * (RewriteSupport.injectedMarkerOf — the tag alone measurably dies
-    * when InferFiltersFromConstraints + ConvertToLocalRelation rebuild
-    * the local; ExtensionsSpec pins marker survival through the full
-    * optimizer on all three fired batch faces).
-    */
-  private def batchMarker(p: LogicalPlan, value: String): Boolean =
-    p.exists {
-      case j: Join if j.joinType == LeftSemi => j.right match {
-        case lr: LocalRelation =>
-          RewriteSupport.injectedMarkerOf(lr).contains(value)
-        case _ => false
-      }
-      case _ => false
-    }
 
   private def tryRewrite(cond: Expression, w: Window): Option[LogicalPlan] = {
     val child = w.child
     for {
-      rnkAlias <- w.windowExpressions match {
-        case Seq(a @ Alias(WindowExpression(_: RowNumber, _), _)) => Some(a)
-        case _ => None
-      }
-      k <- RewriteSupport.rankBound(cond,
-        rnkAlias.toAttribute.asInstanceOf[AttributeReference])
-      if k >= 1
-      qidAttr <- w.partitionSpec match {
-        case Seq(a: AttributeReference) => Some(a)
-        case _ => None
-      }
-      simRef <- w.orderSpec.headOption.collect {
-        case SortOrder(a: AttributeReference, Descending, _, _) => a
-      }
+      (_, qidAttr, simRef) <- rankWindow(cond, w)
       // idempotence: our own injected admission semi-join
-      if !batchMarker(child, "ivf-batch")
-      join <- spineJoin(child)
-      if join.joinType == Inner || join.joinType == Cross
+      if !injectedMarkers(child).contains("ivf-batch")
+      (join, _) <- spineTo[Join](child)
       // a join condition is admissible when every conjunct is an
       // attribute equality (the whole-cell composition); anything else
       // falls through
-      if join.condition.forall(c => RewriteSupport.conjuncts(c).forall {
+      if join.condition.forall(c => conjuncts(c).forall {
         case EqualTo(_: AttributeReference, _: AttributeReference) => true
         case _ => false
       })
-      // orient: the registered corpus side vs the query side
-      (rel, querySide) <- (corpusSpine(join.left), corpusSpine(join.right)) match {
-        case (Some(r), _) if registered(r).isDefined => Some((r, join.right))
-        case (_, Some(r)) if registered(r).isDefined => Some((r, join.left))
-        case _ => None
-      }
-      entry <- registered(rel)
-      embColName <- entry.embCol
+      (rel, _, entry, querySide) <- orient(join, IvfIndexRegistry.lookupRel)
+      embAttr <- entry.embCol.flatMap(n => rel.output.find(_.name == n))
       cellAttr <- rel.output.find(_.name == entry.cellCol)
       // the ranked expression: a cosine between the REGISTERED embedding
       // column and a panel-side attribute, under any rounding or raw —
       // the single face's admissibility, since the whole-cell prune
       // re-ranks with the user's own expression
-      simExpr <- child.collect { case p: Project => p.projectList }.flatten
-        .collectFirst { case a: Alias if a.exprId == simRef.exprId => a.child }
-      qEmbAttr <- {
-        def bare(x: Expression): Option[AttributeReference] = x match {
-          case CosineSimilarity(a: AttributeReference, b: AttributeReference) =>
-            val aIsCorpus = rel.output.exists(o => o.exprId == a.exprId && o.name == embColName)
-            val bIsCorpus = rel.output.exists(o => o.exprId == b.exprId && o.name == embColName)
-            if (aIsCorpus && querySide.outputSet.contains(b)) Some(b)
-            else if (bIsCorpus && querySide.outputSet.contains(a)) Some(a)
-            else None
-          case r: Round => bare(r.child)
-          case _ => None
-        }
-        bare(simExpr)
-      }
+      qEmbAttr <- aliasOf(simRef, child).flatMap(cosineUnder(_, AnyRound))
+        .flatMap(queryVector(_, embAttr, querySide))
       // both semi-join keys must be visible at the injection point (a
       // column-pruned spine that dropped the cell column cannot host the
       // per-qid refinement — fall through to the exact plan)
@@ -1060,104 +730,27 @@ case class IvfBatchTopKRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // no cell prune already on the corpus spine (ours from a prior
       // iteration, the single face's, or a user's own — declining on the
       // latter is conservative-safe: the exact plan still runs)
-      cellPred = RewriteSupport.cellPrunePredicate(cellAttr)
-      if !child.exists {
-        case f: Filter => cellPred(f.condition)
-        case _ => false
-      }
+      if !filterExists(child)(cellPrunePredicate(cellAttr))
       // index precedence: the graph batch rule (injected first) outranks
       // this rule when it actually FIRED on this table's graph — detected
       // by its tagged marker, never by bare registry membership, so every
       // shape the graph rule declines still gets the cell prune
-      if !HnswGraphRegistry.lookup(rel.relation
-          .asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString))
-        .exists(_ => batchMarker(child, "hnsw-batch"))
-      // a query side containing the registered TABLE is a self-join —
-      // compared by canonical root path (DeduplicateRelations clones one
-      // side, so `eq` never fires)
-      relPaths = rel.relation.asInstanceOf[HadoopFsRelation].location
-        .rootPaths.map(p => RewriteSupport.canon(p.toString)).toSet
-      if !querySide.exists {
-        case r: LogicalRelation => r.relation match {
-          case fs: HadoopFsRelation => fs.location.rootPaths
-            .map(p => RewriteSupport.canon(p.toString)).exists(relPaths)
-          case _ => false
-        }
-        case _ => false
+      if !(HnswGraphRegistry.lookupRel(rel).isDefined &&
+        injectedMarkers(child).contains("hnsw-batch"))
+      if !selfJoin(rel, querySide)
+      // per-qid admission is pure driver arithmetic over the entry's
+      // medoids: each qid admits its nprobe probed cells (the identical
+      // probe as the single face and the DuckDB oracle)
+      pairs <- panelProbe(spark, "IvfBatchTopKRewrite", IvfIndexRegistry.panelMemo,
+          IvfIndexRegistry.entryKey(entry), querySide, Some(qidAttr), qEmbAttr) { (panel, _) =>
+        Some(panel.flatMap { case (q, v) => entry.bestCells(v.toArray, entry.nprobe).map((q, _)) }
+          .sortBy(p => (p._1, p._2)))
       }
-      pairs <- probe(querySide, qidAttr, qEmbAttr, entry)
     } yield {
       logInfo(s"IvfBatchTopKRewrite: pruning ${rel.simpleString(50)} to " +
         s"${pairs.length} probed (qid, ${entry.cellCol}) cells")
-      val allCells = pairs.map(_._2).distinct.sorted
-      val pruned = child.transformUp {
-        case r: LogicalRelation if r eq rel =>
-          Filter(In(cellAttr, allCells.map(Literal(_))), r)
-      }
-      val qRef = RewriteSupport.markerAttr("__graft_cqid", LongType, "ivf-batch")
-      val cRef = RewriteSupport.markerAttr("__graft_cell", IntegerType, "ivf-batch")
-      val local = LocalRelation(Seq(qRef, cRef),
-        pairs.map { case (q, c) => InternalRow(q, c) })
-      local.setTagValue(RewriteSupport.InjectedMarker, "ivf-batch")
-      val semi = Join(pruned, local, LeftSemi,
-        Some(And(EqualTo(qidAttr, qRef), EqualTo(cellAttr, cRef))), JoinHint.NONE)
-      w.copy(child = semi)
+      w.copy(child = semiJoinPrune(child, rel, qidAttr, cellAttr, pairs, "ivf-batch",
+        ("__graft_cqid", "__graft_cell"), IntegerType))
     }
   }
-
-  /** Execute the query side projecting (qid, panel vector) — API-sized,
-    * capped INTO the collect, the documented rewrite-time probe class —
-    * then per-qid admission is pure driver arithmetic over the entry's
-    * medoids ([[IvfIndexRegistry.Entry.bestCell]], the identical probe
-    * as the single face and the DuckDB oracle). Declines (empty/over-cap
-    * panel, null rows, duplicate qids, execution failure) fall through
-    * to the exact plan and are memoized like every rewrite probe.
-    */
-  private def probe(querySide: LogicalPlan, qidAttr: AttributeReference,
-                    qEmbAttr: AttributeReference,
-                    entry: IvfIndexRegistry.Entry): Option[Seq[(Long, Int)]] = {
-    val proj = Project(Seq(Alias(qidAttr, "qid")(), Alias(qEmbAttr, "q_emb")()),
-      querySide)
-    val key = (IvfIndexRegistry.entryKey(entry), proj.canonicalized,
-      RewriteSupport.inputFilesDigest(querySide))
-    Option(IvfBatchTopKRewrite.probeMemo.get(key)).getOrElse {
-      var transient = false
-      val computed = try {
-        val qdf = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, proj)
-        val rows = qdf.limit(4097).collect()
-        if (rows.isEmpty || rows.length > 4096 ||
-            rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else {
-          val qids = rows.map(_.getLong(0))
-          if (qids.distinct.length != qids.length) None
-          else Some(rows.flatMap { r =>
-            val v = r.getSeq[Any](1).map {
-              case f: Float => f.toDouble
-              case d: Double => d
-              case n: Number => n.doubleValue()
-            }.toArray
-            // each qid admits its nprobe probed cells (nprobe = 1 is the
-            // historical single-cell admission)
-            entry.bestCells(v, entry.nprobe).map((r.getLong(0), _))
-          }.sortBy(p => (p._1, p._2)).toSeq)
-        }
-      } catch {
-        case scala.util.control.NonFatal(ex) =>
-          logWarning(s"IvfBatchTopKRewrite: panel probe failed — serving " +
-            s"the exact scan", ex)
-          transient = !RewriteSupport.probeFailureExhausted(key)
-          None
-      }
-      // decline-by-shape memoizes; decline-by-exception does not (see
-      // HnswBatchTopKRewrite.probe)
-      if (!transient)
-        RewriteSupport.boundedPut(IvfBatchTopKRewrite.probeMemo, key, computed)
-      computed
-    }
-  }
-}
-
-object IvfBatchTopKRewrite {
-  private[plans] val probeMemo =
-    new ConcurrentHashMap[((String, Seq[(Int, Seq[Double])], Map[Int, Double], Int), LogicalPlan, Long), Option[Seq[(Long, Int)]]]()
 }

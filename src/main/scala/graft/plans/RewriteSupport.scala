@@ -1,31 +1,221 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal, Not, Round}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.reflect.ClassTag
+
+import org.apache.spark.internal.Logging
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal, Not, Round, RowNumber, SortOrder, Ascending, Descending, WindowExpression}
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LocalRelation, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, DoubleType, FloatType, IntegerType, LongType}
 
 import graft.expressions.CosineSimilarity
 
-/** Shared helpers for the transparent-index rewrite rules (IvfTopKRewrite,
-  * HnswTopKRewrite): ONE path canonicalization (registry keys and
-  * maintenance-side invalidation must agree on `file:` prefixes and
-  * trailing slashes) and ONE literal-query-vector extractor — the pieces
-  * both rules must never let drift.
+/** The rewrite kit shared by all eight transparent-index rules ({HNSW,
+  * IVF} × {top-k, batch top-k, range, batch range}): ONE copy of every
+  * piece the rules must never let drift — path canonicalization (registry
+  * keys and maintenance-side invalidation must agree on `file:` prefixes
+  * and trailing slashes), the Project/Filter spine walk, join orientation
+  * and the self-join check, the ranking-form and threshold matchers, the
+  * injected-prune and injected-marker matchers, the batch panel probe
+  * with its memo discipline, and the per-qid semi-join injection. Each
+  * rule keeps only its own firing guards and probe arithmetic.
   */
-private[plans] object RewriteSupport {
+private[plans] object RewriteSupport extends Logging {
 
   def canon(path: String): String =
     path.stripPrefix("file:").replaceAll("/+$", "")
 
+  /** Root paths of a file-backed relation (none for any other source). */
+  def rootPaths(r: LogicalRelation): Seq[String] = r.relation match {
+    case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString)
+    case _ => Nil
+  }
+
+  // --- plan shape -----------------------------------------------------------
+
+  /** THE Project/Filter spine walk: descend through Projects and Filters
+    * to the first other node, collecting every Filter condition passed on
+    * the way (top-down) for the benign-exclusion audits. Callers that run
+    * no audit ignore the conditions.
+    */
+  def spine(p: LogicalPlan): (LogicalPlan, Seq[Expression]) = p match {
+    case pr: Project => spine(pr.child)
+    case f: Filter =>
+      val (bottom, conds) = spine(f.child)
+      (bottom, f.condition +: conds)
+    case other => (other, Nil)
+  }
+
+  /** [[spine]] when its bottom is a `T` — a pure spine down to a relation
+    * or a join; any other operator (aggregate, sample, distinct, set op)
+    * shapes the row set in ways an injected prune cannot account for.
+    */
+  def spineTo[T <: LogicalPlan: ClassTag](p: LogicalPlan): Option[(T, Seq[Expression])] =
+    spine(p) match {
+      case (t: T, conds) => Some((t, conds))
+      case _ => None
+    }
+
+  /** Orient an Inner/Cross join: the side whose pure spine ends at a
+    * relation `registered` accepts is the corpus (left tried first), the
+    * other the query side. Returns (corpus relation, its spine
+    * conditions, entry, query side).
+    */
+  def orient[E](join: Join, registered: LogicalRelation => Option[E]): Option[(LogicalRelation, Seq[Expression], E, LogicalPlan)] =
+    if (join.joinType != Inner && join.joinType != Cross) None
+    else Seq((join.left, join.right), (join.right, join.left)).iterator.flatMap {
+      case (corpus, querySide) => spineTo[LogicalRelation](corpus).flatMap {
+        case (r, conds) => registered(r).map((r, conds, _, querySide))
+      }
+    }.nextOption()
+
+  /** A query side containing the registered TABLE is a self-join — its
+    * "panel" is the corpus, not an API batch. Compared by canonical root
+    * path, not reference equality: DeduplicateRelations gives a
+    * self-join's duplicate side a fresh LogicalRelation instance, so an
+    * `eq` check can never fire.
+    */
+  def selfJoin(rel: LogicalRelation, querySide: LogicalPlan): Boolean = {
+    val relPaths = rootPaths(rel).map(canon).toSet
+    querySide.exists {
+      case r: LogicalRelation => rootPaths(r).map(canon).exists(relPaths)
+      case _ => false
+    }
+  }
+
+  /** Whether some Filter anywhere in `p` has a condition `pred` accepts. */
+  def filterExists(p: LogicalPlan)(pred: Expression => Boolean): Boolean =
+    p.exists {
+      case f: Filter => pred(f.condition)
+      case _ => false
+    }
+
+  /** The expression an attribute aliases in one of `scope`'s Projects —
+    * the sim behind a sort/window key or a pre-pushdown
+    * `withColumn("sim", …).filter(…)` threshold.
+    */
+  def aliasOf(ref: AttributeReference, scope: LogicalPlan): Option[Expression] =
+    scope.collect { case p: Project => p.projectList }.flatten
+      .collectFirst { case a: Alias if a.exprId == ref.exprId => a.child }
+
+  /** Whether `a` IS the relation's column `name` (exprId-matched, so a
+    * same-named column from elsewhere on the plan never passes).
+    */
+  def isColumn(rel: LogicalRelation, a: AttributeReference, name: String): Boolean =
+    rel.output.exists(o => o.exprId == a.exprId && o.name == name)
+
+  /** A sort tail the graph walk can replay: none, or the registered id
+    * ascending (the walk's own tiebreak) — a different secondary key
+    * resolves sim ties over the full corpus, which Ef beam ids cannot.
+    */
+  def idTiebreak(tail: Seq[SortOrder], idAttr: AttributeReference): Boolean = tail match {
+    case Seq() => true
+    case Seq(SortOrder(a: AttributeReference, Ascending, _, _)) => a.exprId == idAttr.exprId
+    case _ => false
+  }
+
+  /** A batch top-k window: its single row_number expression bounded by
+    * the filter (k ≥ 1, see [[rankBound]]), partitioned by exactly one
+    * attribute (the qid) and ordered first by a descending attribute (the
+    * ranked sim). Returns (k, qid, sim).
+    */
+  def rankWindow(cond: Expression, w: Window): Option[(Int, AttributeReference, AttributeReference)] =
+    for {
+      rnk <- w.windowExpressions match {
+        case Seq(a @ Alias(WindowExpression(_: RowNumber, _), _)) =>
+          Some(a.toAttribute.asInstanceOf[AttributeReference])
+        case _ => None
+      }
+      k <- rankBound(cond, rnk)
+      if k >= 1
+      qid <- w.partitionSpec match {
+        case Seq(a: AttributeReference) => Some(a)
+        case _ => None
+      }
+      sim <- w.orderSpec.headOption.collect {
+        case SortOrder(a: AttributeReference, Descending, _, _) => a
+      }
+    } yield (k, qid, sim)
+
+  /** k from a batch top-k filter's rank bound — the WHOLE condition must
+    * be the bound (any extra conjunct shapes the per-qid row count).
+    */
+  private def rankBound(cond: Expression, rnk: AttributeReference): Option[Int] = cond match {
+    case LessThanOrEqual(a: AttributeReference, Literal(k: Int, IntegerType))
+      if a.exprId == rnk.exprId => Some(k)
+    case LessThan(a: AttributeReference, Literal(k: Int, IntegerType))
+      if a.exprId == rnk.exprId => Some(k - 1)
+    case GreaterThanOrEqual(Literal(k: Int, IntegerType), a: AttributeReference)
+      if a.exprId == rnk.exprId => Some(k)
+    case GreaterThan(Literal(k: Int, IntegerType), a: AttributeReference)
+      if a.exprId == rnk.exprId => Some(k - 1)
+    case _ => None
+  }
+
+  // --- ranking form and thresholds ------------------------------------------
+
+  /** How much ranking form a face accepts around the cosine. */
+  sealed trait SimForm
+  /** Exactly `round(cs, 6)` — the graph walk's own ranking: any other
+    * scale, or the raw cosine, resolves round-6 ties (and draws the ≥ t
+    * boundary) differently over the full corpus than over the walk.
+    */
+  case object Round6 extends SimForm
+  /** `round(cs, 6)` or the raw cosine — the IVF range bound, whose slack
+    * covers raw floats; any other scale widens the pass band beyond it.
+    */
+  case object Round6OrRaw extends SimForm
+  /** Any `round` nesting or the raw cosine — the IVF top-k faces, whose
+    * whole-cell prune re-ranks with the user's own expression.
+    */
+  case object AnyRound extends SimForm
+
+  /** The cosine a ranking expression wraps, if it has the given form. */
+  def cosineUnder(e: Expression, form: SimForm): Option[CosineSimilarity] = e match {
+    case c: CosineSimilarity if form != Round6 => Some(c)
+    case r: Round if form == AnyRound => cosineUnder(r.child, form)
+    case r: Round => (r.scale, r.child) match {
+      case (Literal(6, IntegerType), c: CosineSimilarity) => Some(c)
+      case _ => None
+    }
+    case _ => None
+  }
+
   /** The literal query vector behind an ORDER BY cosine_sim(col, <lit>),
     * as doubles (either float or double array literals).
     */
-  def literalVec(l: Literal): Option[Array[Double]] = (l.value, l.dataType) match {
+  private def literalVec(l: Literal): Option[Array[Double]] = (l.value, l.dataType) match {
     case (v: ArrayData, ArrayType(FloatType, _))  => Some(v.toFloatArray().map(_.toDouble))
     case (v: ArrayData, ArrayType(DoubleType, _)) => Some(v.toDoubleArray())
     case _ => None
   }
+
+  /** cosine_sim(<column>, <literal vector>), either argument order. */
+  def literalCosine(c: CosineSimilarity): Option[(AttributeReference, Array[Double])] = c match {
+    case CosineSimilarity(a: AttributeReference, l: Literal) => literalVec(l).map((a, _))
+    case CosineSimilarity(l: Literal, a: AttributeReference) => literalVec(l).map((a, _))
+    case _ => None
+  }
+
+  /** The attribute a two-column cosine ranks the corpus embedding `emb`
+    * against (either argument order), if any.
+    */
+  private def otherSide(c: CosineSimilarity, emb: AttributeReference): Option[AttributeReference] = c match {
+    case CosineSimilarity(a: AttributeReference, b: AttributeReference) =>
+      if (a.exprId == emb.exprId) Some(b) else if (b.exprId == emb.exprId) Some(a) else None
+    case _ => None
+  }
+
+  /** The query-side vector a corpus × query cosine ranks `emb` against. */
+  def queryVector(c: CosineSimilarity, emb: AttributeReference,
+                  querySide: LogicalPlan): Option[AttributeReference] =
+    otherSide(c, emb).filter(querySide.outputSet.contains)
 
   /** Top-level AND-conjuncts of a condition — the granularity at which a
     * threshold predicate may be served (inside an OR/NOT a failing sim no
@@ -40,103 +230,54 @@ private[plans] object RewriteSupport {
     * for the user (plain `0.2` is a double in DataFrame code, a decimal
     * in SQL).
     */
-  def thresholdOf(l: Literal): Option[Double] = (l.value, l.dataType) match {
+  private def literalDouble(l: Literal): Option[Double] = (l.value, l.dataType) match {
     case (v: java.lang.Double, DoubleType) => Some(v.doubleValue)
     case (v: java.lang.Float, FloatType) => Some(v.doubleValue)
     case (v: org.apache.spark.sql.types.Decimal, _: DecimalType) => Some(v.toDouble)
     case _ => None
   }
 
-  /** `sim ≥ t` / `sim > t` (either literal side) with sim in the engine's
-    * canonical ranking form — `round(cosine_sim(attr, <literal vec>), 6)`,
-    * or the bare cosine when `allowRaw` (sound for the IVF bound, whose
-    * slack covers raw floats; the GRAPH walk's own ≥ t cut is on round-6
-    * sims, so its rewrite requires the round form). ONE definition shared
-    * by both range rewrites. Returns (ranked attr, query vector, t).
+  /** `sim ≥ t` / `sim > t` (either literal side) as (sim, t), an
+    * attribute-valued sim resolved through `scope`'s Projects (the
+    * pre-pushdown shape, where the Filter still references the alias).
     */
-  def thresholdConjunct(e: Expression, allowRaw: Boolean): Option[(AttributeReference, Array[Double], Double)] = {
-    def sim(x: Expression): Option[(AttributeReference, Array[Double])] = x match {
-      case r: Round => r.scale match {
-        case Literal(6, IntegerType) => bare(r.child)
-        case _ => None
-      }
-      case _ if allowRaw => bare(x)
+  def threshold(e: Expression, scope: LogicalPlan): Option[(Expression, Double)] = {
+    val cmp = e match {
+      case GreaterThanOrEqual(s, t: Literal) => Some((s, t))
+      case GreaterThan(s, t: Literal) => Some((s, t))
+      case LessThanOrEqual(t: Literal, s) => Some((s, t))
+      case LessThan(t: Literal, s) => Some((s, t))
       case _ => None
     }
-    def bare(x: Expression): Option[(AttributeReference, Array[Double])] = x match {
-      case CosineSimilarity(a: AttributeReference, l: Literal) =>
-        literalVec(l).map((a, _))
-      case CosineSimilarity(l: Literal, a: AttributeReference) =>
-        literalVec(l).map((a, _))
-      case _ => None
-    }
-    e match {
-      case GreaterThanOrEqual(s, t: Literal) =>
-        for { (a, q) <- sim(s); tv <- thresholdOf(t) } yield (a, q, tv)
-      case GreaterThan(s, t: Literal) =>
-        for { (a, q) <- sim(s); tv <- thresholdOf(t) } yield (a, q, tv)
-      case LessThanOrEqual(t: Literal, s) =>
-        for { (a, q) <- sim(s); tv <- thresholdOf(t) } yield (a, q, tv)
-      case LessThan(t: Literal, s) =>
-        for { (a, q) <- sim(s); tv <- thresholdOf(t) } yield (a, q, tv)
-      case _ => None
+    for ((s, t) <- cmp; tv <- literalDouble(t)) yield s match {
+      case a: AttributeReference => (aliasOf(a, scope).getOrElse(a), tv)
+      case _ => (s, tv)
     }
   }
 
-  /** Resolve an attribute-valued comparison side through the spine's
-    * Projects (the pre-pushdown shape `withColumn("sim", …).filter(…)`,
-    * where the Filter still references the alias).
+  /** Each conjunct paired with its threshold ranking `emb` against a
+    * LITERAL query vector in `form` — (query vector, t) — if it is one:
+    * the single range faces' matches, and their remaining conjuncts.
     */
-  def resolveThresholdAlias(e: Expression, child: LogicalPlan): Expression = {
-    def resolve(x: Expression): Expression = x match {
-      case a: AttributeReference =>
-        child.collect { case p: Project => p.projectList }.flatten
-          .collectFirst { case al: Alias if al.exprId == a.exprId => al.child }
-          .getOrElse(x)
-      case other => other
-    }
-    e match {
-      case GreaterThanOrEqual(s, t: Literal) => GreaterThanOrEqual(resolve(s), t)
-      case GreaterThan(s, t: Literal) => GreaterThan(resolve(s), t)
-      case LessThanOrEqual(t: Literal, s) => LessThanOrEqual(t, resolve(s))
-      case LessThan(t: Literal, s) => LessThan(t, resolve(s))
-      case other => other
-    }
-  }
+  def literalThresholds(conds: Seq[Expression], scope: LogicalPlan, emb: AttributeReference,
+                        form: SimForm): Seq[(Expression, Option[(Array[Double], Double)])] =
+    conds.map(c => c -> (for {
+      (s, t) <- threshold(c, scope)
+      (a, q) <- cosineUnder(s, form).flatMap(literalCosine)
+      if a.exprId == emb.exprId
+    } yield (q, t)))
 
-  /** [[thresholdConjunct]]'s two-attribute (batch) form: `sim ≥ t` where
-    * sim is the canonical cosine between TWO attributes — the corpus
-    * embedding and a query-side vector. ONE definition beside the
-    * literal form so the single and batch faces can never accept
-    * different shapes. Returns (attrA, attrB, t) with the caller
-    * responsible for orienting corpus vs query side.
+  /** [[literalThresholds]]' two-attribute (batch) form: each conjunct
+    * paired with its threshold ranking `emb` against ANOTHER attribute in
+    * `form` — (that attribute, t) — if it is one. The caller keeps the
+    * matches whose attribute is on the query side.
     */
-  def thresholdPairConjunct(e: Expression, aliasScope: LogicalPlan,
-                            allowRaw: Boolean): Option[(AttributeReference, AttributeReference, Double)] = {
-    def sim(x: Expression): Option[(AttributeReference, AttributeReference)] = x match {
-      case r: Round => r.scale match {
-        case Literal(6, IntegerType) => bare(r.child)
-        case _ => None
-      }
-      case other if allowRaw => bare(other)
-      case _ => None
-    }
-    def bare(x: Expression): Option[(AttributeReference, AttributeReference)] = x match {
-      case CosineSimilarity(a: AttributeReference, b: AttributeReference) => Some((a, b))
-      case _ => None
-    }
-    resolveThresholdAlias(e, aliasScope) match {
-      case GreaterThanOrEqual(s, t: Literal) =>
-        for { (a, b) <- sim(s); tv <- thresholdOf(t) } yield (a, b, tv)
-      case GreaterThan(s, t: Literal) =>
-        for { (a, b) <- sim(s); tv <- thresholdOf(t) } yield (a, b, tv)
-      case LessThanOrEqual(t: Literal, s) =>
-        for { (a, b) <- sim(s); tv <- thresholdOf(t) } yield (a, b, tv)
-      case LessThan(t: Literal, s) =>
-        for { (a, b) <- sim(s); tv <- thresholdOf(t) } yield (a, b, tv)
-      case _ => None
-    }
-  }
+  def pairThresholds(conds: Seq[Expression], scope: LogicalPlan, emb: AttributeReference,
+                     form: SimForm): Seq[(Expression, Option[(AttributeReference, Double)])] =
+    conds.map(c => c -> (for {
+      (s, t) <- threshold(c, scope)
+      q <- cosineUnder(s, form).flatMap(otherSide(_, emb))
+    } yield (q, t)))
 
   /** THE cell-prune predicate matcher — In/InSet and the EqualTo form
     * OptimizeIn folds a single-element IN into, both literal orders. ONE
@@ -145,15 +286,7 @@ private[plans] object RewriteSupport {
     * the folded form — already caused a duplicate-prune re-fire once).
     */
   def cellPrunePredicate(cellAttr: AttributeReference): Expression => Boolean =
-    (e: Expression) => e.exists {
-      case org.apache.spark.sql.catalyst.expressions.In(a: AttributeReference, _) =>
-        a.exprId == cellAttr.exprId
-      case org.apache.spark.sql.catalyst.expressions.InSet(a: AttributeReference, _) =>
-        a.exprId == cellAttr.exprId
-      case EqualTo(a: AttributeReference, _: Literal) => a.exprId == cellAttr.exprId
-      case EqualTo(_: Literal, a: AttributeReference) => a.exprId == cellAttr.exprId
-      case _ => false
-    }
+    (e: Expression) => e.exists(prunes(cellAttr))
 
   /** [[cellPrunePredicate]]'s ID-side twin — the matcher every graph
     * rule's idempotence guard shares: an injected `id IN (<beam/pool>)`,
@@ -165,106 +298,89 @@ private[plans] object RewriteSupport {
     * the rule on exactly the queries the benign-exclusion audit admits.
     */
   def idPrunePredicate(idAttr: AttributeReference): Expression => Boolean =
-    (e: Expression) => conjuncts(e).exists {
-      case org.apache.spark.sql.catalyst.expressions.In(a: AttributeReference, _) =>
-        a.exprId == idAttr.exprId
-      case org.apache.spark.sql.catalyst.expressions.InSet(a: AttributeReference, _) =>
-        a.exprId == idAttr.exprId
-      case EqualTo(a: AttributeReference, _: Literal) => a.exprId == idAttr.exprId
-      case EqualTo(_: Literal, a: AttributeReference) => a.exprId == idAttr.exprId
+    (e: Expression) => conjuncts(e).exists(prunes(idAttr))
+
+  private def prunes(attr: AttributeReference)(e: Expression): Boolean = e match {
+    case In(a: AttributeReference, _) => a.exprId == attr.exprId
+    case InSet(a: AttributeReference, _) => a.exprId == attr.exprId
+    case EqualTo(a: AttributeReference, _: Literal) => a.exprId == attr.exprId
+    case EqualTo(_: Literal, a: AttributeReference) => a.exprId == attr.exprId
+    case _ => false
+  }
+
+  /** Some(#distinct excluded ids) iff EVERY conjunct of every condition is
+    * a provably benign id exclusion: `NOT (id = <literal>)` or
+    * `IS NOT NULL(id)` (matched by exprId against the registered
+    * relation's id attribute, so an identically-named column from
+    * elsewhere can never pass). Anything else — ranges, IN lists, non-id
+    * references — returns None and the caller falls through. ONE
+    * definition shared by the single-query and batch graph rewrites: the
+    * k + e ≤ Ef headroom argument (the unfiltered top-(k+e) ⊆ the beam
+    * provably contains the filtered top-k) is identical on both faces.
+    */
+  def benignExclusions(conds: Seq[Expression],
+                       idAttr: AttributeReference): Option[Int] = {
+    val excluded = scala.collection.mutable.Set[Any]()
+    val ok = conds.flatMap(conjuncts).forall {
+      case Not(EqualTo(a: AttributeReference, l: Literal))
+        if a.exprId == idAttr.exprId => excluded += l.value; true
+      case Not(EqualTo(l: Literal, a: AttributeReference))
+        if a.exprId == idAttr.exprId => excluded += l.value; true
+      case IsNotNull(a: AttributeReference)
+        if a.exprId == idAttr.exprId => true
       case _ => false
     }
-
-  /** k from a batch top-k filter's rank bound — the WHOLE condition must
-    * be the bound (any extra conjunct shapes the per-qid row count). ONE
-    * definition shared by the graph and IVF batch top-k rewrites.
-    */
-  def rankBound(cond: Expression, rnk: AttributeReference): Option[Int] = cond match {
-    case LessThanOrEqual(a: AttributeReference, Literal(k: Int, IntegerType))
-      if a.exprId == rnk.exprId => Some(k)
-    case LessThan(a: AttributeReference, Literal(k: Int, IntegerType))
-      if a.exprId == rnk.exprId => Some(k - 1)
-    case GreaterThanOrEqual(Literal(k: Int, IntegerType), a: AttributeReference)
-      if a.exprId == rnk.exprId => Some(k)
-    case GreaterThan(Literal(k: Int, IntegerType), a: AttributeReference)
-      if a.exprId == rnk.exprId => Some(k - 1)
-    case _ => None
+    if (ok) Some(excluded.size) else None
   }
 
-  /** Freshness component for rewrite-probe memo keys: a digest of every
-    * file-backed relation's input file paths under the panel subplan. A
-    * CANONICALIZED plan alone is NOT a sound memo key across separately
-    * built queries — HadoopFsRelation equality is rootPaths-only, so a
-    * panel table whose DATA changed between two queries canonicalizes
-    * equal and would serve stale admissions (review finding: the prior
-    * exprId-bearing key never hit cross-query, so the canonicalized
-    * re-key silently introduced this class). Parquet writes mint fresh
-    * part-file names, so any append/overwrite changes this digest; a
-    * listing Spark itself serves stale (no refreshByPath) is stale for
-    * the unrewritten plan too and is not the memo's bug. Uses the file
-    * index's cached listing — no I/O at rewrite time.
+  /** The two optimizer shapes of a batch threshold query: the Filter
+    * above a Project/Filter spine down to the join (pre-pushdown; the
+    * Filter's child is the injection root) and the condition-carried join
+    * PushPredicateThroughJoin leaves (the join itself is the root).
+    * `rewrite(cond, join, spineConds, root)` returns the new root.
     */
-  private val digestNonce = new java.util.concurrent.atomic.AtomicLong(1L)
-
-  def inputFilesDigest(p: LogicalPlan): Long = {
-    var h = 1125899906842597L // FNV-ish fold, order-independent via sort
-    var opaque = false
-    p.foreach {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.inputFiles.sorted.foreach { f =>
-              h = h * 31 + f.hashCode
-            }
-          // a non-file V1 relation (JDBC, …) has no listing to digest —
-          // treat as opaque below
-          case _ => opaque = true
-        }
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LeafNode
-        if !lr.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation] &&
-          !lr.isInstanceOf[org.apache.spark.sql.execution.datasources.LogicalRelation] =>
-        // any other leaf (DSv2 relation, stream source, view stub) backs
-        // data this digest cannot see — FAIL SAFE: a fresh nonce makes
-        // the memo never hit for such panels, trading memoization for
-        // correctness (review finding: a constant here re-opened the
-        // stale-admissions class for non-V1 sources)
-        opaque = true
-      case _ => ()
+  def rewriteRangeJoins(plan: LogicalPlan)(
+      rewrite: (Expression, Join, Seq[Expression], LogicalPlan) => Option[LogicalPlan]): LogicalPlan =
+    plan.transformDown {
+      case f @ Filter(cond, child) =>
+        spineTo[Join](child).flatMap { case (j, conds) => rewrite(cond, j, conds, child) }
+          .map(Filter(cond, _)).getOrElse(f)
+      case j: Join if j.condition.isDefined =>
+        rewrite(j.condition.get, j, Nil, j).getOrElse(j)
     }
-    if (opaque) digestNonce.incrementAndGet() else h
-  }
 
-  /** Crude-but-safe bound for the probe memos: past the cap the whole
-    * map clears (it is a cache — a re-probe is one API-panel job). The
-    * keys retain canonicalized plan trees, so unbounded growth across a
-    * long session of distinct panel shapes would pin file listings on
-    * the driver (review finding).
-    */
-  val ProbeMemoCap = 256
-  def boundedPut[K, V](memo: java.util.concurrent.ConcurrentHashMap[K, V],
-                       k: K, v: V): Unit = {
-    if (memo.size >= ProbeMemoCap) memo.clear()
-    memo.putIfAbsent(k, v)
-  }
+  // --- injection ------------------------------------------------------------
 
-  /** Bounded negative-cache admission for probe EXCEPTION declines: the
-    * first [[ProbeFailRetries]]−1 failures of a key re-probe on later
-    * passes (a transient blip must not pin the exact scan for the
-    * generation), after which the decline memoizes like a shape-decline —
-    * a PERSISTENT fault (corrupt panel file, revoked credentials) must
-    * not re-run a failing driver collect on every optimization of every
-    * query (round-13 second-pass review finding). Returns true when the
-    * caller should memoize the decline now. Keys carry the generation, so
-    * a maintenance fix naturally resets the budget; the counter map is
-    * size-guarded like every probe memo.
+  def inList(a: AttributeReference, values: Seq[Any]): Expression =
+    In(a, values.map(Literal(_)))
+
+  /** `root` with `Filter(cond)` injected directly above `rel` (matched by
+    * reference) — where FileSourceStrategy turns it into file, row-group
+    * or partition pruning.
     */
-  val ProbeFailRetries = 3
-  private val failCounts =
-    new java.util.concurrent.ConcurrentHashMap[Any, Integer]()
-  def probeFailureExhausted(key: Any): Boolean = {
-    if (failCounts.size >= ProbeMemoCap) failCounts.clear()
-    val n = failCounts.merge(key, 1, (a, b) => a + b)
-    if (n >= ProbeFailRetries) { failCounts.remove(key); true } else false
+  def pruneAt(root: LogicalPlan, rel: LogicalRelation, cond: Expression): LogicalPlan =
+    root.transformUp {
+      case r: LogicalRelation if r eq rel => Filter(cond, r)
+    }
+
+  /** THE two-stage per-qid prune every batch face injects: a SUPERSET
+    * `key IN <union of served keys>` filter above the corpus relation
+    * (pushes into the scan, exactly like the single faces' prunes), then a
+    * LEFT SEMI against a (qid, key) literal table stamped with `marker`,
+    * which refines each qid to ITS served keys. `names` and `keyType` name
+    * and type the table's two marker columns.
+    */
+  def semiJoinPrune[K: Ordering](root: LogicalPlan, rel: LogicalRelation,
+                                 qidAttr: AttributeReference, keyAttr: AttributeReference,
+                                 pairs: Seq[(Long, K)], marker: String,
+                                 names: (String, String), keyType: DataType): LogicalPlan = {
+    val pruned = pruneAt(root, rel, inList(keyAttr, pairs.map(_._2).distinct.sorted))
+    val qRef = markerAttr(names._1, LongType, marker)
+    val kRef = markerAttr(names._2, keyType, marker)
+    val local = LocalRelation(Seq(qRef, kRef), pairs.map { case (q, k) => InternalRow(q, k) })
+    local.setTagValue(InjectedMarker, marker)
+    Join(pruned, local, LeftSemi,
+      Some(And(EqualTo(qidAttr, qRef), EqualTo(keyAttr, kRef))), JoinHint.NONE)
   }
 
   /** Tag stamped on the LocalRelation a batch rewrite injects as its
@@ -272,7 +388,7 @@ private[plans] object RewriteSupport {
     * house discipline prefers over name matching (round-11 verdict #7:
     * a user column literally named `__graft_qid` must not read as "the
     * rewrite fired"). The value names the rule family ("hnsw-batch",
-    * "ivf-batch").
+    * "hnsw-range-batch", "ivf-batch").
     */
   val InjectedMarker: org.apache.spark.sql.catalyst.trees.TreeNodeTag[String] =
     org.apache.spark.sql.catalyst.trees.TreeNodeTag[String]("graft.injectedBatchMarker")
@@ -294,8 +410,7 @@ private[plans] object RewriteSupport {
   val MarkerMetaKey = "graft.injectedBatchMarker"
 
   /** An injected-marker attribute: non-nullable, metadata-stamped. */
-  def markerAttr(name: String, dt: org.apache.spark.sql.types.DataType,
-                 marker: String): AttributeReference =
+  def markerAttr(name: String, dt: DataType, marker: String): AttributeReference =
     AttributeReference(name, dt, nullable = false,
       new org.apache.spark.sql.types.MetadataBuilder()
         .putString(MarkerMetaKey, marker).build())()
@@ -303,52 +418,232 @@ private[plans] object RewriteSupport {
   /** The marker value of an injected LocalRelation, if any: the node tag
     * when it survived, else the attribute metadata (rebuild-proof line).
     */
-  def injectedMarkerOf(lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation): Option[String] =
+  def injectedMarkerOf(lr: LocalRelation): Option[String] =
     lr.getTagValue(InjectedMarker).orElse(lr.output.collectFirst {
       case a if a.metadata.contains(MarkerMetaKey) =>
         a.metadata.getString(MarkerMetaKey)
     })
 
-  /** All threshold conjuncts of a Filter condition that rank the given
-    * embedding attribute, alias-resolved through the spine — the shared
-    * front half of both range rewrites. Returns (query vector, t) pairs.
+  /** THE injected-marker scan: the markers of every injected per-qid
+    * semi-join (LEFT SEMI against a marked LocalRelation) in `p` — the
+    * batch faces' idempotence and precedence evidence (ExtensionsSpec
+    * pins marker survival through the full optimizer).
     */
-  def thresholdMatches(cond: Expression, child: LogicalPlan,
-                       embAttr: AttributeReference,
-                       allowRaw: Boolean): Seq[(Array[Double], Double)] =
-    conjuncts(cond)
-      .map { c => thresholdConjunct(c, allowRaw) match {
-        case None => thresholdConjunct(resolveThresholdAlias(c, child), allowRaw)
-        case some => some
-      }}
-      .collect { case Some((a, q, t)) if a.exprId == embAttr.exprId => (q, t) }
+  def injectedMarkers(p: LogicalPlan): Seq[String] = p.collect {
+    case Join(_, lr: LocalRelation, LeftSemi, _, _) => injectedMarkerOf(lr)
+  }.flatten
 
-  /** Some(#distinct excluded ids) iff EVERY conjunct of every condition is
-    * a provably benign id exclusion: `NOT (id = <literal>)` or
-    * `IS NOT NULL(id)` (matched by exprId against the registered
-    * relation's id attribute, so an identically-named column from
-    * elsewhere can never pass). Anything else — ranges, IN lists, non-id
-    * references — returns None and the caller falls through. ONE
-    * definition shared by the single-query and batch graph rewrites: the
-    * k + e ≤ Ef headroom argument (the unfiltered top-(k+e) ⊆ the beam
-    * provably contains the filtered top-k) is identical on both faces.
+  // --- probes ---------------------------------------------------------------
+
+  /** A single-query probe run at rewrite time: a mis-registered or
+    * since-deleted artifact must fail the REWRITE (logged, falling through
+    * to the exact scan), never the user's query; an empty result falls
+    * through too.
     */
-  def benignExclusions(conds: Seq[Expression],
-                       idAttr: AttributeReference): Option[Int] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
+  def probed[T](rule: String, index: String)(probe: => Seq[T]): Option[Seq[T]] =
+    try Some(probe).filter(_.nonEmpty)
+    catch {
+      case scala.util.control.NonFatal(ex) =>
+        logWarning(s"$rule: probe failed for $index — serving the exact scan", ex)
+        None
     }
-    val excluded = scala.collection.mutable.Set[Any]()
-    val ok = conds.flatMap(conjuncts).forall {
-      case Not(EqualTo(a: AttributeReference, l: Literal))
-        if a.exprId == idAttr.exprId => excluded += l.value; true
-      case Not(EqualTo(l: Literal, a: AttributeReference))
-        if a.exprId == idAttr.exprId => excluded += l.value; true
-      case IsNotNull(a: AttributeReference)
-        if a.exprId == idAttr.exprId => true
-      case _ => false
+
+  /** Panels above this many rows are not API batches — the probe declines. */
+  val PanelCap = 4096
+
+  /** THE batch panel probe. Executes the query side projected to
+    * (qid, q_emb) — q_emb alone when `qid` is None — capped INTO the
+    * collect (limit(cap+1) bounds what ever lands on the driver; an
+    * OutOfMemoryError is not NonFatal), and declines an empty or over-cap
+    * panel, null rows and duplicate qids. `serve` gets the panel as
+    * (qid, doubles) sorted by qid (numbered in row order without a qid)
+    * and the collected rows re-pinned as a DataFrame in their ORIGINAL
+    * element type, so a walk scores the exact arrays the user's query
+    * re-scores.
+    *
+    * Memoized in `memo` INCLUDING declines — the optimizer revisits the
+    * shape on every fixed-point iteration and in both matched shapes, and
+    * without a decline slot each visit re-ran the panel collect. Keyed on
+    * value equality with freshness, never an identity hash: the rule,
+    * `key` (the index metadata — dir + generation, or entry values — and
+    * any threshold), the CANONICALIZED projected panel plan and the
+    * panel's [[inputFilesDigest]] (a canonicalized plan alone reads equal
+    * across a data change to the same table). A decline by SHAPE
+    * memoizes; a NonFatal failure (executor loss, FS blip) stays
+    * transient until [[probeFailureExhausted]]. The collect runs outside
+    * any map lock; a racing duplicate is idempotent.
+    */
+  def panelProbe[R](spark: SparkSession, rule: String, memo: ConcurrentHashMap[Any, Option[Any]],
+                    key: Any, querySide: LogicalPlan, qid: Option[AttributeReference],
+                    qEmb: AttributeReference)(
+                    serve: (Seq[(Long, Seq[Double])], () => DataFrame) => Option[R]): Option[R] = {
+    val proj = Project(qid.map(Alias(_, "qid")()).toSeq :+ Alias(qEmb, "q_emb")(), querySide)
+    val fullKey = (rule, key, proj.canonicalized, inputFilesDigest(querySide))
+    Option(memo.get(fullKey)).map(_.asInstanceOf[Option[R]]).getOrElse {
+      var transient = false
+      val computed = try {
+        val qdf = org.apache.spark.sql.GraftSqlBridge.ofRows(spark, proj)
+        val rows = qdf.limit(PanelCap + 1).collect()
+        val e = proj.output.length - 1
+        if (rows.isEmpty || rows.length > PanelCap || rows.exists(r => (0 to e).exists(r.isNullAt))) None
+        else {
+          val qids = rows.indices.map(i => if (qid.isDefined) rows(i).getLong(0) else i.toLong)
+          if (qids.distinct.length != qids.length) None
+          else serve(qids.zip(rows.map(_.getSeq[Any](e).map {
+            case f: Float => f.toDouble
+            case d: Double => d
+            case n: Number => n.doubleValue()
+          }.toSeq)).sortBy(_._1),
+            () => spark.createDataFrame(java.util.Arrays.asList(rows: _*), qdf.schema))
+        }
+      } catch {
+        case scala.util.control.NonFatal(ex) =>
+          logWarning(s"$rule: panel probe failed — serving the exact scan", ex)
+          transient = !probeFailureExhausted(fullKey)
+          None
+      }
+      if (!transient) boundedPut(memo, fullKey, computed)
+      computed
     }
-    if (ok) Some(excluded.size) else None
+  }
+
+  /** Freshness component for rewrite-probe memo keys: a digest of every
+    * file-backed relation's input file paths under the panel subplan. A
+    * CANONICALIZED plan alone is NOT a sound memo key across separately
+    * built queries — HadoopFsRelation equality is rootPaths-only, so a
+    * panel table whose DATA changed between two queries canonicalizes
+    * equal and would serve stale admissions (review finding: the prior
+    * exprId-bearing key never hit cross-query, so the canonicalized
+    * re-key silently introduced this class). Parquet writes mint fresh
+    * part-file names, so any append/overwrite changes this digest; a
+    * listing Spark itself serves stale (no refreshByPath) is stale for
+    * the unrewritten plan too and is not the memo's bug. Uses the file
+    * index's cached listing — no I/O at rewrite time.
+    */
+  private val digestNonce = new java.util.concurrent.atomic.AtomicLong(1L)
+
+  def inputFilesDigest(p: LogicalPlan): Long = {
+    var h = 1125899906842597L // FNV-ish fold, order-independent via sort
+    var opaque = false
+    p.foreach {
+      case r: LogicalRelation =>
+        r.relation match {
+          case fs: HadoopFsRelation =>
+            fs.location.inputFiles.sorted.foreach { f =>
+              h = h * 31 + f.hashCode
+            }
+          // a non-file V1 relation (JDBC, …) has no listing to digest —
+          // treat as opaque below
+          case _ => opaque = true
+        }
+      case lr: org.apache.spark.sql.catalyst.plans.logical.LeafNode
+        if !lr.isInstanceOf[LocalRelation] && !lr.isInstanceOf[LogicalRelation] =>
+        // any other leaf (DSv2 relation, stream source, view stub) backs
+        // data this digest cannot see — FAIL SAFE: a fresh nonce makes
+        // the memo never hit for such panels, trading memoization for
+        // correctness (review finding: a constant here re-opened the
+        // stale-admissions class for non-V1 sources)
+        opaque = true
+      case _ => ()
+    }
+    if (opaque) digestNonce.incrementAndGet() else h
+  }
+
+  /** Crude-but-safe bound for the probe memos: past the cap the whole
+    * map clears (it is a cache — a re-probe is one API-panel job). The
+    * keys retain canonicalized plan trees, so unbounded growth across a
+    * long session of distinct panel shapes would pin file listings on
+    * the driver (review finding).
+    */
+  val ProbeMemoCap = 256
+  def boundedPut[K, V](memo: ConcurrentHashMap[K, V], k: K, v: V): Unit = {
+    if (memo.size >= ProbeMemoCap) memo.clear()
+    memo.putIfAbsent(k, v)
+  }
+
+  /** Bounded negative-cache admission for probe EXCEPTION declines: the
+    * first [[ProbeFailRetries]]−1 failures of a key re-probe on later
+    * passes (a transient blip must not pin the exact scan for the
+    * generation), after which the decline memoizes like a shape-decline —
+    * a PERSISTENT fault (corrupt panel file, revoked credentials) must
+    * not re-run a failing driver collect on every optimization of every
+    * query (round-13 second-pass review finding). Returns true when the
+    * caller should memoize the decline now. Keys carry the generation, so
+    * a maintenance fix naturally resets the budget; the counter map is
+    * size-guarded like every probe memo.
+    */
+  val ProbeFailRetries = 3
+  private val failCounts = new ConcurrentHashMap[Any, Integer]()
+  def probeFailureExhausted(key: Any): Boolean = {
+    if (failCounts.size >= ProbeMemoCap) failCounts.clear()
+    val n = failCounts.merge(key, 1, (a, b) => a + b)
+    if (n >= ProbeFailRetries) { failCounts.remove(key); true } else false
+  }
+}
+
+/** THE canonical-path registry both index families sit on: the entries
+  * keyed by canonical table path, a mutation generation per canonical
+  * key (the HNSW family counts per graph dir, the IVF family per layout
+  * path), and the rule-level batch panel memo ([[RewriteSupport.panelProbe]]),
+  * all purged by [[clear]]. Each family keeps its own `Entry` type and
+  * public method names and adds its own probe memos.
+  */
+private[plans] trait PathRegistry {
+  import RewriteSupport.canon
+
+  type E
+
+  private val byPath = new ConcurrentHashMap[String, E]()
+  private val generations = new ConcurrentHashMap[String, java.lang.Long]()
+  private[plans] val panelMemo = new ConcurrentHashMap[Any, Option[Any]]()
+
+  protected def put(path: String, e: E): Unit = byPath.put(canon(path), e)
+
+  protected def get(path: String): Option[E] = Option(byPath.get(canon(path)))
+
+  def lookup(rootPaths: Seq[String]): Option[E] =
+    rootPaths.iterator.flatMap(get).nextOption()
+
+  /** The entry registered for a relation's root paths, if any. */
+  private[plans] def lookupRel(r: LogicalRelation): Option[E] =
+    lookup(RewriteSupport.rootPaths(r))
+
+  /** Registered (canon table path, entry) rows — the catalog face. */
+  def entries: Seq[(String, E)] = {
+    import scala.jdk.CollectionConverters._
+    byPath.asScala.toSeq.sortBy(_._1)
+  }
+
+  def isEmpty: Boolean = byPath.isEmpty
+
+  /** Drop one registration (the SQL `DROP INDEX` face); the index
+    * artifacts stay on disk — unregistering stops the rewrites/serving,
+    * it does not delete an index a re-register can re-arm.
+    */
+  def unregister(path: String): Unit = byPath.remove(canon(path))
+
+  /** Re-arm a PERSISTED registration (IndexCatalog.load): the entry
+    * verbatim plus the generation of its key, so catalog rows — and every
+    * memo freshness key — read identically across a JVM restart.
+    */
+  protected def restoreEntry(path: String, e: E, genKey: String, gen: Long): Unit = {
+    put(path, e)
+    if (gen > 0) generations.put(canon(genKey), gen)
+  }
+
+  /** Current mutation generation of a key (0 = never mutated in this JVM). */
+  protected def generation(key: String): Long =
+    Option(generations.get(canon(key))).map(_.longValue).getOrElse(0L)
+
+  /** Record a mutation of `key`'s index. Bumping the GENERATION closes
+    * the check-then-act race: a probe that started before the mutation
+    * can only insert under the old generation's memo key, which no
+    * post-mutation lookup ever reads.
+    */
+  def invalidate(key: String): Unit =
+    generations.merge(canon(key), 1L, (a, b) => a + b)
+
+  def clear(): Unit = {
+    byPath.clear(); generations.clear(); panelMemo.clear()
   }
 }

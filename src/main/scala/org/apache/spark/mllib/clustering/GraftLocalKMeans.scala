@@ -59,6 +59,25 @@ import org.apache.spark.util.random.{BernoulliSampler, SamplingUtils, XORShiftRa
   */
 object GraftLocalKMeans {
 
+  /** The Spark release this replica is pinned to: the orchestration it
+    * replicates (sampling seeds, init steps, Lloyd statistics gates) is
+    * private MLlib behaviour that any release may change silently.
+    */
+  val PinnedSparkVersion = "4.1.2"
+
+  /** Fails loudly unless `version` is the pinned release — moving the pin
+    * means re-running LocalKMeansSpec's bit-identity cases against the
+    * new release first.
+    */
+  def checkSparkVersion(version: String): Unit =
+    if (version != PinnedSparkVersion)
+      throw new IllegalStateException(s"GraftLocalKMeans replicates Spark " +
+        s"$PinnedSparkVersion's k-means bit for bit but this is Spark $version: " +
+        "re-run LocalKMeansSpec on it and move PinnedSparkVersion only if it passes")
+
+  private lazy val sparkVersionChecked: Unit =
+    checkSparkVersion(org.apache.spark.SPARK_VERSION)
+
   /** Fit k-means exactly as `new ml.KMeans().setK(k).setSeed(seed)
     * .setMaxIter(maxIterations).setDistanceMeasure(distanceMeasure)
     * .fit(singlePartitionDf)` would, returning the cluster centers in
@@ -68,6 +87,7 @@ object GraftLocalKMeans {
   def fit(points: Array[Vector], k: Int, maxIterations: Int, seed: Long,
           distanceMeasure: String, epsilon: Double = 1e-4,
           initializationSteps: Int = 2): Array[Vector] = {
+    sparkVersionChecked
     require(points.nonEmpty, "local kmeans: empty input")
     val dm = DistanceMeasure.decodeFromString(distanceMeasure)
     // runWithWeight: norms pass, then VectorWithNorm(v, norm, weight=1.0)
@@ -170,7 +190,6 @@ object GraftLocalKMeans {
                     initCenters: Array[VectorWithNorm], maxIterations: Int,
                     epsilon: Double, dm: DistanceMeasure): Array[Vector] = {
     val centers = initCenters.clone()
-    val numFeatures = centers.head.vector.size
     val shouldComputeStats =
       DistanceMeasure.shouldComputeStatistics(centers.length)
     var converged = false

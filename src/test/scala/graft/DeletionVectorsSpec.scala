@@ -149,4 +149,22 @@ class DeletionVectorsSpec extends AnyFunSuite {
       s"sidecar subtraction not broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"), s"corpus shuffled for MOR read:\n$plan")
   }
+
+  test("a failed sidecar commit still deletes the append's tmp dir") {
+    val (root, total) = freshTable()
+    // block the commit: `deletes` is a single parquet FILE (readable, so
+    // the delete's MOR read and staged write succeed) where the append
+    // needs a directory to rename its part into
+    import spark.implicits._
+    val staged = Files.createTempDirectory("graft_dv_blocker").toString
+    Seq((0L, "part-none.parquet", 0L)).toDF("bucket", "file_name", "pos")
+      .coalesce(1).write.mode("overwrite").parquet(staged)
+    val part = new java.io.File(staged).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    Files.move(part.toPath, java.nio.file.Paths.get(root, "deletes"))
+    intercept[Exception](DeletionVectors.deleteWhere(spark, root, col("doc_id") < 10))
+    val leaked = new java.io.File(root).list().filter(_.startsWith(".delta-tmp-"))
+    assert(leaked.isEmpty, s"tmp dirs left behind: ${leaked.mkString(", ")}")
+    assert(DeletionVectors.read(spark, root).count() === total)
+  }
 }

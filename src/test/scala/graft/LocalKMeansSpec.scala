@@ -87,4 +87,32 @@ class LocalKMeansSpec extends AnyFunSuite {
     try assertSameCenters(prepared, k = 2, seed = 7L, distanceMeasure = "euclidean")
     finally prepared.unpersist()
   }
+
+  test("fit refuses a multi-partition input, without starting a Spark job") {
+    import spark.implicits._
+    val twoParts = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0), Seq(1.0, 1.0))
+      .toDF("e").select(array_to_vector(col("e")).as("__v"))
+      .repartition(2)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val err = intercept[IllegalArgumentException](
+        LocalKMeansFit.fit(twoParts, "__v", "__c", k = 2, seed = 7L))
+      assert(err.getMessage.contains("got 2 partitions"))
+      Thread.sleep(500) // the listener bus delivers asynchronously
+      assert(jobs.get === 0, "the partition check started a Spark job")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("the trainer is pinned to the Spark release it replicates") {
+    import org.apache.spark.mllib.clustering.GraftLocalKMeans
+    GraftLocalKMeans.checkSparkVersion(org.apache.spark.SPARK_VERSION)
+    GraftLocalKMeans.checkSparkVersion(GraftLocalKMeans.PinnedSparkVersion)
+    val err = intercept[IllegalStateException](GraftLocalKMeans.checkSparkVersion("4.1.3"))
+    assert(err.getMessage.contains("LocalKMeansSpec") && err.getMessage.contains("4.1.3"))
+  }
 }
