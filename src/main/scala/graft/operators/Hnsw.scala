@@ -456,15 +456,23 @@ object Hnsw {
     * the base + delta + tombstone state through the per-hop pruned reads.
     */
   def searchIn(spark: SparkSession, edgesDir: String, metaDir: String,
-               queries: DataFrame, k: Int): DataFrame = {
-    val (beam, _) = walkGraph(spark, edgesDir, metaDir, queries)
-    beam.withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id"), col("sim"), col("rnk"))
-  }
+               queries: DataFrame, k: Int): DataFrame =
+    topK(walkGraph(spark, edgesDir, metaDir, queries).beam, k)
 
   private def wBeam = Window.partitionBy(col("qid"))
     .orderBy(col("sim").desc, col("vec_id").asc)
+
+  /** Per-qid top-n of (qid, vec_id, sim) rows by (sim desc, id asc). */
+  private def topPerQid(df: DataFrame, n: Int): DataFrame =
+    df.withColumn("__rn", row_number().over(wBeam))
+      .filter(col("__rn") <= n)
+      .select(col("qid"), col("vec_id"), col("sim"))
+
+  /** A face's output: per-qid top-k (qid, vec_id, sim, rnk). */
+  private def topK(df: DataFrame, k: Int): DataFrame =
+    df.withColumn("rnk", row_number().over(wBeam))
+      .filter(col("rnk") <= k)
+      .select(col("qid"), col("vec_id"), col("sim"), col("rnk"))
 
   /** Test-only instrumentation switch: when set (HnswSpec), each walk
     * records per-hop scan-plan leaves and per-hop (scanned files, probed
@@ -610,96 +618,103 @@ object Hnsw {
     morResolve(all, g.latest, g.tombs).select(col("src"), col("dst"), col(embCol))
   }
 
-  /** One hop of the beam walk: neighbor expansion + scoring in ONE probe
-    * of the bucket-pruned adjacency — `dst_emb` rides the matched edge
-    * rows, so the join output is already scorable (Ef·MaxDegree rows,
-    * corpus untouched). Beam members keep their already-computed sims
-    * (deterministic round-6 cosine of the same arrays — re-scoring would
-    * be a no-op). Returns (candidate pool of the hop, next beam). ONE
-    * definition shared by the fixed-schedule walk and the adaptive
-    * search so the two serving faces cannot desync.
+  /** How a walk scores a candidate: the payload column its edge rows
+    * carry, the meta column carrying the entry's payload, and the
+    * similarity of a payload against the row's query vector — the
+    * joined-in `q_emb` at the entry and on the bulk path, the literal
+    * panel lookup ([[panelLit]]) on the small path. A scorer that reads
+    * only the row's qid (ADC's literal tables) sets `byQuery` false: the
+    * walk then neither joins the panel in nor builds the panel literal.
     */
-  private def hopOnce(edges: DataFrame, qs: DataFrame,
-                      beam: DataFrame): (DataFrame, DataFrame) = {
-    val nbrs = edges
+  private case class Scorer(payload: String, entryPayload: String,
+                            sim: (Column, Column) => Column, byQuery: Boolean)
+
+  /** The full-precision face: round-6 cosine of the denormalized vector. */
+  private val ExactScorer = Scorer("dst_emb", "entry_emb",
+    (emb, q) => round(GraftFunctions.cosineSim(emb, q), 6), byQuery = true)
+
+  /** The bulk-path neighbor scoring: the hop's live adjacency joined to
+    * the beam's (qid, src) pairs and scored in ONE probe — the payload
+    * rides the matched edge rows, so the join output is already scorable
+    * (≤ width·MaxDegree rows per qid, corpus untouched). Beam members keep
+    * their already-computed sims (the deterministic score of the same
+    * values — re-scoring would be a no-op). ONE definition shared by the
+    * walk's bulk hops and the range frontier's, so they cannot desync.
+    */
+  private def hopNbrs(edges: DataFrame, beam: DataFrame, qs: DataFrame,
+                      sc: Scorer): DataFrame = {
+    val rows = edges
       .join(broadcast(beam.select(col("qid"), col("vec_id").as("src"))), Seq("src"))
-      .join(broadcast(qs), Seq("qid"))
-      .withColumn("sim",
-        round(GraftFunctions.cosineSim(col("dst_emb"), col("q_emb")), 6))
+    (if (sc.byQuery) rows.join(broadcast(qs), Seq("qid")) else rows)
+      .withColumn("sim", sc.sim(col(sc.payload), col("q_emb")))
       .select(col("qid"), col("dst").as("vec_id"), col("sim"))
-    val cands = beam.select(col("qid"), col("vec_id"), col("sim"))
-      .union(nbrs).distinct()
-    val next = cands
-      .withColumn("__rn", row_number().over(wBeam))
-      .filter(col("__rn") <= Ef)
-      .select(col("qid"), col("vec_id"), col("sim"))
-    (cands, next)
   }
 
-  /** The shared hop-0: score the global entry point from the
-    * meta-carried `entry_emb` (no corpus lookup).
+  /** The tombstoned-entry guard, ONE for every face: an entry tombstoned
+    * while the meta still names it (deleted after this meta was written,
+    * before deleteFromGraph's re-election ran — the sidecar→meta crash
+    * window — or a hand-mutated clone) must never be SERVED. The
+    * resolution drops tombstoned dsts; this drops the one id that enters
+    * the beam from meta instead of an edge.
     */
-  private def entryBeam(qs: DataFrame, meta: DataFrame): DataFrame =
-    qs.crossJoin(broadcast(meta.select(col("entry").as("vec_id"), col("entry_emb"))))
-      .withColumn("sim",
-        round(GraftFunctions.cosineSim(col("entry_emb"), col("q_emb")), 6))
-      .select(col("qid"), col("vec_id"), col("sim"))
+  private def liveEntry(g: GraphRefs, entry: Seq[Triple]): Seq[Triple] = {
+    val ids = entry.map(_._2).distinct
+    val dead: Set[Long] = g.tombs match {
+      case Some(SidecarState(Some(t), _)) => ids.filter(t.contains).toSet
+      case Some(SidecarState(_, Some(f))) if ids.nonEmpty =>
+        f.filter(col("vec_id").isin(ids: _*)).collect().map(_.getLong(0)).toSet
+      case _ => Set.empty
+    }
+    entry.filterNot(t => dead(t._2))
+  }
 
-  /** Above this many beam rows (Ef · |query batch|), hop pinning falls
-    * back from the collect-and-rebuild fast path to localCheckpoint —
-    * the full beam frames stay on executors and only the src IDS (8
+  /** The one small/bulk rule: a walk loop whose beams would hold more
+    * than this many rows (panel rows × the loop's beam width) keeps them
+    * on executors — localCheckpointed frames, with only the src IDS (8
     * bytes each, required regardless: they ARE the next hop's literal
-    * bucket filter) come to the driver (round-10 advisor: the fast
-    * path's driver memory scales with Ef × |batch|, fine for API-sized
-    * panels, a regression risk for bulk query panels). At Ef = 16 the
-    * default bound flips at |batch| > 4096 queries.
+    * bucket filter) on the driver (round-10 advisor: the driver fold's
+    * memory scales with width × |batch|, fine for API-sized panels, a
+    * regression risk for bulk query panels). At Ef = 16 the default
+    * bound flips at |batch| > 4096 queries.
     */
   @volatile var PinHopMaxRows: Long = 1L << 16 // var: HnswSpec forces the bulk path to pin small ≡ large
 
-  /** One pinned hop: the replayable frame, its src ids (the next hop's
-    * literal bucket filter), the per-qid beam MEMBERSHIP (None on the
-    * bulk-panel path, where rows stay on executors), and the pinned row
-    * count.
+  private def bulk(panelRows: Int, width: Int): Boolean =
+    panelRows.toLong * width > PinHopMaxRows
+
+  /** One pinned bulk-path hop: the replayable frame, its src ids (the
+    * next hop's literal bucket filter), and the per-qid beam MEMBERSHIP
+    * when the walk asked for it (None otherwise).
     */
   private case class Pinned(frame: DataFrame, srcs: Seq[Long],
-                            members: Option[Set[(Long, Long)]], nRows: Int)
+                            members: Option[Set[(Long, Long)]])
 
-  /** Pin a hop frame. Small path: ONE driver job — the beam is
-    * ≤ Ef·|batch| rows of driver metadata, collected once and rebuilt as
-    * a local relation (the bulk path's next hop re-joins it); the src
-    * ids AND the membership
-    * set (the fixed-point detector's input — free, the rows are already
-    * here) fall out of the same collected rows. localCheckpoint + a
-    * separate distinct-collect was a measured ~0.2 s/hop of pure
-    * scheduling at sf0.1 across the up-to-12-hop walk. Large (bulk-panel)
-    * path: beam rows stay on executors; only the ids — required
-    * regardless, they ARE the bucket filter — come to the driver, and no
-    * membership is tracked (no fixed-point skipping there).
+  /** Pin a bulk-path hop frame: beam rows stay on executors; only the ids
+    * — required regardless, they ARE the bucket filter — come to the
+    * driver, in ONE job: the distinct ids, or, for a walk that stops at a
+    * fixed point (the adaptive face), the (qid, id) membership the ids
+    * fall out of.
     */
-  private def pinHop(hop: DataFrame, large: Boolean = false): Pinned = {
-    if (large) {
-      val pinned = hop.localCheckpoint()
-      val srcs = pinned.select(col("vec_id")).distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      return Pinned(pinned, srcs, None, -1)
-    }
-    val spark = hop.sparkSession
-    val rows = hop.collect()
-    val pinned = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), hop.schema)
-    val idIdx = hop.schema.fieldIndex("vec_id")
-    val qIdx = hop.schema.fieldIndex("qid")
-    val srcs = rows.map(_.getLong(idIdx)).distinct.sorted.toSeq
-    val members = rows.map(r => (r.getLong(qIdx), r.getLong(idIdx))).toSet
-    Pinned(pinned, srcs, Some(members), rows.length)
+  private def pinHop(hop: DataFrame, members: Boolean): Pinned = {
+    val pinned = hop.localCheckpoint()
+    if (members) {
+      val m = pinned.select(col("qid"), col("vec_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      Pinned(pinned, m.toSeq.map(_._2).distinct.sorted, Some(m))
+    } else Pinned(pinned, pinned.select(col("vec_id")).distinct()
+      .collect().map(_.getLong(0)).sorted.toSeq, None)
   }
 
-  /** Whether a walk whose ENTRY beam pinned `p` rows (exactly one per
-    * qid) must take the bulk-panel pin path — derived from the entry's
-    * own count, so no extra job runs on the common API-sized path.
+  /** Pin a query panel for a walk that re-reads it: an already-local
+    * panel (a driver-built frame — the single-query serve's) is used as
+    * is, job-free; any other source is localCheckpointed once, so the
+    * walk never re-opens the caller's source.
     */
-  private def largePanel(entry: Pinned): Boolean =
-    entry.nRows.toLong * Ef > PinHopMaxRows
+  private def pinPanel(queries: DataFrame): DataFrame =
+    queries.queryExecution.optimizedPlan match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => queries
+      case _ => queries.localCheckpoint()
+    }
 
   /** Pin a small frame as a driver-local relation. NOTE (measured): even
     * a LocalRelation-backed broadcast materializes as a 1-task job under
@@ -715,51 +730,23 @@ object Hnsw {
       java.util.Arrays.asList(rows: _*), df.schema)
   }
 
-  /** The schedule's layers grouped into consecutive same-layer PHASES —
-    * the unit the fixed-point skip operates on: once a hop's beam
-    * membership is unchanged, every remaining hop of the SAME layer is a
-    * provably identical no-op (the hop is a deterministic function of
-    * beam membership: same beam + same layer ⇒ same candidates ⇒ same
-    * top-Ef — and its candidate set was already unioned into the visited
-    * pool by the hop that established the fixed point), so the walk
-    * skips them. The next layer's hops expand DIFFERENT edges and always
-    * run. The oracle's static unroll replays skipped hops as
-    * pass-through re-ranks — value-identical by the same argument — so
-    * every hash-checked ann_* query pins this optimization's soundness.
-    */
-  private def phasesOf(schedule: Seq[Int]): Seq[Seq[Int]] =
-    schedule.foldRight(List.empty[List[Int]]) {
-      case (l, (h @ (l2 :: _)) :: t) if l2 == l => (l :: h) :: t
-      case (l, acc) => List(l) :: acc
-    }
-
   /** A beam row held driver-side on the small-panel walk path. */
   private type Triple = (Long, Long, Double)
 
-  /** (qid, vec_id, sim) triples of a collected hop frame — resolved BY
-    * NAME, never positionally: a using-join on the spine (the
-    * tombstoned-entry guard's anti-join) reorders columns.
-    */
+  /** The triples of a collected (qid, vec_id, sim) frame. */
   private def triplesOf(rows: Array[org.apache.spark.sql.Row]): Seq[Triple] =
-    rows.headOption match {
-      case None => Nil
-      case Some(h) =>
-        val q = h.fieldIndex("qid")
-        val v = h.fieldIndex("vec_id")
-        val s = h.fieldIndex("sim")
-        rows.map(r => (r.getLong(q), r.getLong(v), r.getDouble(s))).toSeq
-    }
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
 
   private def beamFrame(spark: SparkSession, ts: Seq[Triple]): DataFrame = {
     import spark.implicits._
     ts.toDF("qid", "vec_id", "sim")
   }
 
-  /** Per-qid top-ef of a candidate multiset — the DRIVER twin of
-    * [[hopOnce]]'s union+distinct+window: identical dedup (duplicates of
-    * a (qid, id) always carry the identical rounded sim), identical
-    * (sim desc, id asc) total order over the identical doubles Spark
-    * computed, identical per-qid cut. The sims are NEVER re-derived
+  /** Per-qid top-ef of a candidate multiset — the DRIVER twin of the
+    * bulk path's union+distinct+[[topPerQid]]: identical dedup
+    * (duplicates of a (qid, id) always carry the identical rounded sim),
+    * identical (sim desc, id asc) total order over the identical doubles
+    * Spark computed, identical per-qid cut. The sims are NEVER re-derived
     * here — every similarity is computed by the Spark plan (the round-6
     * cosine projection inside the probe) and only SORTED on the driver,
     * so there is no cross-engine arithmetic to drift; the 322-query
@@ -770,19 +757,20 @@ object Hnsw {
       g.sortBy(t => (-t._3, t._2)).take(ef)
     }
 
-  /** One small-panel hop: the bucket-pruned edge probe with EVERYTHING
-    * in one map-only stage — no joins, no broadcasts, no exchanges. The
-    * src→qids fan-out and the per-qid scoring both ride as LITERAL map
-    * expressions (the beam and the query panel are driver data): each
-    * matched edge row explodes to its beam qids and scores in place.
-    * This is the round-10 verdict's fixed-overhead shave made
-    * structural: the previous distributed hop (union + distinct +
-    * window) ran ~5 jobs / ~38 tasks, and even a broadcast-join variant
-    * pays 1-task broadcast-materialization jobs per side per hop; this
-    * runs ONE job of ≤ |beam buckets| tasks, and the
-    * ≤ |srcs|·MaxDegree-row fold happens where the beam already lives.
-    * `embCol`/`simOf` parameterize the payload (exact dst_emb cosine vs
-    * PQ ADC codes); `simOf` sees rows carrying (qid, src, dst, embCol).
+  /** One small-path hop — the walk's and the range frontier's: the
+    * bucket-pruned edge probe with EVERYTHING in one map-only stage — no
+    * joins, no broadcasts, no exchanges. The src→qids fan-out and the
+    * per-qid scoring both ride as LITERAL map expressions (the beam and
+    * the query panel are driver data): each matched edge row explodes to
+    * its beam qids and scores in place. This is the round-10 verdict's
+    * fixed-overhead shave made structural: a distributed hop (union +
+    * distinct + window — the bulk path's) runs ~5 jobs / ~38 tasks, and
+    * even a broadcast-join variant pays 1-task broadcast-materialization
+    * jobs per side per hop; this runs ONE job of ≤ |beam buckets| tasks,
+    * and the ≤ |srcs|·MaxDegree-row fold happens where the beam already
+    * lives. `embCol`/`simOf` parameterize the payload (exact dst_emb
+    * cosine vs PQ ADC codes); `simOf` sees rows carrying (qid, src, dst,
+    * embCol).
     */
   private def probeHop(spark: SparkSession, g: GraphRefs, layer: Int,
                        beam: Seq[Triple], embCol: String,
@@ -798,120 +786,161 @@ object Hnsw {
       .select(col("qid"), col("dst").as("vec_id"), col("sim"))
     val nbrs = triplesOf(nbrsF.collect())
     if (collectWalkStats) {
-      scans += nbrsF.queryExecution.sparkPlan.collectLeaves().map(_.toString).toSeq
-      files += ((nbrsF.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numFiles").map(_.value)).sum,
-        srcs.map(srcBucket).distinct.length))
+      scans += leaves(nbrsF)
+      files += ((scannedFiles(nbrsF), srcs.map(srcBucket).distinct.length))
     }
     nbrs
   }
 
-  /** The exact face's hop scoring as a literal-map lookup: round-6
-    * cosine of the denormalized dst embedding against THE ROW'S QID's
-    * query vector ([[hopOnce]]'s formula with the panel inlined — the
-    * identical expression over the identical values, so parity with the
-    * distributed face and the oracle replay is by construction). The
-    * map is built from the panel's own rows in their ORIGINAL element
-    * type, so no precision boundary moves.
+  private def leaves(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collectLeaves().map(_.toString).toSeq
+
+  private def scannedFiles(df: DataFrame): Long =
+    df.queryExecution.executedPlan.collectLeaves()
+      .flatMap(_.metrics.get("numFiles").map(_.value)).sum
+
+  /** The small path's query column: THE ROW'S QID's query vector as a
+    * literal-map lookup, built from the panel's own rows in their
+    * ORIGINAL element type — so the scorer sees the identical values the
+    * joined-in `q_emb` carries on the bulk path, and parity with the
+    * distributed face and the oracle replay holds by construction.
     */
-  private def exactSimLit(qRows: Array[org.apache.spark.sql.Row]): Column => Column = {
+  private def panelLit(qs: DataFrame): Column = {
     import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val qIdx = qRows.head.fieldIndex("qid")
-    val eIdx = qRows.head.fieldIndex("q_emb")
+    val rows = qs.select(col("qid"), col("q_emb")).collect()
     // branch on the SCHEMA, not runtime boxing (erasure makes getSeq's
     // element type a fiction — a mistyped literal map fails Catalyst's
     // literal validation at plan build)
-    qRows.head.schema(eIdx).dataType match {
+    qs.schema("q_emb").dataType match {
       case ArrayType(FloatType, _) =>
-        val m: Map[Long, Seq[Float]] = qRows.map(r =>
-          r.getLong(qIdx) -> r.getSeq[Float](eIdx).toSeq).toMap
-        embC => round(GraftFunctions.cosineSim(embC,
-          element_at(typedLit(m), col("qid"))), 6)
+        element_at(typedLit(rows.map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap),
+          col("qid"))
       case _ =>
-        val m: Map[Long, Seq[Double]] = qRows.map(r =>
-          r.getLong(qIdx) -> r.getSeq[Double](eIdx).toSeq).toMap
-        embC => round(GraftFunctions.cosineSim(embC,
-          element_at(typedLit(m), col("qid"))), 6)
+        element_at(typedLit(rows.map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toMap),
+          col("qid"))
     }
   }
 
-  private def walkGraph(spark: SparkSession, edgesDir: String, metaDir: String,
-                        queries: DataFrame): (DataFrame, DataFrame) = {
+  /** Per-layer hop caps, top layer first: [[HopsPerLayer]] per express
+    * layer, `l0` on the base. At `l0` = [[HopsL0]] these are the phases
+    * of the fixed [[Schedule]]; the walk skips layers a graph lacks.
+    */
+  private def capsTo(l0: Int): Seq[(Int, Int)] =
+    ((MaxLayersStatic - 1) to 1 by -1).map(_ -> HopsPerLayer) :+ (0 -> l0)
+
+  /** Run `hop` up to `cap` times, stopping after the first hop that
+    * reports a fixed point; returns the hops run.
+    */
+  private def hopsUntilFixed(cap: Int)(hop: => Boolean): Int = {
+    var h = 0
+    var fixed = false
+    while (h < cap && !fixed) { fixed = hop; h += 1 }
+    h
+  }
+
+  /** One walk's outcome: the final beam, the visited pool (every scored
+    * candidate; repeats allowed), the realized hops per layer (index =
+    * layer), and what the walk opened — the graph, the pinned panel, one
+    * qid per panel row and its small-path hop (a [[probeHop]] bound to
+    * the graph and the literal scorer) — so a face that keeps walking
+    * (the range frontier) re-opens and re-reads nothing.
+    */
+  private case class Walk(beam: DataFrame, visited: DataFrame, hops: Seq[Long],
+                          g: GraphRefs, qs: DataFrame, panel: Seq[Long],
+                          probe: (Int, Seq[Triple]) => Seq[Triple])
+
+  /** THE beam walk behind every search face — HNSW's greedy layer walk
+    * (Malkov & Yashunin, arXiv:1603.09320) under per-layer hop caps.
+    * Hop 0 scores the meta's entry point from its meta-carried payload
+    * (no corpus lookup), one row per panel row, behind [[liveEntry]].
+    * Then, for each (layer, cap) of `caps` the graph has, top layer
+    * first, each hop is "candidates := beam ∪ scored neighbors(beam);
+    * beam := per-qid top-`width` by (sim desc, id asc)" until the cap or
+    * a FIXED POINT: once a hop leaves beam membership unchanged, every
+    * further hop on that layer is a provably identical no-op (the hop is
+    * a deterministic function of beam membership and layer, and the
+    * fixed-point hop already pooled its candidates), so the walk stops
+    * the layer — the early termination of progressive top-k search. The
+    * oracle's static unroll replays skipped hops as pass-through
+    * re-ranks, so every hash-checked ann_* query pins the skip's
+    * soundness.
+    *
+    * Two dataflows, chosen by the one [[PinHopMaxRows]] rule: the small
+    * path runs one map-only [[probeHop]] job per hop and folds on the
+    * driver; the bulk path keeps beams on executors ([[hopNbrs]] + a
+    * window per hop, [[pinHop]]ped). The bulk path has no membership on
+    * the driver, so it stops at a fixed point only when `converge` asks
+    * (the adaptive face, whose realized hops ARE its replay artifact) and
+    * otherwise runs every cap out — value-identical by the same argument.
+    * An empty panel or a tombstoned entry walks no hop. HnswSpec pins
+    * small ≡ bulk face by face.
+    */
+  private def walk(spark: SparkSession, edgesDir: String, metaDir: String,
+                   qs: DataFrame, caps: Seq[(Int, Int)], width: Int,
+                   sc: Scorer, converge: Boolean = false): Walk = {
     GraftFunctions.register(spark)
     val g = openGraph(spark, edgesDir)
     val meta = spark.read.parquet(metaDir)
     val nLayers = meta.select(col("n_layers")).head().getInt(0)
     val scans = Seq.newBuilder[Seq[String]]
     val files = Seq.newBuilder[(Long, Int)]
-    def leaves(df: DataFrame): Seq[String] =
-      df.queryExecution.sparkPlan.collectLeaves().map(_.toString).toSeq
-    def scannedFiles(df: DataFrame): Long =
-      df.queryExecution.executedPlan.collectLeaves()
-        .flatMap(_.metrics.get("numFiles").map(_.value)).sum
-    // pin the query batch ONCE: each hop re-joins it for q_emb, and
-    // without the checkpoint every hop would re-open the caller's source
-    val qsCk = queries.localCheckpoint()
-    // a tombstoned entry (deleted after this meta was written, before
-    // deleteFromGraph's re-election ran — or a hand-mutated clone) must
-    // never be SERVED: the resolution drops tombstoned dsts, and this
-    // drops the one id that enters the beam from meta instead of an edge
-    val entryF = g.tombs match {
-      case Some(SidecarState(Some(t), _)) if t.nonEmpty =>
-        entryBeam(qsCk, meta).filter(!col("vec_id").isInCollection(t))
-      case Some(SidecarState(_, Some(f))) =>
-        entryBeam(qsCk, meta)
-          .join(broadcast(f), Seq("vec_id"), "left_anti")
-      case _ => entryBeam(qsCk, meta)
-    }
+    val entryF = qs
+      .crossJoin(broadcast(meta.select(col("entry").as("vec_id"), col(sc.entryPayload))))
+      .withColumn("sim", sc.sim(col(sc.entryPayload), col("q_emb")))
+      .select(col("qid"), col("vec_id"), col("sim"))
     if (collectWalkStats) scans += leaves(entryF)
-    val entry = pinHop(entryF)
-    if (largePanel(entry)) {
-      // bulk-panel path: beams stay on executors — hopOnce's distributed
-      // union+distinct+window, full schedule, no membership tracking.
-      // HnswSpec pins small ≡ large on a fixture batch.
-      var beamL = entry.frame
-      var srcsL = entry.srcs
-      var visitedL = beamL
-      for (layer <- scheduleFor(nLayers)) {
-        val edges = hopEdges(spark, g, layer, srcsL, "dst_emb")
-        val (cands, hop) = hopOnce(edges, qsCk, beamL)
-        visitedL = visitedL.union(cands)
-        if (collectWalkStats) scans += leaves(hop)
-        val nBuckets = srcsL.map(srcBucket).distinct.length
-        val p = pinHop(hop, large = true)
-        if (collectWalkStats) files += ((scannedFiles(hop), nBuckets))
-        beamL = p.frame; srcsL = p.srcs
+    val entry = triplesOf(entryF.collect())
+    val beam0 = liveEntry(g, entry)
+    lazy val qLit = if (sc.byQuery) panelLit(qs) else lit(null)
+    def probe(layer: Int, beam: Seq[Triple]): Seq[Triple] =
+      probeHop(spark, g, layer, beam, sc.payload, sc.sim(_, qLit), scans, files)
+    val hops = Array.fill(MaxLayersStatic)(0L)
+    def run(hop: Int => Boolean): Unit =
+      if (beam0.nonEmpty) for ((layer, cap) <- caps if layer < nLayers)
+        hops(layer) = hopsUntilFixed(cap)(hop(layer)).toLong
+    def members(ts: Seq[Triple]): Set[(Long, Long)] = ts.map(t => (t._1, t._2)).toSet
+    val (beamOut, visitedOut) = if (bulk(entry.length, width)) {
+      var beam = beamFrame(spark, beam0)
+      var srcs = beam0.map(_._2).distinct.sorted
+      var cur = members(beam0)
+      var visited = beam
+      run { layer =>
+        val cands = beam.union(
+          hopNbrs(hopEdges(spark, g, layer, srcs, sc.payload), beam, qs, sc)).distinct()
+        visited = visited.union(cands)
+        val next = topPerQid(cands, width)
+        if (collectWalkStats) scans += leaves(next)
+        val p = pinHop(next, members = converge)
+        if (collectWalkStats) files += ((scannedFiles(next), srcs.map(srcBucket).distinct.length))
+        val fixed = p.members.contains(cur)
+        beam = p.frame; srcs = p.srcs; cur = p.members.getOrElse(cur)
+        fixed
       }
-      if (collectWalkStats) { lastWalkScans = scans.result(); lastWalkFiles = files.result() }
-      return (beamL, visitedL)
-    }
-    // small-panel path: ONE map-only job per hop (probeHop), the beam
-    // fold on the driver, fixed-point skipping per phase (see phasesOf)
-    var beam: Seq[Triple] = triplesOf(entry.frame.collect())
-    val visited = scala.collection.mutable.LinkedHashSet.empty[Triple]
-    visited ++= beam
-    if (beam.nonEmpty) {
-      val simOf = exactSimLit(qsCk.collect())
-      for (phase <- phasesOf(scheduleFor(nLayers))) {
-        val layer = phase.head
-        var h = 0
-        var fixed = false
-        while (h < phase.length && !fixed) {
-          val nbrs = probeHop(spark, g, layer, beam, "dst_emb",
-            simOf, scans, files)
-          val cands = beam ++ nbrs
-          visited ++= cands
-          val next = topEfLocal(cands, Ef)
-          fixed = next.map(t => (t._1, t._2)).toSet ==
-            beam.map(t => (t._1, t._2)).toSet
-          beam = next
-          h += 1
-        }
+      (beam, visited)
+    } else {
+      var beam = beam0
+      val visited = scala.collection.mutable.LinkedHashSet.empty[Triple]
+      visited ++= beam
+      run { layer =>
+        val cands = beam ++ probe(layer, beam)
+        visited ++= cands
+        val next = topEfLocal(cands, width)
+        val fixed = members(next) == members(beam)
+        beam = next
+        fixed
       }
+      (beamFrame(spark, beam), beamFrame(spark, visited.toSeq))
     }
     if (collectWalkStats) { lastWalkScans = scans.result(); lastWalkFiles = files.result() }
-    (beamFrame(spark, beam), beamFrame(spark, visited.toSeq))
+    Walk(beamOut, visitedOut, hops.toSeq, g, qs, entry.map(_._1), probe)
   }
+
+  /** The fixed-schedule exact walk — [[searchIn]], [[searchFilteredIn]]
+    * and the first stage of [[searchRangeIn]].
+    */
+  private def walkGraph(spark: SparkSession, edgesDir: String, metaDir: String,
+                        queries: DataFrame): Walk =
+    walk(spark, edgesDir, metaDir, pinPanel(queries), capsTo(HopsL0), Ef, ExactScorer)
 
   /** FILTERED graph search (the ACORN posture — Patel 2024: navigate
     * unfiltered, collect filtered): post-filtering the final beam loses
@@ -938,19 +967,13 @@ object Hnsw {
     */
   def searchFilteredIn(spark: SparkSession, edgesDir: String, metaDir: String,
                        queries: DataFrame, k: Int,
-                       pred: org.apache.spark.sql.Column): DataFrame = {
-    val (_, visited) = walkGraph(spark, edgesDir, metaDir, queries)
+                       pred: org.apache.spark.sql.Column): DataFrame =
     // the visited pool already carries every candidate's sim (scored at
     // the hop that first reached it), so the filtered rank is a pure
     // re-sort of the pool's matching subset — no corpus rescan, no
     // second scoring pass. `pred` ranges over (qid, vec_id, sim); an
     // attribute predicate joins its own (small) attribute frame first.
-    visited.distinct()
-      .filter(pred)
-      .withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id"), col("sim"), col("rnk"))
-  }
+    topK(walkGraph(spark, edgesDir, metaDir, queries).visited.distinct().filter(pred), k)
 
   // --- threshold (range) serving --------------------------------------------
 
@@ -993,63 +1016,35 @@ object Hnsw {
     */
   def searchRangeIn(spark: SparkSession, edgesDir: String, metaDir: String,
                     queries: DataFrame, t: Double): DataFrame = {
-    val (_, visited0) = walkGraph(spark, edgesDir, metaDir, queries)
-    val g = openGraph(spark, edgesDir)
-    val qRows = queries.collect()
-    if (qRows.length.toLong * RangeBeamCap > PinHopMaxRows) {
-      // bulk-panel path: the distributed range loop (beams on executors)
-      val qs = queries.localCheckpoint()
-      var visited = visited0.distinct().localCheckpoint()
+    val w = walkGraph(spark, edgesDir, metaDir, queries)
+    if (bulk(w.panel.length, RangeBeamCap)) {
+      // bulk-panel path: the distributed range loop (frontiers on executors)
+      var visited = w.visited.distinct().localCheckpoint()
       var size = visited.count()
-      var hop = 0
-      var done = false
-      while (hop < RangeHops && !done) {
-        val frontier = visited
-          .withColumn("__rn", row_number().over(wBeam))
-          .filter(col("__rn") <= RangeBeamCap)
-          .select(col("qid"), col("vec_id"), col("sim"))
-        val pinned = pinHop(frontier, large = true)
-        if (pinned.srcs.isEmpty) done = true
-        else {
-          val edges = hopEdges(spark, g, 0, pinned.srcs, "dst_emb")
-          val nbrs = edges
-            .join(broadcast(pinned.frame.select(col("qid"), col("vec_id").as("src"))), Seq("src"))
-            .join(broadcast(qs), Seq("qid"))
-            .withColumn("sim",
-              round(GraftFunctions.cosineSim(col("dst_emb"), col("q_emb")), 6))
-            .select(col("qid"), col("dst").as("vec_id"), col("sim"))
-          visited = visited.union(nbrs).distinct().localCheckpoint()
-          val newSize = visited.count()
-          done = newSize == size
-          size = newSize
+      hopsUntilFixed(RangeHops) {
+        val pinned = pinHop(topPerQid(visited, RangeBeamCap), members = false)
+        pinned.srcs.isEmpty || {
+          visited = visited.union(hopNbrs(hopEdges(spark, w.g, 0, pinned.srcs, "dst_emb"),
+            pinned.frame, w.qs, ExactScorer)).distinct().localCheckpoint()
+          val before = size
+          size = visited.count()
+          size == before
         }
-        hop += 1
       }
       return visited.filter(col("sim") >= t)
         .select(col("qid"), col("vec_id"), col("sim"))
     }
     // small-panel path: ONE map-only probe per range hop, the pool on
-    // the driver (walkGraph's small path already returned a LocalRelation
+    // the driver (the walk's small path already returned a LocalRelation
     // — collecting it is job-free)
-    val scans = Seq.newBuilder[Seq[String]]
-    val files = Seq.newBuilder[(Long, Int)]
     val visited = scala.collection.mutable.LinkedHashSet.empty[Triple]
-    visited ++= triplesOf(visited0.collect())
-    if (qRows.nonEmpty) {
-      val simOf = exactSimLit(qRows)
-      var hop = 0
-      var done = false
-      while (hop < RangeHops && !done) {
-        val frontier = topEfLocal(visited.toSeq, RangeBeamCap)
-        if (frontier.isEmpty) done = true
-        else {
-          val before = visited.size
-          visited ++= probeHop(spark, g, 0, frontier, "dst_emb",
-            simOf, scans, files)
-          done = visited.size == before
-        }
-        hop += 1
-      }
+    visited ++= triplesOf(w.visited.collect())
+    hopsUntilFixed(RangeHops) {
+      val frontier = topEfLocal(visited.toSeq, RangeBeamCap)
+      val before = visited.size
+      if (frontier.nonEmpty)
+        visited ++= w.probe(0, frontier)
+      visited.size == before
     }
     beamFrame(spark, visited.toSeq.filter(_._3 >= t))
   }
@@ -1082,7 +1077,10 @@ object Hnsw {
     Ann.pathToken(qids.sorted.mkString(",") + s"/k=$k")
 
   def adaptPathFor(sfDir: String, qids: Seq[Long], k: Int): String =
-    edgesPath(sfDir) + "-adapt-" + panelKey(qids, k)
+    adaptDumpPath(edgesPath(sfDir), qids, k)
+
+  private def adaptDumpPath(edgesDir: String, qids: Seq[Long], k: Int): String =
+    edgesDir + "-adapt-" + panelKey(qids, k)
 
   /** The ORACLED adaptive panel's dump location (qid 0, k 5 — what
     * ann_hnsw_adaptive serves); Verify resolves __HNSW_ADAPT__ here.
@@ -1100,100 +1098,40 @@ object Hnsw {
     * an unchanged beam reproduces itself forever and no oscillation
     * exists. On a 100× corpus (larger base-layer diameter) the walk
     * self-extends to the cap instead of silently under-reaching like the
-    * fixed schedule; on an easy query it stops early. The per-hop
-    * convergence check
-    * collects the ≤ Ef·|batch|-row beam — driver-side metadata, the
-    * LogReg-digest posture (and the SAME collect now feeds the literal
-    * bucket probe). Realized per-layer hops (h0..h3) are dumped so the
-    * oracle replays the exact walk: slot i of the static cap-depth
-    * unroll is LIVE iff its in-phase index < that layer's realized hops
-    * (a pass-through re-rank otherwise) — making the adaptive result a
-    * pure function of (graph artifact, realized-hop artifact),
-    * hash-checkable end to end. Because adaptive hops extend the fixed
-    * schedule's prefix at every fixed point (a converged phase re-runs
-    * as no-ops), the final beam's sim multiset is ≥ the fixed
+    * fixed schedule; on an easy query it stops early. This is the shared
+    * [[walk]] at base cap [[HopsL0Max]]; it converges on the bulk path
+    * too, where each hop's ONE id collect brings the ≤ Ef·|batch|
+    * (qid, id) membership instead of the bare ids — driver-side
+    * metadata, the LogReg-digest posture. Realized per-layer hops
+    * (h0..h3) are dumped so the oracle replays the exact walk: slot i of
+    * the static cap-depth unroll is LIVE iff its in-phase index < that
+    * layer's realized hops (a pass-through re-rank otherwise) — making
+    * the adaptive result a pure function of (graph artifact, realized-hop
+    * artifact), hash-checkable end to end. Because adaptive hops extend
+    * the fixed schedule's prefix at every fixed point (a converged phase
+    * re-runs as no-ops), the final beam's sim multiset is ≥ the fixed
     * schedule's — HnswSpec pins that.
     */
   def searchAdaptive(spark: SparkSession, sfDir: String, queries: DataFrame,
                      k: Int): DataFrame = {
     layout(spark, sfDir)
-    GraftFunctions.register(spark)
-    val g = openGraph(spark, edgesPath(sfDir))
-    val meta = spark.read.parquet(metaPath(sfDir))
-    val nLayers = meta.select(col("n_layers")).head().getInt(0)
-    val qsCk = queries.localCheckpoint()
-    val qids = qsCk.select(col("qid")).distinct().collect().map(_.getLong(0)).toSeq
-    // same tombstoned-entry guard as the fixed walk: in the documented
-    // sidecar→meta crash window the entry can be tombstoned while the
-    // meta still names it — the adaptive face must not serve it either
-    val entry0 = g.tombs match {
-      case Some(SidecarState(Some(t), _)) if t.nonEmpty =>
-        entryBeam(qsCk, meta).filter(!col("vec_id").isInCollection(t))
-      case Some(SidecarState(_, Some(f))) =>
-        entryBeam(qsCk, meta)
-          .join(broadcast(f), Seq("vec_id"), "left_anti")
-      case _ => entryBeam(qsCk, meta)
-    }
-    val entry = pinHop(entry0)
-    val realized = Array.fill(MaxLayersStatic)(0L)
-    var beamOut: DataFrame = null
-    if (largePanel(entry)) {
-      // bulk-panel path: distributed hops, membership collected per hop
-      // (the algorithm's convergence check needs it regardless)
-      var beam = entry.frame
-      var srcs = entry.srcs
-      def membersOf(b: DataFrame): Set[(Long, Long)] =
-        b.select(col("qid"), col("vec_id")).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-      var cur = membersOf(beam)
-      for (layer <- (nLayers - 1) to 0 by -1) {
-        val cap = if (layer == 0) HopsL0Max else HopsPerLayer
-        var fixed = false
-        var h = 0
-        while (h < cap && !fixed) {
-          val p = pinHop(
-            hopOnce(hopEdges(spark, g, layer, srcs, "dst_emb"), qsCk, beam)._2,
-            large = true)
-          beam = p.frame; srcs = p.srcs
-          h += 1
-          val m = membersOf(beam)
-          fixed = m == cur; cur = m
-        }
-        realized(layer) = h.toLong
-      }
-      beamOut = beam
-    } else {
-      // small-panel path: one map-only probe per hop, fold + convergence
-      // check on the driver (zero extra jobs — see probeHop)
-      val scans = Seq.newBuilder[Seq[String]]
-      val files = Seq.newBuilder[(Long, Int)]
-      var beam: Seq[Triple] = triplesOf(entry.frame.collect())
-      val simOf = exactSimLit(qsCk.collect())
-      var cur = beam.map(t => (t._1, t._2)).toSet
-      for (layer <- (nLayers - 1) to 0 by -1) {
-        val cap = if (layer == 0) HopsL0Max else HopsPerLayer
-        var fixed = false
-        var h = 0
-        while (h < cap && !fixed) {
-          val nbrs = probeHop(spark, g, layer, beam, "dst_emb",
-            simOf, scans, files)
-          beam = topEfLocal(beam ++ nbrs, Ef)
-          h += 1
-          val m = beam.map(t => (t._1, t._2)).toSet
-          fixed = m == cur; cur = m
-        }
-        realized(layer) = h.toLong
-      }
-      beamOut = beamFrame(spark, beam)
-    }
+    searchAdaptiveIn(spark, edgesPath(sfDir), metaPath(sfDir), queries, k)
+  }
+
+  /** [[searchAdaptive]] against explicit graph dirs (the searchIn twin);
+    * the realized-hop dump lands beside the edges dir.
+    */
+  private[graft] def searchAdaptiveIn(spark: SparkSession, edgesDir: String,
+                                      metaDir: String, queries: DataFrame,
+                                      k: Int): DataFrame = {
+    val w = walk(spark, edgesDir, metaDir, pinPanel(queries), capsTo(HopsL0Max), Ef,
+      ExactScorer, converge = true)
     import spark.implicits._
-    Seq((realized(0), realized(1), realized(2), realized(3)))
+    Seq((w.hops(0), w.hops(1), w.hops(2), w.hops(3)))
       .toDF("h0", "h1", "h2", "h3")
       .coalesce(1).write.mode("overwrite")
-      .parquet(adaptPathFor(sfDir, qids, k))
-    beamOut.withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id"), col("sim"), col("rnk"))
+      .parquet(adaptDumpPath(edgesDir, w.panel.distinct, k))
+    topK(w.beam, k)
   }
 
   // --- PQ-compressed serving (DiskANN §3.3) ----------------------------------
@@ -1265,9 +1203,6 @@ object Hnsw {
     GraftFunctions.register(spark)
     val cb = Pq.train(spark, sfDir, k = PqCodesK)
     val kCodes = cb.books(0).length
-    val g = openGraph(spark, pqEdgesPath(sfDir))
-    val meta = spark.read.parquet(pqMetaPath(sfDir))
-    val nLayers = meta.select(col("n_layers")).head().getInt(0)
     // the ADC face already collects the panel for its literal tables, so
     // the panel is driver-sized by construction — pin it local (job-free
     // broadcasts at the entry select and the final exact rescore)
@@ -1290,66 +1225,18 @@ object Hnsw {
         (acc, s) => acc + element_at(adcLit,
           (col("qid") * cb.m + s).cast("long") * kCodes +
             element_at(codesCol, s + 1))), 6)
-    var beam = qs.select(col("qid"))
-      .crossJoin(broadcast(meta.select(col("entry").as("vec_id"),
-        col("entry_codes"))))
-      .withColumn("sim", adcOf(col("entry_codes")))
-      .select(col("qid"), col("vec_id"), col("sim"))
-    val entry = pinHop(beam)
-    if (largePanel(entry)) {
-      // bulk-panel path: distributed ADC hops on the full schedule
-      beam = entry.frame
-      var srcs = entry.srcs
-      for (layer <- scheduleFor(nLayers)) {
-        val edges = hopEdges(spark, g, layer, srcs, "dst_codes")
-        val nbrs = edges
-          .join(broadcast(beam.select(col("qid"), col("vec_id").as("src"))), Seq("src"))
-          .withColumn("sim", adcOf(col("dst_codes")))
-          .select(col("qid"), col("dst").as("vec_id"), col("sim"))
-        val next = beam.select(col("qid"), col("vec_id"), col("sim"))
-          .union(nbrs).distinct()
-          .withColumn("__rn", row_number().over(wBeam))
-          .filter(col("__rn") <= EfPq)
-          .select(col("qid"), col("vec_id"), col("sim"))
-        val p = pinHop(next, large = true)
-        beam = p.frame; srcs = p.srcs
-      }
-    } else {
-      // small-panel path: one map-only ADC probe per hop, fold on the
-      // driver, phase-level fixed-point skipping (probeHop/topEfLocal —
-      // the same fold the exact face uses, at the PQ beam width)
-      val scans = Seq.newBuilder[Seq[String]]
-      val files = Seq.newBuilder[(Long, Int)]
-      var beamT: Seq[Triple] = triplesOf(entry.frame.collect())
-      for (phase <- phasesOf(scheduleFor(nLayers))) {
-        val layer = phase.head
-        var h = 0
-        var fixed = false
-        while (h < phase.length && !fixed) {
-          val nbrs = probeHop(spark, g, layer, beamT, "dst_codes",
-            _ => adcOf(col("dst_codes")), scans, files)
-          val next = topEfLocal(beamT ++ nbrs, EfPq)
-          fixed = next.map(t => (t._1, t._2)).toSet ==
-            beamT.map(t => (t._1, t._2)).toSet
-          beamT = next
-          h += 1
-        }
-      }
-      beam = beamFrame(spark, beamT)
-    }
+    val w = walk(spark, pqEdgesPath(sfDir), pqMetaPath(sfDir), qs, capsTo(HopsL0), EfPq,
+      Scorer("dst_codes", "entry_codes", (codes, _) => adcOf(codes), byQuery = false))
     // exact rescore of the final beam only — full-precision vectors come
     // from the shards sidecar (the artifact's id→vector map), bounded by
     // Ef·|batch| ids; the corpus table stays unopened
     val full = spark.read.parquet(shardsPath(edgesPath(sfDir)))
       .select(col("vec_id"), col("embedding")).dropDuplicates("vec_id")
-    beam.select(col("qid"), col("vec_id"))
+    topK(w.beam.select(col("qid"), col("vec_id"))
       .join(full, Seq("vec_id"))
       .join(broadcast(qs), Seq("qid"))
       .withColumn("sim",
-        round(GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 6))
-      .withColumn("rnk", row_number().over(wBeam))
-      .filter(col("rnk") <= k)
-      .select(col("qid"), col("vec_id"), col("sim"), col("rnk"))
+        round(GraftFunctions.cosineSim(col("embedding"), col("q_emb")), 6)), k)
   }
 
   // --- maintenance verbs ---------------------------------------------------

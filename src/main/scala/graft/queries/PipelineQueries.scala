@@ -1627,8 +1627,8 @@ object PipelineQueries {
 
   /** ONE hop's (candidate, re-rank) CTE pair — shared by the
     * fixed-schedule and adaptive replays so a tiebreak/Ef/rounding tweak
-    * cannot desync the two oracled families (the Spark side's shared
-    * hopOnce, mirrored). `nbrCond` gates the neighbor expansion
+    * cannot desync the two oracled families (the Spark side's one
+    * shared walk, mirrored). `nbrCond` gates the neighbor expansion
     * (`e.layer = L` for the fixed schedule; the adaptive liveness CASE
     * for the gated unroll), `extraJoin` rides the realized-hop artifact
     * in when needed.

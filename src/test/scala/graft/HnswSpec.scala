@@ -1175,6 +1175,73 @@ class HnswSpec extends AnyFunSuite {
     assert(s3 === l3, "range walk: small ≠ large")
     val (s4, l4) = run(rows(Hnsw.searchAdaptive(spark, sf, qs, k = 3)))
     assert(s4 === l4, "adaptive walk: small ≠ large")
+    // the visited pool, which the bulk path builds without fixed-point
+    // skipping, under a predicate over (qid, vec_id, sim)
+    val (s5, l5) = run(rows(Hnsw.searchFiltered(spark, sf, qs, k = 5,
+      pmod(col("vec_id") + col("qid"), lit(3L)) =!= 0L && col("sim") > 0.05)))
+    assert(s5.nonEmpty && s5 === l5, "filtered walk: small ≠ large")
+    // a graph with delta, replaced and tombstone sidecars
+    val (de, dm) = Hnsw.maintDemoLayout(spark, sf)
+    val (s6, l6) = run(rows(Hnsw.searchIn(spark, de, dm, qs, k = 3)))
+    assert(s6 === l6, "fixed-schedule walk on a mutated graph: small ≠ large")
+    val (s7, l7) = run(Hnsw.searchRangeIn(spark, de, dm, qs, t = 0.2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+    assert(s7 === l7, "range walk on a mutated graph: small ≠ large")
+  }
+
+  test("crash window: a tombstoned entry the meta still names is never served, small or bulk") {
+    // deleteFromGraph re-elects a deleted entry, but a crash between the
+    // tombstone append and the meta swap leaves the meta naming a
+    // tombstoned entry. Build that state on a private clone of the base
+    // graph and serve every exact face from it on both walk paths.
+    import spark.implicits._
+    Hnsw.layout(spark, sf)
+    val base = Hnsw.edgesPath(sf)
+    val ce = base + "-crash-window-test"
+    val cm = ce + "-meta"
+    val conf = spark.sessionState.newHadoopConf()
+    Seq(Hnsw.deltaPath(ce), Hnsw.replacedPath(ce), Hnsw.tombstonesPath(ce)).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(conf).delete(p, true)
+    }
+    Seq(base -> ce, Hnsw.shardsPath(base) -> Hnsw.shardsPath(ce), Hnsw.metaPath(sf) -> cm)
+      .foreach { case (from, to) => Hnsw.fsCopy(spark, from, to) }
+    val entry = spark.read.parquet(cm).head().getAs[Long]("entry")
+    Seq(entry).toDF("vec_id").write.mode("append").parquet(Hnsw.tombstonesPath(ce))
+    val qs = Tables.embeddings(spark, sf).filter(col("vec_id") < 3)
+      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col("vec_id")).collect().map(_.getLong(0)).toSet
+    // the range face at t = -1 returns the whole visited pool, so an
+    // unguarded entry would surface there whatever its rank
+    def faces(): Seq[(String, Set[Long])] = Seq(
+      "fixed" -> ids(Hnsw.searchIn(spark, ce, cm, qs, k = Hnsw.Ef)),
+      "filtered" -> ids(Hnsw.searchFilteredIn(spark, ce, cm, qs, Hnsw.Ef, col("sim") > -2.0)),
+      "adaptive" -> ids(Hnsw.searchAdaptiveIn(spark, ce, cm, qs, Hnsw.Ef)),
+      "range" -> ids(Hnsw.searchRangeIn(spark, ce, cm, qs, t = -1.0)))
+    val small = faces()
+    val saved = Hnsw.PinHopMaxRows
+    Hnsw.PinHopMaxRows = 0
+    val bulk = try faces() finally Hnsw.PinHopMaxRows = saved
+    (small ++ bulk).foreach { case (face, got) =>
+      assert(!got.contains(entry), s"$face face served the tombstoned entry $entry")
+    }
+    assert(small === bulk, "crash-window graph: small ≠ bulk")
+  }
+
+  test("an empty query panel returns zero rows from every face, without throwing") {
+    Hnsw.layout(spark, sf)
+    val empty = Tables.embeddings(spark, sf).filter(col("vec_id") < 0)
+      .select(col("vec_id").as("qid"), col("embedding").as("q_emb"))
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "search" -> (() => Hnsw.search(spark, sf, empty, k = 5)),
+      "searchFiltered" -> (() => Hnsw.searchFiltered(spark, sf, empty, k = 5, col("sim") > 0.0)),
+      "searchRange" -> (() => Hnsw.searchRange(spark, sf, empty, t = 0.2)),
+      "searchAdaptive" -> (() => Hnsw.searchAdaptive(spark, sf, empty, k = 5)),
+      "searchPq" -> (() => Hnsw.searchPq(spark, sf, empty, k = 5))
+    ).foreach { case (face, serve) =>
+      assert(serve().collect().isEmpty, s"$face served rows for an empty panel")
+    }
   }
 
   test("merge-on-read resolution: literal predicates ≡ broadcast joins on a mutated graph") {
