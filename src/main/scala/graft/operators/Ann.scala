@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.ml.functions.array_to_vector
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -38,7 +39,7 @@ object Ann {
     * sidecar probe (one definition — a viewfs/conf fix lands once).
     */
   private[graft] def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
   }
 
@@ -490,8 +491,8 @@ object Ann {
     *     ⌈cellRows/target⌉ files per cell);
     *  2. write to a sibling tmp dir, so searches keep reading the old
     *     layout for the whole rewrite;
-    *  3. atomically swap via two renames (old → .old, tmp → live), with
-    *     rollback if the second rename fails, then drop the old tree.
+    *  3. swap it in through [[Publish.swap]] (live → `-compact-old`,
+    *     tmp → live, rollback if the promote fails, drop the old tree).
     *
     * Searches observe either the pre- or post-compaction layout, never a
     * partial one — contents are row-identical (ScaleLayoutSpec asserts
@@ -504,24 +505,13 @@ object Ann {
                     transform: DataFrame => DataFrame = identity,
                     cellCol: String = "cell"): Unit = {
     val tmp = layoutPath + "-compact-tmp"
-    val old = layoutPath + "-compact-old"
     transform(spark.read.parquet(layoutPath))
       .repartition(col(cellCol))
       .write.mode("overwrite")
       .option("maxRecordsPerFile", targetRowsPerFile)
       .partitionBy(cellCol).parquet(tmp)
-    val live = new org.apache.hadoop.fs.Path(layoutPath)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val pTmp = new org.apache.hadoop.fs.Path(tmp)
-    val pOld = new org.apache.hadoop.fs.Path(old)
-    fs.delete(pOld, true) // leftover from an earlier crashed compaction
-    if (!fs.rename(live, pOld))
-      throw new java.io.IOException(s"compaction: could not move $layoutPath aside")
-    if (!fs.rename(pTmp, live)) {
-      fs.rename(pOld, live) // roll back: the un-compacted layout stays live
-      throw new java.io.IOException(s"compaction: could not promote $tmp")
-    }
-    fs.delete(pOld, true)
+    Publish.swap(Publish.fsOf(spark, layoutPath), new Path(tmp),
+      new Path(layoutPath), new Path(layoutPath + "-compact-old"))
     // a registered index over this layout is now a generation behind
     graft.plans.IvfIndexRegistry.invalidate(layoutPath)
   }

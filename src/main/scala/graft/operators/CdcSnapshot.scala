@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   * changeset is the caller's contract (enforce upstream with a
   * last-write-wins window if the wire can duplicate).
   *
-  * Atomicity is PER BUCKET (two renames with rollback, same discipline
-  * as Ann.compactLayout): a reader sees each bucket pre- or post-batch,
-  * never partial files — the cross-bucket point-in-time guarantee of a
+  * Atomicity is PER BUCKET ([[Publish.swapBuckets]]): a reader sees each
+  * bucket pre- or post-batch, never partial files — the cross-bucket point-in-time guarantee of a
   * real table format needs its transaction log, which is out of scope
   * and documented here rather than pretended.
   */
@@ -56,33 +55,18 @@ object CdcSnapshot {
     read(spark, path).filter(col("bucket") === b && col("key") === key)
   }
 
-  /** Crash repair, run by the writer before every apply: a process death
-    * between the two swap renames leaves a bucket's only copy in its
+  /** Apply one changeset (keyCol, op in 'd'/'u'/'i', value).
+    *
+    * Crash repair runs first ([[Publish.repairBuckets]]): a process death
+    * between a swap's two renames leaves a bucket's only copy in its
     * dot-prefixed `.bucket=N.old` holdout (which Spark's listing hides —
-    * readers see the bucket as absent until this runs). Restore any
-    * holdout whose live directory is missing; drop holdouts whose
-    * promote DID land (death between promote and cleanup). Single-writer
-    * discipline: only the apply path repairs, readers never mutate.
+    * readers see the bucket as absent until the repair runs). Single-
+    * writer discipline: only the apply path repairs, readers never mutate.
     */
-  private def repair(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val root = new Path(path)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).map(_.getPath).filter { p =>
-      p.getName.startsWith(".bucket=") && p.getName.endsWith(".old")
-    }.foreach { oldB =>
-      val liveB = new Path(root, oldB.getName.stripPrefix(".").stripSuffix(".old"))
-      if (!fs.exists(liveB)) {
-        if (!fs.rename(oldB, liveB))
-          throw new java.io.IOException(s"cdc repair: could not restore $oldB")
-      } else fs.delete(oldB, true)
-    }
-  }
-
-  /** Apply one changeset (keyCol, op in 'd'/'u'/'i', value). */
   def applyBatch(spark: SparkSession, path: String, changes: DataFrame,
                  keyCol: String = "key"): Unit = {
-    val fs0 = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    repair(fs0, path) // restore any crash holdout BEFORE reading
+    val fs = Publish.fsOf(spark, path)
+    Publish.repairBuckets(fs, new Path(path)) // restore any crash holdout BEFORE reading
     val ch = bucketed(changes, keyCol).select(
       col(keyCol), col("op"), col("value").as("new_value"), col("bucket"))
     // ONE metadata job (≤ 3·NumBuckets rows) yields both the op
@@ -118,24 +102,8 @@ object CdcSnapshot {
     matched.unionByName(inserts)
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    // per-bucket two-rename swap with rollback
-    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-    buckets.foreach { b =>
-      val liveB = new Path(s"$path/bucket=$b")
-      val tmpB = new Path(s"$tmp/bucket=$b")
-      val oldB = new Path(s"$path/.bucket=$b.old")
-      fs.delete(oldB, true) // leftover from an earlier crash
-      val hadLive = fs.exists(liveB)
-      if (hadLive && !fs.rename(liveB, oldB))
-        throw new java.io.IOException(s"cdc: could not move $liveB aside")
-      if (fs.exists(tmpB)) {
-        if (!fs.rename(tmpB, liveB)) {
-          if (hadLive) fs.rename(oldB, liveB) // roll back
-          throw new java.io.IOException(s"cdc: could not promote $tmpB")
-        }
-      } // else: every row of the bucket was deleted — removing it IS the write
-      fs.delete(oldB, true)
-    }
-    fs.delete(new Path(tmp), true)
+    // every row of a bucket missing from tmp was deleted — removing the
+    // bucket IS the write
+    Publish.swapBuckets(fs, new Path(tmp), new Path(path), buckets.toSeq)
   }
 }

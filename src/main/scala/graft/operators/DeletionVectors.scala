@@ -42,8 +42,8 @@ import org.apache.spark.sql.functions._
   *     (one file per delete batch), schema (bucket, file_name, pos).
   *
   * Crash-safety ordering (asserted in DeletionVectorsSpec): compaction
-  * swaps a bucket's data directory FIRST (two renames + rollback, same
-  * discipline as [[CdcSnapshot.applyBatch]]) and garbage-collects the
+  * swaps a bucket's data directory FIRST ([[Publish.swapBuckets]], as
+  * [[CdcSnapshot.applyBatch]] does) and garbage-collects the
   * sidecar SECOND. A crash between the two leaves delete entries that
   * reference files no longer present — and a stale entry whose file is
   * gone matches nothing in the anti-join, so readers stay exactly correct
@@ -105,11 +105,12 @@ object DeletionVectors {
     * MOR scan + anti-join TWICE (a `count()` to gate the append, then the
     * write). Now the delta is staged to a hidden tmp dir in one pass, its
     * row count read from the parquet FOOTER the writer already produced
-    * (the [[ManifestIO.footerStats]] posture — guide §1.2 "don't compute
-    * things you throw away"), and the part file renamed into the sidecar
-    * only when non-empty — same append atomicity (a crash before the
-    * rename loses the uncommitted delta exactly like a crash before the
-    * old write's commit; the dot-prefixed tmp is invisible to readers).
+    * ([[ManifestIO.rowCount]] — guide §1.2 "don't compute things you
+    * throw away"), and the part file moved into the sidecar only when
+    * non-empty ([[Publish.moveParts]]; the tmp dir never outlives the
+    * call) — same append atomicity (a crash before the move loses the
+    * uncommitted delta exactly like a crash before the old write's
+    * commit; the dot-prefixed tmp is invisible to readers).
     */
   private def appendDelta(doomed: DataFrame, root: String): Long = {
     val spark = doomed.sparkSession
@@ -117,38 +118,14 @@ object DeletionVectors {
       .select(col("bucket"), col("__file").as("file_name"), col("__pos").as("pos"))
     val tmp = new Path(s"$root/.delta-tmp-${java.util.UUID.randomUUID}")
     val conf = spark.sessionState.newHadoopConf()
-    val fs = new Path(root).getFileSystem(conf)
-    // the tmp dir never outlives the call: a failed write, footer read or
-    // rename still deletes it (readers never see it — it is dot-prefixed —
-    // but each failure would otherwise leak one dir under the table root)
-    try {
+    Publish.moveParts(Publish.fsOf(spark, root), tmp, new Path(s"$root/deletes")) {
       live.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val parts = fs.listStatus(tmp).map(_.getPath)
-        .filter(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+    } { parts =>
       require(parts.length <= 1,
         s"dv append: coalesce(1) must commit one part file, found ${parts.length} in $tmp")
-      val n = parts.map { p =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-        try {
-          var rows = 0L
-          val it = reader.getFooter.getBlocks.iterator()
-          while (it.hasNext) rows += it.next().getRowCount
-          rows
-        } finally reader.close()
-      }.sum
-      if (n > 0) {
-        val dels = new Path(s"$root/deletes")
-        fs.mkdirs(dels)
-        // Spark names each part `part-<task>-<jobUUID>`, unique per write
-        // job, so renaming into the shared sidecar dir cannot collide
-        parts.foreach { p =>
-          if (!fs.rename(p, new Path(dels, p.getName)))
-            throw new java.io.IOException(s"dv append: could not commit $p")
-        }
-      }
-      n
-    } finally fs.delete(tmp, true)
+      val n = parts.map(ManifestIO.rowCount(conf, _)).sum
+      (n, n > 0)
+    }
   }
 
   /** Merge-on-read scan: data files minus the positions the sidecar has
@@ -183,36 +160,22 @@ object DeletionVectors {
 
   /** Fold accumulated deletes into rewritten files for every bucket whose
     * dead fraction is ≥ `minDeadFraction`: write the bucket's live rows
-    * to a temp dir, two-rename swap with rollback, then GC the sidecar
-    * (drop entries whose file is gone — see ordering contract above).
-    * Buckets below the threshold keep their sidecar entries: compaction
-    * cost scales with the DEAD volume, not the table.
+    * to a temp dir, swap them in ([[Publish.swapBuckets]]), then GC the
+    * sidecar (drop entries whose file is gone — see ordering contract
+    * above). Buckets below the threshold keep their sidecar entries:
+    * compaction cost scales with the DEAD volume, not the table.
+    *
+    * Crash repair runs first (the [[CdcSnapshot]] single-writer
+    * discipline): a death between a swap's two renames leaves a bucket's
+    * only copy in its dot-prefixed holdout — hidden from Spark listings,
+    * so readers see the bucket as absent until [[Publish.repairBuckets]]
+    * restores it (or drops a holdout whose promote DID land).
     */
-  /** Crash repair, run by the writer before every compaction (the
-    * [[CdcSnapshot]] discipline): a death between compact's two swap
-    * renames leaves a bucket's only copy in its dot-prefixed holdout —
-    * hidden from Spark listings, so readers see the bucket as absent
-    * until this restores it. Holdouts whose promote DID land are
-    * leftovers; drop them.
-    */
-  private def repair(spark: SparkSession, root: String): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val dataRoot = new Path(s"$root/data")
-    if (!fs.exists(dataRoot)) return
-    fs.listStatus(dataRoot).map(_.getPath).filter { p =>
-      p.getName.startsWith(".bucket=") && p.getName.endsWith(".old")
-    }.foreach { oldB =>
-      val liveB = new Path(dataRoot, oldB.getName.stripPrefix(".").stripSuffix(".old"))
-      if (!fs.exists(liveB)) {
-        if (!fs.rename(oldB, liveB))
-          throw new java.io.IOException(s"dv repair: could not restore $oldB")
-      } else fs.delete(oldB, true)
-    }
-  }
-
   def compact(spark: SparkSession, root: String,
               minDeadFraction: Double = 0.1): Seq[Long] = {
-    repair(spark, root) // restore any crash holdout BEFORE reading stats
+    val fs = Publish.fsOf(spark, root)
+    // restore any crash holdout BEFORE reading stats
+    Publish.repairBuckets(fs, new Path(s"$root/data"))
     // partition-dir columns read back as INT (Spark's hive-partition type
     // inference) — cast before collect instead of assuming the write type
     val candidates = bucketStats(spark, root)
@@ -224,24 +187,8 @@ object DeletionVectors {
     read(spark, root).filter(col("bucket").isin(candidates: _*))
       .repartition(col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    candidates.foreach { b =>
-      val liveB = new Path(s"$root/data/bucket=$b")
-      val tmpB  = new Path(s"$tmp/bucket=$b")
-      val oldB  = new Path(s"$root/data/.bucket=$b.old")
-      fs.delete(oldB, true)
-      val hadLive = fs.exists(liveB)
-      if (hadLive && !fs.rename(liveB, oldB))
-        throw new java.io.IOException(s"dv compact: could not move $liveB aside")
-      if (fs.exists(tmpB)) {
-        if (!fs.rename(tmpB, liveB)) {
-          if (hadLive) fs.rename(oldB, liveB) // roll back
-          throw new java.io.IOException(s"dv compact: could not promote $tmpB")
-        }
-      } // else: the bucket was 100% dead — its absence IS the rewrite
-      fs.delete(oldB, true)
-    }
-    fs.delete(new Path(tmp), true)
+    // a bucket missing from tmp was 100% dead — its absence IS the rewrite
+    Publish.swapBuckets(fs, new Path(tmp), new Path(s"$root/data"), candidates)
     // sidecar GC — AFTER the swaps; stale entries were harmless, missing
     // live entries would not be. Rewrite survivors, then swap the dir.
     val survivors = deletesDf(spark, root)
@@ -252,15 +199,7 @@ object DeletionVectors {
     // file — readers and the DuckDB replay never hit a missing glob
     survivors.repartition(1).write.mode("overwrite").parquet(delTmp.toString)
     val delLive = new Path(s"$root/deletes")
-    val delOld = new Path(s"$root/.deletes.old")
-    fs.delete(delOld, true)
-    if (fs.exists(delLive) && !fs.rename(delLive, delOld))
-      throw new java.io.IOException("dv compact: could not move sidecar aside")
-    if (!fs.rename(delTmp, delLive)) {
-      fs.rename(delOld, delLive)
-      throw new java.io.IOException("dv compact: could not promote sidecar")
-    }
-    fs.delete(delOld, true)
+    Publish.swap(fs, delTmp, delLive, Publish.holdout(delLive))
     candidates
   }
 

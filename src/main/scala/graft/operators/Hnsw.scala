@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.expressions.GraftFunctions
 
@@ -1246,12 +1247,16 @@ object Hnsw {
   // (layer, src) and subtract the tombstone sidecar — both sidecars are
   // maintenance-batch-sized, so the resolution is two broadcast joins.
   //
-  // Crash-consistency: every meta rewrite goes through [[commitMeta]]'s
-  // write-tmp-then-swap, so the multi-file Spark write can never leave a
-  // torn meta. The remaining (documented) window is BETWEEN a sidecar
-  // append and its meta swap — a crash there leaves the fingerprint one
-  // batch behind the sidecars, which the staleness probe reports as
-  // stale (loud, not silent) and the next compaction repairs.
+  // Crash-consistency: each verb reads the meta once as a [[GraphMeta]]
+  // value and commits its successor through [[Publish.swap]] — a failed
+  // promote rolls back to the old meta, and a crash between the swap's
+  // two renames leaves the old meta in its holdout, which the next
+  // verb's [[readMeta]] restores before reading (the single-writer
+  // repair rule; the serving walk never mutates). The remaining
+  // (documented) window is BETWEEN a sidecar append and its meta swap —
+  // a crash there leaves the fingerprint one batch behind the sidecars,
+  // which the staleness probe reports as stale (loud, not silent) and
+  // the next compaction repairs.
 
   /** Per-append delta edge rows (carry an explicit `gen`), partitioned
     * like the base so per-hop probes prune delta files too.
@@ -1275,27 +1280,51 @@ object Hnsw {
     */
   def shardsPath(edgesDir: String): String = edgesDir + "-shards"
 
+  /** Delete the delta, replaced and tombstone sidecars of a graph. */
+  private def dropSidecars(spark: SparkSession, edgesDir: String): Unit = {
+    val fs = Publish.fsOf(spark, edgesDir)
+    Seq(deltaPath(edgesDir), replacedPath(edgesDir), tombstonesPath(edgesDir))
+      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+  }
+
   private def dirExists(spark: SparkSession, dir: String): Boolean =
     Ann.dirExists(spark, dir)
 
-  /** Near-atomic meta swap: the new 1-row meta is fully written to a tmp
-    * dir first, then swapped in with two filesystem metadata ops (delete
-    * + rename) — a crash can no longer leave a HALF-WRITTEN meta visible
-    * (round-9 advisor). The delete→rename gap itself is two fs ops wide;
-    * a crash inside it loses the meta dir loudly (readers fail fast on a
-    * missing path) rather than serving a torn one.
+  private val FpMod = 2305843009213693951L // 2^61 − 1, the membership-fp modulus
+
+  /** The graph's one-row meta as a driver value: the entry point and its
+    * embedding, the corpus membership fingerprint (count, digest sum mod
+    * 2^61−1) and the realized layer count.
     */
-  private[graft] def commitMeta(spark: SparkSession, metaDir: String,
-                                meta: DataFrame): Unit = {
-    val tmp = metaDir + ".tmp"
-    meta.coalesce(1).write.mode("overwrite").parquet(tmp)
-    val conf = spark.sessionState.newHadoopConf()
-    val dst = new org.apache.hadoop.fs.Path(metaDir)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val fs = dst.getFileSystem(conf)
-    fs.delete(dst, true)
-    require(fs.rename(src, dst), s"hnsw: meta swap failed for $metaDir")
+  private case class GraphMeta(entry: Long, entryEmb: Seq[Float],
+                               corpusN: Long, corpusFp: Long, nLayers: Int) {
+    /** The membership after `n` ids with digest sum `fp` join (or, with
+      * negative `n` and `fp`, leave).
+      */
+    def plus(n: Long, fp: Long): GraphMeta =
+      copy(corpusN = corpusN + n, corpusFp = ((corpusFp + fp) % FpMod + FpMod) % FpMod)
   }
+
+  private val MetaSchema = StructType(Seq(
+    StructField("entry", LongType), StructField("entry_emb", ArrayType(FloatType)),
+    StructField("corpus_n", LongType), StructField("corpus_fp", LongType),
+    StructField("n_layers", IntegerType)))
+
+  /** Read the meta a maintenance verb starts from, first restoring a
+    * holdout a crash left between the meta swap's two renames.
+    */
+  private def readMeta(spark: SparkSession, metaDir: String): GraphMeta = {
+    val r = Publish.readRepaired(spark, metaDir).head()
+    GraphMeta(r.getAs[Long]("entry"), r.getSeq[Float](r.fieldIndex("entry_emb")),
+      r.getAs[Long]("corpus_n"), r.getAs[Long]("corpus_fp"), r.getAs[Int]("n_layers"))
+  }
+
+  /** Commit `m` as the graph's meta through [[Publish.commitFrame]]
+    * (tmp write, swap with rollback).
+    */
+  private def commitMeta(spark: SparkSession, metaDir: String, m: GraphMeta): Unit =
+    Publish.commitFrame(spark.createDataFrame(java.util.List.of(
+      Row(m.entry, m.entryEmb, m.corpusN, m.corpusFp, m.nLayers)), MetaSchema), metaDir)
 
   /** Resolve a graph directory to its LIVE adjacency — [[morResolve]]
     * over the UNPRUNED scans (sidecars resolved through the same
@@ -1317,8 +1346,6 @@ object Hnsw {
       .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
   }
 
-  private val FpMod = 2305843009213693951L // 2^61 − 1, the membership-fp modulus
-
   /** APPEND new vectors ((vec_id, embedding) rows, ids disjoint from the
     * graph) to a caller-owned graph clone WITHOUT a rebuild: assign each
     * new node to its 2 nearest FROZEN trained cells (the build's shard
@@ -1336,8 +1363,8 @@ object Hnsw {
                     metaDir: String, newVecs: DataFrame): Unit = {
     GraftFunctions.register(spark)
     val cents = Ann.kmeansLayout(spark, sfDir)._2
-    val oldMeta = spark.read.parquet(metaDir).head()
-    val nLayers = oldMeta.getAs[Int]("n_layers")
+    val old = readMeta(spark, metaDir)
+    val nLayers = old.nLayers
     val newShards = Ann.nearestCells(
         newVecs.select(col("vec_id"), col("embedding")),
         Ann.centroidsDf(spark, cents), "vec_id", "embedding", n = 2)
@@ -1430,65 +1457,35 @@ object Hnsw {
     // layer's straggler tail back-fills with the next layer's stages
     // (each layerDelta materializes a localCheckpoint mid-build); the
     // union keeps the deterministic 0..nLayers order either way
-    val delta = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      Await.result(
-        Future.sequence((0 until nLayers).map(l => Future(layerDelta(l)))),
-        Duration.Inf)
-    }.reduce(_ unionByName _).localCheckpoint()
+    val delta = Publish.fanOut("hnsw-append",
+      (0 until nLayers).map(l => () => layerDelta(l))).reduce(_ unionByName _).localCheckpoint()
     // the three sidecar writes land in independent trees and the two meta
-    // aggregates read already-checkpointed frames — overlap all five on
-    // driver threads (guide §2.6); the meta COMMIT still happens strictly
-    // after the Await, preserving the sidecars-then-meta crash ordering
-    val (deltaFp, promotedNew) = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val writes = Seq(
-        Future {
-          delta
-            .withColumn("src_bucket", srcBucketCol(col("src")))
-            .write.mode("append").partitionBy("layer", "src_bucket")
-            .parquet(deltaPath(edgesDir))
-        },
-        Future {
-          delta.select(col("layer"), col("src")).distinct()
-            .withColumn("gen", lit(gen))
-            .write.mode("append").parquet(replacedPath(edgesDir))
-        },
-        Future {
-          newShards.write.mode("append").partitionBy("shard")
-            .parquet(shardsPath(edgesDir))
-        })
-      val fpF = Future(graft.streaming.Streaming.fingerprintStream(
-        newIds, col("vec_id").cast("string")).head())
-      val promotedF = Future(newShards.filter(promotedPred(nLayers - 1))
-        .agg(min(col("vec_id"))).head())
-      Await.result(Future.sequence(writes), Duration.Inf)
-      (Await.result(fpF, Duration.Inf), Await.result(promotedF, Duration.Inf))
-    }
+    // reads scan already-checkpointed frames — overlap all five on driver
+    // threads (guide §2.6); the meta COMMIT still happens strictly after
+    // every task finished, preserving the sidecars-then-meta crash ordering
+    val Seq(_, _, _, deltaFp: Row, promoted: Array[Row]) =
+      Publish.fanOut[Any]("hnsw-append", Seq(
+        () => delta
+          .withColumn("src_bucket", srcBucketCol(col("src")))
+          .write.mode("append").partitionBy("layer", "src_bucket")
+          .parquet(deltaPath(edgesDir)),
+        () => delta.select(col("layer"), col("src")).distinct()
+          .withColumn("gen", lit(gen))
+          .write.mode("append").parquet(replacedPath(edgesDir)),
+        () => newShards.write.mode("append").partitionBy("shard")
+          .parquet(shardsPath(edgesDir)),
+        () => graft.streaming.Streaming.fingerprintStream(
+          newIds, col("vec_id").cast("string")).head(),
+        // the min-id new node promoted to the top layer, with its vector
+        () => newShards.filter(promotedPred(nLayers - 1))
+          .orderBy(col("vec_id")).select(col("vec_id"), col("embedding")).head(1)))
     // incremental meta: additive fp, count, entry re-election — committed
-    // LAST via the tmp+rename swap (see the maintenance-verbs comment)
-    val newFp = ((oldMeta.getAs[Long]("corpus_fp") + deltaFp.getLong(1)) % FpMod + FpMod) % FpMod
-    val newN = oldMeta.getAs[Long]("corpus_n") + deltaFp.getLong(0)
-    val oldEntry = oldMeta.getAs[Long]("entry")
-    val meta =
-      if (!promotedNew.isNullAt(0) && promotedNew.getLong(0) < oldEntry) {
-        val e = promotedNew.getLong(0)
-        newShards.filter(col("vec_id") === e)
-          .select(col("vec_id").as("entry"), col("embedding").as("entry_emb"))
-          .limit(1)
-          .withColumn("corpus_n", lit(newN)).withColumn("corpus_fp", lit(newFp))
-          .withColumn("n_layers", lit(nLayers))
-      } else {
-        spark.read.parquet(metaDir)
-          .select(col("entry"), col("entry_emb"))
-          .withColumn("corpus_n", lit(newN)).withColumn("corpus_fp", lit(newFp))
-          .withColumn("n_layers", lit(nLayers))
-      }
-    commitMeta(spark, metaDir, meta.localCheckpoint())
+    // LAST (see the maintenance-verbs comment)
+    val grown = old.plus(deltaFp.getLong(0), deltaFp.getLong(1))
+    commitMeta(spark, metaDir, promoted.headOption.filter(_.getLong(0) < old.entry) match {
+      case Some(e) => grown.copy(entry = e.getLong(0), entryEmb = e.getSeq[Float](1))
+      case None => grown
+    })
     // a mutated graph must not serve memoized rewrite probes
     graft.plans.HnswGraphRegistry.invalidate(edgesDir)
   }
@@ -1502,8 +1499,8 @@ object Hnsw {
     * delivery — the streaming face's foreachBatch — must not corrupt the
     * meta), and deleting the current entry point re-elects one from the
     * live membership so the very next search still navigates. The meta
-    * swap is tmp+rename (torn-write-safe); the sidecar→meta gap is the
-    * documented one-batch staleness window.
+    * commits through [[Publish.swap]] (torn-write-safe, rolls back); the
+    * sidecar→meta gap is the documented one-batch staleness window.
     */
   def deleteFromGraph(spark: SparkSession, edgesDir: String, metaDir: String,
                       ids: Seq[Long]): Unit = {
@@ -1525,29 +1522,17 @@ object Hnsw {
     val fresh = candidates.filter(members)
     if (fresh.isEmpty) return
     fresh.toDF("vec_id").write.mode("append").parquet(tombstonesPath(edgesDir))
-    val old = spark.read.parquet(metaDir).head()
-    val nLayers = old.getAs[Int]("n_layers")
+    val old = readMeta(spark, metaDir)
     // the SAME engine digest the build's fingerprint used — additive mod
     // 2^61−1, so retiring ids is a subtraction of the batch digest
     val delFp = graft.streaming.Streaming.fingerprintStream(
       fresh.toDF("vec_id"), col("vec_id").cast("string")).head().getLong(1)
-    val newFp = ((old.getAs[Long]("corpus_fp") - delFp) % FpMod + FpMod) % FpMod
-    val newN = old.getAs[Long]("corpus_n") - fresh.length
-    val meta =
-      if (fresh.contains(old.getAs[Long]("entry")))
-        // the entry died: re-elect from the live membership now, not at
-        // compaction — a beam must start somewhere on the next search
-        electEntry(spark, edgesDir, already ++ fresh, nLayers)
-          .withColumn("corpus_n", lit(newN)).withColumn("corpus_fp", lit(newFp))
-          .withColumn("n_layers", lit(nLayers))
-          .localCheckpoint()
-      else
-        spark.read.parquet(metaDir)
-          .select(col("entry"), col("entry_emb"))
-          .withColumn("corpus_n", lit(newN)).withColumn("corpus_fp", lit(newFp))
-          .withColumn("n_layers", lit(nLayers))
-          .localCheckpoint()
-    commitMeta(spark, metaDir, meta)
+    val shrunk = old.plus(-fresh.length, -delFp)
+    // the entry died: re-elect from the live membership now, not at
+    // compaction — a beam must start somewhere on the next search
+    commitMeta(spark, metaDir,
+      if (fresh.contains(old.entry)) electEntry(spark, edgesDir, already ++ fresh, shrunk)
+      else shrunk)
     // a mutated graph must not serve memoized rewrite probes
     graft.plans.HnswGraphRegistry.invalidate(edgesDir)
   }
@@ -1556,21 +1541,19 @@ object Hnsw {
     * the min-id node of the HIGHEST promotion level present (the build's
     * rule generalized to the hierarchy), falling down level by level
     * when a whole layer's membership is gone (layer-ℓ hops from a
-    * lower-level entry are no-ops; lower layers still navigate).
-    * Refuses an empty graph loudly instead of writing a 0-row meta.
+    * lower-level entry are no-ops; lower layers still navigate). One
+    * job; returns `meta` with the elected entry. Refuses an empty graph
+    * loudly instead of writing a 0-row meta.
     */
   private def electEntry(spark: SparkSession, edgesDir: String,
-                         dead: Set[Long], nLayers: Int): DataFrame = {
-    val live = spark.read.parquet(shardsPath(edgesDir))
+                         dead: Set[Long], meta: GraphMeta): GraphMeta = {
+    val pick = spark.read.parquet(shardsPath(edgesDir))
       .filter(if (dead.isEmpty) lit(true) else !col("vec_id").isin(dead.toSeq: _*))
-    val pick = live
-      .orderBy(levelCol(nLayers).desc, col("vec_id").asc)
-      .limit(1)
-      .select(col("vec_id").as("entry"), col("embedding").as("entry_emb"))
-      .localCheckpoint()
-    require(pick.count() > 0,
+      .orderBy(levelCol(meta.nLayers).desc, col("vec_id").asc)
+      .select(col("vec_id"), col("embedding")).head(1)
+    require(pick.nonEmpty,
       s"hnsw: cannot elect an entry — no live nodes remain in $edgesDir")
-    pick
+    meta.copy(entry = pick(0).getLong(0), entryEmb = pick(0).getSeq[Float](1))
   }
 
   /** PHYSICAL repair: fold base + deltas − tombstones into a fresh base
@@ -1600,26 +1583,14 @@ object Hnsw {
       .join(broadcast(tombed), Seq("vec_id"), "left_anti")
       .localCheckpoint()
     shards.write.mode("overwrite").partitionBy("shard").parquet(shardsPath(edgesDir))
-    val old = spark.read.parquet(metaDir).head()
-    val nLayers = old.getAs[Int]("n_layers")
-    if (tombed.filter(col("vec_id") === old.getAs[Long]("entry")).count() > 0) {
+    val old = readMeta(spark, metaDir)
+    if (tombed.filter(col("vec_id") === old.entry).count() > 0)
       // shards were already rewritten minus the tombstones above, so the
       // election pool is exactly the live membership; electEntry prefers
       // the highest promoted level, falls back level by level, and
       // refuses an empty graph instead of clobbering the meta
-      val meta = electEntry(spark, edgesDir, Set.empty, nLayers)
-        .withColumn("corpus_n", lit(old.getAs[Long]("corpus_n")))
-        .withColumn("corpus_fp", lit(old.getAs[Long]("corpus_fp")))
-        .withColumn("n_layers", lit(nLayers))
-        .localCheckpoint()
-      commitMeta(spark, metaDir, meta)
-    }
-    val conf = spark.sessionState.newHadoopConf()
-    Seq(deltaPath(edgesDir), replacedPath(edgesDir), tombstonesPath(edgesDir))
-      .foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).delete(p, true)
-      }
+      commitMeta(spark, metaDir, electEntry(spark, edgesDir, Set.empty, old))
+    dropSidecars(spark, edgesDir)
     // a rewritten graph must not serve memoized rewrite probes
     graft.plans.HnswGraphRegistry.invalidate(edgesDir)
   }
@@ -1806,15 +1777,11 @@ object Hnsw {
     fs.delete(dst, true)
     if (fs.getFileStatus(src).isDirectory) {
       fs.mkdirs(dst)
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      implicit val ec: ExecutionContext = ExecutionContext.global
-      val copies = fs.listStatus(src).toSeq.map { st => Future {
+      Publish.fanOut("hnsw-copy", fs.listStatus(src).toSeq.map { st => () =>
         require(org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs,
           new org.apache.hadoop.fs.Path(dst, st.getPath.getName),
           false, true, conf), s"hnsw: copy ${st.getPath} -> $to failed")
-      } }
-      Await.result(Future.sequence(copies), Duration.Inf)
+      })
     } else {
       require(org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst,
         false, true, conf), s"hnsw: copy $from -> $to failed")
@@ -1838,21 +1805,12 @@ object Hnsw {
       layout(spark, sfDir)
       val de = maintDemoEdgesPath(sfDir)
       val dm = maintDemoMetaPath(sfDir)
-      val conf = spark.sessionState.newHadoopConf()
-      Seq(deltaPath(de), replacedPath(de), tombstonesPath(de)).foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(d)
-        p.getFileSystem(conf).delete(p, true)
-      }
+      dropSidecars(spark, de)
       // the three clone targets are independent trees — copy concurrently
-      locally {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        Await.result(Future.sequence(Seq(
-          Future(fsCopy(spark, edgesPath(sfDir), de)),
-          Future(fsCopy(spark, shardsPath(edgesPath(sfDir)), shardsPath(de))),
-          Future(fsCopy(spark, metaPath(sfDir), dm)))), Duration.Inf)
-      }
+      Publish.fanOut("hnsw-clone", Seq(
+        () => fsCopy(spark, edgesPath(sfDir), de),
+        () => fsCopy(spark, shardsPath(edgesPath(sfDir)), shardsPath(de)),
+        () => fsCopy(spark, metaPath(sfDir), dm)))
       val emb = graft.Tables.embeddings(spark, sfDir)
       val nv = emb.filter(col("vec_id") === 5).select(col("embedding").as("__ea"))
         .crossJoin(emb.filter(col("vec_id") === 9).select(col("embedding").as("__eb")))

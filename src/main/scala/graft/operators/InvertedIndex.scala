@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -140,13 +141,12 @@ object InvertedIndex {
     p.repartition(col("bucket"))
       .sortWithinPartitions("term", "doc_id")
       .write.mode("append").partitionBy("bucket").parquet(dir)
-    val n = spark.read.parquet(s"$dir-meta").head().getLong(0) +
+    val n = Publish.readRepaired(spark, s"$dir-meta").head().getLong(0) +
       p.select(col("doc_id")).distinct().count()
-    // write-tmp-then-swap (Hnsw.commitMeta): a plain overwrite deletes the
-    // live meta before the new write commits, so a crash mid-write would
-    // leave every read face unreadable, not just idf-stale
-    Hnsw.commitMeta(spark, s"$dir-meta",
-      spark.range(1).select(lit(n).as("n_docs")))
+    // write-tmp-then-swap (Publish.commitFrame): a plain overwrite deletes
+    // the live meta before the new write commits, so a crash mid-write
+    // would leave every read face unreadable, not just idf-stale
+    Publish.commitFrame(spark.range(1).select(lit(n).as("n_docs")), s"$dir-meta")
   }
 
   /** Sparse TF-IDF retrieval SERVED FROM THE INDEX — the lexical search
@@ -231,9 +231,9 @@ object InvertedIndex {
   /** Compaction — the repair [[appendDocs]] pairs with: per-ingest
     * appends accumulate one file per bucket per batch (the same
     * small-files spiral as IVF cell appends), and this folds each bucket
-    * back to target-sized sorted runs through the SAME two-rename atomic
-    * swap discipline as `Ann.compactLayout` — readers see the old or new
-    * layout, never a partial one; a crash rolls back to the un-compacted
+    * back to target-sized sorted runs through [[Publish.swap]], as
+    * `Ann.compactLayout` does — readers see the old or new layout, never
+    * a partial one; a failed promote rolls back to the un-compacted
     * layout.
     */
   def compactPostings(spark: SparkSession, sfDir: String,
@@ -243,7 +243,6 @@ object InvertedIndex {
   def compactPostingsIn(spark: SparkSession, dir: String,
                         targetRowsPerFile: Long = 1L << 20): Unit = {
     val tmp = dir + "-compact-tmp"
-    val old = dir + "-compact-old"
     // the fold also RETIRES tombstones: the rewrite subtracts them, so the
     // compacted layout needs no sidecar at all
     minusTombs(spark, dir, spark.read.parquet(dir))
@@ -252,22 +251,12 @@ object InvertedIndex {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", targetRowsPerFile)
       .partitionBy("bucket").parquet(tmp)
-    val live = new org.apache.hadoop.fs.Path(dir)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val pTmp = new org.apache.hadoop.fs.Path(tmp)
-    val pOld = new org.apache.hadoop.fs.Path(old)
-    fs.delete(pOld, true) // leftover from an earlier crashed compaction
-    if (!fs.rename(live, pOld))
-      throw new java.io.IOException(s"postings compaction: could not move $dir aside")
-    if (!fs.rename(pTmp, live)) {
-      fs.rename(pOld, live) // roll back: the un-compacted layout stays live
-      throw new java.io.IOException(s"postings compaction: could not promote $tmp")
-    }
-    fs.delete(pOld, true)
+    val fs = Publish.fsOf(spark, dir)
+    Publish.swap(fs, new Path(tmp), new Path(dir), new Path(dir + "-compact-old"))
     // sidecar GC AFTER the swap: a crash between the two leaves retired
     // tombstones subtracting already-absent rows — a harmless, idempotent
     // no-op on the next read, not a correctness window
-    fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(dir)), true)
+    fs.delete(new Path(tombstonesPath(dir)), true)
   }
 
   /** DELETE documents from the postings index — the takedown/dedup-purge
@@ -294,13 +283,12 @@ object InvertedIndex {
     val nNew = newlyDead.count()
     if (nNew > 0) {
       newlyDead.coalesce(1).write.mode("append").parquet(tombstonesPath(dir))
-      // meta commits via write-tmp-then-swap (Hnsw.commitMeta) — the
+      // meta commits via write-tmp-then-swap (Publish.commitFrame) — the
       // remaining crash window is BETWEEN the sidecar append and the meta
       // swap, and that one only costs idf nuance (N one batch high while
       // the tombstones already exclude the docs), never which docs match
-      val n = spark.read.parquet(s"$dir-meta").head().getLong(0) - nNew
-      Hnsw.commitMeta(spark, s"$dir-meta",
-        spark.range(1).select(lit(n).as("n_docs")))
+      val n = Publish.readRepaired(spark, s"$dir-meta").head().getLong(0) - nNew
+      Publish.commitFrame(spark.range(1).select(lit(n).as("n_docs")), s"$dir-meta")
     }
   }
 
@@ -319,9 +307,7 @@ object InvertedIndex {
     demoMemos.computeIfAbsent(sfDir, { _ =>
       val src = layout(spark, sfDir)
       val dir = maintDemoPath(sfDir)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath(dir)), true)
+      Publish.fsOf(spark, dir).delete(new Path(tombstonesPath(dir)), true)
       Hnsw.fsCopy(spark, src, dir)
       Hnsw.fsCopy(spark, s"$src-meta", s"$dir-meta")
       val top1 = sparseSearchIn(spark, dir, DemoTerms, k = 1)

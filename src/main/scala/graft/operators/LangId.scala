@@ -163,22 +163,13 @@ object LangId {
       // back; each class's fit is unchanged, so the weights are
       // bit-identical to the sequential build). Spark sessions are
       // thread-safe for concurrent read-only jobs.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(classes.size)
-      val fitted = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(classes.map { k =>
-            scala.concurrent.Future {
-              val (w, _) = LogReg.fitFrame(
-                feats.select(
-                  when(col("lang") === k, 1.0).otherwise(0.0).as("y"), col("x")),
-                Dim)
-              k -> w
-            }
-          }),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+      val fitted = Publish.fanOut("langid", classes.map { k => () =>
+        val (w, _) = LogReg.fitFrame(
+          feats.select(
+            when(col("lang") === k, 1.0).otherwise(0.0).as("y"), col("x")),
+          Dim)
+        k -> w
+      })
       feats.unpersist()
       import spark.implicits._
       fitted.flatMap { case (k, w) =>

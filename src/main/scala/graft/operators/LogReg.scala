@@ -319,19 +319,10 @@ object LogReg {
       // frame — overlap their digest jobs on concurrent threads (the
       // LangId.model posture: each fold's fit is unchanged, weights
       // bit-identical to the sequential build)
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(CvFolds)
-      val rows = try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(pool)
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence((0 until CvFolds).map { k =>
-            scala.concurrent.Future {
-              val (w, _) = fitFrame(all.filter(col("doc_id") % CvFolds =!= k))
-              w.toSeq.zipWithIndex.map { case (wi, j) => (k, j, wi) }
-            }
-          }),
-          scala.concurrent.duration.Duration.Inf).flatten
-      } finally pool.shutdown()
+      val rows = Publish.fanOut("logreg-cv", (0 until CvFolds).map { k => () =>
+        val (w, _) = fitFrame(all.filter(col("doc_id") % CvFolds =!= k))
+        w.toSeq.zipWithIndex.map { case (wi, j) => (k, j, wi) }
+      }).flatten
       all.unpersist()
       import spark.implicits._
       rows.toDF("fold", "j", "w").coalesce(1)

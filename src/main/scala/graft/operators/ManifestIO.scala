@@ -1,12 +1,14 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
 
 /** Driver-direct parquet I/O for KB-scale manifest metadata (round-14
@@ -89,6 +91,16 @@ private[graft] object ManifestIO {
     out.result()
   }
 
+  /** Rows in one parquet file, summed from its footer's row groups. */
+  def rowCount(conf: Configuration, file: Path): Long =
+    footerBlocks(conf, file).map(_.getRowCount).sum
+
+  /** The row-group metadata of one parquet file's footer. */
+  private def footerBlocks(conf: Configuration, file: Path): Seq[BlockMetaData] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+  }
+
   /** Per-file (min, max, n_rows) of a long column, straight from the
     * parquet footer's row-group statistics — the stats the file's own
     * writer already computed. Replaces a full re-read of freshly staged
@@ -101,40 +113,20 @@ private[graft] object ManifestIO {
     */
   def footerStats(conf: Configuration, file: Path,
                   column: String): Option[(Long, Long, Long)] = {
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf))
-    try {
-      val blocks = reader.getFooter.getBlocks
-      var n = 0L
-      var mn = Long.MaxValue
-      var mx = Long.MinValue
-      var ok = true
-      val it = blocks.iterator()
-      while (it.hasNext && ok) {
-        val b = it.next()
-        n += b.getRowCount
-        val ccs = b.getColumns
-        var found = false
-        val cit = ccs.iterator()
-        while (cit.hasNext && !found) {
-          val cc = cit.next()
-          if (cc.getPath.toDotString == column) {
-            found = true
-            val st = cc.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) ok = false
-            else st.genericGetMin match {
-              case l: java.lang.Long =>
-                mn = math.min(mn, l.longValue())
-                mx = math.max(mx,
-                  st.genericGetMax.asInstanceOf[java.lang.Long].longValue())
-              case _ => ok = false
-            }
-          }
-        }
-        if (!found) ok = false
-      }
-      if (ok && n > 0) Some((mn, mx, n)) else None
-    } finally reader.close()
+    val blocks = footerBlocks(conf, file)
+    val ranges = blocks.map { b =>
+      b.getColumns.asScala.find(_.getPath.toDotString == column)
+        .map(_.getStatistics)
+        .filter(st => st != null && !st.isEmpty && st.hasNonNullValue)
+        .flatMap(st => (st.genericGetMin, st.genericGetMax) match {
+          case (mn: java.lang.Long, mx: java.lang.Long) => Some((mn.longValue, mx.longValue))
+          case _ => None
+        })
+    }
+    val n = blocks.map(_.getRowCount).sum
+    if (n > 0 && ranges.forall(_.isDefined))
+      Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max, n))
+    else None
   }
 
   /** Write `rows` as one parquet part file under `dir`, with the same

@@ -230,51 +230,33 @@ object TxnLog {
     v
   }
 
-  private def flipPointer(spark: SparkSession, root: String, v: Int): Unit = {
-    val f = fs(spark, root)
-    val tmp = new Path(s"$root/._latest.tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new Path(s"$root/_latest")
-    f.delete(ptr, false) // HDFS-style rename refuses to clobber
-    if (!f.rename(tmp, ptr))
-      throw new java.io.IOException(s"txn: pointer flip failed for v$v")
-  }
+  private def flipPointer(spark: SparkSession, root: String, v: Int): Unit =
+    Publish.flipPointer(fs(spark, root), new Path(s"$root/_latest"), v.toString)
 
   /** Stage `df` as new immutable files under `dir`, returning manifest
     * entries: write to a tmp dir, collect per-file stats on [[statsCol]]
-    * (when the frame carries it) in one job over the STAGED files, then
-    * move each part file in — the files are invisible to readers (nothing
-    * references them) until the commit that lists them lands. Stats stay
-    * valid across the move: they are keyed by basename and the move
-    * preserves it.
+    * (when the frame carries it) from the STAGED files' footers, then
+    * move each part file in ([[Publish.moveParts]]) — the files are
+    * invisible to readers (nothing references them) until the commit that
+    * lists them lands. Stats stay valid across the move: they are keyed
+    * by basename and the move preserves it.
     */
   private def stageFiles(df: DataFrame, root: String, dir: String,
                          kind: String, dataChange: Boolean = true): Seq[ManifestEntry] = {
     val spark = df.sparkSession
-    val f = fs(spark, root)
-    val tmp = s"$root/.stage-${java.util.UUID.randomUUID().toString.take(8)}"
-    df.write.mode("overwrite").parquet(tmp)
-    // per-file stats straight from the freshly written parquet footers —
-    // a driver metadata read per file, not a second pass over the data
+    val tmp = new Path(s"$root/.stage-${java.util.UUID.randomUUID().toString.take(8)}")
     val hconf = spark.sessionState.newHadoopConf()
-    val stats: Map[String, (Long, Long, Long)] =
-      if (!df.columns.contains(statsCol)) Map.empty
-      else f.listStatus(new Path(tmp)).map(_.getPath)
-        .filter(p => p.getName.startsWith("part-"))
-        .flatMap(p => ManifestIO.footerStats(hconf, p, statsCol)
-          .map(p.getName -> _))
-        .toMap
-    val moved = f.listStatus(new Path(tmp)).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-"))
-      .map { p =>
-        val dest = new Path(s"$root/$dir/${p.getName}")
-        f.mkdirs(dest.getParent)
-        if (!f.rename(p, dest))
-          throw new java.io.IOException(s"txn: staging move failed for $p")
-        p.getName
-      }.toSeq
-    f.delete(new Path(tmp), true)
+    val (stats, moved) = Publish.moveParts(fs(spark, root), tmp, new Path(s"$root/$dir")) {
+      df.write.mode("overwrite").parquet(tmp.toString)
+    } { parts =>
+      // per-file stats straight from the freshly written parquet footers —
+      // a driver metadata read per file, not a second pass over the data
+      val stats: Map[String, (Long, Long, Long)] =
+        if (!df.columns.contains(statsCol)) Map.empty
+        else parts.flatMap(p => ManifestIO.footerStats(hconf, p, statsCol)
+          .map(p.getName -> _)).toMap
+      ((stats, parts.map(_.getName)), true)
+    }
     moved.sorted.map { n =>
       val s = stats.get(n)
       ManifestEntry(kind, n, s.map(_._1), s.map(_._2), s.map(_._3), dataChange)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation,
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.col
 
+import graft.operators.Publish
+
 /** Unified INDEX CATALOG over the three transparent-rewrite registries
   * (round-10 verdict #6) — the `SHOW INDEXES` every engine with opt-in
   * acceleration owes its operators: one row per registered index listing
@@ -196,9 +198,7 @@ object IndexCatalog {
     s"${sys.props("java.io.tmpdir")}/graft-idxcat-" +
       graft.operators.Ann.pathToken(sfDir)
 
-  private def fs(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
+  private def fs(spark: SparkSession, root: String) = Publish.fsOf(spark, root)
 
   /** Current manifest version at `root` (0 = nothing published). The
     * pointer is primary; when it is absent or vanishes mid-read (the
@@ -257,7 +257,7 @@ object IndexCatalog {
     * request — while our catalog was memory-only). The TxnLog write
     * discipline: the new version's parquet lands `errorifexists` (racing
     * savers arbitrate at the slot — the loser dies BEFORE any pointer
-    * moves), then the `_latest` pointer flips via tmp-write + rename, then
+    * moves), then the `_latest` pointer flips ([[Publish.flipPointer]]), then
     * superseded version dirs are GC'd (the MvRegistry swap discipline:
     * nothing references them once the pointer lands). Returns the
     * published version dir. Index ARTIFACTS (graph edges/meta, cell
@@ -306,16 +306,9 @@ object IndexCatalog {
     val dir = s"$root/v$v"
     (hnsw ++ ivf ++ mv).toDF()
       .coalesce(1).write.mode("errorifexists").parquet(dir)
-    // pointer flip: tmp write + rename (HDFS-style rename refuses to
-    // clobber, so delete-then-rename — the TxnLog.flipPointer mechanics)
+    // pointer flip through Publish.flipPointer, TxnLog's commit point
     val f = fs(spark, root)
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/._latest.tmp")
-    val out = f.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    val ptr = new org.apache.hadoop.fs.Path(s"$root/_latest")
-    f.delete(ptr, false)
-    if (!f.rename(tmp, ptr))
-      throw new java.io.IOException(s"catalog: pointer flip failed for v$v")
+    Publish.flipPointer(f, new org.apache.hadoop.fs.Path(s"$root/_latest"), v.toString)
     // GC superseded versions, RETAINING the last ten: a reader that
     // resolved the pointer before this save (the Verify → DuckDB oracle
     // window: the manifest path is baked into oracle_sql.json at dump

@@ -1647,4 +1647,48 @@ class HnswSpec extends AnyFunSuite {
       graft.plans.IvfIndexRegistry.clear()
     }
   }
+
+  test("crash inside the meta swap: the next delete restores the meta holdout and commits correctly") {
+    // a crash between the meta swap's two renames leaves the old meta
+    // only in its hidden holdout and the new one unpromoted in tmp; the
+    // next maintenance verb must restore the holdout before it reads
+    Hnsw.layout(spark, sf)
+    val base = Hnsw.edgesPath(sf)
+    val ce = base + "-meta-crash-test"
+    val cm = ce + "-meta"
+    val fs = new org.apache.hadoop.fs.Path(ce).getFileSystem(spark.sessionState.newHadoopConf())
+    Seq(Hnsw.deltaPath(ce), Hnsw.replacedPath(ce), Hnsw.tombstonesPath(ce), cm + ".tmp")
+      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    Seq(base -> ce, Hnsw.shardsPath(base) -> Hnsw.shardsPath(ce), Hnsw.metaPath(sf) -> cm)
+      .foreach { case (from, to) => Hnsw.fsCopy(spark, from, to) }
+    val entry = spark.read.parquet(cm).head().getAs[Long]("entry")
+    val live = new org.apache.hadoop.fs.Path(cm)
+    val holdout = new org.apache.hadoop.fs.Path(live.getParent, s".${live.getName}.old")
+    fs.delete(holdout, true)
+    assert(fs.rename(live, holdout))
+    Hnsw.fsCopy(spark, Hnsw.metaPath(sf), cm + ".tmp") // the unpromoted new meta
+    val victim = if (entry == 1L) 2L else 1L
+    Hnsw.deleteFromGraph(spark, ce, cm, Seq(entry, victim))
+    assert(!fs.exists(holdout), "meta holdout left behind")
+    val meta = spark.read.parquet(cm)
+    assert(meta.count() === 1)
+    assert(meta.schema.map(f => f.name -> f.dataType.simpleString) === Seq(
+      "entry" -> "bigint", "entry_emb" -> "array<float>", "corpus_n" -> "bigint",
+      "corpus_fp" -> "bigint", "n_layers" -> "int"))
+    val m = meta.head()
+    // the membership fingerprint is the live corpus minus the two ids
+    val liveIds = Tables.embeddings(spark, sf)
+      .filter(col("vec_id") =!= 0 && !col("vec_id").isin(entry, victim)).select(col("vec_id"))
+    val want = graft.streaming.Streaming.fingerprintStream(
+      liveIds, col("vec_id").cast("string")).head()
+    assert(m.getAs[Long]("corpus_n") === want.getLong(0))
+    assert(m.getAs[Long]("corpus_fp") === want.getLong(1))
+    // the deleted entry was re-elected to a live member, with its vector
+    val newEntry = m.getAs[Long]("entry")
+    assert(!Set(entry, victim).contains(newEntry))
+    val emb = spark.read.parquet(Hnsw.shardsPath(ce)).filter(col("vec_id") === newEntry)
+      .select(col("embedding")).head().getSeq[Float](0)
+    assert(m.getSeq[Float](m.fieldIndex("entry_emb")) === emb)
+    assert(m.getAs[Int]("n_layers") === nLayers)
+  }
 }

@@ -26,6 +26,15 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     */
   val ServeJobBudget = 21
 
+  /** Jobs of one append (2 vectors) + delete (2 ids, one the entry) +
+    * maintainGraph round on a private clone of this fixture's graph: 71
+    * counted before the writers shared one publish protocol, when the
+    * append's pooled jobs ran on the global execution context and most
+    * of them did not carry the caller's job group; 86 after, with every
+    * pooled job counted (85 jobs in all, against 90 before).
+    */
+  val UpdateJobBudget = 86
+
   /** Jobs started by `body`, counted under a unique job group (inherited
     * by staging and broadcast jobs), so other threads' jobs never count.
     */
@@ -68,5 +77,34 @@ class ServeJobBudgetSpec extends AnyFunSuite {
       assert(jobs <= ServeJobBudget,
         s"a single-query serve ran $jobs jobs, over its budget of $ServeJobBudget")
     } finally graft.plans.HnswGraphRegistry.clear()
+  }
+
+  test("append, delete with re-election, and maintain on a private graph clone stay within their job budget") {
+    Hnsw.layout(spark, sf)
+    val base = Hnsw.edgesPath(sf)
+    val ce = base + "-update-jobs-test"
+    val cm = ce + "-meta"
+    val fs = new org.apache.hadoop.fs.Path(ce).getFileSystem(spark.sessionState.newHadoopConf())
+    Seq(Hnsw.deltaPath(ce), Hnsw.replacedPath(ce), Hnsw.tombstonesPath(ce))
+      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    Seq(base -> ce, Hnsw.shardsPath(base) -> Hnsw.shardsPath(ce), Hnsw.metaPath(sf) -> cm)
+      .foreach { case (from, to) => Hnsw.fsCopy(spark, from, to) }
+    // two fresh ids carrying the negated vectors of corpus rows 3 and 7
+    val fresh = Tables.embeddings(spark, sf).filter(col("vec_id").isin(3L, 7L))
+      .select((col("vec_id") + 910000L).as("vec_id"),
+        transform(col("embedding"), x => -x).as("embedding"))
+      .localCheckpoint()
+    val entry = spark.read.parquet(cm).head().getAs[Long]("entry")
+    val doomed = Seq(entry, if (entry == 1L) 2L else 1L)
+    var compacted = false
+    val jobs = jobsOf {
+      Hnsw.appendToGraph(spark, sf, ce, cm, fresh)
+      Hnsw.deleteFromGraph(spark, ce, cm, doomed)
+      compacted = Hnsw.maintainGraph(spark, ce, cm)
+    }
+    info(s"append + delete + maintain (compacted = $compacted): $jobs Spark jobs")
+    assert(spark.read.parquet(cm).head().getAs[Long]("entry") !== entry)
+    assert(jobs <= UpdateJobBudget,
+      s"the update round ran $jobs jobs, over its budget of $UpdateJobBudget")
   }
 }
