@@ -1,6 +1,7 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BoundReference, Expression, Literal, Round}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -44,26 +45,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
   private def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements())
-      throw new IllegalArgumentException(
-        s"cosine_sim: dimension mismatch ($n vs ${y.numElements()})")
-    val xf = elemType(left) == FloatType
-    val yf = elemType(right) == FloatType
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0
-    else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], elemType(left) == FloatType,
+      b.asInstanceOf[ArrayData], elemType(right) == FloatType)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val xGet = if (elemType(left) == FloatType) "getFloat" else "getDouble"
@@ -94,4 +78,43 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): Expression = copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** THE fused loop, shared by the interpreted [[CosineSimilarity]] and
+    * the driver-side graph walk (`Hnsw`'s resident copy): dot, |x|² and
+    * |y|² accumulate in doubles in index order, whatever the element
+    * type of either array — so a sim computed on the driver is bit-for-bit
+    * the one the expression computes on an executor. The codegen path
+    * emits this same loop as Java source.
+    */
+  def cosine(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = x.numElements()
+    if (n != y.numElements())
+      throw new IllegalArgumentException(
+        s"cosine_sim: dimension mismatch ($n vs ${y.numElements()})")
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = if (xFloat) x.getFloat(i).toDouble else x.getDouble(i)
+      val yv = if (yFloat) y.getFloat(i).toDouble else y.getDouble(i)
+      dot += xv * yv; na += xv * xv; nb += yv * yv
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) 0.0
+    else dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** Spark's own `round(_, 6)` — the [[Round]] expression itself, bound
+    * to a one-column row — so driver-side rounding cannot drift from the
+    * plan's.
+    */
+  private val round6 = Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
+
+  /** `round(cosine_sim(x, y), 6)` evaluated on the driver: the kernel
+    * above, then Spark's 6-dp rounding.
+    */
+  def roundedCosine(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double =
+    round6.eval(InternalRow(cosine(x, xFloat, y, yFloat))).asInstanceOf[Double]
 }

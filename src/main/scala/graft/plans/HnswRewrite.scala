@@ -81,7 +81,7 @@ object HnswGraphRegistry extends PathRegistry {
     * a batch panel is walked in its ORIGINAL type, and a double panel and
     * a float query with equal values can rank round-6 ties differently.
     */
-  private[plans] val walkMemo =
+  private[graft] val walkMemo =
     new ConcurrentHashMap[(String, Long, Option[Double], DataType, Seq[(Long, Seq[Double])]), Seq[(Long, Long)]]()
 
   def register(corpusPath: String, idCol: String, embCol: String,
@@ -99,17 +99,50 @@ object HnswGraphRegistry extends PathRegistry {
     */
   def generationOfDir(edgesDir: String): Long = generation(edgesDir)
 
-  override def clear(): Unit = { super.clear(); walkMemo.clear() }
+  /** Driver-resident graph copies (Hnsw's small-graph serving state) by
+    * canonical graph dir: the key each was loaded under — (generation,
+    * freshness stamp, size cap) — and the copy, or None for a graph over
+    * the cap. One slot per dir, so a new key replaces the old copy and at
+    * most one generation of a dir stays on the heap.
+    */
+  private[graft] val residentCopies =
+    new ConcurrentHashMap[String, ((Long, String, Long), Option[graft.operators.Hnsw.GraphCopy])]()
+
+  /** Resident copies kept at once; past it the map clears (a reload is
+    * one load per graph). Each copy is bounded by Hnsw.DriverGraphMaxRows.
+    */
+  private val MaxResidentGraphs = 8
+
+  /** The resident copy of `edgesDir` for its current generation,
+    * freshness `stamp` and size `cap`, running `load` on a miss. The
+    * generation is read BEFORE the load, so a load racing a maintenance
+    * verb is filed under the old generation and never served after it.
+    */
+  def residentCopy(edgesDir: String, stamp: String, cap: Long)(
+      load: => Option[graft.operators.Hnsw.GraphCopy]): Option[graft.operators.Hnsw.GraphCopy] = {
+    val dir = canon(edgesDir)
+    val key = (generationOfDir(dir), stamp, cap)
+    Option(residentCopies.get(dir)).filter(_._1 == key).map(_._2).getOrElse {
+      val loaded = load
+      if (!residentCopies.containsKey(dir) && residentCopies.size >= MaxResidentGraphs)
+        residentCopies.clear()
+      residentCopies.put(dir, (key, loaded))
+      loaded
+    }
+  }
+
+  override def clear(): Unit = { super.clear(); walkMemo.clear(); residentCopies.clear() }
 
   /** Invalidate memoized probes for a graph whose artifact just mutated —
     * called by Hnsw.appendToGraph/deleteFromGraph/compactGraph: the
     * generation bump makes every in-flight walk insert under a dead key,
-    * and the old entries are purged too.
+    * and the old entries and the resident copy are purged too.
     */
   override def invalidate(edgesDir: String): Unit = {
     super.invalidate(edgesDir)
     val dir = canon(edgesDir)
     walkMemo.keySet().removeIf(_._1 == dir)
+    residentCopies.remove(dir)
   }
 
   /** The graph-index probe: run the bounded beam walk for the literal
@@ -150,15 +183,17 @@ object HnswGraphRegistry extends PathRegistry {
     */
   def walk(spark: SparkSession, e: Entry, panel: Seq[(Long, Seq[Double])],
            elem: DataType, t: Option[Double])(qdf: => DataFrame): Seq[(Long, Long)] = {
-    import org.apache.spark.sql.functions.col
     val key = (e.edgesDir, generationOfDir(e.edgesDir), t, elem, panel)
     Option(walkMemo.get(key)).getOrElse {
-      val walked = (t match {
+      // ordered on the driver: a small walk's result is a local relation,
+      // and a Spark sort over it would start jobs its collect does not
+      val walked = t match {
         case None => graft.operators.Hnsw.searchIn(spark, e.edgesDir, e.metaDir, qdf, k = Ef)
-          .orderBy(col("qid"), col("rnk"))
+          .collect().map(r => ((r.getLong(0), r.getInt(3)), r.getLong(1)))
+          .sortBy(_._1).map { case ((qid, _), id) => (qid, id) }.toSeq
         case Some(th) => graft.operators.Hnsw.searchRangeIn(spark, e.edgesDir, e.metaDir, qdf, th)
-          .orderBy(col("qid"), col("vec_id"))
-      }).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+          .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+      }
       boundedPut(walkMemo, key, walked)
       walked
     }

@@ -97,6 +97,9 @@ class HnswSpec extends AnyFunSuite {
       .select(lit(0L).as("qid"), col("embedding").as("q_emb"))
     Hnsw.layout(spark, sf)
     Hnsw.collectWalkStats = true
+    // the per-hop probes are the scale path: keep the graph off the driver
+    val savedCap = Hnsw.DriverGraphMaxRows
+    Hnsw.DriverGraphMaxRows = 0
     try {
       Hnsw.search(spark, sf, q, k = 5).collect()
       val scans = Hnsw.lastWalkScans
@@ -146,7 +149,7 @@ class HnswSpec extends AnyFunSuite {
       while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) total += 1 }
       assert(files.forall(_._1 < total),
         s"a hop read the entire $total-file artifact — no pruning happened")
-    } finally Hnsw.collectWalkStats = false
+    } finally { Hnsw.collectWalkStats = false; Hnsw.DriverGraphMaxRows = savedCap }
     // the filtered face is a re-sort of the walk's visited pool — same
     // walk, plus zero additional file scans over the corpus
     val got = Hnsw.searchFiltered(spark, sf, q, k = 5,

@@ -14,7 +14,9 @@ import graft.streaming.Streaming
   * (`Streaming.indexServeOne`, the reference's `POST /api/search`) on a
   * registered graph that carries delta, replaced and tombstone sidecars
   * (the maintenance demo clone — the state a churning index serves from).
-  * The graph walk issues one job per hop; the budget may only tighten.
+  * A warm serve walks the driver-resident copy of the graph; the first
+  * serve after a mutation pays the copy's load. The budgets may only
+  * tighten.
   */
 class ServeJobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -22,9 +24,17 @@ class ServeJobBudgetSpec extends AnyFunSuite {
 
   /** Jobs of one warm serve + collect on this fixture at local[4]: 23
     * before the search faces shared one walk, 21 after (an already-local
-    * query panel is no longer checkpointed and re-collected).
+    * query panel is no longer checkpointed and re-collected), 0 once the
+    * walk and the top-k cut run over the resident copy.
     */
-  val ServeJobBudget = 21
+  val ServeJobBudget = 0
+
+  /** Jobs of the first serve after a mutation, which loads the resident
+    * copy: the graph open (schema reads and sidecar probes — 8 on the
+    * maintained graph), the capped collect of the live adjacency (3) and
+    * the meta read (1).
+    */
+  val LoadJobBudget = 12
 
   /** Jobs of one append (2 vectors) + delete (2 ids, one the entry) +
     * maintainGraph round on a private clone of this fixture's graph: 71
@@ -76,6 +86,37 @@ class ServeJobBudgetSpec extends AnyFunSuite {
       assert(rows.length === 5)
       assert(jobs <= ServeJobBudget,
         s"a single-query serve ran $jobs jobs, over its budget of $ServeJobBudget")
+    } finally graft.plans.HnswGraphRegistry.clear()
+  }
+
+  test("the first serve after a mutation loads the resident copy within its job budget") {
+    // a private clone of the maintained graph, sidecars included
+    val (de, dm) = Hnsw.maintDemoLayout(spark, sf)
+    val ce = de + "-load-jobs-test"
+    val cm = ce + "-meta"
+    Seq(de -> ce, Hnsw.deltaPath(de) -> Hnsw.deltaPath(ce),
+      Hnsw.replacedPath(de) -> Hnsw.replacedPath(ce),
+      Hnsw.tombstonesPath(de) -> Hnsw.tombstonesPath(ce),
+      Hnsw.shardsPath(de) -> Hnsw.shardsPath(ce), dm -> cm)
+      .foreach { case (from, to) => Hnsw.fsCopy(spark, from, to) }
+    val corpus = Hnsw.rewriteCorpusLayout(spark, sf)
+    val q = Tables.embeddings(spark, sf).filter(col("vec_id") === 1)
+      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+    try {
+      graft.plans.HnswGraphRegistry.register(corpus, "vec_id", "embedding", ce, cm)
+      val top = Streaming.indexServeOne(spark, corpus, q, k = 5).collect()
+      Hnsw.deleteFromGraph(spark, ce, cm, Seq(top.head.getLong(0)))
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val load = jobsOf {
+        rows = Streaming.indexServeOne(spark, corpus, q, k = 5).collect()
+      }
+      val warm = jobsOf(Streaming.indexServeOne(spark, corpus, q, k = 5).collect())
+      info(s"first serve after a delete: $load Spark jobs; the next: $warm")
+      assert(rows.length === 5 && !rows.map(_.getLong(0)).contains(top.head.getLong(0)))
+      assert(load <= LoadJobBudget,
+        s"the first serve after a mutation ran $load jobs, over its budget of $LoadJobBudget")
+      assert(warm <= ServeJobBudget,
+        s"the serve after the load ran $warm jobs, over its budget of $ServeJobBudget")
     } finally graft.plans.HnswGraphRegistry.clear()
   }
 
