@@ -110,11 +110,14 @@ object CosineSimilarity {
     * to a one-column row — so driver-side rounding cannot drift from the
     * plan's.
     */
-  private val round6 = Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
+  private val roundExpr = Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
+
+  /** `round(x, 6)` evaluated on the driver by Spark's own expression. */
+  def round6(x: Double): Double = roundExpr.eval(InternalRow(x)).asInstanceOf[Double]
 
   /** `round(cosine_sim(x, y), 6)` evaluated on the driver: the kernel
     * above, then Spark's 6-dp rounding.
     */
   def roundedCosine(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double =
-    round6.eval(InternalRow(cosine(x, xFloat, y, yFloat))).asInstanceOf[Double]
+    round6(cosine(x, xFloat, y, yFloat))
 }

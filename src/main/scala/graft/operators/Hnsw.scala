@@ -52,15 +52,17 @@ import graft.expressions.{CosineSimilarity, GraftFunctions}
   * edges, so a hash match proves the whole search path, not just the
   * final set.
   *
-  * SERVING: a graph of at most [[DriverGraphMaxRows]] live adjacency rows
-  * is walked from a driver-resident [[GraphCopy]], loaded once per
+  * SERVING: a graph of at most [[DriverGraphMaxRows]] adjacency rows
+  * (base + delta) is walked from a driver-resident [[GraphCopy]], loaded once per
   * on-disk state (the registry keys it by generation and a file-listing
   * stamp) through the same merge-on-read resolution compaction reads. The
   * entry hop, every beam hop and the top-k cut run in memory with the
   * shared cosine kernel, so a warm API-sized search starts no Spark job —
   * the reuse-across-a-session posture of incremental top-k search (EDBT
-  * 2020). A larger graph, or a bulk panel, keeps the per-hop edge probes
-  * below: the scale path.
+  * 2020). The maintenance verbs of such a graph compute from the same
+  * copy and patch it in place, so an update leaves no reload behind. A
+  * larger graph, or a bulk panel, keeps the per-hop edge probes below and
+  * the distributed verbs: the scale path.
   *
   * 100 TB shape, the scale path (the DiskANN disk layout — Subramanya
   * 2019 stores each node's neighbor ids AND their vectors in the node's
@@ -495,7 +497,7 @@ object Hnsw {
         // the optimized local relation IS the frame's result: read its rows
         val Seq(q, v, s) = Seq("qid", "vec_id", "sim").map(n => l.output.indexWhere(_.name == n))
         localFrame(df.sparkSession,
-          Seq("qid" -> LongType, "vec_id" -> LongType, "sim" -> DoubleType, "rnk" -> IntegerType),
+          notNull("qid" -> LongType, "vec_id" -> LongType, "sim" -> DoubleType, "rnk" -> IntegerType),
           rankLocal(l.data.map(r => (r.getLong(q), r.getLong(v), r.getDouble(s))), k)
             .map { case ((qid, id, sim), rnk) => InternalRow(qid, id, sim, rnk) })
       case _ =>
@@ -555,36 +557,36 @@ object Hnsw {
   @volatile var MorLiteralMaxRows = 1L << 17 // var: HnswSpec forces the join fallback to pin literal ≡ join
 
   private def openGraph(spark: SparkSession, edgesDir: String): GraphRefs = {
-    def state[T](dir: String, shape: DataFrame => DataFrame,
-                 toLit: Array[org.apache.spark.sql.Row] => T): Option[SidecarState[T]] =
+    // each sidecar is read with its declared schema and sized from its
+    // Parquet footers, so opening a graph starts no schema-inference or
+    // probing job: a batch-sized sidecar costs the one job that collects
+    // it, raw, and shapes it on the driver
+    def state[T](dir: String, schema: StructType, shape: DataFrame => DataFrame,
+                 toLit: Array[Row] => T): Option[SidecarState[T]] =
       if (!dirExists(spark, dir)) None
       else {
-        val shaped = shape(spark.read.parquet(dir))
-        // ONE probing job, not count-then-collect: a limit of cap+1 rows
-        // that comes back ≤ cap IS the complete sidecar (literal mode);
-        // cap+1 rows prove it outgrew the batch class (join mode)
-        val probe = shaped.limit(MorLiteralMaxRows.toInt + 1).collect()
-        if (probe.length <= MorLiteralMaxRows)
-          Some(SidecarState(Some(toLit(probe)), None))
-        else Some(SidecarState(None, Some(shaped.localCheckpoint())))
+        val raw = readSidecar(spark, dir, schema)
+        if (footerRows(spark, dir) <= MorLiteralMaxRows) Some(SidecarState(Some(toLit(raw.collect())), None))
+        else Some(SidecarState(None, Some(shape(raw).localCheckpoint())))
       }
-    val latest = state[Map[(Int, Long), Long]](replacedPath(edgesDir),
+    val latest = state[Map[(Int, Long), Long]](replacedPath(edgesDir), ReplacedSchema,
       _.groupBy(col("layer"), col("src")).agg(max(col("gen")).as("__latest")),
-      _.map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2)).toMap)
-    val tombs = state[Seq[Long]](tombstonesPath(edgesDir),
+      _.groupMapReduce(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))(math.max))
+    val tombs = state[Seq[Long]](tombstonesPath(edgesDir), TombstoneSchema,
       _.select(col("vec_id")).distinct(),
-      _.map(_.getLong(0)).sorted.toSeq)
+      _.map(_.getLong(0)).distinct.sorted.toSeq)
     // open the edge artifacts ONCE per walk: a fresh read.parquet per hop
     // rebuilds the partitioned-dir FileIndex every hop (nLayers × 32
     // directories listed up to 12 times per walk — measured ~0.2 s/hop of
     // pure planning at sf0.1); filtering ONE DataFrame still partition-
     // prunes per action, so the per-hop numFiles pins are unchanged
-    GraphRefs(
-      spark.read.parquet(edgesDir),
-      if (dirExists(spark, deltaPath(edgesDir)))
-        Some(spark.read.parquet(deltaPath(edgesDir))) else None,
-      latest, tombs)
+    GraphRefs(spark.read.parquet(edgesDir), deltaOf(spark, edgesDir), latest, tombs)
   }
+
+  /** A graph's delta sidecar, if it has one. */
+  private def deltaOf(spark: SparkSession, edgesDir: String): Option[DataFrame] =
+    if (dirExists(spark, deltaPath(edgesDir))) Some(readSidecar(spark, deltaPath(edgesDir), DeltaSchema))
+    else None
 
   /** THE merge-on-read resolution — the one in-engine definition (the
     * parity-critical-formula rule; the DuckDB twin is
@@ -771,13 +773,16 @@ object Hnsw {
     * from internal rows — no encoder is derived per call (measured: the
     * per-call tuple encoder was ~40% of a warm resident search).
     */
-  private def localFrame(spark: SparkSession, cols: Seq[(String, DataType)],
+  private def localFrame(spark: SparkSession, schema: StructType,
                          rows: Seq[InternalRow]): DataFrame =
     GraftSqlBridge.ofRows(spark, LocalRelation(
-      cols.map { case (n, t) => AttributeReference(n, t, nullable = false)() }, rows))
+      schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()), rows))
+
+  private def notNull(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, t) => StructField(n, t, nullable = false) })
 
   private def beamFrame(spark: SparkSession, ts: Seq[Triple]): DataFrame =
-    localFrame(spark, Seq("qid" -> LongType, "vec_id" -> LongType, "sim" -> DoubleType),
+    localFrame(spark, notNull("qid" -> LongType, "vec_id" -> LongType, "sim" -> DoubleType),
       ts.map { case (q, v, s) => InternalRow(q, v, s) })
 
   /** Per-qid top-ef of a candidate multiset — the DRIVER twin of the
@@ -885,28 +890,56 @@ object Hnsw {
     h
   }
 
-  // --- driver-resident serving copy ---------------------------------------
+  // --- driver-resident copy -----------------------------------------------
 
-  /** Above this many live adjacency rows a graph is served by the per-hop
-    * edge probes ([[probeHop]], the scale path) instead of a
-    * driver-resident [[GraphCopy]]. 2^16 rows bound the copy to at most
-    * 2^16 vectors — ≤ 17 MB at 64-d float, ~1.5 MB at the fixtures' ~14
-    * edges per node — and the load to one collect of ≤ 2^16 + 1 rows.
+  /** Above this many adjacency rows (base + delta, counted from the
+    * Parquet footers) a graph is served by the per-hop edge probes
+    * ([[probeHop]]) and maintained by the distributed verbs — the scale
+    * path — instead of from a driver-resident [[GraphCopy]]. 2^16 rows
+    * bound the copy's adjacency to at most 2^16 vectors — ≤ 17 MB at 64-d
+    * float, ~1.5 MB at the fixtures' ~14 edges per node.
     */
   @volatile var DriverGraphMaxRows: Long = 1L << 16 // var: specs force the per-hop path
 
-  /** A small graph's serving state held on the driver: per layer the LIVE
-    * adjacency (src → dst ids, the [[morResolve]] resolution), one float
-    * vector per dst id (its denormalized `dst_emb`, as the [[ArrayData]]
-    * the cosine kernel reads), and the meta's entry, entry vector and
-    * layer count. `entryLive` is [[liveEntry]]'s verdict on that entry,
-    * taken at load — the one id the tombstones can remove from a beam
-    * that the resolved adjacency has not already dropped.
+  /** A small graph held on the driver: everything a search walks and a
+    * maintenance verb reads.
+    *  - `edges`: per layer, src → its gen-resolved out-edge dsts (the
+    *    [[morResolve]] latest-gen rule, BEFORE tombstone subtraction: an
+    *    append re-caps against these lists), and `vecs`, one float
+    *    vector per dst (its denormalized `dst_emb`, as the [[ArrayData]]
+    *    the cosine kernel reads);
+    *  - `members`: the shards sidecar by shard, (vec_id, embedding),
+    *    tombstoned members included (an append pairs against them);
+    *  - `tombs`; `latest`, the replaced sidecar's winning gen per (layer,
+    *    src); the base + delta row count and the delta row count;
+    *  - the meta.
+    * A search walks `adj`, the live view: tombstoned dsts subtracted, as
+    * [[morResolve]] subtracts them.
     */
-  private[graft] final case class GraphCopy(adj: Seq[Map[Long, Array[Long]]],
+  private[graft] final case class GraphCopy(edges: Seq[Map[Long, Array[Long]]],
                                             vecs: Map[Long, ArrayData],
-                                            entry: Long, entryEmb: ArrayData,
-                                            nLayers: Int, entryLive: Boolean) {
+                                            members: Map[Int, Seq[(Long, ArrayData)]],
+                                            tombs: Set[Long], latest: Map[(Int, Long), Long],
+                                            edgeRows: Long, deltaRows: Long, meta: GraphMeta) {
+
+    lazy val adj: Seq[Map[Long, Array[Long]]] = edges.map(_.flatMap { case (src, ds) =>
+      Some(ds.filterNot(tombs)).filter(_.nonEmpty).map(src -> _) })
+
+    lazy val entryEmb: ArrayData = ArrayData.toArrayData(meta.entryEmb.toArray)
+
+    /** [[liveEntry]]'s verdict on the meta's entry. */
+    def entryLive: Boolean = !tombs(meta.entry)
+
+    /** Every member's vector by id. */
+    lazy val memberVecs: Map[Long, ArrayData] = members.valuesIterator.flatten.toMap
+
+    /** The newest gen an append committed (0 for none). */
+    def maxGen: Long = latest.valuesIterator.foldLeft(0L)(math.max)
+
+    /** The (layer, src, dst, dst_emb) rows of `edges`. */
+    def rows: Iterator[(Int, Long, Long, ArrayData)] =
+      for ((m, l) <- edges.iterator.zipWithIndex; (src, ds) <- m.iterator; d <- ds.iterator)
+        yield (l, src, d, vecs(d))
 
     /** The in-memory twin of [[probeHop]]: every beam member's live
       * out-edges on `layer`, each scored against its qid's query vector
@@ -917,51 +950,91 @@ object Hnsw {
         adj(layer).getOrElse(src, Array.emptyLongArray).toSeq.map(dst =>
           (qid, dst, CosineSimilarity.roundedCosine(vecs(dst), true, qv(qid), qFloat)))
       }
+
+    /** [[maintenancePlan]]'s decision, from the same counts: live nodes
+      * and edges of the resolved graph, delta rows, distinct replaced
+      * srcs and tombstones, as ratios rounded to 6 dp before the compare.
+      */
+    def decision: String = {
+      val liveNodes = adj.head.size.toLong
+      val liveEdges = adj.iterator.map(_.valuesIterator.map(_.length.toLong).sum).sum
+      def ratio(num: Long, den: Long): Double =
+        if (den == 0) (if (num > 0) 1.0 else 0.0)
+        else CosineSimilarity.round6(num.toDouble / den)
+      if (ratio(tombs.size, liveNodes) > MaintTombRatio ||
+          ratio(latest.keysIterator.map(_._2).toSet.size, liveNodes) > MaintReplacedRatio ||
+          ratio(deltaRows, liveEdges) > MaintDeltaRatio) "compact"
+      else "serve"
+    }
   }
 
-  /** Load a graph's [[GraphCopy]] through the same [[openGraph]] +
-    * [[readGraphFrom]] resolution compaction and stats read, collecting at
-    * most [[DriverGraphMaxRows]] + 1 rows (the sidecar-probe pattern):
-    * None when the graph is over the cap or its payload is not
-    * `array<float>`. A dst carrying two different denormalized vectors
-    * fails the load — the per-hop path would score each row by its own
-    * copy, and no single resident vector reproduces that.
-    */
-  private def loadCopy(spark: SparkSession, edgesDir: String, metaDir: String): Option[GraphCopy] = {
-    import spark.implicits._
-    val g = openGraph(spark, edgesDir)
-    val live = readGraphFrom(g)
-    val meta = spark.read.schema(MetaSchema).parquet(metaDir)
-      .select(col("entry"), col("entry_emb"), col("n_layers"))
-    if (collectWalkStats) lastLoadScans = leaves(live) ++ leaves(meta)
-    if (!isFloatArray(live.schema("dst_emb").dataType)) return None
-    val rows = live.as[(Int, Long, Long, Array[Float])]
-      .limit(math.min(DriverGraphMaxRows, Int.MaxValue - 1L).toInt + 1).collect()
-    if (rows.length > DriverGraphMaxRows) return None
-    val vecs = scala.collection.mutable.HashMap.empty[Long, Array[Float]]
-    rows.foreach { case (_, _, dst, emb) =>
-      val v = vecs.getOrElseUpdate(dst, emb)
-      if (!java.util.Arrays.equals(v, emb))
-        throw new IllegalStateException(s"hnsw: $edgesDir carries two different " +
-          s"denormalized vectors for node $dst — the graph cannot be served from one copy")
+  private[graft] object GraphCopy {
+
+    /** Build a copy from its rows. A dst carrying two different
+      * denormalized vectors fails — the per-hop path would score each row
+      * by its own copy, and no single resident vector reproduces that.
+      */
+    def of(edgesDir: String, rows: Iterator[(Int, Long, Long, ArrayData)],
+           members: Iterable[(Int, Long, ArrayData)], tombs: Set[Long],
+           latest: Map[(Int, Long), Long], edgeRows: Long, deltaRows: Long,
+           meta: GraphMeta): GraphCopy = {
+      val vecs = scala.collection.mutable.HashMap.empty[Long, ArrayData]
+      val byLayer = Array.fill(meta.nLayers)(
+        scala.collection.mutable.HashMap.empty[Long, scala.collection.mutable.ArrayBuilder.ofLong])
+      rows.foreach { case (l, src, dst, emb) =>
+        if (vecs.getOrElseUpdate(dst, emb) != emb)
+          throw new IllegalStateException(s"hnsw: $edgesDir carries two different " +
+            s"denormalized vectors for node $dst — the graph cannot be served from one copy")
+        if (l < meta.nLayers) byLayer(l).getOrElseUpdate(src, new scala.collection.mutable.ArrayBuilder.ofLong) += dst
+      }
+      GraphCopy(byLayer.toSeq.map(_.map { case (src, ds) => src -> ds.result() }.toMap), vecs.toMap,
+        members.groupBy(_._1).map { case (sh, ms) => sh -> ms.map(m => (m._2, m._3)).toSeq },
+        tombs, latest, edgeRows, deltaRows, meta)
     }
-    val m = meta.head()
-    val nLayers = m.getInt(2)
-    val byLayer = rows.groupBy(_._1)
-    Some(GraphCopy(
-      (0 until nLayers).map(l => byLayer.getOrElse(l, Array.empty).groupBy(_._2)
-        .map { case (src, es) => src -> es.map(_._3) }),
-      vecs.map { case (id, v) => id -> ArrayData.toArrayData(v) }.toMap,
-      m.getLong(0), ArrayData.toArrayData(m.getSeq[Float](1).toArray), nLayers,
-      liveEntry(g, Seq((0L, m.getLong(0), 0.0))).nonEmpty))
+  }
+
+  private def floatVec(v: Seq[Float]): ArrayData = ArrayData.toArrayData(v.toArray)
+
+  /** Load a graph's [[GraphCopy]]: the base ∪ delta rows resolved by
+    * [[morResolve]] (latest gen, tombstones kept), then the replaced,
+    * tombstone and shards sidecars raw and the meta — one job each, plus
+    * the base's schema read. None, with no collect, when the footers
+    * count more than [[DriverGraphMaxRows]] adjacency rows, when the
+    * payload is not `array<float>`, or when no meta is committed (the
+    * scale path then reports the missing meta where it reads it).
+    */
+  private[graft] def loadCopy(spark: SparkSession, edgesDir: String, metaDir: String): Option[GraphCopy] = {
+    import spark.implicits._
+    val deltaRows = footerRows(spark, deltaPath(edgesDir))
+    val edgeRows = footerRows(spark, edgesDir) + deltaRows
+    if (edgeRows > DriverGraphMaxRows || !dirExists(spark, metaDir)) return None
+    val base = spark.read.parquet(edgesDir)
+    if (!base.schema.find(_.name == "dst_emb").exists(f => isFloatArray(f.dataType))) return None
+    def raw(dir: String, schema: StructType): Array[Row] =
+      if (dirExists(spark, dir)) readSidecar(spark, dir, schema).collect() else Array.empty
+    val latest = raw(replacedPath(edgesDir), ReplacedSchema)
+      .groupMapReduce(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))(math.max)
+    val all = deltaOf(spark, edgesDir).foldLeft(base.withColumn("gen", lit(0L)))(_ unionByName _)
+    val resolved = morResolve(all, Some(SidecarState(Some(latest), None)), None)
+      .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
+    val metaF = spark.read.schema(MetaSchema).parquet(metaDir)
+    if (collectWalkStats) lastLoadScans = leaves(resolved) ++ leaves(metaF)
+    val rows = resolved.as[(Int, Long, Long, Array[Float])].collect()
+    val members = raw(shardsPath(edgesDir), ShardsSchema)
+      .map(r => (r.getInt(2), r.getLong(0), floatVec(r.getSeq[Float](1))))
+    Some(GraphCopy.of(edgesDir,
+      rows.iterator.map { case (l, s, d, e) => (l, s, d, ArrayData.toArrayData(e)) },
+      members, raw(tombstonesPath(edgesDir), TombstoneSchema).map(_.getLong(0)).toSet,
+      latest, edgeRows, deltaRows, metaOf(metaF.head())))
   }
 
   /** Freshness stamp of a graph's on-disk state, read from the file
     * system alone (no Spark job): a digest of every file's (path, length,
-    * mtime) under the edges, delta, replaced, tombstone and meta dirs.
-    * Parquet writes mint fresh part-file names, so a write by any route —
-    * a maintenance verb, an [[fsCopy]], a direct sidecar write — changes
-    * the stamp (the rule RewriteSupport.inputFilesDigest relies on).
+    * mtime) under the edges, delta, replaced, tombstone, shards and meta
+    * dirs. Parquet writes mint fresh part-file names, so a write by any
+    * route — a maintenance verb, an [[fsCopy]], a direct sidecar write —
+    * changes the stamp (the rule RewriteSupport.inputFilesDigest relies
+    * on).
     */
   private def graphStamp(spark: SparkSession, edgesDir: String, metaDir: String): String = {
     import org.apache.hadoop.fs.Path
@@ -979,14 +1052,14 @@ object Hnsw {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
     }
-    Seq(edgesDir, deltaPath(edgesDir), replacedPath(edgesDir), tombstonesPath(edgesDir), metaDir)
-      .foreach(d => visit(new Path(d)))
+    Seq(edgesDir, deltaPath(edgesDir), replacedPath(edgesDir), tombstonesPath(edgesDir),
+      shardsPath(edgesDir), metaDir).foreach(d => visit(new Path(d)))
     md.digest().map(b => f"$b%02x").mkString
   }
 
   /** The graph's resident copy when it fits the cap, keyed and dropped by
     * the registry (generation, freshness stamp, cap); None keeps the
-    * per-hop probes.
+    * per-hop probes and the distributed verbs.
     */
   private def residentGraph(spark: SparkSession, edgesDir: String,
                             metaDir: String): Option[GraphCopy] =
@@ -1068,9 +1141,9 @@ object Hnsw {
         val qv = rows.toSeq.map(r => r.getLong(0) -> ArrayData.toArrayData(
           if (qFloat) r.getSeq[Float](1).toArray else r.getSeq[Double](1).toArray))
         val entry = qv.map { case (qid, q) =>
-          (qid, c.entry, CosineSimilarity.roundedCosine(c.entryEmb, true, q, qFloat)) }
+          (qid, c.meta.entry, CosineSimilarity.roundedCosine(c.entryEmb, true, q, qFloat)) }
         val qByQid = qv.toMap
-        (c.nLayers, entry, if (c.entryLive) entry else Nil,
+        (c.meta.nLayers, entry, if (c.entryLive) entry else Nil,
           (layer: Int, beam: Seq[Triple]) => c.probe(layer, beam, qByQid, qFloat))
       case None =>
         val meta = spark.read.parquet(metaDir)
@@ -1421,7 +1494,7 @@ object Hnsw {
     // exact rescore of the final beam only — full-precision vectors come
     // from the shards sidecar (the artifact's id→vector map), bounded by
     // Ef·|batch| ids; the corpus table stays unopened
-    val full = spark.read.parquet(shardsPath(edgesPath(sfDir)))
+    val full = readSidecar(spark, shardsPath(edgesPath(sfDir)), ShardsSchema)
       .select(col("vec_id"), col("embedding")).dropDuplicates("vec_id")
     topK(w.beam.select(col("qid"), col("vec_id"))
       .join(full, Seq("vec_id"))
@@ -1437,37 +1510,82 @@ object Hnsw {
   // (layer, src) and subtract the tombstone sidecar — both sidecars are
   // maintenance-batch-sized, so the resolution is two broadcast joins.
   //
-  // Crash-consistency: each verb reads the meta once as a [[GraphMeta]]
-  // value and commits its successor through [[Publish.swap]] — a failed
-  // promote rolls back to the old meta, and a crash between the swap's
-  // two renames leaves the old meta in its holdout, which the next
-  // verb's [[readMeta]] restores before reading (the single-writer
-  // repair rule; the serving walk never mutates). The remaining
-  // (documented) window is BETWEEN a sidecar append and its meta swap —
-  // a crash there leaves the fingerprint one batch behind the sidecars,
-  // which the staleness probe reports as stale (loud, not silent) and
-  // the next compaction repairs.
+  // Two paths, picked by the one [[DriverGraphMaxRows]] cap. A graph
+  // within it is maintained on the driver: each verb computes its rows
+  // from the resident [[GraphCopy]] and writes them as local frames — no
+  // Spark job but the writes — then the registry installs the patched
+  // copy, so the next search starts no reload. A graph over the cap keeps
+  // the distributed verbs (the scale path). Both paths write row-identical
+  // artifacts (HnswMaintenanceSpec).
+  //
+  // Crash-consistency: each verb first repairs the holdouts a crash inside
+  // a swap left (the meta's, and compaction's base and shards), reads the
+  // meta once as a [[GraphMeta]] value and commits its successor through
+  // [[Publish.swap]] — a failed promote rolls back to the old meta (the
+  // single-writer repair rule; the serving walk never mutates). The
+  // remaining (documented) window is BETWEEN a sidecar append and its
+  // meta swap — a crash there leaves the fingerprint one batch behind the
+  // sidecars, which the staleness probe reports as stale (loud, not
+  // silent) and the next compaction repairs.
 
   /** Run a maintenance verb's body, then bump the graph's generation
     * however the body ends: a verb that throws after some of its writes
     * landed must not leave memoized walks or the resident copy describing
-    * the graph before them.
+    * the graph before them. A body that ran on the driver returns its
+    * patched copy, which the registry installs under the new generation
+    * and a re-taken stamp (as over-the-cap if the verb grew it past
+    * [[DriverGraphMaxRows]]).
     */
-  private def mutating(edgesDir: String)(body: => Unit): Unit =
-    try body finally graft.plans.HnswGraphRegistry.invalidate(edgesDir)
+  private def mutating(spark: SparkSession, edgesDir: String, metaDir: String)(
+      body: => Option[GraphCopy]): Unit = {
+    val patched = try body finally graft.plans.HnswGraphRegistry.invalidate(edgesDir)
+    patched.foreach(c => graft.plans.HnswGraphRegistry.install(edgesDir,
+      graphStamp(spark, edgesDir, metaDir), DriverGraphMaxRows,
+      Some(c).filter(_.edgeRows <= DriverGraphMaxRows)))
+  }
+
+  /** The copy a verb computes from: repair the graph's crash holdouts
+    * (the meta's, and a compaction's base and shards), then the resident
+    * copy — None sends the verb down the scale path.
+    */
+  private def verbCopy(spark: SparkSession, edgesDir: String, metaDir: String): Option[GraphCopy] = {
+    val fs = Publish.fsOf(spark, edgesDir)
+    val meta = new org.apache.hadoop.fs.Path(metaDir)
+    Publish.restore(fs, meta, Publish.holdout(meta))
+    Seq(edgesDir, shardsPath(edgesDir)).foreach { d =>
+      Publish.restore(fs, new org.apache.hadoop.fs.Path(d), new org.apache.hadoop.fs.Path(d + "-compact-old"))
+    }
+    residentGraph(spark, edgesDir, metaDir)
+  }
 
   /** Per-append delta edge rows (carry an explicit `gen`), partitioned
     * like the base so per-hop probes prune delta files too.
     */
   def deltaPath(edgesDir: String): String = edgesDir + "-delta"
 
+  /** The delta's columns, partition columns last (the order a read
+    * returns them in); its writers write frames of this schema.
+    */
+  private[graft] val DeltaSchema = StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType),
+    StructField("dst_emb", ArrayType(FloatType)), StructField("gen", LongType),
+    StructField("layer", IntegerType), StructField("src_bucket", IntegerType)))
+
+  /** The base adjacency as compaction writes it — the delta without `gen`. */
+  private[graft] val BaseSchema = StructType(DeltaSchema.filterNot(_.name == "gen"))
+
   /** (layer, src, gen) rows: srcs whose base/older-gen edge lists were
     * superseded by the given gen's delta.
     */
   def replacedPath(edgesDir: String): String = edgesDir + "-replaced"
 
+  private[graft] val ReplacedSchema = StructType(Seq(
+    StructField("layer", IntegerType), StructField("src", LongType), StructField("gen", LongType)))
+
   /** Logically deleted vec_ids (the Ivfpq tombstone sidecar pattern). */
   def tombstonesPath(edgesDir: String): String = edgesDir + "-tombstones"
+
+  private[graft] val TombstoneSchema = StructType(Seq(StructField("vec_id", LongType)))
 
   /** Shard-membership sidecar (vec_id, embedding, shard), partitioned by
     * shard — dumped at build so [[appendToGraph]] pairs new nodes against
@@ -1477,6 +1595,60 @@ object Hnsw {
     * the id→vector map [[searchPq]]'s final rescore reads.
     */
   def shardsPath(edgesDir: String): String = edgesDir + "-shards"
+
+  private[graft] val ShardsSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+    StructField("shard", IntegerType)))
+
+  /** Read a sidecar with its declared schema — no schema-inference job. */
+  private def readSidecar(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(dir)
+
+  /** Rows in a Parquet directory, summed from its files' footers — no
+    * Spark job. Hidden (`_`/`.`-prefixed) files and directories do not
+    * count, as Spark's listing skips them; a missing directory holds 0.
+    */
+  private def footerRows(spark: SparkSession, dir: String): Long = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def rows(p: Path): Long = fs.listStatus(p)
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .map(st => if (st.isDirectory) rows(st.getPath) else ManifestIO.rowCount(conf, st.getPath)).sum
+    if (fs.exists(root)) rows(root) else 0L
+  }
+
+  /** Write driver rows of `schema` to `dir` in one Spark job. A
+    * partitioned write's rows are sorted by their (int) partition values,
+    * so each slice of the local scan writes a contiguous run of
+    * directories: the write spreads over the cores with about one file
+    * per directory. An unpartitioned write is one file.
+    */
+  private def writeRows(spark: SparkSession, schema: StructType, rows: Seq[InternalRow],
+                        dir: String, mode: String, partitionBy: String*): Unit = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    val keys = partitionBy.map(schema.fieldIndex)
+    val frame =
+      if (keys.isEmpty) localFrame(spark, schema, rows).coalesce(1)
+      else localFrame(spark, schema, rows.sortBy(r => keys.map(r.getInt)))
+    frame.write.mode(mode).partitionBy(partitionBy: _*).parquet(dir)
+  }
+
+  /** Write a compaction's new base and shards to their `-compact-tmp`
+    * siblings on two driver threads, then, once both writes succeeded,
+    * [[Publish.swap]] each in through `-compact-old`: a failed write
+    * leaves the served graph as it was.
+    */
+  private def publishCompacted(spark: SparkSession, edgesDir: String)(
+      writeBase: String => Unit, writeShards: String => Unit): Unit = {
+    import org.apache.hadoop.fs.Path
+    val dirs = Seq(edgesDir, shardsPath(edgesDir))
+    Publish.fanOut("hnsw-compact", dirs.zip(Seq(writeBase, writeShards)).map { case (d, write) =>
+      () => write(d + "-compact-tmp") })
+    dirs.foreach(d => Publish.swap(Publish.fsOf(spark, d), new Path(d + "-compact-tmp"), new Path(d),
+      new Path(d + "-compact-old")))
+  }
 
   /** Delete the delta, replaced and tombstone sidecars of a graph. */
   private def dropSidecars(spark: SparkSession, edgesDir: String): Unit = {
@@ -1488,34 +1660,39 @@ object Hnsw {
   private def dirExists(spark: SparkSession, dir: String): Boolean =
     Ann.dirExists(spark, dir)
 
-  private val FpMod = 2305843009213693951L // 2^61 − 1, the membership-fp modulus
+  private val FpMod = graft.functions.Digests.FingerprintMod // 2^61 − 1, the membership-fp modulus
 
   /** The graph's one-row meta as a driver value: the entry point and its
     * embedding, the corpus membership fingerprint (count, digest sum mod
     * 2^61−1) and the realized layer count.
     */
-  private case class GraphMeta(entry: Long, entryEmb: Seq[Float],
-                               corpusN: Long, corpusFp: Long, nLayers: Int) {
+  private[graft] case class GraphMeta(entry: Long, entryEmb: Seq[Float],
+                                      corpusN: Long, corpusFp: Long, nLayers: Int) {
     /** The membership after `n` ids with digest sum `fp` join (or, with
       * negative `n` and `fp`, leave).
       */
     def plus(n: Long, fp: Long): GraphMeta =
       copy(corpusN = corpusN + n, corpusFp = ((corpusFp + fp) % FpMod + FpMod) % FpMod)
+
+    /** With the entry moved to `id`, whose vector is `emb`. */
+    def enter(id: Long, emb: ArrayData): GraphMeta =
+      copy(entry = id, entryEmb = emb.toFloatArray.toSeq)
   }
 
-  private val MetaSchema = StructType(Seq(
+  private[graft] val MetaSchema = StructType(Seq(
     StructField("entry", LongType), StructField("entry_emb", ArrayType(FloatType)),
     StructField("corpus_n", LongType), StructField("corpus_fp", LongType),
     StructField("n_layers", IntegerType)))
 
+  private def metaOf(r: Row): GraphMeta =
+    GraphMeta(r.getAs[Long]("entry"), r.getSeq[Float](r.fieldIndex("entry_emb")),
+      r.getAs[Long]("corpus_n"), r.getAs[Long]("corpus_fp"), r.getAs[Int]("n_layers"))
+
   /** Read the meta a maintenance verb starts from, first restoring a
     * holdout a crash left between the meta swap's two renames.
     */
-  private def readMeta(spark: SparkSession, metaDir: String): GraphMeta = {
-    val r = Publish.readRepaired(spark, metaDir).head()
-    GraphMeta(r.getAs[Long]("entry"), r.getSeq[Float](r.fieldIndex("entry_emb")),
-      r.getAs[Long]("corpus_n"), r.getAs[Long]("corpus_fp"), r.getAs[Int]("n_layers"))
-  }
+  private def readMeta(spark: SparkSession, metaDir: String): GraphMeta =
+    metaOf(Publish.readRepaired(spark, metaDir).head())
 
   /** Commit `m` as the graph's meta through [[Publish.commitFrame]]
     * (tmp write, swap with rollback).
@@ -1544,33 +1721,150 @@ object Hnsw {
       .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
   }
 
-  /** APPEND new vectors ((vec_id, embedding) rows, ids disjoint from the
-    * graph) to a caller-owned graph clone WITHOUT a rebuild: assign each
-    * new node to its 2 nearest FROZEN trained cells (the build's shard
-    * recipe against the sfDir's dumped KMeans geometry), pair it only
-    * against those shards' members (partition-pruned via the shards
-    * sidecar — O(|change| · |shard|) work), keep its top-M out-edges per
-    * layer of the graph's hierarchy, and re-cap the edge lists of the
-    * touched in-link targets at MaxDegree. Writes ONE delta file set +
+  /** Driver twin of [[promotedPred]]. */
+  private def promoted(id: Long, layer: Int): Boolean =
+    graft.functions.Digests.digest60Of(id.toString) % Seq.fill(layer)(LayerMod.toLong).product == 0
+
+  /** Driver twin of [[levelCol]]. */
+  private def level(id: Long, nLayers: Int): Int = (1 until nLayers).count(promoted(id, _))
+
+  /** Driver twin of [[Streaming.fingerprintStream]] over ids: (n, fp). */
+  private def idsFingerprint(ids: Seq[Long]): (Long, Long) =
+    graft.functions.Digests.fingerprintOf(ids.map(_.toString))
+
+  /** Per-src top-`n` of scored (src, dst, sim, dst_emb) candidates —
+    * [[capEdges]]' discipline on the driver: one row per (src, dst) with
+    * its max sim and its first vector, then (sim desc, dst asc).
+    */
+  private def topPerSrc(rows: Seq[(Long, Long, Double, ArrayData)],
+                        n: Int): Seq[(Long, Long, Double, ArrayData)] =
+    rows.groupBy(_._1).toSeq.flatMap { case (_, out) =>
+      out.groupBy(_._2).values.map(ps => ps.head.copy(_3 = ps.map(_._3).max)).toSeq
+        .sortBy(r => (-r._3, r._2)).take(n)
+    }
+
+  /** APPEND new vectors ((vec_id, embedding) rows) to a caller-owned
+    * graph clone WITHOUT a rebuild: assign each new node to its 2 nearest
+    * FROZEN trained cells (the build's shard recipe against the sfDir's
+    * dumped KMeans geometry), pair it only against those shards' members
+    * (O(|change| · |shard|) work), keep its top-M out-edges per layer of
+    * the graph's hierarchy, and re-cap the edge lists of the touched
+    * in-link targets at MaxDegree. Writes ONE delta file set +
     * O(touched)-row sidecar entries; the meta fingerprint updates
     * ADDITIVELY (the fp is a sum mod 2^61−1, so an append needs only the
     * delta digest — no corpus pass). Entry re-election if a new node
     * promoted to the top layer undercuts it.
+    *
+    * The new ids must be distinct and disjoint from the graph's
+    * membership (the shards sidecar, tombstoned members included) — an
+    * existing id would count twice in the fingerprint and land twice in
+    * the shards. A graph within [[DriverGraphMaxRows]] with an
+    * `array<float>` batch appends on the driver, from its resident copy;
+    * any other appends through the distributed verb (the scale path),
+    * whose membership check is a shards-sidecar point lookup.
     */
   def appendToGraph(spark: SparkSession, sfDir: String, edgesDir: String,
-                    metaDir: String, newVecs: DataFrame): Unit = mutating(edgesDir) {
+                    metaDir: String, newVecs: DataFrame): Unit = {
     GraftFunctions.register(spark)
+    val vecs = newVecs.select(col("vec_id"), col("embedding"))
+    // on the driver: the copy and the batch, collected
+    val onDriver = verbCopy(spark, edgesDir, metaDir)
+      .filter(_ => isFloatArray(vecs.schema("embedding").dataType))
+      .map(_ -> vecs.collect().map(r => r.getLong(0) -> floatVec(r.getSeq[Float](1))).toSeq)
+    val ids = onDriver.fold(vecs.select(col("vec_id")).collect().map(_.getLong(0)).toSeq)(_._2.map(_._1))
+    require(ids.distinct.length == ids.length,
+      s"hnsw: appendToGraph needs distinct new ids — ${ids.diff(ids.distinct).distinct.take(5).mkString(", ")} repeat")
+    val present = onDriver match {
+      case Some((c, _)) => ids.filter(c.memberVecs.contains)
+      case None if ids.nonEmpty && dirExists(spark, shardsPath(edgesDir)) =>
+        readSidecar(spark, shardsPath(edgesDir), ShardsSchema).filter(col("vec_id").isin(ids: _*))
+          .select(col("vec_id")).distinct().collect().map(_.getLong(0)).toSeq
+      case None => Nil
+    }
+    require(present.isEmpty,
+      s"hnsw: appendToGraph ids ${present.sorted.take(5).mkString(", ")} are already members of $edgesDir")
+    mutating(spark, edgesDir, metaDir) {
+      onDriver.map { case (c, nv) => appendOnDriver(spark, sfDir, edgesDir, metaDir, c, nv) }.orElse {
+        appendDistributed(spark, sfDir, edgesDir, metaDir, vecs)
+        None
+      }
+    }
+  }
+
+  /** [[appendToGraph]] computed on the driver from the resident copy —
+    * the distributed verb's twin, step for step: nearest-2 cells by
+    * (round-6 cosine desc, cell asc) as in Ann.nearestCells, top-M
+    * out-edges within the touched shards, reverse edges, the re-cap of
+    * the in-link targets' gen-resolved lists at MaxDegree, gen, the
+    * additive fingerprint and the promoted entry. Returns the patched
+    * copy.
+    */
+  private def appendOnDriver(spark: SparkSession, sfDir: String, edgesDir: String, metaDir: String,
+                             c: GraphCopy, nv: Seq[(Long, ArrayData)]): GraphCopy = {
+    val cents = Ann.kmeansLayout(spark, sfDir)._2.map { case (cell, v) => cell -> ArrayData.toArrayData(v) }
+    val nLayers = c.meta.nLayers
+    val newShards = nv.flatMap { case (id, e) =>
+      cents.map { case (cell, v) => (cell, CosineSimilarity.roundedCosine(e, true, v, false)) }
+        .sortBy { case (cell, sim) => (-sim, cell) }.take(2).map { case (cell, _) => (id, e, cell) }
+    }
+    val members = newShards.map(_._3).distinct
+      .flatMap(sh => c.members.getOrElse(sh, Nil).map { case (id, e) => (id, e, sh) }) ++ newShards
+    val memberVec = members.map(m => m._1 -> m._2).toMap
+    val newVec = nv.toMap
+    val gen = c.maxGen + 1
+    val delta = (0 until nLayers).flatMap { layer =>
+      def at(id: Long): Boolean = promoted(id, layer)
+      val mems = members.filter(m => at(m._1)).groupBy(_._3)
+      // new-node out-edges: top-M within the touched shards
+      val newOut = topPerSrc(newShards.filter(n => at(n._1)).flatMap { case (src, ea, sh) =>
+        mems.getOrElse(sh, Nil).collect { case (dst, eb, _) if dst != src =>
+          (src, dst, CosineSimilarity.roundedCosine(ea, true, eb, true), eb) }
+      }, M)
+      // navigability: the in-link targets take the reverse edge and
+      // re-cap at MaxDegree, their current sims recomputed from the
+      // member vector and each row's dst vector
+      val rev = newOut.collect { case (src, dst, sim, _) if !newVec.contains(dst) => (dst, src, sim, newVec(src)) }
+      val old = rev.map(_._1).distinct.flatMap { src =>
+        c.edges(layer).getOrElse(src, Array.emptyLongArray).toSeq.map(dst =>
+          (src, dst, CosineSimilarity.roundedCosine(memberVec(src), true, c.vecs(dst), true), c.vecs(dst)))
+      }
+      (newOut ++ topPerSrc(old ++ rev, MaxDegree)).map { case (src, dst, _, e) => (layer, src, dst, e) }
+    }
+    val replaced = delta.map(r => (r._1, r._2)).distinct
+    Publish.fanOut("hnsw-append", Seq(
+      () => writeRows(spark, DeltaSchema, delta.map { case (l, src, dst, e) =>
+        InternalRow(src, dst, e, gen, l, srcBucket(src)) }, deltaPath(edgesDir), "append", "layer", "src_bucket"),
+      () => writeRows(spark, ReplacedSchema, replaced.map { case (l, src) => InternalRow(l, src, gen) },
+        replacedPath(edgesDir), "append"),
+      () => writeRows(spark, ShardsSchema, newShards.map { case (id, e, sh) => InternalRow(id, e, sh) },
+        shardsPath(edgesDir), "append", "shard")))
+    // incremental meta: additive fp, count, entry re-election — committed
+    // LAST (see the maintenance-verbs comment)
+    val (n, fp) = idsFingerprint(nv.map(_._1))
+    val grown = c.meta.plus(n, fp)
+    val meta = nv.filter(v => promoted(v._1, nLayers - 1)).sortBy(_._1).headOption
+      .filter(_._1 < grown.entry).fold(grown) { case (id, e) => grown.enter(id, e) }
+    commitMeta(spark, metaDir, meta)
+    val superseded = replaced.toSet
+    GraphCopy.of(edgesDir, c.rows.filterNot(r => superseded((r._1, r._2))) ++ delta.iterator,
+      c.members.iterator.flatMap { case (sh, ms) => ms.map { case (id, e) => (sh, id, e) } }.toSeq ++
+        newShards.map { case (id, e, sh) => (sh, id, e) },
+      c.tombs, c.latest ++ replaced.map(_ -> gen), c.edgeRows + delta.length,
+      c.deltaRows + delta.length, meta)
+  }
+
+  /** [[appendToGraph]] as distributed jobs — the scale path. */
+  private def appendDistributed(spark: SparkSession, sfDir: String, edgesDir: String,
+                                metaDir: String, newVecs: DataFrame): Unit = {
     val cents = Ann.kmeansLayout(spark, sfDir)._2
     val old = readMeta(spark, metaDir)
     val nLayers = old.nLayers
-    val newShards = Ann.nearestCells(
-        newVecs.select(col("vec_id"), col("embedding")),
-        Ann.centroidsDf(spark, cents), "vec_id", "embedding", n = 2)
+    val newShards = Ann.nearestCells(newVecs, Ann.centroidsDf(spark, cents), "vec_id", "embedding", n = 2)
       .select(col("vec_id"), col("embedding"), col("cell").as("shard"))
       .localCheckpoint()
     val touched = newShards.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    val members = spark.read.parquet(shardsPath(edgesDir))
+    val members = readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
       .filter(col("shard").isin(touched: _*))
       .unionByName(newShards)
       .localCheckpoint()
@@ -1581,12 +1875,9 @@ object Hnsw {
     // FileIndex planning each); the per-layer filters below still
     // partition-prune the shared frames
     val replacedAll = if (dirExists(spark, replacedPath(edgesDir)))
-      Some(spark.read.parquet(replacedPath(edgesDir))) else None
-    val baseAll0 = spark.read.parquet(edgesDir).withColumn("gen", lit(0L))
-    val allRowsShared =
-      if (dirExists(spark, deltaPath(edgesDir)))
-        baseAll0.unionByName(spark.read.parquet(deltaPath(edgesDir)))
-      else baseAll0
+      Some(readSidecar(spark, replacedPath(edgesDir), ReplacedSchema)) else None
+    val allRowsShared = deltaOf(spark, edgesDir)
+      .foldLeft(spark.read.parquet(edgesDir).withColumn("gen", lit(0L)))(_ unionByName _)
     val gen = replacedAll.map(_.agg(max(col("gen"))).head().getLong(0))
       .getOrElse(0L) + 1L
     def layerDelta(layer: Int): DataFrame = {
@@ -1697,38 +1988,44 @@ object Hnsw {
     * live membership so the very next search still navigates. The meta
     * commits through [[Publish.swap]] (torn-write-safe, rolls back); the
     * sidecar→meta gap is the documented one-batch staleness window.
+    * Within [[DriverGraphMaxRows]] the checks and the re-election run on
+    * the resident copy; over it, as Spark jobs (the scale path).
     */
   def deleteFromGraph(spark: SparkSession, edgesDir: String, metaDir: String,
                       ids: Seq[Long]): Unit = {
-    import spark.implicits._
-    val already: Set[Long] =
+    val copy = verbCopy(spark, edgesDir, metaDir)
+    val already: Set[Long] = copy.map(_.tombs).getOrElse {
       if (dirExists(spark, tombstonesPath(edgesDir)))
-        spark.read.parquet(tombstonesPath(edgesDir))
+        readSidecar(spark, tombstonesPath(edgesDir), TombstoneSchema)
           .collect().map(_.getLong(0)).toSet
       else Set.empty
+    }
     // membership check against the shards sidecar: a non-member id must
     // not subtract from the fp (point lookup, maintenance-batch-sized)
     val candidates = ids.distinct.filterNot(already)
     val members: Set[Long] =
       if (candidates.isEmpty) Set.empty
-      else spark.read.parquet(shardsPath(edgesDir))
-        .filter(col("vec_id").isin(candidates: _*))
-        .select(col("vec_id")).distinct()
-        .collect().map(_.getLong(0)).toSet
+      else copy.map(c => candidates.filter(c.memberVecs.contains).toSet).getOrElse(
+        readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
+          .filter(col("vec_id").isin(candidates: _*))
+          .select(col("vec_id")).distinct()
+          .collect().map(_.getLong(0)).toSet)
     val fresh = candidates.filter(members)
-    if (fresh.nonEmpty) mutating(edgesDir) {
-      fresh.toDF("vec_id").write.mode("append").parquet(tombstonesPath(edgesDir))
-      val old = readMeta(spark, metaDir)
+    if (fresh.nonEmpty) mutating(spark, edgesDir, metaDir) {
+      writeRows(spark, TombstoneSchema, fresh.map(InternalRow(_)), tombstonesPath(edgesDir), "append")
+      val old = copy.map(_.meta).getOrElse(readMeta(spark, metaDir))
       // the SAME engine digest the build's fingerprint used — additive mod
       // 2^61−1, so retiring ids is a subtraction of the batch digest
-      val delFp = graft.streaming.Streaming.fingerprintStream(
-        fresh.toDF("vec_id"), col("vec_id").cast("string")).head().getLong(1)
-      val shrunk = old.plus(-fresh.length, -delFp)
+      val (n, delFp) = idsFingerprint(fresh)
+      val shrunk = old.plus(-n, -delFp)
       // the entry died: re-elect from the live membership now, not at
       // compaction — a beam must start somewhere on the next search
-      commitMeta(spark, metaDir,
-        if (fresh.contains(old.entry)) electEntry(spark, edgesDir, already ++ fresh, shrunk)
-        else shrunk)
+      val meta =
+        if (!fresh.contains(old.entry)) shrunk
+        else copy.fold(electEntry(spark, edgesDir, already ++ fresh, shrunk))(c =>
+          electOnDriver(c.memberVecs -- already -- fresh, edgesDir, shrunk))
+      commitMeta(spark, metaDir, meta)
+      copy.map(_.copy(tombs = already ++ fresh, meta = meta))
     }
   }
 
@@ -1742,7 +2039,7 @@ object Hnsw {
     */
   private def electEntry(spark: SparkSession, edgesDir: String,
                          dead: Set[Long], meta: GraphMeta): GraphMeta = {
-    val pick = spark.read.parquet(shardsPath(edgesDir))
+    val pick = readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
       .filter(if (dead.isEmpty) lit(true) else !col("vec_id").isin(dead.toSeq: _*))
       .orderBy(levelCol(meta.nLayers).desc, col("vec_id").asc)
       .select(col("vec_id"), col("embedding")).head(1)
@@ -1751,33 +2048,80 @@ object Hnsw {
     meta.copy(entry = pick(0).getLong(0), entryEmb = pick(0).getSeq[Float](1))
   }
 
+  /** [[electEntry]] over a driver-held live membership. */
+  private def electOnDriver(live: Map[Long, ArrayData], edgesDir: String, meta: GraphMeta): GraphMeta = {
+    require(live.nonEmpty, s"hnsw: cannot elect an entry — no live nodes remain in $edgesDir")
+    val id = live.keys.minBy(id => (-level(id, meta.nLayers), id))
+    meta.enter(id, live(id))
+  }
+
   /** PHYSICAL repair: fold base + deltas − tombstones into a fresh base
     * (re-partitioned by (layer, src_bucket) like a fresh build), drop
     * tombstoned members from the shards sidecar, re-elect the entry if
     * it was deleted, clear every sidecar. After compaction the graph
-    * reads exactly like a fresh build.
+    * reads exactly like a fresh build. The base and the shards are each
+    * written beside the live directory and swapped in, so a failed write
+    * leaves the served graph as it was. Within [[DriverGraphMaxRows]] the
+    * new base and shards are the resident copy's live rows, written as
+    * local frames; over it, Spark jobs (the scale path).
     */
-  def compactGraph(spark: SparkSession, edgesDir: String, metaDir: String): Unit = mutating(edgesDir) {
+  def compactGraph(spark: SparkSession, edgesDir: String, metaDir: String): Unit =
+    compactWith(spark, edgesDir, metaDir, verbCopy(spark, edgesDir, metaDir))
+
+  private def compactWith(spark: SparkSession, edgesDir: String, metaDir: String,
+                          copy: Option[GraphCopy]): Unit =
+    mutating(spark, edgesDir, metaDir) {
+      copy.map(compactOnDriver(spark, edgesDir, metaDir, _)).orElse {
+        compactDistributed(spark, edgesDir, metaDir)
+        None
+      }
+    }
+
+  /** [[compactGraph]] from the resident copy; returns the patched copy. */
+  private def compactOnDriver(spark: SparkSession, edgesDir: String, metaDir: String,
+                              c: GraphCopy): GraphCopy = {
+    // tombstoned SRCs vanish too (the resolution only subtracts dsts — a
+    // deleted node must stop routing once its rows are rewritten)
+    val live = c.rows.filter { case (_, src, dst, _) => !c.tombs(src) && !c.tombs(dst) }.toSeq
+    val members = c.members.toSeq.flatMap { case (sh, ms) =>
+      ms.collect { case (id, e) if !c.tombs(id) => (sh, id, e) } }
+    publishCompacted(spark, edgesDir)(
+      writeRows(spark, BaseSchema, live.map { case (l, src, dst, e) =>
+        InternalRow(src, dst, e, l, srcBucket(src)) }, _, "overwrite", "layer", "src_bucket"),
+      writeRows(spark, ShardsSchema, members.map { case (sh, id, e) => InternalRow(id, e, sh) },
+        _, "overwrite", "shard"))
+    val meta =
+      if (!c.tombs(c.meta.entry)) c.meta
+      else {
+        val elected = electOnDriver(members.map(m => m._2 -> m._3).toMap, edgesDir, c.meta)
+        commitMeta(spark, metaDir, elected)
+        elected
+      }
+    dropSidecars(spark, edgesDir)
+    GraphCopy.of(edgesDir, live.iterator, members, Set.empty, Map.empty, live.length, 0L, meta)
+  }
+
+  /** [[compactGraph]] as distributed jobs — the scale path. */
+  private def compactDistributed(spark: SparkSession, edgesDir: String, metaDir: String): Unit = {
     GraftFunctions.register(spark)
     val tombed =
       if (dirExists(spark, tombstonesPath(edgesDir)))
-        spark.read.parquet(tombstonesPath(edgesDir)).distinct().localCheckpoint()
+        readSidecar(spark, tombstonesPath(edgesDir), TombstoneSchema).distinct().localCheckpoint()
       else spark.range(0).select(col("id").as("vec_id"))
-    val live = readGraph(spark, edgesDir)
-      // tombstoned SRCs vanish too (the read resolution only subtracts
-      // dsts — a deleted node must stop routing once its rows are
-      // rewritten)
-      .join(broadcast(tombed.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-      .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
-      .localCheckpoint()
-    live.withColumn("src_bucket", srcBucketCol(col("src")))
-      .repartition(col("layer"), col("src_bucket"))
-      .write.mode("overwrite").partitionBy("layer", "src_bucket")
-      .parquet(edgesDir)
-    val shards = spark.read.parquet(shardsPath(edgesDir))
-      .join(broadcast(tombed), Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    shards.write.mode("overwrite").partitionBy("shard").parquet(shardsPath(edgesDir))
+    publishCompacted(spark, edgesDir)(
+      readGraph(spark, edgesDir)
+        // tombstoned SRCs vanish too (the read resolution only subtracts
+        // dsts — a deleted node must stop routing once its rows are
+        // rewritten)
+        .join(broadcast(tombed.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
+        .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
+        .withColumn("src_bucket", srcBucketCol(col("src")))
+        .repartition(col("layer"), col("src_bucket"))
+        .write.mode("overwrite").partitionBy("layer", "src_bucket")
+        .parquet(_),
+      readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
+        .join(broadcast(tombed), Seq("vec_id"), "left_anti")
+        .write.mode("overwrite").partitionBy("shard").parquet(_))
     val old = readMeta(spark, metaDir)
     if (tombed.filter(col("vec_id") === old.entry).count() > 0)
       // shards were already rewritten minus the tombstones above, so the
@@ -1810,19 +2154,19 @@ object Hnsw {
       round(avg(col("deg")), 6).as("avg_deg"))
     val deltaStats =
       if (dirExists(spark, deltaPath(edgesDir)))
-        spark.read.parquet(deltaPath(edgesDir))
+        readSidecar(spark, deltaPath(edgesDir), DeltaSchema)
           .groupBy(col("layer")).agg(count(lit(1)).as("delta_rows"))
       else spark.range(0).select(col("id").cast("int").as("layer"),
         col("id").as("delta_rows"))
     val replacedStats =
       if (dirExists(spark, replacedPath(edgesDir)))
-        spark.read.parquet(replacedPath(edgesDir))
+        readSidecar(spark, replacedPath(edgesDir), ReplacedSchema)
           .groupBy(col("layer")).agg(countDistinct(col("src")).as("replaced_srcs"))
       else spark.range(0).select(col("id").cast("int").as("layer"),
         col("id").as("replaced_srcs"))
     val nTombs =
       if (dirExists(spark, tombstonesPath(edgesDir)))
-        spark.read.parquet(tombstonesPath(edgesDir))
+        readSidecar(spark, tombstonesPath(edgesDir), TombstoneSchema)
           .select(col("vec_id")).distinct().count()
       else 0L
     liveStats
@@ -1914,13 +2258,17 @@ object Hnsw {
     * Returns whether a compaction ran. HnswSpec pins: below-threshold
     * debt leaves the sidecars untouched, above-threshold debt compacts
     * (sidecars cleared, served results preserved), and the call is
-    * idempotent — the post-compaction plan is `serve`.
+    * idempotent — the post-compaction plan is `serve`. Within
+    * [[DriverGraphMaxRows]] the decision is [[GraphCopy.decision]], the
+    * same counts and rounding taken from the resident copy with no Spark
+    * job; over it, the plan's one-row frame (the scale path).
     */
   def maintainGraph(spark: SparkSession, edgesDir: String, metaDir: String): Boolean = {
-    val decision = maintenancePlan(spark, edgesDir)
-      .select(col("decision")).head().getString(0)
-    if (decision == "compact") { compactGraph(spark, edgesDir, metaDir); true }
-    else false
+    val copy = verbCopy(spark, edgesDir, metaDir)
+    val compact = copy.map(_.decision).getOrElse(
+      maintenancePlan(spark, edgesDir).select(col("decision")).head().getString(0)) == "compact"
+    if (compact) compactWith(spark, edgesDir, metaDir, copy)
+    compact
   }
 
   /** The registered-table demo corpus for the transparent graph rewrite

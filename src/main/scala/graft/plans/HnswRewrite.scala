@@ -124,11 +124,27 @@ object HnswGraphRegistry extends PathRegistry {
     val key = (generationOfDir(dir), stamp, cap)
     Option(residentCopies.get(dir)).filter(_._1 == key).map(_._2).getOrElse {
       val loaded = load
-      if (!residentCopies.containsKey(dir) && residentCopies.size >= MaxResidentGraphs)
-        residentCopies.clear()
-      residentCopies.put(dir, (key, loaded))
+      putCopy(dir, key, loaded)
       loaded
     }
+  }
+
+  /** Install a maintenance verb's patched copy of `edgesDir` (None: the
+    * verb grew the graph past `cap`) under the current generation — read
+    * after the verb's [[invalidate]] — and the stamp re-taken after its
+    * writes, so the next search does not reload what the verb holds.
+    */
+  def install(edgesDir: String, stamp: String, cap: Long,
+              copy: Option[graft.operators.Hnsw.GraphCopy]): Unit = {
+    val dir = canon(edgesDir)
+    putCopy(dir, (generationOfDir(dir), stamp, cap), copy)
+  }
+
+  private def putCopy(dir: String, key: (Long, String, Long),
+                      copy: Option[graft.operators.Hnsw.GraphCopy]): Unit = {
+    if (!residentCopies.containsKey(dir) && residentCopies.size >= MaxResidentGraphs)
+      residentCopies.clear()
+    residentCopies.put(dir, (key, copy))
   }
 
   override def clear(): Unit = { super.clear(); walkMemo.clear(); residentCopies.clear() }

@@ -14,8 +14,9 @@ import graft.streaming.Streaming
   * (`Streaming.indexServeOne`, the reference's `POST /api/search`) on a
   * registered graph that carries delta, replaced and tombstone sidecars
   * (the maintenance demo clone — the state a churning index serves from).
-  * A warm serve walks the driver-resident copy of the graph; the first
-  * serve after a mutation pays the copy's load. The budgets may only
+  * A warm serve walks the driver-resident copy of the graph; the
+  * maintenance verbs patch that copy, so only the first serve after a
+  * write by any other route pays the copy's load. The budgets may only
   * tighten.
   */
 class ServeJobBudgetSpec extends AnyFunSuite {
@@ -29,21 +30,30 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     */
   val ServeJobBudget = 0
 
-  /** Jobs of the first serve after a mutation, which loads the resident
-    * copy: the graph open (schema reads and sidecar probes — 8 on the
-    * maintained graph), the capped collect of the live adjacency (3) and
-    * the meta read (1).
+  /** Jobs of the first serve after a mutation outside the maintenance
+    * verbs, which loads the resident copy: 12 while the load opened the
+    * graph with schema-inference reads and `limit` probes of each sidecar
+    * (8 on the maintained graph) before a capped collect of the live
+    * adjacency (3) and the meta read (1); 6 once the sidecars are read
+    * with declared schemas and sized from their Parquet footers — the
+    * base's schema read, then one collect each of the replaced and
+    * tombstone sidecars, the resolved adjacency, the shards and the meta.
     */
-  val LoadJobBudget = 12
+  val LoadJobBudget = 6
 
   /** Jobs of one append (2 vectors) + delete (2 ids, one the entry) +
     * maintainGraph round on a private clone of this fixture's graph: 71
     * counted before the writers shared one publish protocol, when the
     * append's pooled jobs ran on the global execution context and most
     * of them did not carry the caller's job group; 86 after, with every
-    * pooled job counted (85 jobs in all, against 90 before).
+    * pooled job counted (85 jobs in all, against 90 before); 11 once a
+    * graph within `Hnsw.DriverGraphMaxRows` is maintained on the driver:
+    * the resident copy's load (4 on this sidecar-free clone), the append
+    * batch's collect (1), the append's three sidecar writes and meta
+    * commit (4), the delete's tombstone write and meta commit (2), and no
+    * job for the maintain decision.
     */
-  val UpdateJobBudget = 86
+  val UpdateJobBudget = 11
 
   /** Jobs started by `body`, counted under a unique job group (inherited
     * by staging and broadcast jobs), so other threads' jobs never count.
@@ -105,13 +115,16 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     try {
       graft.plans.HnswGraphRegistry.register(corpus, "vec_id", "embedding", ce, cm)
       val top = Streaming.indexServeOne(spark, corpus, q, k = 5).collect()
-      Hnsw.deleteFromGraph(spark, ce, cm, Seq(top.head.getLong(0)))
+      // a tombstone written outside the maintenance verbs (which patch the
+      // copy instead of dropping it): the next serve must reload
+      spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(top.head.getLong(0))),
+        Hnsw.TombstoneSchema).write.mode("append").parquet(Hnsw.tombstonesPath(ce))
       var rows = Array.empty[org.apache.spark.sql.Row]
       val load = jobsOf {
         rows = Streaming.indexServeOne(spark, corpus, q, k = 5).collect()
       }
       val warm = jobsOf(Streaming.indexServeOne(spark, corpus, q, k = 5).collect())
-      info(s"first serve after a delete: $load Spark jobs; the next: $warm")
+      info(s"first serve after a tombstone write: $load Spark jobs; the next: $warm")
       assert(rows.length === 5 && !rows.map(_.getLong(0)).contains(top.head.getLong(0)))
       assert(load <= LoadJobBudget,
         s"the first serve after a mutation ran $load jobs, over its budget of $LoadJobBudget")
@@ -147,5 +160,75 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     assert(spark.read.parquet(cm).head().getAs[Long]("entry") !== entry)
     assert(jobs <= UpdateJobBudget,
       s"the update round ran $jobs jobs, over its budget of $UpdateJobBudget")
+  }
+
+  /** A private clone of this fixture's base graph (edges, shards, meta). */
+  private def baseClone(suffix: String): (String, String) = {
+    Hnsw.layout(spark, sf)
+    val base = Hnsw.edgesPath(sf)
+    val (ce, cm) = (base + suffix, base + suffix + "-meta")
+    val fs = new org.apache.hadoop.fs.Path(ce).getFileSystem(spark.sessionState.newHadoopConf())
+    Seq(Hnsw.deltaPath(ce), Hnsw.replacedPath(ce), Hnsw.tombstonesPath(ce))
+      .foreach(d => fs.delete(new org.apache.hadoop.fs.Path(d), true))
+    Seq(base -> ce, Hnsw.shardsPath(base) -> Hnsw.shardsPath(ce), Hnsw.metaPath(sf) -> cm)
+      .foreach { case (from, to) => Hnsw.fsCopy(spark, from, to) }
+    (ce, cm)
+  }
+
+  /** Run `body` with the fixture's rewrite corpus registered to the graph
+    * (ce, cm), handing it a top-5 serve of corpus row 1.
+    */
+  private def serving[T](ce: String, cm: String)(body: (() => Seq[Seq[Any]]) => T): T = {
+    val corpus = Hnsw.rewriteCorpusLayout(spark, sf)
+    val q = Tables.embeddings(spark, sf).filter(col("vec_id") === 1)
+      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+    try {
+      graft.plans.HnswGraphRegistry.register(corpus, "vec_id", "embedding", ce, cm)
+      body(() => Streaming.indexServeOne(spark, corpus, q, k = 5).collect().map(_.toSeq).toSeq)
+    } finally graft.plans.HnswGraphRegistry.clear()
+  }
+
+  test("the first serve after an append, a delete and a compacting maintain runs no Spark job: the verbs patch the resident copy") {
+    val (ce, cm) = baseClone("-patched-serve-test")
+    serving(ce, cm) { serve =>
+      serve()
+      val fresh = Tables.embeddings(spark, sf).filter(col("vec_id").isin(3L, 7L))
+        .select((col("vec_id") + 920000L).as("vec_id"),
+          transform(col("embedding"), x => -x).as("embedding"))
+        .localCheckpoint()
+      val entry = spark.read.parquet(cm).head().getAs[Long]("entry")
+      // 12 of the 500 nodes: past the 2 % tombstone threshold
+      val doomed = (entry +: (1L to 12L)).distinct.take(12)
+      Hnsw.appendToGraph(spark, sf, ce, cm, fresh)
+      Hnsw.deleteFromGraph(spark, ce, cm, doomed)
+      assert(Hnsw.maintainGraph(spark, ce, cm), "the maintain tick did not compact")
+      var rows = Seq.empty[Seq[Any]]
+      val jobs = jobsOf { rows = serve() }
+      info(s"first serve after append + delete + compacting maintain: $jobs Spark jobs")
+      assert(jobs <= ServeJobBudget,
+        s"the first serve after the verbs ran $jobs jobs, over its budget of $ServeJobBudget")
+      assert(rows.length === 5 && rows.map(_.head).intersect(doomed).isEmpty)
+      // a fresh load of the same graph serves the same rows
+      graft.plans.HnswGraphRegistry.invalidate(ce)
+      assert(serve() === rows, "the patched copy serves other rows than a fresh load")
+    }
+  }
+
+  test("a verb that throws after one of its writes leaves no patched copy, and the next serve equals a fresh load") {
+    val (ce, cm) = baseClone("-failed-verb-test")
+    serving(ce, cm) { serve =>
+      val victim = serve().head.head.asInstanceOf[Long]
+      // the tombstone append lands; the meta commit after it fails
+      intercept[Exception](FailingCommitProtocol.failingWritesUnder(spark, cm)(
+        Hnsw.deleteFromGraph(spark, ce, cm, Seq(victim))))
+      assert(spark.read.parquet(Hnsw.tombstonesPath(ce)).collect().map(_.getLong(0)).contains(victim),
+        "the delete failed before its tombstone append")
+      assert(!graft.plans.HnswGraphRegistry.residentCopies.containsKey(ce),
+        "a failed verb left a resident copy")
+      val next = serve()
+      graft.plans.HnswGraphRegistry.invalidate(ce)
+      assert(serve() === next, "the serve after a failed verb ≠ a fresh load")
+      assert(!next.map(_.head).contains(victim), "the tombstoned id is served")
+    }
   }
 }
