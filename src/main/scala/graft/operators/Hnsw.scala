@@ -50,12 +50,17 @@ import graft.expressions.{CosineSimilarity, GraftFunctions}
   * convergence loop) keeps the search a bounded, replayable dataflow: the
   * DuckDB oracle unrolls the SAME hops as chained CTEs over the dumped
   * edges, so a hash match proves the whole search path, not just the
-  * final set.
+  * final set. Every face is ONE walk: top-k cuts its beam, the filtered
+  * face ranks its visited pool, and range search runs the walk with one
+  * more base-layer phase — [[RangeHops]] hops at the wider
+  * [[RangeBeamCap]], seeded from the visited pool — and keeps the pool's
+  * sim ≥ t rows.
   *
   * SERVING: a graph of at most [[DriverGraphMaxRows]] adjacency rows
   * (base + delta) is walked from a driver-resident [[GraphCopy]], loaded once per
   * on-disk state (the registry keys it by generation and a file-listing
-  * stamp) through the same merge-on-read resolution compaction reads. The
+  * stamp) through the same [[openGraph]] and merge-on-read resolution
+  * ([[morResolve]]) every other reader uses. The
   * entry hop, every beam hop and the top-k cut run in memory with the
   * shared cosine kernel, so a warm API-sized search starts no Spark job —
   * the reuse-across-a-session posture of incremental top-k search (EDBT
@@ -527,27 +532,83 @@ object Hnsw {
     */
   @volatile private[graft] var lastWalkFiles: Seq[(Long, Int)] = Nil
 
-  /** Resolved handles on a graph directory's sidecar state, loaded ONCE
-    * per walk (round-9 advisor: resolving them per hop re-read and
-    * re-broadcast the sidecars 6×). Typically maintenance-batch-sized,
-    * the sidecars collect to DRIVER VALUES and apply as literal FILTER
-    * expressions — a broadcast (even of a LocalRelation) materializes
-    * as its own 1-task job per hop under the scheduler, where a literal
-    * predicate rides the scan's one map-only stage for free; a sidecar
-    * that outgrew the batch class keeps the broadcast-join resolution
-    * (see [[SidecarState]]/[[MorLiteralMaxRows]]).
+  /** A graph directory opened for reading — THE place every HNSW reader
+    * (the walk, the resident copy's load, the scale-path verbs, stats and
+    * the maintenance plan) gets what it resolves, each part on first use:
+    *  - row counts from Parquet footers (no Spark job): `edgeRows`, base +
+    *    delta, and the delta's rows per layer;
+    *  - `schema`, the edge artifact's declared read schema from one data
+    *    file's footer: src, dst and the `payload` (`dst_emb`, or the PQ
+    *    layout's `dst_codes`), then the (layer, src_bucket) partition
+    *    columns — so no read of the graph infers a schema;
+    *  - `base` and `delta`, each read ONCE: a fresh read.parquet per hop
+    *    rebuilt the partitioned-dir FileIndex every hop (nLayers × 32
+    *    directories listed up to 12 times per walk — measured ~0.2 s/hop of
+    *    pure planning at sf0.1); filtering one DataFrame still
+    *    partition-prunes per action, so the per-hop numFiles pins hold;
+    *  - the replaced and tombstone sidecars' [[SidecarState]]s (round-9
+    *    advisor: resolving them per hop re-read and re-broadcast them 6×).
+    *    A sidecar of at most `literalMax` footer rows collects raw in the
+    *    one job that reads it and is shaped on the driver.
     */
-  private case class GraphRefs(base: DataFrame, delta: Option[DataFrame],
-                               latest: Option[SidecarState[Map[(Int, Long), Long]]],
-                               tombs: Option[SidecarState[Seq[Long]]])
+  private final class GraphRefs(spark: SparkSession, dir: String, literalMax: Long) {
+    lazy val deltaByLayer: Map[Int, Long] = (0 until MaxLayersStatic)
+      .map(l => l -> footerRows(spark, s"${deltaPath(dir)}/layer=$l")).toMap
+    lazy val deltaRows: Long = deltaByLayer.valuesIterator.sum
+    lazy val edgeRows: Long = footerRows(spark, dir) + deltaRows
+    lazy val schema: StructType = dataFiles(spark, dir).nextOption().fold(BaseSchema)(f => StructType(
+      ManifestIO.sparkSchema(spark.sparkContext.hadoopConfiguration, f).fields ++ BaseSchema.takeRight(2)))
+    lazy val payload: StructField = schema.find(f => f.name == "dst_emb" || f.name == "dst_codes").get
+    lazy val base: DataFrame = readSidecar(spark, dir, schema)
+    lazy val delta: Option[DataFrame] =
+      Some(deltaPath(dir)).filter(dirExists(spark, _)).map(readSidecar(spark, _, DeltaSchema))
+    /** base (gen 0) ∪ delta — the rows [[morResolve]] resolves. */
+    def all: DataFrame = delta.foldLeft(base.withColumn("gen", lit(0L)))(_ unionByName _)
+    lazy val latest: Option[SidecarState[Map[(Int, Long), Long]]] = state(replacedPath(dir), ReplacedSchema,
+      _.groupBy(col("layer"), col("src")).agg(max(col("gen")).as("__latest")),
+      _.groupMapReduce(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))(math.max))
+    lazy val tombs: Option[SidecarState[Seq[Long]]] = state(tombstonesPath(dir), TombstoneSchema,
+      _.select(col("vec_id")).distinct(), _.map(_.getLong(0)).distinct.sorted.toSeq)
+
+    /** The newest gen an append committed (0 for none). */
+    def maxGen: Long = latest.fold(0L) {
+      case SidecarState(Some(l), _) => l.valuesIterator.foldLeft(0L)(math.max)
+      case SidecarState(_, f) => f.get.agg(max(col("__latest"))).head().getLong(0)
+    }
+
+    /** Distinct tombstoned ids. */
+    def tombCount: Long = tombs.fold(0L) { case SidecarState(t, f) => t.fold(f.get.count())(_.size.toLong) }
+
+    /** The ids among `ids` the tombstone sidecar names: a literal lookup,
+      * or a point lookup in the pinned frame.
+      */
+    def dead(ids: Seq[Long]): Set[Long] = tombs match {
+      case Some(SidecarState(Some(t), _)) => ids.filter(t.contains).toSet
+      case Some(SidecarState(_, Some(f))) if ids.nonEmpty =>
+        f.filter(col("vec_id").isin(ids: _*)).collect().map(_.getLong(0)).toSet
+      case _ => Set.empty
+    }
+
+    private def state[T](sidecar: String, schema: StructType, shape: DataFrame => DataFrame,
+                         toLit: Array[Row] => T): Option[SidecarState[T]] =
+      if (!dirExists(spark, sidecar)) None
+      else {
+        val raw = readSidecar(spark, sidecar, schema)
+        if (footerRows(spark, sidecar) <= literalMax) Some(SidecarState(Some(toLit(raw.collect())), None))
+        else Some(SidecarState(None, Some(shape(raw).localCheckpoint())))
+      }
+  }
 
   /** One sidecar's resolution state: collected driver VALUES when the
-    * sidecar is maintenance-batch-sized (literal predicates — zero jobs
-    * per hop), or the executor-pinned frame above [[MorLiteralMaxRows]]
-    * (broadcast-join resolution — one build job per hop, but no driver
-    * copy of a sidecar that outgrew the batch class; the maintenance
-    * policy bounds debt as a RATIO of the graph, so at 100 TB the
-    * absolute sidecar size can be large long before the policy trips).
+    * sidecar is maintenance-batch-sized, applied as literal FILTER
+    * expressions — a broadcast (even of a LocalRelation) materializes as
+    * its own 1-task job per hop under the scheduler, where a literal
+    * predicate rides the scan's one map-only stage for free — or the
+    * executor-pinned frame above [[MorLiteralMaxRows]] (broadcast-join
+    * resolution — one build job per hop, but no driver copy of a sidecar
+    * that outgrew the batch class; the maintenance policy bounds debt as a
+    * RATIO of the graph, so at 100 TB the absolute sidecar size can be
+    * large long before the policy trips).
     */
   private case class SidecarState[T](lit: Option[T], frame: Option[DataFrame])
 
@@ -556,57 +617,37 @@ object Hnsw {
     */
   @volatile var MorLiteralMaxRows = 1L << 17 // var: HnswSpec forces the join fallback to pin literal ≡ join
 
-  private def openGraph(spark: SparkSession, edgesDir: String): GraphRefs = {
-    // each sidecar is read with its declared schema and sized from its
-    // Parquet footers, so opening a graph starts no schema-inference or
-    // probing job: a batch-sized sidecar costs the one job that collects
-    // it, raw, and shapes it on the driver
-    def state[T](dir: String, schema: StructType, shape: DataFrame => DataFrame,
-                 toLit: Array[Row] => T): Option[SidecarState[T]] =
-      if (!dirExists(spark, dir)) None
-      else {
-        val raw = readSidecar(spark, dir, schema)
-        if (footerRows(spark, dir) <= MorLiteralMaxRows) Some(SidecarState(Some(toLit(raw.collect())), None))
-        else Some(SidecarState(None, Some(shape(raw).localCheckpoint())))
-      }
-    val latest = state[Map[(Int, Long), Long]](replacedPath(edgesDir), ReplacedSchema,
-      _.groupBy(col("layer"), col("src")).agg(max(col("gen")).as("__latest")),
-      _.groupMapReduce(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))(math.max))
-    val tombs = state[Seq[Long]](tombstonesPath(edgesDir), TombstoneSchema,
-      _.select(col("vec_id")).distinct(),
-      _.map(_.getLong(0)).distinct.sorted.toSeq)
-    // open the edge artifacts ONCE per walk: a fresh read.parquet per hop
-    // rebuilds the partitioned-dir FileIndex every hop (nLayers × 32
-    // directories listed up to 12 times per walk — measured ~0.2 s/hop of
-    // pure planning at sf0.1); filtering ONE DataFrame still partition-
-    // prunes per action, so the per-hop numFiles pins are unchanged
-    GraphRefs(spark.read.parquet(edgesDir), deltaOf(spark, edgesDir), latest, tombs)
-  }
-
-  /** A graph's delta sidecar, if it has one. */
-  private def deltaOf(spark: SparkSession, edgesDir: String): Option[DataFrame] =
-    if (dirExists(spark, deltaPath(edgesDir))) Some(readSidecar(spark, deltaPath(edgesDir), DeltaSchema))
-    else None
+  /** Open a graph directory (see [[GraphRefs]]); nothing is read until a
+    * reader asks for it.
+    */
+  private def openGraph(spark: SparkSession, edgesDir: String,
+                        literalMax: Long = MorLiteralMaxRows): GraphRefs =
+    new GraphRefs(spark, edgesDir, literalMax)
 
   /** THE merge-on-read resolution — the one in-engine definition (the
     * parity-critical-formula rule; the DuckDB twin is
     * PipelineQueries.hnswMaintEdgesSql): base ∪ deltas with
     * last-writer-wins per (layer, src) — the `replaced` sidecar names
-    * the winning gen, base rows carry gen 0 — minus edges into
-    * tombstoned nodes. Batch-sized sidecars apply as LITERAL predicates
-    * (the latest-gen lookup a "layer:src" map-literal coalesce,
+    * the winning gen, base rows carry gen 0; with no `replaced` sidecar
+    * every gen stays — minus edges into tombstoned nodes (`tombs` None
+    * keeps them). Batch-sized sidecars apply as LITERAL predicates (the
+    * latest-gen lookup a "layer:src" map-literal coalesce,
     * value-identical to the left-join + coalesce-0 it replaces; the
     * tombstone subtraction a NOT-isin, value-identical to the
     * anti-join); over-cap sidecars keep the broadcast-join forms (see
-    * [[SidecarState]]). Shared by the serving hops ([[hopEdges]], over
-    * bucket-pruned scans) and the whole-graph face ([[readGraph]] —
-    * compaction, stats), so the read paths can never silently diverge.
-    * `all` must carry a `gen` column.
+    * [[SidecarState]]). `all` must carry a `gen` column, and the result
+    * may carry helper columns: callers select theirs. The callers, so the
+    * read paths can never silently diverge: the serving hops
+    * ([[hopEdges]], over bucket-pruned scans), the whole-graph face
+    * ([[readGraphFrom]] — compaction, stats, the maintenance plan), the
+    * resident copy's load ([[loadCopy]], tombstones kept) and the scale
+    * path's append ([[appendDistributed]], its re-cap lists, tombstones
+    * kept).
     */
   private def morResolve(all: DataFrame,
                          latest: Option[SidecarState[Map[(Int, Long), Long]]],
-                         tombs: Option[SidecarState[Seq[Long]]]): DataFrame = {
-    val resolved = latest match {
+                         tombs: Option[SidecarState[Seq[Long]]]): DataFrame =
+    minusTombs(latest match {
       case Some(SidecarState(Some(l), _)) if l.nonEmpty =>
         val m: Map[String, Long] = l.map { case ((lay, s2), g) => s"$lay:$s2" -> g }
         all.filter(col("gen") === coalesce(
@@ -615,39 +656,33 @@ object Hnsw {
       case Some(SidecarState(_, Some(f))) =>
         all.join(broadcast(f), Seq("layer", "src"), "left")
           .filter(col("gen") === coalesce(col("__latest"), lit(0L)))
-          .drop("__latest")
       case _ => all
-    }
-    tombs match {
-      case Some(SidecarState(Some(t), _)) if t.nonEmpty =>
-        resolved.filter(!col("dst").isInCollection(t))
-      case Some(SidecarState(_, Some(f))) =>
-        resolved.join(broadcast(f.select(col("vec_id").as("dst"))),
-          Seq("dst"), "left_anti")
-      case _ => resolved
-    }
+    }, "dst", tombs)
+
+  /** `df` without the rows whose `key` the tombstone state names: a
+    * NOT-isin literal, or an anti-join with the pinned frame.
+    */
+  private def minusTombs(df: DataFrame, key: String,
+                         tombs: Option[SidecarState[Seq[Long]]]): DataFrame = tombs match {
+    case Some(SidecarState(Some(t), _)) if t.nonEmpty => df.filter(!col(key).isInCollection(t))
+    case Some(SidecarState(_, Some(f))) =>
+      df.join(broadcast(f.select(col("vec_id").as(key))), Seq(key), "left_anti")
+    case _ => df
   }
 
   /** ONE hop's live adjacency, physically pruned: literal (layer,
     * src_bucket) partition filters derived from the beam's src ids (plus
-    * a src IN rowgroup filter), applied to the base AND delta scans
-    * BEFORE the merge-on-read resolution — so per-hop I/O is
+    * a src IN rowgroup filter), pushed into the base AND delta scans
+    * below the merge-on-read resolution — so per-hop I/O is
     * |beam buckets| files, never the artifact (the round-9 `weak`).
     * Resolution itself is [[morResolve]] over the walk-pinned sidecars.
     * `embCol` names the payload column (dst_emb / dst_codes).
     */
-  private def hopEdges(spark: SparkSession, g: GraphRefs, layer: Int,
-                       srcs: Seq[Long], embCol: String): DataFrame = {
+  private def hopEdges(g: GraphRefs, layer: Int, srcs: Seq[Long], embCol: String): DataFrame = {
     val buckets = srcs.map(srcBucket).distinct.sorted
-    def pruned(df: DataFrame): DataFrame =
-      df.filter(col("layer") === layer &&
-        col("src_bucket").isin(buckets: _*) && col("src").isin(srcs: _*))
-    val base = pruned(g.base).withColumn("gen", lit(0L))
-    val all = g.delta match {
-      case Some(d) => base.unionByName(pruned(d))
-      case None    => base
-    }
-    morResolve(all, g.latest, g.tombs).select(col("src"), col("dst"), col(embCol))
+    morResolve(g.all.filter(col("layer") === layer &&
+      col("src_bucket").isin(buckets: _*) && col("src").isin(srcs: _*)), g.latest, g.tombs)
+      .select(col("src"), col("dst"), col(embCol))
   }
 
   /** How a walk scores a candidate: the payload column its edge rows
@@ -670,8 +705,7 @@ object Hnsw {
     * rides the matched edge rows, so the join output is already scorable
     * (≤ width·MaxDegree rows per qid, corpus untouched). Beam members keep
     * their already-computed sims (the deterministic score of the same
-    * values — re-scoring would be a no-op). ONE definition shared by the
-    * walk's bulk hops and the range frontier's, so they cannot desync.
+    * values — re-scoring would be a no-op).
     */
   private def hopNbrs(edges: DataFrame, beam: DataFrame, qs: DataFrame,
                       sc: Scorer): DataFrame = {
@@ -690,18 +724,12 @@ object Hnsw {
     * the beam from meta instead of an edge.
     */
   private def liveEntry(g: GraphRefs, entry: Seq[Triple]): Seq[Triple] = {
-    val ids = entry.map(_._2).distinct
-    val dead: Set[Long] = g.tombs match {
-      case Some(SidecarState(Some(t), _)) => ids.filter(t.contains).toSet
-      case Some(SidecarState(_, Some(f))) if ids.nonEmpty =>
-        f.filter(col("vec_id").isin(ids: _*)).collect().map(_.getLong(0)).toSet
-      case _ => Set.empty
-    }
+    val dead = g.dead(entry.map(_._2).distinct)
     entry.filterNot(t => dead(t._2))
   }
 
-  /** The one small/bulk rule: a walk loop whose beams would hold more
-    * than this many rows (panel rows × the loop's beam width) keeps them
+  /** The one small/bulk rule: a walk whose beams would hold more than
+    * this many rows (panel rows × its widest phase's beam width) keeps them
     * on executors — localCheckpointed frames, with only the src IDS (8
     * bytes each, required regardless: they ARE the next hop's literal
     * bucket filter) on the driver (round-10 advisor: the driver fold's
@@ -809,7 +837,7 @@ object Hnsw {
       g.sortBy(t => (-t._3, t._2)).take(n).zipWithIndex.map { case (t, i) => (t, i + 1) }
     }
 
-  /** One small-path hop — the walk's and the range frontier's: the
+  /** One small-path hop of a graph that is not resident: the
     * bucket-pruned edge probe with EVERYTHING in one map-only stage — no
     * joins, no broadcasts, no exchanges. The src→qids fan-out and the
     * per-qid scoring both ride as LITERAL map expressions (the beam and
@@ -824,7 +852,7 @@ object Hnsw {
     * cosine vs PQ ADC codes); `simOf` sees rows carrying (qid, src, dst,
     * embCol).
     */
-  private def probeHop(spark: SparkSession, g: GraphRefs, layer: Int,
+  private def probeHop(g: GraphRefs, layer: Int,
                        beam: Seq[Triple], embCol: String,
                        simOf: Column => Column,
                        scans: scala.collection.mutable.Builder[Seq[String], Seq[Seq[String]]],
@@ -832,7 +860,7 @@ object Hnsw {
     val srcs = beam.map(_._2).distinct.sorted
     val srcQids: Map[Long, Seq[Long]] =
       beam.groupBy(_._2).map { case (src, ts) => src -> ts.map(_._1).sorted }
-    val nbrsF = hopEdges(spark, g, layer, srcs, embCol)
+    val nbrsF = hopEdges(g, layer, srcs, embCol)
       .withColumn("qid", explode(element_at(typedLit(srcQids), col("src"))))
       .withColumn("sim", simOf(col(embCol)))
       .select(col("qid"), col("dst").as("vec_id"), col("sim"))
@@ -873,12 +901,16 @@ object Hnsw {
     }
   }
 
-  /** Per-layer hop caps, top layer first: [[HopsPerLayer]] per express
-    * layer, `l0` on the base. At `l0` = [[HopsL0]] these are the phases
-    * of the fixed [[Schedule]]; the walk skips layers a graph lacks.
+  /** One phase of a walk: up to `cap` hops on `layer` at beam `width`. */
+  private case class Phase(layer: Int, cap: Int, width: Int)
+
+  /** Per-layer phases at beam `width`, top layer first: [[HopsPerLayer]]
+    * hops per express layer, `l0` on the base. At `l0` = [[HopsL0]] these
+    * are the phases of the fixed [[Schedule]]; the walk skips layers a
+    * graph lacks.
     */
-  private def capsTo(l0: Int): Seq[(Int, Int)] =
-    ((MaxLayersStatic - 1) to 1 by -1).map(_ -> HopsPerLayer) :+ (0 -> l0)
+  private def capsTo(l0: Int, width: Int): Seq[Phase] =
+    ((MaxLayersStatic - 1) to 1 by -1).map(Phase(_, HopsPerLayer, width)) :+ Phase(0, l0, width)
 
   /** Run `hop` up to `cap` times, stopping after the first hop that
     * reports a fixed point; returns the hops run.
@@ -995,37 +1027,34 @@ object Hnsw {
 
   private def floatVec(v: Seq[Float]): ArrayData = ArrayData.toArrayData(v.toArray)
 
-  /** Load a graph's [[GraphCopy]]: the base ∪ delta rows resolved by
-    * [[morResolve]] (latest gen, tombstones kept), then the replaced,
-    * tombstone and shards sidecars raw and the meta — one job each, plus
-    * the base's schema read. None, with no collect, when the footers
-    * count more than [[DriverGraphMaxRows]] adjacency rows, when the
-    * payload is not `array<float>`, or when no meta is committed (the
-    * scale path then reports the missing meta where it reads it).
+  /** Load a graph's [[GraphCopy]]: [[openGraph]] + [[morResolve]] (latest
+    * gen, tombstones kept) over base ∪ delta, the replaced and tombstone
+    * sidecars as the open's literals, then the shards sidecar and the meta
+    * — one job each. None, with no collect, when the footers count more
+    * than [[DriverGraphMaxRows]] adjacency rows, when the payload is not
+    * `array<float>` `dst_emb` (read from a footer), or when no meta is
+    * committed (the scale path then reports the missing meta where it
+    * reads it).
     */
   private[graft] def loadCopy(spark: SparkSession, edgesDir: String, metaDir: String): Option[GraphCopy] = {
     import spark.implicits._
-    val deltaRows = footerRows(spark, deltaPath(edgesDir))
-    val edgeRows = footerRows(spark, edgesDir) + deltaRows
-    if (edgeRows > DriverGraphMaxRows || !dirExists(spark, metaDir)) return None
-    val base = spark.read.parquet(edgesDir)
-    if (!base.schema.find(_.name == "dst_emb").exists(f => isFloatArray(f.dataType))) return None
-    def raw(dir: String, schema: StructType): Array[Row] =
-      if (dirExists(spark, dir)) readSidecar(spark, dir, schema).collect() else Array.empty
-    val latest = raw(replacedPath(edgesDir), ReplacedSchema)
-      .groupMapReduce(r => (r.getInt(0), r.getLong(1)))(_.getLong(2))(math.max)
-    val all = deltaOf(spark, edgesDir).foldLeft(base.withColumn("gen", lit(0L)))(_ unionByName _)
-    val resolved = morResolve(all, Some(SidecarState(Some(latest), None)), None)
+    // the copy holds its sidecars as driver values whatever their size: a
+    // graph within the cap is driver-sized
+    val g = openGraph(spark, edgesDir, literalMax = Long.MaxValue)
+    if (g.edgeRows > DriverGraphMaxRows || !dirExists(spark, metaDir) ||
+        g.payload.name != "dst_emb" || !isFloatArray(g.payload.dataType)) return None
+    val resolved = morResolve(g.all, g.latest, None)
       .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
-    val metaF = spark.read.schema(MetaSchema).parquet(metaDir)
+    val metaF = readSidecar(spark, metaDir, MetaSchema)
     if (collectWalkStats) lastLoadScans = leaves(resolved) ++ leaves(metaF)
     val rows = resolved.as[(Int, Long, Long, Array[Float])].collect()
-    val members = raw(shardsPath(edgesDir), ShardsSchema)
+    val members = Some(shardsPath(edgesDir)).filter(dirExists(spark, _))
+      .fold(Array.empty[Row])(readSidecar(spark, _, ShardsSchema).collect())
       .map(r => (r.getInt(2), r.getLong(0), floatVec(r.getSeq[Float](1))))
     Some(GraphCopy.of(edgesDir,
       rows.iterator.map { case (l, s, d, e) => (l, s, d, ArrayData.toArrayData(e)) },
-      members, raw(tombstonesPath(edgesDir), TombstoneSchema).map(_.getLong(0)).toSet,
-      latest, edgeRows, deltaRows, metaOf(metaF.head())))
+      members, g.tombs.flatMap(_.lit).getOrElse(Nil).toSet, g.latest.flatMap(_.lit).getOrElse(Map.empty),
+      g.edgeRows, g.deltaRows, metaOf(metaF.head())))
   }
 
   /** Freshness stamp of a graph's on-disk state, read from the file
@@ -1079,59 +1108,55 @@ object Hnsw {
   @volatile private[graft] var lastLoadScans: Seq[String] = Nil
 
   /** One walk's outcome: the final beam, the visited pool (every scored
-    * candidate, distinct), the realized hops per layer (index = layer),
-    * and what the walk opened — the graph (opened on first use), the
-    * pinned panel, one qid per panel row and its small-path hop (a
-    * [[probeHop]] bound to the graph and the literal scorer, or the
-    * resident copy's in-memory twin) — so a face that keeps walking (the
-    * range frontier) re-opens and re-reads nothing.
+    * candidate, distinct) and the realized hops per layer (index = layer).
     */
-  private case class Walk(beam: DataFrame, visited: DataFrame, hops: Seq[Long],
-                          g: () => GraphRefs, qs: DataFrame, panel: Seq[Long],
-                          probe: (Int, Seq[Triple]) => Seq[Triple])
+  private case class Walk(beam: DataFrame, visited: DataFrame, hops: Seq[Long])
 
   /** THE beam walk behind every search face — HNSW's greedy layer walk
-    * (Malkov & Yashunin, arXiv:1603.09320) under per-layer hop caps.
+    * (Malkov & Yashunin, arXiv:1603.09320) under per-phase hop caps.
     * Hop 0 scores the meta's entry point from its meta-carried payload
     * (no corpus lookup), one row per panel row, behind [[liveEntry]].
-    * Then, for each (layer, cap) of `caps` the graph has, top layer
-    * first, each hop is "candidates := beam ∪ scored neighbors(beam);
-    * beam := per-qid top-`width` by (sim desc, id asc)" until the cap or
-    * a FIXED POINT: once a hop leaves beam membership unchanged, every
-    * further hop on that layer is a provably identical no-op (the hop is
-    * a deterministic function of beam membership and layer, and the
-    * fixed-point hop already pooled its candidates), so the walk stops
-    * the layer — the early termination of progressive top-k search. The
-    * oracle's static unroll replays skipped hops as pass-through
-    * re-ranks, so every hash-checked ann_* query pins the skip's
-    * soundness.
+    * Then, for each [[Phase]] on a layer the graph has, in order, each hop
+    * is "candidates := beam ∪ scored neighbors(beam); beam := per-qid
+    * top-`width` by (sim desc, id asc)" until the cap or a FIXED POINT:
+    * once a hop leaves beam membership unchanged, every further hop of the
+    * phase is a provably identical no-op (the hop is a deterministic
+    * function of beam membership and layer, and the fixed-point hop
+    * already pooled its candidates), so the walk ends the phase — the
+    * early termination of progressive top-k search. A phase whose width
+    * differs from the previous phase's starts from the per-qid top-width
+    * of the visited pool: that is how the range face's frontier hops run
+    * as the walk's last phase. The oracle's static unroll replays skipped
+    * hops as pass-through re-ranks, so every hash-checked ann_* query pins
+    * the skip's soundness.
     *
-    * Two dataflows, chosen by the one [[PinHopMaxRows]] rule: the small
-    * path folds on the driver, each hop a [[GraphCopy.probe]] when the
-    * exact-scored graph is resident (no Spark job) and one map-only
-    * [[probeHop]] job otherwise; the bulk path keeps beams on executors
-    * ([[hopNbrs]] + a window per hop, [[pinHop]]ped). The bulk path has
-    * no membership on the driver, so it stops at a fixed point only when
-    * `converge` asks (the adaptive face, whose realized hops ARE its
-    * replay artifact) and otherwise runs every cap out — value-identical
-    * by the same argument.
+    * Two dataflows, chosen by the one [[PinHopMaxRows]] rule at the
+    * widest phase: the small path folds on the driver, each hop a
+    * [[GraphCopy.probe]] when the exact-scored graph is resident (no Spark
+    * job) and one map-only [[probeHop]] job otherwise; the bulk path keeps
+    * beams on executors ([[hopNbrs]] + a window per hop, [[pinHop]]ped).
+    * The bulk path has no membership on the driver, so it stops at a
+    * fixed point only when `converge` asks (the adaptive face, whose
+    * realized hops ARE its replay artifact) and otherwise runs every cap
+    * out — value-identical by the same argument.
     * An empty panel or a tombstoned entry walks no hop. HnswSpec pins
     * small ≡ bulk face by face.
     */
   private def walk(spark: SparkSession, edgesDir: String, metaDir: String,
-                   qs: DataFrame, caps: Seq[(Int, Int)], width: Int,
-                   sc: Scorer, converge: Boolean = false): Walk = {
+                   qs: DataFrame, phases: Seq[Phase], sc: Scorer,
+                   converge: Boolean = false): Walk = {
     GraftFunctions.register(spark)
     lazy val g = openGraph(spark, edgesDir)
     val scans = Seq.newBuilder[Seq[String]]
     val files = Seq.newBuilder[(Long, Int)]
+    val widest = phases.map(_.width).max
     // a small panel over a resident graph walks the driver copy: once the
     // copy is loaded, the walk starts no Spark job
     val resident = (if (sc eq ExactScorer) residentGraph(spark, edgesDir, metaDir) else None)
       .flatMap { c =>
         val rows = qs.select(col("qid"), col("q_emb"))
-          .limit(math.min(PinHopMaxRows / width, Int.MaxValue - 1L).toInt + 1).collect()
-        if (bulk(rows.length, width)) None else Some(c -> rows)
+          .limit(math.min(PinHopMaxRows / widest, Int.MaxValue - 1L).toInt + 1).collect()
+        if (bulk(rows.length, widest)) None else Some(c -> rows)
       }
     val (nLayers, entry, beam0, probe) = resident match {
       case Some((c, rows)) =>
@@ -1146,65 +1171,79 @@ object Hnsw {
         (c.meta.nLayers, entry, if (c.entryLive) entry else Nil,
           (layer: Int, beam: Seq[Triple]) => c.probe(layer, beam, qByQid, qFloat))
       case None =>
-        val meta = spark.read.parquet(metaDir)
-        val entryF = qs
-          .crossJoin(broadcast(meta.select(col("entry").as("vec_id"), col(sc.entryPayload))))
-          .withColumn("sim", sc.sim(col(sc.entryPayload), col("q_emb")))
-          .select(col("qid"), col("vec_id"), col("sim"))
+        // ONE read of the meta, declared: the entry's payload has the edge
+        // payload's type, and n_layers rides along with every entry row
+        val meta = readSidecar(spark, metaDir, StructType(Seq(StructField("entry", LongType),
+          StructField(sc.entryPayload, g.payload.dataType), StructField("n_layers", IntegerType))))
+        val entryF = qs.crossJoin(broadcast(meta))
+          .select(col("qid"), col("entry").as("vec_id"),
+            sc.sim(col(sc.entryPayload), col("q_emb")).as("sim"), col("n_layers"))
         if (collectWalkStats) scans += leaves(entryF)
-        val entry = triplesOf(entryF.collect())
+        val rows = entryF.collect()
+        val entry = triplesOf(rows)
         lazy val qLit = if (sc.byQuery) panelLit(qs) else lit(null)
-        (meta.select(col("n_layers")).head().getInt(0), entry, liveEntry(g, entry),
+        (rows.headOption.fold(0)(_.getInt(3)), entry, liveEntry(g, entry),
           (layer: Int, beam: Seq[Triple]) =>
-            probeHop(spark, g, layer, beam, sc.payload, sc.sim(_, qLit), scans, files))
+            probeHop(g, layer, beam, sc.payload, sc.sim(_, qLit), scans, files))
     }
     val hops = Array.fill(MaxLayersStatic)(0L)
-    def run(hop: Int => Boolean): Unit =
-      if (beam0.nonEmpty) for ((layer, cap) <- caps if layer < nLayers)
-        hops(layer) = hopsUntilFixed(cap)(hop(layer)).toLong
+    // `hop(layer, width)` runs one hop and reports a fixed point;
+    // `restart(width)` re-seeds the beam from the visited pool
+    def run(hop: (Int, Int) => Boolean, restart: Int => Unit): Unit =
+      if (beam0.nonEmpty) phases.filter(_.layer < nLayers).foldLeft(phases.head.width) { (prev, p) =>
+        if (p.width != prev) restart(p.width)
+        hops(p.layer) += hopsUntilFixed(p.cap)(hop(p.layer, p.width))
+        p.width
+      }
     def members(ts: Seq[Triple]): Set[(Long, Long)] = ts.map(t => (t._1, t._2)).toSet
-    val (beamOut, visitedOut) = if (bulk(entry.length, width)) {
+    val (beamOut, visitedOut) = if (bulk(entry.length, widest)) {
       var beam = beamFrame(spark, beam0)
       var srcs = beam0.map(_._2).distinct.sorted
       var cur = members(beam0)
       var visited = beam
-      run { layer =>
-        val cands = beam.union(
-          hopNbrs(hopEdges(spark, g, layer, srcs, sc.payload), beam, qs, sc)).distinct()
-        visited = visited.union(cands)
-        val next = topPerQid(cands, width)
-        if (collectWalkStats) scans += leaves(next)
+      def pin(next: DataFrame): Boolean = {
         val p = pinHop(next, members = converge)
-        if (collectWalkStats) files += ((scannedFiles(next), srcs.map(srcBucket).distinct.length))
         val fixed = p.members.contains(cur)
         beam = p.frame; srcs = p.srcs; cur = p.members.getOrElse(cur)
         fixed
       }
+      run({ (layer, width) =>
+        val buckets = srcs.map(srcBucket).distinct.length
+        val cands = beam.union(
+          hopNbrs(hopEdges(g, layer, srcs, sc.payload), beam, qs, sc)).distinct()
+        visited = visited.union(cands)
+        val next = topPerQid(cands, width)
+        if (collectWalkStats) scans += leaves(next)
+        val fixed = pin(next)
+        if (collectWalkStats) files += ((scannedFiles(next), buckets))
+        fixed
+      }, width => pin(topPerQid(visited.distinct(), width)))
       (beam, visited.distinct())
     } else {
       var beam = beam0
       val visited = scala.collection.mutable.LinkedHashSet.empty[Triple]
       visited ++= beam
-      run { layer =>
+      run({ (layer, width) =>
         val cands = beam ++ probe(layer, beam)
         visited ++= cands
         val next = topEfLocal(cands, width)
         val fixed = members(next) == members(beam)
         beam = next
         fixed
-      }
+      }, width => beam = topEfLocal(visited.toSeq, width))
       (beamFrame(spark, beam), beamFrame(spark, visited.toSeq))
     }
     if (collectWalkStats) { lastWalkScans = scans.result(); lastWalkFiles = files.result() }
-    Walk(beamOut, visitedOut, hops.toSeq, () => g, qs, entry.map(_._1), probe)
+    Walk(beamOut, visitedOut, hops.toSeq)
   }
 
-  /** The fixed-schedule exact walk — [[searchIn]], [[searchFilteredIn]]
-    * and the first stage of [[searchRangeIn]].
+  /** The exact walk of [[searchIn]], [[searchFilteredIn]] and
+    * [[searchRangeIn]]: the fixed schedule at [[Ef]], then any extra
+    * `tail` phases.
     */
   private def walkGraph(spark: SparkSession, edgesDir: String, metaDir: String,
-                        queries: DataFrame): Walk =
-    walk(spark, edgesDir, metaDir, pinPanel(queries), capsTo(HopsL0), Ef, ExactScorer)
+                        queries: DataFrame, tail: Seq[Phase] = Nil): Walk =
+    walk(spark, edgesDir, metaDir, pinPanel(queries), capsTo(HopsL0, Ef) ++ tail, ExactScorer)
 
   /** FILTERED graph search (the ACORN posture — Patel 2024: navigate
     * unfiltered, collect filtered): post-filtering the final beam loses
@@ -1252,22 +1291,24 @@ object Hnsw {
 
   /** INDEX-SERVED threshold search — the graph face of the reference's
     * documented-but-vapor `threshold` param (`README.md:138`), i.e. the
-    * dedup-serving shape "ALL neighbors with sim ≥ t", not top-k: run
-    * the fixed-schedule walk, then up to [[RangeHops]] range hops on the
-    * base layer — the frontier is the per-qid top-[[RangeBeamCap]]
-    * VISITED nodes by (sim desc, id), each hop expands their neighbors
-    * through the same bucket-pruned probe and unions the scored
-    * candidates into the visited pool — and return every visited node
-    * with sim ≥ t. The frontier is deliberately NOT t-filtered (the
-    * ACORN lesson searchFiltered already encodes): a ≥ t node's only
-    * graph path from the pool may route through sub-t nodes, and a
-    * t-filtered frontier measurably strands qualifying nodes on the
-    * fixture. Stops early at a visited fixed point (the remaining hops
-    * are provably no-ops: same frontier ⇒ same expansion ⇒ same pool —
-    * the oracle's static unroll replays them as pass-throughs).
-    * HnswSpec pins equality with the exact threshold scan on the
-    * fixture at the served t, and that an unreachable t returns empty
-    * without error.
+    * dedup-serving shape "ALL neighbors with sim ≥ t", not top-k: the
+    * fixed-schedule walk with one more base-layer phase of up to
+    * [[RangeHops]] hops at width [[RangeBeamCap]], returning every visited
+    * node with sim ≥ t. The phase starts from the per-qid
+    * top-[[RangeBeamCap]] VISITED nodes by (sim desc, id), and each hop
+    * expands the beam's neighbors through the walk's probe and pools the
+    * scored candidates. Under the fixed (sim desc, id asc) order,
+    * top-w(V ∪ P) = top-w(top-w(V) ∪ P), so each beam IS the top-w of the
+    * pool so far — the frontier the oracle's unroll expands — and the
+    * phase stops at the beam's fixed point like every phase (the
+    * remaining hops are provably no-ops: same frontier ⇒ same expansion
+    * ⇒ same pool — the oracle replays them as pass-throughs). The
+    * frontier is deliberately NOT t-filtered (the ACORN lesson
+    * searchFiltered already encodes): a ≥ t node's only graph path from
+    * the pool may route through sub-t nodes, and a t-filtered frontier
+    * measurably strands qualifying nodes on the fixture. HnswSpec pins
+    * equality with the exact threshold scan on the fixture at the served
+    * t, and that an unreachable t returns empty without error.
     */
   def searchRange(spark: SparkSession, sfDir: String, queries: DataFrame,
                   t: Double): DataFrame = {
@@ -1279,39 +1320,9 @@ object Hnsw {
     * transparent range rewrite probes (the searchIn twin).
     */
   def searchRangeIn(spark: SparkSession, edgesDir: String, metaDir: String,
-                    queries: DataFrame, t: Double): DataFrame = {
-    val w = walkGraph(spark, edgesDir, metaDir, queries)
-    if (bulk(w.panel.length, RangeBeamCap)) {
-      // bulk-panel path: the distributed range loop (frontiers on executors)
-      var visited = w.visited.localCheckpoint()
-      var size = visited.count()
-      hopsUntilFixed(RangeHops) {
-        val pinned = pinHop(topPerQid(visited, RangeBeamCap), members = false)
-        pinned.srcs.isEmpty || {
-          visited = visited.union(hopNbrs(hopEdges(spark, w.g(), 0, pinned.srcs, "dst_emb"),
-            pinned.frame, w.qs, ExactScorer)).distinct().localCheckpoint()
-          val before = size
-          size = visited.count()
-          size == before
-        }
-      }
-      return visited.filter(col("sim") >= t)
-        .select(col("qid"), col("vec_id"), col("sim"))
-    }
-    // small-panel path: ONE map-only probe per range hop, the pool on
-    // the driver (the walk's small path already returned a LocalRelation
-    // — collecting it is job-free)
-    val visited = scala.collection.mutable.LinkedHashSet.empty[Triple]
-    visited ++= triplesOf(w.visited.collect())
-    hopsUntilFixed(RangeHops) {
-      val frontier = topEfLocal(visited.toSeq, RangeBeamCap)
-      val before = visited.size
-      if (frontier.nonEmpty)
-        visited ++= w.probe(0, frontier)
-      visited.size == before
-    }
-    beamFrame(spark, visited.toSeq.filter(_._3 >= t))
-  }
+                    queries: DataFrame, t: Double): DataFrame =
+    walkGraph(spark, edgesDir, metaDir, queries, Seq(Phase(0, RangeHops, RangeBeamCap)))
+      .visited.filter(col("sim") >= t).select(col("qid"), col("vec_id"), col("sim"))
 
   // --- adaptive serving ----------------------------------------------------
 
@@ -1388,13 +1399,13 @@ object Hnsw {
   private[graft] def searchAdaptiveIn(spark: SparkSession, edgesDir: String,
                                       metaDir: String, queries: DataFrame,
                                       k: Int): DataFrame = {
-    val w = walk(spark, edgesDir, metaDir, pinPanel(queries), capsTo(HopsL0Max), Ef,
-      ExactScorer, converge = true)
+    val qs = pinPanel(queries)
+    val w = walk(spark, edgesDir, metaDir, qs, capsTo(HopsL0Max, Ef), ExactScorer, converge = true)
     import spark.implicits._
     Seq((w.hops(0), w.hops(1), w.hops(2), w.hops(3)))
       .toDF("h0", "h1", "h2", "h3")
       .coalesce(1).write.mode("overwrite")
-      .parquet(adaptDumpPath(edgesDir, w.panel.distinct, k))
+      .parquet(adaptDumpPath(edgesDir, qs.select(col("qid")).collect().map(_.getLong(0)).distinct.toSeq, k))
     topK(w.beam, k)
   }
 
@@ -1432,22 +1443,35 @@ object Hnsw {
       // the k-64 codes table (dumped like every trained index half)
       val codes = spark.read.parquet(Ivfpq.codesLayout(spark, sfDir, k = PqCodesK))
         .select(col("vec_id").as("dst"), col("codes").as("dst_codes"))
-      spark.read.parquet(edgesPath(sfDir))
+      readSidecar(spark, edgesPath(sfDir), BaseSchema)
         .select(col("layer"), col("src"), col("dst"))
         .join(codes, Seq("dst"))
         .withColumn("src_bucket", srcBucketCol(col("src")))
+        .select(PqEdgesSchema.fieldNames.map(col).toSeq: _*)
         .repartition(col("layer"), col("src_bucket"))
         .write.mode("overwrite").partitionBy("layer", "src_bucket")
         .parquet(pqEdgesPath(sfDir))
       // pq meta: the base entry + ITS codes (hop 0 must ADC-score from
       // the artifact like every later hop), n_layers carried through
-      spark.read.parquet(metaPath(sfDir))
+      readSidecar(spark, metaPath(sfDir), MetaSchema)
         .join(codes.select(col("dst").as("entry"),
           col("dst_codes").as("entry_codes")), Seq("entry"))
-        .select(col("entry"), col("entry_codes"), col("n_layers"))
+        .select(PqMetaSchema.fieldNames.map(col).toSeq: _*)
         .coalesce(1).write.mode("overwrite").parquet(pqMetaPath(sfDir))
       pqEdgesPath(sfDir)
     })
+
+  /** The PQ edge artifact's columns, partition columns last: the base's,
+    * with the one-int-per-subspace `dst_codes` in place of `dst_emb`.
+    */
+  private[graft] val PqEdgesSchema = StructType(Seq(
+    StructField("src", LongType), StructField("dst", LongType),
+    StructField("dst_codes", ArrayType(IntegerType)),
+    StructField("layer", IntegerType), StructField("src_bucket", IntegerType)))
+
+  /** The PQ meta: the base entry, its codes and the layer count. */
+  private[graft] val PqMetaSchema = StructType(Seq(StructField("entry", LongType),
+    StructField("entry_codes", ArrayType(IntegerType)), StructField("n_layers", IntegerType)))
 
   /** PQ-compressed beam search (DiskANN §3.3): the SAME schedule and
     * per-hop bucket-pruned probe as [[search]], but hops rank by the ADC
@@ -1489,7 +1513,7 @@ object Hnsw {
         (acc, s) => acc + element_at(adcLit,
           (col("qid") * cb.m + s).cast("long") * kCodes +
             element_at(codesCol, s + 1))), 6)
-    val w = walk(spark, pqEdgesPath(sfDir), pqMetaPath(sfDir), qs, capsTo(HopsL0), EfPq,
+    val w = walk(spark, pqEdgesPath(sfDir), pqMetaPath(sfDir), qs, capsTo(HopsL0, EfPq),
       Scorer("dst_codes", "entry_codes", (codes, _) => adcOf(codes), byQuery = false))
     // exact rescore of the final beam only — full-precision vectors come
     // from the shards sidecar (the artifact's id→vector map), bounded by
@@ -1507,8 +1531,8 @@ object Hnsw {
   // The Ivfpq posture: mutations are LOGICAL first (delta + sidecar,
   // O(change) I/O), PHYSICAL later (compactGraph folds them into a new
   // base). Readers resolve base ∪ delta with last-writer-wins per
-  // (layer, src) and subtract the tombstone sidecar — both sidecars are
-  // maintenance-batch-sized, so the resolution is two broadcast joins.
+  // (layer, src) and subtract the tombstone sidecar — [[morResolve]] over
+  // the sidecar state [[openGraph]] read.
   //
   // Two paths, picked by the one [[DriverGraphMaxRows]] cap. A graph
   // within it is maintained on the driver: each verb computes its rows
@@ -1600,24 +1624,31 @@ object Hnsw {
     StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
     StructField("shard", IntegerType)))
 
-  /** Read a sidecar with its declared schema — no schema-inference job. */
+  /** Read a graph artifact with its declared schema — no schema-inference
+    * job.
+    */
   private def readSidecar(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(dir)
 
-  /** Rows in a Parquet directory, summed from its files' footers — no
-    * Spark job. Hidden (`_`/`.`-prefixed) files and directories do not
-    * count, as Spark's listing skips them; a missing directory holds 0.
+  /** The data files under a Parquet directory, depth first and listed
+    * lazily. Hidden (`_`/`.`-prefixed) files and directories are skipped,
+    * as Spark's listing skips them; a missing directory has none.
     */
-  private def footerRows(spark: SparkSession, dir: String): Long = {
+  private def dataFiles(spark: SparkSession, dir: String): Iterator[org.apache.hadoop.fs.Path] = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    def rows(p: Path): Long = fs.listStatus(p)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def under(p: Path): Iterator[Path] = fs.listStatus(p).iterator
       .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
-      .map(st => if (st.isDirectory) rows(st.getPath) else ManifestIO.rowCount(conf, st.getPath)).sum
-    if (fs.exists(root)) rows(root) else 0L
+      .flatMap(st => if (st.isDirectory) under(st.getPath) else Iterator(st.getPath))
+    if (fs.exists(root)) under(root) else Iterator.empty
   }
+
+  /** Rows in a Parquet directory, summed from its files' footers — no
+    * Spark job; a missing directory holds 0.
+    */
+  private def footerRows(spark: SparkSession, dir: String): Long =
+    dataFiles(spark, dir).map(ManifestIO.rowCount(spark.sparkContext.hadoopConfiguration, _)).sum
 
   /** Write driver rows of `schema` to `dir` in one Spark job. A
     * partitioned write's rows are sorted by their (int) partition values,
@@ -1705,21 +1736,14 @@ object Hnsw {
     * over the UNPRUNED scans (sidecars resolved through the same
     * [[openGraph]] the serving walk uses). With no sidecars (the common,
     * just-built case) this is exactly the base scan. The WHOLE-graph
-    * face ([[compactGraph]], stats); the serving walk reads through the
-    * bucket-pruned [[hopEdges]] instead.
+    * face ([[compactGraph]], stats, the plan); the serving walk reads
+    * through the bucket-pruned [[hopEdges]] instead.
     */
   def readGraph(spark: SparkSession, edgesDir: String): DataFrame =
     readGraphFrom(openGraph(spark, edgesDir))
 
-  private def readGraphFrom(g: GraphRefs): DataFrame = {
-    val base = g.base.withColumn("gen", lit(0L))
-    val all = g.delta match {
-      case Some(d) => base.unionByName(d)
-      case None    => base
-    }
-    morResolve(all, g.latest, g.tombs)
-      .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
-  }
+  private def readGraphFrom(g: GraphRefs): DataFrame =
+    morResolve(g.all, g.latest, g.tombs).select(col("layer"), col("src"), col("dst"), col("dst_emb"))
 
   /** Driver twin of [[promotedPred]]. */
   private def promoted(id: Long, layer: Int): Boolean =
@@ -1869,17 +1893,14 @@ object Hnsw {
       .unionByName(newShards)
       .localCheckpoint()
     val newIds = newShards.select(col("vec_id")).distinct().localCheckpoint()
-    // sidecar/base handles opened ONCE for all layers: a fresh
-    // read.parquet per layerDelta re-listed the (layer, src_bucket)
-    // directory tree per layer (the openGraph lesson — ~0.2 s of pure
-    // FileIndex planning each); the per-layer filters below still
-    // partition-prune the shared frames
-    val replacedAll = if (dirExists(spark, replacedPath(edgesDir)))
-      Some(readSidecar(spark, replacedPath(edgesDir), ReplacedSchema)) else None
-    val allRowsShared = deltaOf(spark, edgesDir)
-      .foldLeft(spark.read.parquet(edgesDir).withColumn("gen", lit(0L)))(_ unionByName _)
-    val gen = replacedAll.map(_.agg(max(col("gen"))).head().getLong(0))
-      .getOrElse(0L) + 1L
+    // the graph opened ONCE for all layers (a fresh read per layerDelta
+    // re-listed the (layer, src_bucket) tree per layer — ~0.2 s of pure
+    // FileIndex planning each): the in-link targets' current lists are the
+    // merge-on-read resolution with tombstones kept, as on the driver
+    // path, and the per-layer filters below still partition-prune it
+    val g = openGraph(spark, edgesDir)
+    val lists = morResolve(g.all, g.latest, None)
+    val gen = g.maxGen + 1
     def layerDelta(layer: Int): DataFrame = {
       val news = if (layer >= 1) newShards.filter(promotedPred(layer)) else newShards
       val mems = if (layer >= 1) members.filter(promotedPred(layer)) else members
@@ -1913,20 +1934,8 @@ object Hnsw {
         .select(col("dst").as("src"), col("src").as("dst"),
           col("sim"), col("__ne").as("dst_emb"))
         .join(newIds.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-      val oldRows = allRowsShared
-        .filter(col("layer") === layer)
+      val recapped = lists.filter(col("layer") === layer)
         .join(broadcast(touchedDst), Seq("src"), "left_semi")
-      val oldLatest = replacedAll match {
-        case Some(rep) =>
-          val latest = rep
-            .filter(col("layer") === layer)
-            .groupBy(col("src")).agg(max(col("gen")).as("__latest"))
-          oldRows.join(broadcast(latest), Seq("src"), "left")
-            .filter(col("gen") === coalesce(col("__latest"), lit(0L)))
-            .drop("__latest")
-        case None => oldRows.filter(col("gen") === 0L)
-      }
-      val recapped = oldLatest
         .join(srcEmb, Seq("src"))
         .withColumn("sim",
           round(GraftFunctions.cosineSim(col("__se"), col("dst_emb")), 6))
@@ -1994,12 +2003,10 @@ object Hnsw {
   def deleteFromGraph(spark: SparkSession, edgesDir: String, metaDir: String,
                       ids: Seq[Long]): Unit = {
     val copy = verbCopy(spark, edgesDir, metaDir)
-    val already: Set[Long] = copy.map(_.tombs).getOrElse {
-      if (dirExists(spark, tombstonesPath(edgesDir)))
-        readSidecar(spark, tombstonesPath(edgesDir), TombstoneSchema)
-          .collect().map(_.getLong(0)).toSet
-      else Set.empty
-    }
+    lazy val g = openGraph(spark, edgesDir)
+    // already-tombstoned ids drop out: checked against the copy, or the
+    // opened graph's tombstone state (read before the append below)
+    val already = copy.fold(g.dead(ids.distinct))(c => ids.filter(c.tombs).toSet)
     // membership check against the shards sidecar: a non-member id must
     // not subtract from the fp (point lookup, maintenance-batch-sized)
     val candidates = ids.distinct.filterNot(already)
@@ -2022,25 +2029,27 @@ object Hnsw {
       // compaction — a beam must start somewhere on the next search
       val meta =
         if (!fresh.contains(old.entry)) shrunk
-        else copy.fold(electEntry(spark, edgesDir, already ++ fresh, shrunk))(c =>
-          electOnDriver(c.memberVecs -- already -- fresh, edgesDir, shrunk))
+        else copy.fold(electEntry(spark, edgesDir, g.tombs, fresh, shrunk))(c =>
+          electOnDriver(c.memberVecs -- c.tombs -- fresh, edgesDir, shrunk))
       commitMeta(spark, metaDir, meta)
-      copy.map(_.copy(tombs = already ++ fresh, meta = meta))
+      copy.map(c => c.copy(tombs = c.tombs ++ fresh, meta = meta))
     }
   }
 
-  /** Elect an entry point from the live (non-tombstoned) shard members:
-    * the min-id node of the HIGHEST promotion level present (the build's
-    * rule generalized to the hierarchy), falling down level by level
-    * when a whole layer's membership is gone (layer-ℓ hops from a
-    * lower-level entry are no-ops; lower layers still navigate). One
-    * job; returns `meta` with the elected entry. Refuses an empty graph
-    * loudly instead of writing a 0-row meta.
+  /** Elect an entry point from the live shard members — those neither
+    * in the tombstone state `tombs` (a literal when small, an anti-join
+    * when not) nor in `fresh`: the min-id node of the HIGHEST promotion
+    * level present (the build's rule generalized to the hierarchy),
+    * falling down level by level when a whole layer's membership is gone
+    * (layer-ℓ hops from a lower-level entry are no-ops; lower layers
+    * still navigate). One job; returns `meta` with the elected entry.
+    * Refuses an empty graph loudly instead of writing a 0-row meta.
     */
-  private def electEntry(spark: SparkSession, edgesDir: String,
-                         dead: Set[Long], meta: GraphMeta): GraphMeta = {
-    val pick = readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
-      .filter(if (dead.isEmpty) lit(true) else !col("vec_id").isin(dead.toSeq: _*))
+  private def electEntry(spark: SparkSession, edgesDir: String, tombs: Option[SidecarState[Seq[Long]]],
+                         fresh: Seq[Long], meta: GraphMeta): GraphMeta = {
+    val members = readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
+    val pick = minusTombs(if (fresh.isEmpty) members else members.filter(!col("vec_id").isin(fresh: _*)),
+        "vec_id", tombs)
       .orderBy(levelCol(meta.nLayers).desc, col("vec_id").asc)
       .select(col("vec_id"), col("embedding")).head(1)
     require(pick.nonEmpty,
@@ -2104,31 +2113,26 @@ object Hnsw {
   /** [[compactGraph]] as distributed jobs — the scale path. */
   private def compactDistributed(spark: SparkSession, edgesDir: String, metaDir: String): Unit = {
     GraftFunctions.register(spark)
-    val tombed =
-      if (dirExists(spark, tombstonesPath(edgesDir)))
-        readSidecar(spark, tombstonesPath(edgesDir), TombstoneSchema).distinct().localCheckpoint()
-      else spark.range(0).select(col("id").as("vec_id"))
+    val g = openGraph(spark, edgesDir)
+    val tombs = g.tombs
     publishCompacted(spark, edgesDir)(
-      readGraph(spark, edgesDir)
-        // tombstoned SRCs vanish too (the read resolution only subtracts
-        // dsts — a deleted node must stop routing once its rows are
-        // rewritten)
-        .join(broadcast(tombed.select(col("vec_id").as("src"))), Seq("src"), "left_anti")
-        .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
+      // tombstoned SRCs vanish too (the read resolution only subtracts
+      // dsts — a deleted node must stop routing once its rows are
+      // rewritten)
+      minusTombs(readGraphFrom(g), "src", tombs)
         .withColumn("src_bucket", srcBucketCol(col("src")))
         .repartition(col("layer"), col("src_bucket"))
         .write.mode("overwrite").partitionBy("layer", "src_bucket")
         .parquet(_),
-      readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
-        .join(broadcast(tombed), Seq("vec_id"), "left_anti")
+      minusTombs(readSidecar(spark, shardsPath(edgesDir), ShardsSchema), "vec_id", tombs)
         .write.mode("overwrite").partitionBy("shard").parquet(_))
     val old = readMeta(spark, metaDir)
-    if (tombed.filter(col("vec_id") === old.entry).count() > 0)
+    if (g.dead(Seq(old.entry)).nonEmpty)
       // shards were already rewritten minus the tombstones above, so the
       // election pool is exactly the live membership; electEntry prefers
       // the highest promoted level, falls back level by level, and
       // refuses an empty graph instead of clobbering the meta
-      commitMeta(spark, metaDir, electEntry(spark, edgesDir, Set.empty, old))
+      commitMeta(spark, metaDir, electEntry(spark, edgesDir, None, Nil, old))
     dropSidecars(spark, edgesDir)
   }
 
@@ -2145,38 +2149,28 @@ object Hnsw {
     * after compaction.
     */
   def graphStats(spark: SparkSession, edgesDir: String): DataFrame = {
-    val degs = readGraph(spark, edgesDir)
+    val g = openGraph(spark, edgesDir)
+    val degs = readGraphFrom(g)
       .groupBy(col("layer"), col("src")).agg(count(lit(1)).as("deg"))
-    val liveStats = degs.groupBy(col("layer")).agg(
+    // the debt columns come from the open: delta rows per layer from the
+    // footers, replaced srcs per layer from the latest-gen state (one key
+    // per (layer, src)), tombstones from the tombstone state
+    val replacedByLayer: Map[Int, Long] = g.latest.fold(Map.empty[Int, Long]) {
+      case SidecarState(Some(l), _) => l.keys.groupMapReduce(_._1)(_ => 1L)(_ + _)
+      case SidecarState(_, f) =>
+        f.get.groupBy(col("layer")).count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
+    def perLayer(m: Map[Int, Long]): Column = coalesce(element_at(typedLit(m), col("layer")), lit(0L))
+    degs.groupBy(col("layer")).agg(
       count(lit(1)).as("n_srcs"),
       sum(col("deg")).as("n_edges"),
       max(col("deg")).as("max_deg"),
       round(avg(col("deg")), 6).as("avg_deg"))
-    val deltaStats =
-      if (dirExists(spark, deltaPath(edgesDir)))
-        readSidecar(spark, deltaPath(edgesDir), DeltaSchema)
-          .groupBy(col("layer")).agg(count(lit(1)).as("delta_rows"))
-      else spark.range(0).select(col("id").cast("int").as("layer"),
-        col("id").as("delta_rows"))
-    val replacedStats =
-      if (dirExists(spark, replacedPath(edgesDir)))
-        readSidecar(spark, replacedPath(edgesDir), ReplacedSchema)
-          .groupBy(col("layer")).agg(countDistinct(col("src")).as("replaced_srcs"))
-      else spark.range(0).select(col("id").cast("int").as("layer"),
-        col("id").as("replaced_srcs"))
-    val nTombs =
-      if (dirExists(spark, tombstonesPath(edgesDir)))
-        readSidecar(spark, tombstonesPath(edgesDir), TombstoneSchema)
-          .select(col("vec_id")).distinct().count()
-      else 0L
-    liveStats
-      .join(deltaStats, Seq("layer"), "left")
-      .join(replacedStats, Seq("layer"), "left")
       .select(col("layer").cast("int").as("layer"), col("n_srcs"),
         col("n_edges"), col("max_deg"), col("avg_deg"),
-        coalesce(col("delta_rows"), lit(0L)).as("delta_rows"),
-        coalesce(col("replaced_srcs"), lit(0L)).as("replaced_srcs"),
-        lit(nTombs).as("tombstones"))
+        perLayer(g.deltaByLayer).as("delta_rows"),
+        perLayer(replacedByLayer).as("replaced_srcs"),
+        lit(g.tombCount).as("tombstones"))
       .orderBy(col("layer"))
   }
 
@@ -2205,28 +2199,23 @@ object Hnsw {
     */
   def maintenancePlan(spark: SparkSession, edgesDir: String): DataFrame = {
     // ONE graph open: the live denominators come from one distributed
-    // pass over the merge-on-read resolution, and the sidecar numerators
-    // count the SAME pinned frames openGraph already loaded for that
-    // resolution (global distincts, NOT per-layer sums — a src replaced
-    // on two layers is one src of resolution debt) — no second read of
-    // any sidecar per maintenance tick.
+    // pass over the merge-on-read resolution, the delta rows from the
+    // open's footer counts, and the other numerators from the SAME sidecar
+    // states the open resolved with (global distincts, NOT per-layer sums
+    // — a src replaced on two layers is one src of resolution debt) — no
+    // second read of any sidecar per maintenance tick.
     val g = openGraph(spark, edgesDir)
     val liveAgg = readGraphFrom(g).agg(
       countDistinct(when(col("layer") === 0, col("src"))).as("live_nodes"),
       count(lit(1)).as("live_edges"))
-    val deltaRows = g.delta.map(_.count()).getOrElse(0L)
+    val deltaRows = g.deltaRows
     // g.latest is the replaced sidecar grouped by (layer, src) — its
     // distinct srcs ARE the sidecar's distinct srcs
-    val replacedSrcs = g.latest.map {
+    val replacedSrcs = g.latest.fold(0L) {
       case SidecarState(Some(l), _) => l.keys.map(_._2).toSet.size.toLong
-      case SidecarState(_, Some(f)) => f.select(col("src")).distinct().count()
-      case _ => 0L
-    }.getOrElse(0L)
-    val tombs = g.tombs.map { // already distinct ids
-      case SidecarState(Some(t), _) => t.size.toLong
-      case SidecarState(_, Some(f)) => f.count()
-      case _ => 0L
-    }.getOrElse(0L)
+      case SidecarState(_, f) => f.get.select(col("src")).distinct().count()
+    }
+    val tombs = g.tombCount
     // zero-denominator guard (round-10 advisor): a fully-tombstoned graph
     // resolves to ZERO live nodes/edges, and a raw division would yield
     // null ratios whose threshold compares all read false — the plan would

@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 
+import graft.expressions.CosineSimilarity
 import graft.functions.VectorOps
 
 /** IVFPQ — the composition of the trained IVF layout (Ann.kmeansLayout)
@@ -147,26 +149,21 @@ object Ivfpq {
       dir
     })
 
-  private def cosine(a: Array[Double], b: Array[Double]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < a.length) {
-      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-    }
-    if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-
   /** The nprobe cosine-nearest cells to `qVec` — ranked driver-side over
     * the ≤`cells` in-memory centers (index METADATA, not data; the same
-    * acceptable-collect class as IvfRewrite's centroid registry). Rounded
-    * to 6 decimals with (sim DESC, cell ASC) tie-break, mirroring
-    * Ann.ivfSearchCells' probe.
+    * acceptable-collect class as IvfRewrite's centroid registry). The
+    * shared cosine kernel rounded by Spark's own `round(_, 6)` (HALF_UP),
+    * with (sim DESC, cell ASC) tie-break, mirroring Ann.ivfSearchCells'
+    * probe and the DuckDB replay.
     */
   def probeCells(cents: Seq[(Int, Array[Double])], qVec: Array[Double],
-                 nprobe: Int): Seq[Int] =
+                 nprobe: Int): Seq[Int] = {
+    val q = ArrayData.toArrayData(qVec)
     cents.map { case (cell, c) =>
-      (cell, math.rint(cosine(c, qVec) * 1e6) / 1e6)
+      (cell, CosineSimilarity.roundedCosine(ArrayData.toArrayData(c), false, q, false))
     }.sortBy { case (cell, sim) => (-sim, cell) }
       .take(nprobe).map(_._1)
+  }
 
   /** IVFPQ top-k: static-pruned codes scan → ADC shortlist → exact
     * rescore. `qVec` must be L2-normalized (ADC dot products rank like

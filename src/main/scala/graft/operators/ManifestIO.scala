@@ -10,6 +10,8 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, CompressionCodecName}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-direct parquet I/O for KB-scale manifest metadata (round-14
   * optimization, guide §5 "the driver should do almost no data work" —
@@ -94,6 +96,20 @@ private[graft] object ManifestIO {
   /** Rows in one parquet file, summed from its footer's row groups. */
   def rowCount(conf: Configuration, file: Path): Long =
     footerBlocks(conf, file).map(_.getRowCount).sum
+
+  /** The Spark schema of one parquet file's columns, from its footer: the
+    * schema a Spark writer recorded there, else the file's parquet schema
+    * converted the way Spark's inference converts it. No Spark job.
+    */
+  def sparkSchema(conf: Configuration, file: Path): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+    } finally reader.close()
+  }
 
   /** The row-group metadata of one parquet file's footer. */
   private def footerBlocks(conf: Configuration, file: Path): Seq[BlockMetaData] = {

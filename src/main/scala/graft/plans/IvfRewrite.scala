@@ -6,9 +6,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Descending, EqualTo, Expression, In, InSet, Literal, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, Limit, LogicalPlan, Sort, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
+import graft.expressions.CosineSimilarity
 import graft.plans.RewriteSupport._
 
 /** Transparent ANN: a Catalyst optimizer rule that rewrites exact top-k
@@ -87,19 +89,14 @@ object IvfIndexRegistry extends PathRegistry {
       * ranking shared by bestCell, the multi-probe rewrites, and the
       * DuckDB replay (Ann.ivfSearchCells' probe at nprobe = n).
       */
-    def bestCells(q: Array[Double], n: Int): Seq[Int] =
+    def bestCells(q: Array[Double], n: Int): Seq[Int] = {
+      val qa = ArrayData.toArrayData(q)
       medoids.map { case (cell, m) =>
-        // HALF_UP to match Spark's round(sim, 6) in Ann.ivfSearch and the
-        // DuckDB oracle — math.rint is half-even and could probe a different
-        // cell on an exact .5-ulp tie.
-        (cell, BigDecimal(cosine(m, q)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        // the shared kernel, then Spark's own HALF_UP round(sim, 6) as in
+        // Ann.ivfSearch and the DuckDB oracle — math.rint is half-even and
+        // could probe a different cell on an exact .5-ulp tie
+        (cell, CosineSimilarity.roundedCosine(ArrayData.toArrayData(m), false, qa, false))
       }.sortBy { case (cell, s) => (-s, cell) }.take(n).map(_._1)
-
-    private def cosine(a: Array[Double], b: Array[Double]): Double = {
-      require(a.length == b.length, s"dim ${a.length} vs ${b.length}")
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
     }
   }
   type E = Entry

@@ -53,6 +53,28 @@ class AnnPqSpec extends AnyFunSuite
     assert(meanCos > 0.5, s"codebooks reconstruct at cosine $meanCos")
   }
 
+  test("probeCells rounds like the Spark probe it mirrors: a cosine of 0.1234565 ties 0.123457") {
+    // q = e1, so each cell's cosine is its first coordinate; the second
+    // makes |c| = 1 to the last bit, so cell 0's cosine is 0.1234565 exactly
+    val q = Array(1.0, 0.0)
+    def unit(x: Double): Array[Double] = Array(x, math.sqrt(1 - x * x))
+    val cents = Seq(0 -> unit(0.1234565), 1 -> unit(0.123457))
+    val c0 = cents.head._2
+    assert(c0(0) / math.sqrt(c0(0) * c0(0) + c0(1) * c0(1)) == 0.1234565)
+    // HALF_UP rounds both cells to 0.123457, and the tie goes to cell 0;
+    // half-even rounding (math.rint of 123456.5) would put cell 1 first
+    assert(Ivfpq.probeCells(cents, q, nprobe = 1) === Seq(0))
+    graft.expressions.GraftFunctions.register(spark)
+    import spark.implicits._
+    val viaSpark = cents.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "centroid")
+      .crossJoin(Seq(q.toSeq).toDF("q_emb"))
+      .select(col("cell"),
+        round(graft.expressions.GraftFunctions.cosineSim(col("centroid"), col("q_emb")), 6).as("csim"))
+      .orderBy(col("csim").desc, col("cell").asc)
+      .collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq
+    assert(viaSpark === Seq(0 -> 0.123457, 1 -> 0.123457))
+  }
+
   test("ADC shortlist + exact rescore recovers most exact neighbors") {
     val cb = Pq.train(spark, sf)
     val recalls = (0L until 5L).map { qid =>

@@ -166,10 +166,15 @@ class HnswMaintenanceSpec extends AnyFunSuite {
     }
 
   test("every sidecar a verb writes, on either path, has its declared footer schema") {
+    def footer(dir: String): StructType = spark.read.option("mergeSchema", "true").parquet(dir).schema
+    // the built artifacts the readers open with declared schemas
+    Hnsw.pqLayout(spark, sf)
+    Seq(Hnsw.edgesPath(sf) -> Hnsw.BaseSchema, Hnsw.metaPath(sf) -> Hnsw.MetaSchema,
+      Hnsw.pqEdgesPath(sf) -> Hnsw.PqEdgesSchema, Hnsw.pqMetaPath(sf) -> Hnsw.PqMetaSchema)
+      .foreach { case (dir, schema) => assert(footer(dir) == schema, s"the built $dir") }
     val nv = fresh(sf, Seq((950001L, 5L, 9L), (950002L, 101L, 202L)))
     Seq("driver" -> Hnsw.DriverGraphMaxRows, "distributed" -> 0L).foreach { case (path, cap) =>
       val (ce, cm) = cloneGraph(Hnsw.edgesPath(sf), Hnsw.metaPath(sf), s"-schema-$path")
-      def footer(dir: String): StructType = spark.read.option("mergeSchema", "true").parquet(dir).schema
       withCap(cap) {
         Hnsw.appendToGraph(spark, sf, ce, cm, nv)
         Hnsw.deleteFromGraph(spark, ce, cm, Seq(entryOf(cm), 950001L))

@@ -37,9 +37,11 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     * adjacency (3) and the meta read (1); 6 once the sidecars are read
     * with declared schemas and sized from their Parquet footers — the
     * base's schema read, then one collect each of the replaced and
-    * tombstone sidecars, the resolved adjacency, the shards and the meta.
+    * tombstone sidecars, the resolved adjacency, the shards and the meta;
+    * 5 once the base edges are read with the schema one Parquet footer
+    * declares, leaving the five collects.
     */
-  val LoadJobBudget = 6
+  val LoadJobBudget = 5
 
   /** Jobs of one append (2 vectors) + delete (2 ids, one the entry) +
     * maintainGraph round on a private clone of this fixture's graph: 71
@@ -51,9 +53,10 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     * the resident copy's load (4 on this sidecar-free clone), the append
     * batch's collect (1), the append's three sidecar writes and meta
     * commit (4), the delete's tombstone write and meta commit (2), and no
-    * job for the maintain decision.
+    * job for the maintain decision; 10 once the copy's load reads the base
+    * with a footer-declared schema (3 on this clone).
     */
-  val UpdateJobBudget = 11
+  val UpdateJobBudget = 10
 
   /** Jobs started by `body`, counted under a unique job group (inherited
     * by staging and broadcast jobs), so other threads' jobs never count.
@@ -97,6 +100,24 @@ class ServeJobBudgetSpec extends AnyFunSuite {
       assert(jobs <= ServeJobBudget,
         s"a single-query serve ran $jobs jobs, over its budget of $ServeJobBudget")
     } finally graft.plans.HnswGraphRegistry.clear()
+  }
+
+  test("a warm single-query range search on a resident graph runs no Spark job") {
+    import spark.implicits._
+    val (de, dm) = Hnsw.maintDemoLayout(spark, sf)
+    val q = Tables.embeddings(spark, sf).filter(col("vec_id") === 1)
+      .select(col("embedding")).head().getSeq[Float](0)
+    val panel = Seq((0L, q)).toDF("qid", "q_emb")
+    // the first call loads the resident copy
+    Hnsw.searchRangeIn(spark, de, dm, panel, t = 0.2).collect()
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf {
+      rows = Hnsw.searchRangeIn(spark, de, dm, panel, t = 0.2).collect()
+    }
+    info(s"warm single-query range search: $jobs Spark jobs")
+    assert(rows.nonEmpty, "the range search served nothing")
+    assert(jobs <= ServeJobBudget,
+      s"a warm range search ran $jobs jobs, over the serve budget of $ServeJobBudget")
   }
 
   test("the first serve after a mutation loads the resident copy within its job budget") {
