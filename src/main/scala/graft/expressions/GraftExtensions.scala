@@ -8,9 +8,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * and optimizer rules into every session built with
   * `.config("spark.sql.extensions", "graft.expressions.GraftExtensions")`
   * (or `.withExtensions(new GraftExtensions)`) — no per-session register()
-  * call needed; `SELECT cosine_sim(a, b)` works from bare SQL, and exact
-  * top-k vector queries over IVF-registered tables are rewritten to
-  * probe-and-prune (graft.plans.IvfTopKRewrite).
+  * call needed; `SELECT cosine_sim(a, b)` works from bare SQL, exact
+  * vector queries (top-k, batch top-k, threshold, batch threshold) over a
+  * table with a registered HNSW graph or IVF layout are served from that
+  * index (graft.plans.VectorIndexRewrite), and aggregates over a
+  * registered materialized view read the summary (graft.plans.MvAggRewrite).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -24,38 +26,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[NfcNormalize].getName,
         GraftFunctions.NfcNormalizeName),
       (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    // order matters: the graph rewrite runs FIRST so its id-In filter is
-    // already in the plan when the IVF rule's precedence guard looks for
-    // it — on a table carrying both indexes the graph (better recall at a
-    // smaller candidate budget) wins, and the IVF rule still serves the
-    // queries the graph rule's own guards make it decline (k > beam,
-    // non-id predicates, a different ranked column)
-    e.injectOptimizerRule(session => graft.plans.HnswTopKRewrite(session))
-    e.injectOptimizerRule(session => graft.plans.HnswBatchTopKRewrite(session))
-    // range precedence mirrors top-k: the graph rule runs first, but the
-    // EXACT IVF range rule (below) outranks it semantically — the graph
-    // rule itself declines when an IVF cell prune is already in the plan,
-    // and the IVF rule stacking above a graph id-IN is harmless (an exact
-    // superset-refilter never drops a qualifying row)
-    e.injectOptimizerRule(session => graft.plans.HnswRangeRewrite(session))
-    // batch range: same registry-state precedence as the single face —
-    // the rule declines outright on a radii-armed IVF registration, so
-    // the EXACT IvfRangeBatchRewrite below owns the shape whenever its
-    // sidecar is armed
-    e.injectOptimizerRule(session => graft.plans.HnswRangeBatchRewrite(session))
-    e.injectOptimizerRule(session => graft.plans.IvfTopKRewrite(session))
-    // batch top-k precedence mirrors the single face: the graph batch
-    // rule above runs first, and this rule defers only when that rule's
-    // tagged semi-join marker proves it actually FIRED — every batch
-    // shape the graph rule declines (k > Ef, non-benign filters,
-    // conditioned joins) still gets the per-qid cell prune
-    e.injectOptimizerRule(session => graft.plans.IvfBatchTopKRewrite(session))
-    // the range rewrite matches a different shape (Filter threshold, not
-    // Sort+Limit) — no precedence interaction with any rule above; it is
-    // EXACT (superset-then-refilter), so firing order could not change
-    // results even if shapes overlapped
-    e.injectOptimizerRule(session => graft.plans.IvfRangeRewrite(session))
-    e.injectOptimizerRule(session => graft.plans.IvfRangeBatchRewrite(session))
+    // the transparent vector-index rewrite: one rule for the graph and
+    // IVF families × {top-k, batch top-k, range, batch range}, with index
+    // precedence decided in graft.plans.IndexPrecedence
+    e.injectOptimizerRule(session => graft.plans.VectorIndexRewrite(session))
     e.injectOptimizerRule(session => graft.plans.MvAggRewrite(session))
     e.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy())
     // SQL DDL for index management (round-12 verdict #3): CREATE/DROP

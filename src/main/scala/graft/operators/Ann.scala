@@ -389,9 +389,10 @@ object Ann {
   }
 
   /** THE cell-admission bound for threshold (range) search — the ONE
-    * definition shared by [[ivfRangeSearch]] and the transparent
-    * `IvfRangeRewrite` (a drift between the explicit face and the rewrite
-    * would make one of two provably-exact paths silently wrong): a cell c
+    * definition shared by [[ivfRangeSearch]] and the transparent IVF
+    * range faces (IvfIndexRegistry.serve — a drift between the explicit
+    * face and the rewrite would make one of two provably-exact paths
+    * silently wrong): a cell c
     * can hold a member with sim ≥ t only if
     * cos(max(0, θ(q,c) − θmax(c))) ≥ t − slack, where θmax comes from the
     * per-cell radius sidecar (missing radius ⇒ θmax = π ⇒ always admit —

@@ -2261,7 +2261,7 @@ object Hnsw {
   }
 
   /** The registered-table demo corpus for the transparent graph rewrite
-    * (plans/HnswTopKRewrite): a staged byte-copy of the embeddings table
+    * (plans/VectorIndexRewrite): a staged byte-copy of the embeddings table
     * at its own path, so registering IT as graph-indexed cannot hijack
     * the exact-scan queries (knn_topk's oracle is the exact result over
     * the REAL table — a registry keyed on that path would silently make

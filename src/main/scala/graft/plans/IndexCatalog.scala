@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, InSet, Literal}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -325,8 +325,9 @@ object IndexCatalog {
 
   /** Re-arm all three registries from the manifest at `root`'s current
     * version — the other half of [[save]]: after a JVM restart (or an
-    * explicit clear), one load makes all 9 transparent rewrites and the
-    * registry-resolved serving fire again, bit-identically (the
+    * explicit clear), one load makes the transparent rewrites (every
+    * vector-index face and the MV rewrite) and the registry-resolved
+    * serving fire again, bit-identically (the
     * round-trip spec pins it). Additive-overwrite per row (a live
     * registration for the same path is replaced; others are untouched) —
     * call the registries' clear() first for an exact snapshot restore.
@@ -388,7 +389,7 @@ object IndexCatalog {
     * `spark.graft.catalog.root=<root>` re-arms the registries from the
     * durable manifest on FIRST optimizer use — zero code beyond the
     * extensions line, the production posture (set two confs, indexes
-    * serve). Called by the family-head rewrite rules (cost per
+    * serve). Called by VectorIndexRewrite and MvAggRewrite (cost per
     * optimization pass: one conf read + one map hit); memoized per root;
     * a load failure logs to stderr and leaves the session un-accelerated
     * rather than failing the user's query.
@@ -442,7 +443,7 @@ object IndexCatalog {
     import org.apache.spark.sql.catalyst.expressions.Descending
     import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, Sort}
     val plan = df.queryExecution.optimizedPlan
-    // the top-k rules only fire under Limit(Sort(<ranked desc>)); a cell
+    // the top-k faces only fire under Limit(Sort(<ranked desc>)); a cell
     // EqualTo OUTSIDE that shape is the range rewrite's
     // single-admitted-cell IN after OptimizeIn folded it. SCOPED to the
     // candidate filter — a plan-wide "has any Limit" misattributed a
@@ -474,7 +475,7 @@ object IndexCatalog {
     val batchServed = scala.collection.mutable.Set.empty[String]
     val ivfBatchServed = scala.collection.mutable.Set.empty[String]
     // The served CORPUS relation, resolved from the semi-join CONDITION:
-    // the rules inject EqualTo(<relation-owned id/cell attr>, <marker
+    // the batch faces inject EqualTo(<relation-owned id/cell attr>, <marker
     // attr>) with the corpus attr taken from rel.output directly (same
     // exprId), while the panel's qid is an alias — so exprId containment
     // plus the registration's own column name pins the corpus even when
@@ -534,14 +535,7 @@ object IndexCatalog {
           // Residual ambiguity (documented, shared by every marker
           // class): a user-written id IN list reads as served, and a
           // range query re-sorted descending AND limited reads as top-k.
-          case In(a: AttributeReference, _)
-            if HnswGraphRegistry.lookup(rels).exists(_.idCol == a.name) &&
-              !HnswGraphRegistry.lookup(rels)
-                .exists(e => batchServed.contains(e.edgesDir)) =>
-            val e = HnswGraphRegistry.lookup(rels).get
-            tags += (if (topKShapeOver(plan, f)) s"hnsw:${e.edgesDir}"
-                     else s"hnsw-range:${e.edgesDir}")
-          case InSet(a: AttributeReference, _)
+          case RewriteSupport.InList(a, _)
             if HnswGraphRegistry.lookup(rels).exists(_.idCol == a.name) &&
               !HnswGraphRegistry.lookup(rels)
                 .exists(e => batchServed.contains(e.edgesDir)) =>
@@ -561,12 +555,7 @@ object IndexCatalog {
           // index can't read as acceleration; suppressed when the batch
           // top-k face already attributed this table (its union-of-cells
           // superset prune is also a cell IN)
-          case In(a: AttributeReference, _)
-            if IvfIndexRegistry.lookup(rels).exists(e =>
-              e.cellCol == a.name && e.radii.nonEmpty) &&
-              !rels.map(RewriteSupport.canon).exists(ivfBatchServed) =>
-            tags += s"ivf-range:${RewriteSupport.canon(rels.head)}"
-          case InSet(a: AttributeReference, _)
+          case RewriteSupport.InList(a, _)
             if IvfIndexRegistry.lookup(rels).exists(e =>
               e.cellCol == a.name && e.radii.nonEmpty) &&
               !rels.map(RewriteSupport.canon).exists(ivfBatchServed) =>
@@ -575,14 +564,7 @@ object IndexCatalog {
           // registration with nprobe > 1, under the top-k plan shape —
           // a 1-probe registration injects EqualTo (handled above), so a
           // user-written cell IN on it can never read as acceleration
-          case In(a: AttributeReference, _)
-            if IvfIndexRegistry.lookup(rels).exists(e =>
-              e.cellCol == a.name && e.radii.isEmpty && e.nprobe > 1 &&
-              e.nprobe < e.medoids.size) &&
-              !rels.map(RewriteSupport.canon).exists(ivfBatchServed) &&
-              topKShapeOver(plan, f) =>
-            tags += s"ivf:${RewriteSupport.canon(rels.head)}"
-          case InSet(a: AttributeReference, _)
+          case RewriteSupport.InList(a, _)
             if IvfIndexRegistry.lookup(rels).exists(e =>
               e.cellCol == a.name && e.radii.isEmpty && e.nprobe > 1 &&
               e.nprobe < e.medoids.size) &&

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 
 /** Transparent materialized-view rewrite — the AGGREGATE twin of
-  * [[IvfTopKRewrite]]: a user writes the exact query
+  * [[VectorIndexRewrite]]: a user writes the exact query
   * (`GROUP BY g` with `count(*)` / `sum(col)` aggregates) against the
   * SOURCE table, and if a registered MV covers it, the optimizer swaps the
   * corpus scan + shuffle + aggregate for a scan of the groups-sized summary
@@ -238,7 +238,7 @@ object MvDemo {
 case class MvAggRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // conf-driven durable-catalog bring-up (see HnswTopKRewrite)
+    // conf-driven durable-catalog bring-up (see VectorIndexRewrite)
     IndexCatalog.autoLoadIfConfigured(spark)
     if (MvRegistry.isEmpty) return plan
     plan.transformDown {

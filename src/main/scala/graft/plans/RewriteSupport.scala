@@ -8,7 +8,7 @@ import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal, Not, Round, RowNumber, SortOrder, Ascending, Descending, WindowExpression}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, LocalRelation, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -16,15 +16,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, DoubleType,
 
 import graft.expressions.CosineSimilarity
 
-/** The rewrite kit shared by all eight transparent-index rules ({HNSW,
-  * IVF} × {top-k, batch top-k, range, batch range}): ONE copy of every
-  * piece the rules must never let drift — path canonicalization (registry
-  * keys and maintenance-side invalidation must agree on `file:` prefixes
-  * and trailing slashes), the Project/Filter spine walk, join orientation
-  * and the self-join check, the ranking-form and threshold matchers, the
-  * injected-prune and injected-marker matchers, the batch panel probe
-  * with its memo discipline, and the per-qid semi-join injection. Each
-  * rule keeps only its own firing guards and probe arithmetic.
+/** The rewrite kit behind [[VectorIndexRewrite]] and its two index
+  * families: ONE copy of every piece they must never let drift — path
+  * canonicalization (registry keys and maintenance-side invalidation must
+  * agree on `file:` prefixes and trailing slashes), the Project/Filter
+  * spine walk, the self-join check, the ranking-form and threshold
+  * matchers, the injected-prune and injected-marker matchers, the batch
+  * panel probe with its memo discipline, and the per-qid semi-join
+  * injection. Each family keeps only its own guards and probe arithmetic.
   */
 private[plans] object RewriteSupport extends Logging {
 
@@ -61,19 +60,6 @@ private[plans] object RewriteSupport extends Logging {
       case (t: T, conds) => Some((t, conds))
       case _ => None
     }
-
-  /** Orient an Inner/Cross join: the side whose pure spine ends at a
-    * relation `registered` accepts is the corpus (left tried first), the
-    * other the query side. Returns (corpus relation, its spine
-    * conditions, entry, query side).
-    */
-  def orient[E](join: Join, registered: LogicalRelation => Option[E]): Option[(LogicalRelation, Seq[Expression], E, LogicalPlan)] =
-    if (join.joinType != Inner && join.joinType != Cross) None
-    else Seq((join.left, join.right), (join.right, join.left)).iterator.flatMap {
-      case (corpus, querySide) => spineTo[LogicalRelation](corpus).flatMap {
-        case (r, conds) => registered(r).map((r, conds, _, querySide))
-      }
-    }.nextOption()
 
   /** A query side containing the registered TABLE is a self-join — its
     * "panel" is the corpus, not an API batch. Compared by canonical root
@@ -203,20 +189,6 @@ private[plans] object RewriteSupport extends Logging {
     case _ => None
   }
 
-  /** The attribute a two-column cosine ranks the corpus embedding `emb`
-    * against (either argument order), if any.
-    */
-  private def otherSide(c: CosineSimilarity, emb: AttributeReference): Option[AttributeReference] = c match {
-    case CosineSimilarity(a: AttributeReference, b: AttributeReference) =>
-      if (a.exprId == emb.exprId) Some(b) else if (b.exprId == emb.exprId) Some(a) else None
-    case _ => None
-  }
-
-  /** The query-side vector a corpus × query cosine ranks `emb` against. */
-  def queryVector(c: CosineSimilarity, emb: AttributeReference,
-                  querySide: LogicalPlan): Option[AttributeReference] =
-    otherSide(c, emb).filter(querySide.outputSet.contains)
-
   /** Top-level AND-conjuncts of a condition — the granularity at which a
     * threshold predicate may be served (inside an OR/NOT a failing sim no
     * longer implies a failing row).
@@ -255,57 +227,33 @@ private[plans] object RewriteSupport extends Logging {
     }
   }
 
-  /** Each conjunct paired with its threshold ranking `emb` against a
-    * LITERAL query vector in `form` — (query vector, t) — if it is one:
-    * the single range faces' matches, and their remaining conjuncts.
-    */
-  def literalThresholds(conds: Seq[Expression], scope: LogicalPlan, emb: AttributeReference,
-                        form: SimForm): Seq[(Expression, Option[(Array[Double], Double)])] =
-    conds.map(c => c -> (for {
-      (s, t) <- threshold(c, scope)
-      (a, q) <- cosineUnder(s, form).flatMap(literalCosine)
-      if a.exprId == emb.exprId
-    } yield (q, t)))
-
-  /** [[literalThresholds]]' two-attribute (batch) form: each conjunct
-    * paired with its threshold ranking `emb` against ANOTHER attribute in
-    * `form` — (that attribute, t) — if it is one. The caller keeps the
-    * matches whose attribute is on the query side.
-    */
-  def pairThresholds(conds: Seq[Expression], scope: LogicalPlan, emb: AttributeReference,
-                     form: SimForm): Seq[(Expression, Option[(AttributeReference, Double)])] =
-    conds.map(c => c -> (for {
-      (s, t) <- threshold(c, scope)
-      q <- cosineUnder(s, form).flatMap(otherSide(_, emb))
-    } yield (q, t)))
-
-  /** THE cell-prune predicate matcher — In/InSet and the EqualTo form
-    * OptimizeIn folds a single-element IN into, both literal orders. ONE
-    * definition for every idempotence/precedence guard that must detect
-    * an injected cell prune (this exact drift class — one copy missing
-    * the folded form — already caused a duplicate-prune re-fire once).
+  /** THE cell-prune predicate matcher — a [[pruneSize]] prune on the cell
+    * column anywhere in the condition. ONE definition for every check that
+    * must detect an injected cell prune (this exact drift class — one copy
+    * missing the folded EqualTo form — already caused a duplicate-prune
+    * re-fire once).
     */
   def cellPrunePredicate(cellAttr: AttributeReference): Expression => Boolean =
-    (e: Expression) => e.exists(prunes(cellAttr))
+    (e: Expression) => e.exists(pruneSize(cellAttr)(_).isDefined)
 
-  /** [[cellPrunePredicate]]'s ID-side twin — the matcher every graph
-    * rule's idempotence guard shares: an injected `id IN (<beam/pool>)`,
-    * the InSet form OptimizeIn converts large lists into, and the
-    * EqualTo form a 1-element In folds into (both literal orders).
-    * Matched at TOP-LEVEL-CONJUNCT granularity, not `exists` — a benign
-    * user exclusion `NOT (id = 5)` CONTAINS an EqualTo(id, lit) node, and
-    * an exists-descent would misread it as an injected prune, silencing
-    * the rule on exactly the queries the benign-exclusion audit admits.
+  /** The number of values a prune on `attr` keeps, if `e` is one: an
+    * In/InSet list, or the EqualTo form OptimizeIn folds a 1-element In
+    * into (either literal order).
     */
-  def idPrunePredicate(idAttr: AttributeReference): Expression => Boolean =
-    (e: Expression) => conjuncts(e).exists(prunes(idAttr))
+  def pruneSize(attr: AttributeReference)(e: Expression): Option[Int] = e match {
+    case InList(a, n) if a.exprId == attr.exprId => Some(n)
+    case EqualTo(a: AttributeReference, _: Literal) if a.exprId == attr.exprId => Some(1)
+    case EqualTo(_: Literal, a: AttributeReference) if a.exprId == attr.exprId => Some(1)
+    case _ => None
+  }
 
-  private def prunes(attr: AttributeReference)(e: Expression): Boolean = e match {
-    case In(a: AttributeReference, _) => a.exprId == attr.exprId
-    case InSet(a: AttributeReference, _) => a.exprId == attr.exprId
-    case EqualTo(a: AttributeReference, _: Literal) => a.exprId == attr.exprId
-    case EqualTo(_: Literal, a: AttributeReference) => a.exprId == attr.exprId
-    case _ => false
+  /** An In or InSet over an attribute, as (attribute, list size). */
+  object InList {
+    def unapply(e: Expression): Option[(AttributeReference, Int)] = e match {
+      case In(a: AttributeReference, vs) => Some((a, vs.length))
+      case InSet(a: AttributeReference, vs) => Some((a, vs.size))
+      case _ => None
+    }
   }
 
   /** Some(#distinct excluded ids) iff EVERY conjunct of every condition is
@@ -314,9 +262,9 @@ private[plans] object RewriteSupport extends Logging {
     * relation's id attribute, so an identically-named column from
     * elsewhere can never pass). Anything else — ranges, IN lists, non-id
     * references — returns None and the caller falls through. ONE
-    * definition shared by the single-query and batch graph rewrites: the
-    * k + e ≤ Ef headroom argument (the unfiltered top-(k+e) ⊆ the beam
-    * provably contains the filtered top-k) is identical on both faces.
+    * definition for every graph face: the k + e ≤ Ef headroom argument
+    * (the unfiltered top-(k+e) ⊆ the beam provably contains the filtered
+    * top-k) is identical on the single and batch faces.
     */
   def benignExclusions(conds: Seq[Expression],
                        idAttr: AttributeReference): Option[Int] = {
@@ -387,7 +335,7 @@ private[plans] object RewriteSupport extends Logging {
     * per-qid semi-join table — the idempotence/provenance marker the
     * house discipline prefers over name matching (round-11 verdict #7:
     * a user column literally named `__graft_qid` must not read as "the
-    * rewrite fired"). The value names the rule family ("hnsw-batch",
+    * rewrite fired"). The value names the face ("hnsw-batch",
     * "hnsw-range-batch", "ivf-batch").
     */
   val InjectedMarker: org.apache.spark.sql.catalyst.trees.TreeNodeTag[String] =
@@ -440,11 +388,11 @@ private[plans] object RewriteSupport extends Logging {
     * to the exact scan), never the user's query; an empty result falls
     * through too.
     */
-  def probed[T](rule: String, index: String)(probe: => Seq[T]): Option[Seq[T]] =
+  def probed[T](face: String, index: String)(probe: => Seq[T]): Option[Seq[T]] =
     try Some(probe).filter(_.nonEmpty)
     catch {
       case scala.util.control.NonFatal(ex) =>
-        logWarning(s"$rule: probe failed for $index — serving the exact scan", ex)
+        logWarning(s"$face: probe failed for $index — serving the exact scan", ex)
         None
     }
 
@@ -464,7 +412,7 @@ private[plans] object RewriteSupport extends Logging {
     * Memoized in `memo` INCLUDING declines — the optimizer revisits the
     * shape on every fixed-point iteration and in both matched shapes, and
     * without a decline slot each visit re-ran the panel collect. Keyed on
-    * value equality with freshness, never an identity hash: the rule,
+    * value equality with freshness, never an identity hash: the face,
     * `key` (the index metadata — dir + generation, or entry values — and
     * any threshold), the CANONICALIZED projected panel plan and the
     * panel's [[inputFilesDigest]] (a canonicalized plan alone reads equal
@@ -473,12 +421,12 @@ private[plans] object RewriteSupport extends Logging {
     * transient until [[probeFailureExhausted]]. The collect runs outside
     * any map lock; a racing duplicate is idempotent.
     */
-  def panelProbe[R](spark: SparkSession, rule: String, memo: ConcurrentHashMap[Any, Option[Any]],
+  def panelProbe[R](spark: SparkSession, face: String, memo: ConcurrentHashMap[Any, Option[Any]],
                     key: Any, querySide: LogicalPlan, qid: Option[AttributeReference],
                     qEmb: AttributeReference)(
                     serve: (Seq[(Long, Seq[Double])], () => DataFrame) => Option[R]): Option[R] = {
     val proj = Project(qid.map(Alias(_, "qid")()).toSeq :+ Alias(qEmb, "q_emb")(), querySide)
-    val fullKey = (rule, key, proj.canonicalized, inputFilesDigest(querySide))
+    val fullKey = (face, key, proj.canonicalized, inputFilesDigest(querySide))
     Option(memo.get(fullKey)).map(_.asInstanceOf[Option[R]]).getOrElse {
       var transient = false
       val computed = try {
@@ -498,7 +446,7 @@ private[plans] object RewriteSupport extends Logging {
         }
       } catch {
         case scala.util.control.NonFatal(ex) =>
-          logWarning(s"$rule: panel probe failed — serving the exact scan", ex)
+          logWarning(s"$face: panel probe failed — serving the exact scan", ex)
           transient = !probeFailureExhausted(fullKey)
           None
       }
@@ -582,16 +530,17 @@ private[plans] object RewriteSupport extends Logging {
 }
 
 /** THE canonical-path registry both index families sit on: the entries
-  * keyed by canonical table path, a mutation generation per canonical
+  * (products — the families' `Entry` case classes) keyed by canonical
+  * table path, a mutation generation per canonical
   * key (the HNSW family counts per graph dir, the IVF family per layout
-  * path), and the rule-level batch panel memo ([[RewriteSupport.panelProbe]]),
+  * path), and the family's batch panel memo ([[RewriteSupport.panelProbe]]),
   * all purged by [[clear]]. Each family keeps its own `Entry` type and
   * public method names and adds its own probe memos.
   */
 private[plans] trait PathRegistry {
   import RewriteSupport.canon
 
-  type E
+  type E <: Product
 
   private val byPath = new ConcurrentHashMap[String, E]()
   private val generations = new ConcurrentHashMap[String, java.lang.Long]()

@@ -506,7 +506,7 @@ object PipelineQueries {
 
     // TRANSPARENT IVF ANN: the user writes the exact brute-force top-k
     // (ORDER BY cosine_sim(...) DESC LIMIT 5) over the cell-partitioned
-    // table; the injected IvfTopKRewrite optimizer rule probes the
+    // table; the injected VectorIndexRewrite (IVF top-k face) probes the
     // registered medoids and adds the partition-pruning cell filter. Same
     // oracle as ann_ivf — proof the rewrite picks the identical cell.
     "ann_ivf_rewrite" -> ((s, dir) => {
@@ -541,7 +541,7 @@ object PipelineQueries {
 
     // MULTI-PROBE transparent top-k (the recall↔I/O knob every vector
     // database exposes): the registration carries nprobe=2, the user
-    // writes the same exact top-k, and IvfTopKRewrite injects a TWO-cell
+    // writes the same exact top-k, and the IVF top-k face injects a TWO-cell
     // IN (partition pruning to 2/10 directories — scanned fraction ≈
     // nprobe/cells, recall grows monotonically toward the exact scan).
     // The oracle replays the identical 2-cell probe from the dumped
@@ -645,8 +645,8 @@ object PipelineQueries {
     // TRANSPARENT BATCH IVF (round-11 verdict #1, the last hole in the
     // rewrite matrix): the user writes the exact per-qid window top-k —
     // the production batch-retrieval shape — over the cell-partitioned
-    // corpus crossed with a query panel, and plans/IvfBatchTopKRewrite
-    // serves each qid from ITS probed cell (same medoid probe as the
+    // corpus crossed with a query panel, and the IVF batch top-k face of
+    // plans/VectorIndexRewrite serves each qid from ITS probed cell (same medoid probe as the
     // single face, per panel row) via a union-of-cells partition prune +
     // a (qid, cell) admission semi-join. Same oracle as ann_ivf_batch —
     // proof the rewrite reaches the identical probe-and-prune result.
@@ -846,10 +846,11 @@ object PipelineQueries {
     }),
 
     // Threshold twin of the registry-resolved serve: the batch range
-    // face against whatever index covers the table (graph wins — ONE
-    // batch range walk; a radii-armed IVF registration serves provably
-    // exactly). Graph-registered here, so the result IS the batch range
-    // walk — ann_range_rewrite_batch's replay verbatim.
+    // face against whatever index covers the table, by the transparent
+    // range rewrite's precedence (plans/IndexPrecedence: a radii-armed IVF
+    // registration owns the face and serves provably exactly; else the
+    // graph — ONE batch range walk). Graph-registered here, so the result
+    // IS the batch range walk — ann_range_rewrite_batch's replay verbatim.
     "index_serve_range_batch" -> ((s, dir) => {
       graft.operators.Hnsw.layout(s, dir)
       val corpus = graft.operators.Hnsw.rewriteCorpusLayout(s, dir)
@@ -919,7 +920,7 @@ object PipelineQueries {
 
     // TRANSPARENT graph rewrite: the user writes the exact declarative
     // top-k (ORDER BY cosine_sim DESC LIMIT k) over a graph-registered
-    // table; plans/HnswTopKRewrite serves the candidate set from the
+    // table; plans/VectorIndexRewrite serves the candidate set from the
     // graph index (bounded walk at rewrite time) and injects a k-id
     // filter, so the user's own sort exact-rescores k rows instead of
     // scanning the corpus. Result ≡ the graph top-k re-ranked by true
@@ -942,7 +943,7 @@ object PipelineQueries {
     // TRANSPARENT graph-range rewrite — the third face of the graph
     // rewrite family (single top-k, batch top-k, range): the user writes
     // the exact range shape (WHERE round-6 cosine ≥ t) over the
-    // registered corpus, and plans/HnswRangeRewrite serves the candidate
+    // registered corpus, and plans/VectorIndexRewrite serves the candidate
     // set from the bounded range walk (rewrite-time probe) via an id-IN
     // filter; the user's own predicate exact-rescored the visited pool,
     // so the result IS the explicit face's — ann_range_search's oracle
@@ -967,7 +968,7 @@ object PipelineQueries {
     // verdict #2, the last range cell of the rewrite matrix): the exact
     // batch threshold shape — corpus × panel, WHERE round-6 sim ≥ t —
     // over the graph-registered corpus, served by ONE batch range walk
-    // (plans/HnswRangeBatchRewrite): union-of-visited id-IN at the scan
+    // (plans/VectorIndexRewrite): union-of-visited id-IN at the scan
     // plus a per-qid (qid, id) semi-join. The user's predicate
     // exact-rescored each qid's pool, so the result IS the explicit
     // batch walk's — the multi-qid range replay oracles both.
@@ -991,7 +992,7 @@ object PipelineQueries {
     // the user writes the exact per-qid window top-k — row_number over
     // (PARTITION BY qid ORDER BY round-6 cosine DESC, id ASC) ≤ k — over
     // the registered corpus cross-joined to a query table, and
-    // plans/HnswBatchTopKRewrite serves every qid's candidate set from
+    // plans/VectorIndexRewrite serves every qid's candidate set from
     // ONE batch graph walk, injected as a (qid, id) semi-join. The user's
     // own window exact-rescored the per-qid beams, so the result is the
     // batch walk's top-k — replayed by the same multi-qid beam CTEs.
@@ -1148,10 +1149,11 @@ object PipelineQueries {
     // TRANSPARENT threshold search (the rewrite face of ivf_range_search):
     // the user writes the bare SQL range shape — WHERE round-6 sim ≥ t —
     // over the trained layout registered WITH its radius sidecar, and the
-    // injected IvfRangeRewrite prunes to the admissible cells. EXACT by
-    // construction (superset-then-refilter), so the oracle is the same
-    // full-scan threshold twin as the explicit face: a hash match proves
-    // the transparent prune dropped no qualifying cell. t sits in the
+    // IVF range face of VectorIndexRewrite prunes to the admissible
+    // cells. EXACT by construction (superset-then-refilter), so the
+    // oracle is the same full-scan threshold twin as the explicit face:
+    // a hash match proves the transparent prune dropped no qualifying
+    // cell. t sits in the
     // self-match regime (0.99, the query row itself is the answer)
     // because that is where this fixture's geometry lets ANY exact method
     // skip a cell: in 64-d near-uniform data every cell holds sub-t

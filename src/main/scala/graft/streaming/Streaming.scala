@@ -325,9 +325,10 @@ object Streaming {
 
   /** REGISTRY-RESOLVED batch retrieval — one serve call against
     * whatever index is registered for a corpus table (round-11 verdict
-    * #6): the graph registration wins when present (better recall at a
-    * smaller scored budget — the same precedence the transparent
-    * rewrites encode), else the IVF registration serves through the
+    * #6), picked by the precedence the transparent rewrite uses
+    * (graft.plans.IndexPrecedence): the graph registration wins when
+    * present (better recall at a smaller scored budget), else the IVF
+    * registration serves through the
     * skew-hardened explicit batch face (Ann.ivfSearchBatchTopK at the
     * REGISTRATION'S nprobe — the same probe width the rewrites honor), else the call refuses
     * loudly. Output normalized to (qid, vec_id, sim, rnk) across both
@@ -358,8 +359,8 @@ object Streaming {
         s"route, which filters $schema — registry-resolved serving picks " +
         s"the route, so the predicate must fit the index that covers the " +
         s"table (cause: ${ae.getMessage})")
-    graft.plans.HnswGraphRegistry.lookup(Seq(corpusPath)) match {
-      case Some(e) =>
+    graft.plans.IndexPrecedence.resolve(Seq(corpusPath), range = false) match {
+      case Some(e: graft.plans.HnswGraphRegistry.Entry) =>
         (filter match {
           case Some(pred) =>
             // resolve the predicate against the pool SCHEMA first, on an
@@ -377,23 +378,21 @@ object Streaming {
           case None =>
             graft.operators.Hnsw.searchIn(spark, e.edgesDir, e.metaDir, panel, k)
         }).select(col("qid"), col("vec_id"), col("sim"), col("rnk"))
-      case None => graft.plans.IvfIndexRegistry.lookup(Seq(corpusPath)) match {
-        case Some(e) if e.idCol.isDefined && e.embCol.isDefined =>
-          val cents = graft.operators.Ann.centroidsDf(spark, e.medoids)
-          val corpus = spark.read.parquet(corpusPath)
-          val filtered = try filter.map(corpus.filter).getOrElse(corpus)
-            catch { case ae: org.apache.spark.sql.AnalysisException =>
-              contractError("IVF", "the corpus row (its own columns)", ae) }
-          graft.operators.Ann.ivfSearchBatchTopK(
-              filtered, panel, e.cellCol,
-              cents, e.idCol.get, e.embCol.get, k, nprobe = e.nprobe)
-            .select(col("qid"), col(e.idCol.get).as("vec_id"),
-              col("sim"), col("rnk"))
-        case Some(_) => sys.error(s"IVF registration for $corpusPath " +
-          "carries no id/emb columns — register via register() or an " +
-          "overload that captures idCol and embCol")
-        case None => sys.error(s"no index registered for $corpusPath")
-      }
+      case Some(e: graft.plans.IvfIndexRegistry.Entry) if e.idCol.isDefined && e.embCol.isDefined =>
+        val cents = graft.operators.Ann.centroidsDf(spark, e.medoids)
+        val corpus = spark.read.parquet(corpusPath)
+        val filtered = try filter.map(corpus.filter).getOrElse(corpus)
+          catch { case ae: org.apache.spark.sql.AnalysisException =>
+            contractError("IVF", "the corpus row (its own columns)", ae) }
+        graft.operators.Ann.ivfSearchBatchTopK(
+            filtered, panel, e.cellCol,
+            cents, e.idCol.get, e.embCol.get, k, nprobe = e.nprobe)
+          .select(col("qid"), col(e.idCol.get).as("vec_id"),
+            col("sim"), col("rnk"))
+      case Some(_) => sys.error(s"IVF registration for $corpusPath " +
+        "carries no id/emb columns — register via register() or an " +
+        "overload that captures idCol and embCol")
+      case None => sys.error(s"no index registered for $corpusPath")
     }
   }
 
@@ -416,31 +415,33 @@ object Streaming {
 
   /** [[indexServeBatch]]'s THRESHOLD twin — registry-resolved batch
     * range serving: every corpus row with round-6 sim ≥ t per qid,
-    * served by whatever index covers the table. Graph registrations win
-    * (ONE batch range walk — Hnsw.searchRangeIn, the approximate
-    * bounded-frontier face); else a radii-armed IVF registration with
-    * id/emb columns serves PROVABLY EXACTLY through the entry-based
-    * admission face (Ann.ivfRangeSearchBatchIn — union-of-admitted-cells
-    * partition prune + per-qid refinement + exact refilter); else the
-    * call refuses loudly. Output (qid, vec_id, sim) across both routes.
+    * served by whatever index covers the table, picked by the precedence
+    * the transparent range rewrite uses (graft.plans.IndexPrecedence), so
+    * the API and SQL faces return the same set. A radii-armed IVF
+    * registration with id/emb columns owns the face and serves PROVABLY
+    * EXACTLY through the entry-based admission face
+    * (Ann.ivfRangeSearchBatchIn — union-of-admitted-cells partition prune
+    * + per-qid refinement + exact refilter); else a graph registration
+    * serves (ONE batch range walk — Hnsw.searchRangeIn, the approximate
+    * bounded-frontier face); else the call refuses loudly. Output (qid,
+    * vec_id, sim) across both routes.
     */
   def indexServeRangeBatch(panel: DataFrame, corpusPath: String,
                            t: Double): DataFrame = {
     val spark = panel.sparkSession
-    graft.plans.HnswGraphRegistry.lookup(Seq(corpusPath)) match {
-      case Some(e) =>
+    graft.plans.IndexPrecedence.resolve(Seq(corpusPath), range = true) match {
+      case Some(e: graft.plans.HnswGraphRegistry.Entry) =>
         graft.operators.Hnsw.searchRangeIn(spark, e.edgesDir, e.metaDir, panel, t)
           .select(col("qid"), col("vec_id"), col("sim"))
-      case None => graft.plans.IvfIndexRegistry.lookup(Seq(corpusPath)) match {
-        case Some(e) if e.radii.nonEmpty && e.idCol.isDefined && e.embCol.isDefined =>
-          graft.operators.Ann.ivfRangeSearchBatchIn(spark, corpusPath,
-            e.cellCol, e.idCol.get, e.embCol.get, e.medoids, e.radii,
-            panel, t, excludeSelf = false)
-        case Some(_) => sys.error(s"IVF registration for $corpusPath is not " +
-          "range-armed — register with radii plus id/emb columns " +
-          "(registerCentroidsWithRadii with idCol)")
-        case None => sys.error(s"no index registered for $corpusPath")
-      }
+      case Some(e: graft.plans.IvfIndexRegistry.Entry)
+          if e.radii.nonEmpty && e.idCol.isDefined && e.embCol.isDefined =>
+        graft.operators.Ann.ivfRangeSearchBatchIn(spark, corpusPath,
+          e.cellCol, e.idCol.get, e.embCol.get, e.medoids, e.radii,
+          panel, t, excludeSelf = false)
+      case Some(_) => sys.error(s"IVF registration for $corpusPath is not " +
+        "range-armed — register with radii plus id/emb columns " +
+        "(registerCentroidsWithRadii with idCol)")
+      case None => sys.error(s"no index registered for $corpusPath")
     }
   }
 

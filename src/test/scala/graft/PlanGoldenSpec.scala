@@ -19,9 +19,13 @@ class PlanGoldenSpec extends AnyFunSuite {
   private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, sf)
     df.collect() // force AQE to its final shape
-    // AdaptiveSparkPlan prints final AND initial plans — count only the
-    // final section or every operator tallies twice
-    val s = df.queryExecution.executedPlan.toString
+    finalSection(df.queryExecution.executedPlan.toString)
+  }
+
+  /** AdaptiveSparkPlan prints final AND initial plans — count only the
+    * final section or every operator tallies twice.
+    */
+  private def finalSection(s: String): String = {
     val cut = s.indexOf("== Initial Plan ==")
     if (cut >= 0) s.substring(0, cut) else s
   }
@@ -142,6 +146,34 @@ class PlanGoldenSpec extends AnyFunSuite {
     assert(!p.contains("BroadcastNestedLoopJoin"),
       "1-row totals joined as BNLJ — literal-key equi-join degraded")
     assert(p.contains("TakeOrderedAndProject"), "top-100 lost its heap")
+  }
+
+  test("dsir_select: the staged model build broadcasts its target join, no SMJ or BNLJ") {
+    // the model digest is staged by a localCheckpoint action that runs
+    // while the DataFrame is built, so its joins never reach the serving
+    // plan above; a QueryExecutionListener sees that action's own plan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val staged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint" && qe.analyzed.output.exists(_.name == "n_t"))
+          staged.add(finalSection(qe.executedPlan.toString))
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries("dsir_select")(spark, sf)
+      // listener events arrive on the listener bus, after the action
+      eventually(timeout(30.seconds)) { assert(!staged.isEmpty, "no staged model build seen") }
+    } finally spark.listenerManager.unregister(listener)
+    val p = staged.peek()
+    assert(count(p, "BroadcastHashJoin") >= 1,
+      s"the model build's broadcast(target) join stopped broadcasting:\n$p")
+    assert(!p.contains("SortMergeJoin"), s"a model-build join degraded to SMJ:\n$p")
+    assert(!p.contains("BroadcastNestedLoopJoin"), s"a model-build join degraded to BNLJ:\n$p")
   }
 
   test("setsim_join: candidates stay a prefix equi-join — no cartesian, no nested loop") {
