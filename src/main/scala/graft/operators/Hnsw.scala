@@ -801,7 +801,7 @@ object Hnsw {
     * from internal rows — no encoder is derived per call (measured: the
     * per-call tuple encoder was ~40% of a warm resident search).
     */
-  private def localFrame(spark: SparkSession, schema: StructType,
+  private[graft] def localFrame(spark: SparkSession, schema: StructType,
                          rows: Seq[InternalRow]): DataFrame =
     GraftSqlBridge.ofRows(spark, LocalRelation(
       schema.map(f => AttributeReference(f.name, f.dataType, f.nullable)()), rows))
@@ -1154,17 +1154,23 @@ object Hnsw {
     // copy is loaded, the walk starts no Spark job
     val resident = (if (sc eq ExactScorer) residentGraph(spark, edgesDir, metaDir) else None)
       .flatMap { c =>
-        val rows = qs.select(col("qid"), col("q_emb"))
-          .limit(math.min(PinHopMaxRows / widest, Int.MaxValue - 1L).toInt + 1).collect()
-        if (bulk(rows.length, widest)) None else Some(c -> rows)
+        // each panel row's (qid, vector); a driver-local panel is read
+        // straight from its relation, with no encoder and no job
+        val qFloat = isFloatArray(qs.schema("q_emb").dataType)
+        val panel = qs.select(col("qid"), col("q_emb"))
+        val cap = math.min(PinHopMaxRows / widest, Int.MaxValue - 1L).toInt + 1
+        val qv = panel.queryExecution.optimizedPlan match {
+          case l: LocalRelation => l.data.take(cap).map(r => r.getLong(0) -> ArrayData.toArrayData(
+            if (qFloat) r.getArray(1).toFloatArray() else r.getArray(1).toDoubleArray()))
+          case _ => panel.limit(cap).collect().toSeq.map(r => r.getLong(0) -> ArrayData.toArrayData(
+            if (qFloat) r.getSeq[Float](1).toArray else r.getSeq[Double](1).toArray))
+        }
+        if (bulk(qv.length, widest)) None else Some((c, qv, qFloat))
       }
     val (nLayers, entry, beam0, probe) = resident match {
-      case Some((c, rows)) =>
+      case Some((c, qv, qFloat)) =>
         // each panel row scores the entry with its own vector; hops look
         // the vector up by qid (last row wins — panelLit's map)
-        val qFloat = isFloatArray(qs.schema("q_emb").dataType)
-        val qv = rows.toSeq.map(r => r.getLong(0) -> ArrayData.toArrayData(
-          if (qFloat) r.getSeq[Float](1).toArray else r.getSeq[Double](1).toArray))
         val entry = qv.map { case (qid, q) =>
           (qid, c.meta.entry, CosineSimilarity.roundedCosine(c.entryEmb, true, q, qFloat)) }
         val qByQid = qv.toMap

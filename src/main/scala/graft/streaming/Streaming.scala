@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types._
@@ -368,9 +370,10 @@ object Streaming {
             // (missing artifacts) must surface as themselves, and a
             // typo'd predicate must fail BEFORE paying a graph walk
             // (round-13 second-pass review finding)
-            import spark.implicits._
-            try Seq.empty[(Long, Long, Double)]
-              .toDF("qid", "vec_id", "sim").filter(pred)
+            try graft.operators.Hnsw.localFrame(spark, StructType(Seq(
+                StructField("qid", LongType, nullable = false),
+                StructField("vec_id", LongType, nullable = false),
+                StructField("sim", DoubleType, nullable = false))), Nil).filter(pred)
             catch { case ae: org.apache.spark.sql.AnalysisException =>
               contractError("GRAPH", "the visited pool (qid, vec_id, sim)", ae) }
             graft.operators.Hnsw.searchFilteredIn(
@@ -405,10 +408,11 @@ object Streaming {
   def indexServeOne(spark: org.apache.spark.sql.SparkSession,
                     corpusPath: String, qVec: Array[Double], k: Int,
                     filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    import spark.implicits._
-    // float panel — the corpus element type, the beamIds probe discipline
-    val panel = Seq((0L, qVec.toSeq)).toDF("qid", "q_emb")
-      .select(col("qid"), col("q_emb").cast("array<float>").as("q_emb"))
+    // float panel — the corpus element type, the beamIds probe discipline —
+    // built as one internal row, so no encoder is derived per call
+    val panel = graft.operators.Hnsw.localFrame(spark, StructType(Seq(
+        StructField("qid", LongType, nullable = false), StructField("q_emb", ArrayType(FloatType)))),
+      Seq(InternalRow(0L, ArrayData.toArrayData(qVec.map(_.toFloat)))))
     indexServeBatch(panel, corpusPath, k, filter)
       .select(col("vec_id"), col("sim"), col("rnk"))
   }

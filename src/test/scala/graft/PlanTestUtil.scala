@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
@@ -35,5 +38,29 @@ object PlanTestUtil {
       .collect { case f: FileSourceScanExec => f }
     if (scans.isEmpty) None
     else Some(scans.flatMap(_.metrics.get("numFiles").map(_.value)).sum)
+  }
+
+  /** Spark jobs started by `body`, counted under a unique job group
+    * (inherited by staging and broadcast jobs), so other threads' jobs
+    * never count.
+    */
+  def jobsOf(spark: SparkSession)(body: => Unit): Int = {
+    val tag = s"counted-jobs-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            tag == j.properties.getProperty("spark.jobGroup.id")) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(tag, tag, interruptOnCancel = false)
+      body
+      org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.get()
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -58,28 +55,8 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     */
   val UpdateJobBudget = 10
 
-  /** Jobs started by `body`, counted under a unique job group (inherited
-    * by staging and broadcast jobs), so other threads' jobs never count.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val tag = s"serve-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            tag == j.properties.getProperty("spark.jobGroup.id")) jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(tag, tag, interruptOnCancel = false)
-      body
-      org.apache.spark.GraftCoreBridge.drainListenerBus(spark.sparkContext)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    jobs.get()
-  }
+  /** Jobs started by `body` (other threads' jobs never count). */
+  private def jobsOf(body: => Unit): Int = PlanTestUtil.jobsOf(spark)(body)
 
   test("single-query top-5 serve on a registered graph stays within its job budget") {
     val (de, dm) = Hnsw.maintDemoLayout(spark, sf)
@@ -118,6 +95,44 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     assert(rows.nonEmpty, "the range search served nothing")
     assert(jobs <= ServeJobBudget,
       s"a warm range search ran $jobs jobs, over the serve budget of $ServeJobBudget")
+  }
+
+  test("a warm single-query top-5 serve ranked by its caller runs no Spark job") {
+    // the benchmark's search: the serve, then the caller's sort by rank
+    val (de, dm) = Hnsw.maintDemoLayout(spark, sf)
+    val corpus = Hnsw.rewriteCorpusLayout(spark, sf)
+    val q = Tables.embeddings(spark, sf).filter(col("vec_id") === 1)
+      .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
+    try {
+      graft.plans.HnswGraphRegistry.register(corpus, "vec_id", "embedding", de, dm)
+      Streaming.indexServeOne(spark, corpus, q, k = 5).orderBy(col("rnk")).collect()
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val jobs = jobsOf {
+        rows = Streaming.indexServeOne(spark, corpus, q, k = 5).orderBy(col("rnk")).collect()
+      }
+      info(s"warm single-query serve + orderBy(rnk): $jobs Spark jobs")
+      assert(rows.map(_.getInt(2)).toSeq === (1 to 5))
+      assert(jobs <= ServeJobBudget,
+        s"a ranked single-query serve ran $jobs jobs, over the serve budget of $ServeJobBudget")
+    } finally graft.plans.HnswGraphRegistry.clear()
+  }
+
+  test("a warm single-query range search sorted by its caller runs no Spark job") {
+    import spark.implicits._
+    val (de, dm) = Hnsw.maintDemoLayout(spark, sf)
+    val q = Tables.embeddings(spark, sf).filter(col("vec_id") === 1)
+      .select(col("embedding")).head().getSeq[Float](0)
+    val panel = Seq((0L, q)).toDF("qid", "q_emb")
+    Hnsw.searchRangeIn(spark, de, dm, panel, t = 0.2).orderBy(col("sim").desc).collect()
+    var rows = Array.empty[org.apache.spark.sql.Row]
+    val jobs = jobsOf {
+      rows = Hnsw.searchRangeIn(spark, de, dm, panel, t = 0.2).orderBy(col("sim").desc).collect()
+    }
+    info(s"warm single-query range search + orderBy(sim desc): $jobs Spark jobs")
+    val sims = rows.map(_.getAs[Double]("sim")).toSeq
+    assert(sims.nonEmpty && sims === sims.sorted.reverse)
+    assert(jobs <= ServeJobBudget,
+      s"a sorted range search ran $jobs jobs, over the serve budget of $ServeJobBudget")
   }
 
   test("the first serve after a mutation loads the resident copy within its job budget") {
