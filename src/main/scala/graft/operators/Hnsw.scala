@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
@@ -26,6 +26,15 @@ import graft.expressions.{CosineSimilarity, GraftFunctions}
   * outgoing edges; reverse edges are unioned in (small-world graphs need
   * in-links to be navigable) and the degree is re-capped at 2M with the
   * same deterministic (sim desc, id asc) order.
+  *
+  * A graph whose edge bound (MaxDegree per node per layer) fits
+  * [[DriverGraphMaxRows]], the cap the resident copy is served and
+  * maintained under, builds the same recipe on the driver instead: one
+  * corpus collect, each src scored into a bounded top-M per shard, and
+  * the edges, shards and meta written as local frames on three threads —
+  * four Spark jobs against the distributed recipe's ~40, row for row the
+  * same artifacts (HnswMaintenanceSpec). The distributed recipe stays the
+  * scale path.
   *
   * LAYERS: the hierarchy has n_layers = min(4, max(2, 1 +
   * ⌊log_LayerMod(N/4)⌋)) levels — the standard ~log_LayerMod(N) growth,
@@ -284,183 +293,336 @@ object Hnsw {
       .select(lit(layer).as("layer"), col("src"), col("dst"))
   }
 
+  /** Label the jobs `body` starts on this thread in the UI/listeners
+    * (guide §1.5), restoring the caller's label after. Spark local
+    * properties are per thread, so a [[Publish.fanOut]] task labels its
+    * own jobs.
+    */
+  private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(caller)
+  }
+
   /** Build + dump the layered graph for the sfDir's embeddings corpus
     * (vec_id 0 is the search fixture's query vector and stays OUT of the
     * graph). Memoized per sfDir; deterministic given the (seeded, dumped)
-    * KMeans layout.
+    * KMeans layout. A graph within [[DriverGraphMaxRows]] builds on the
+    * driver ([[buildOnDriver]]), any other by Spark jobs
+    * ([[buildDistributed]], the scale path); both write the same rows.
     */
-  /** Label the jobs of `body` in the UI/listeners (guide §1.5) — the
-    * build stages run dozens of jobs and are otherwise unattributable.
-    */
-  private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
-    spark.sparkContext.setJobDescription(desc)
-    try body finally spark.sparkContext.setJobDescription(null)
-  }
-
   def layout(spark: SparkSession, sfDir: String): String =
     memo.computeIfAbsent(sfDir, { _ =>
       GraftFunctions.register(spark)
       val (ivfPath, cents) = Ann.kmeansLayout(spark, sfDir)
-      val corpus = spark.read.parquet(ivfPath)
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("embedding"))
-      // overlapping shards: each node joins its 2 cosine-nearest cells
-      // (ONE assignment formula — Ann.nearestCells), map-only against
-      // the broadcast k·1 centroid metadata
-      val sharded = Ann.nearestCells(corpus,
-          Ann.centroidsDf(spark, cents), "vec_id", "embedding", n = 2)
-        .select(col("vec_id"), col("embedding"), col("cell").as("shard"))
-      // the shard table feeds both sides of the pair join — stage it once,
-      // HASH-PARTITIONED BY SHARD: the cell-partitioned corpus read packs
-      // into one ~MB input split, and without the explicit repartition the
-      // whole O(Σ|shard|²) pair scoring below ran as ONE task (measured:
-      // 1.2 s single-threaded at sf0.1 — guide §2.5 input skew). The
-      // explicit partition count pins scan parallelism (AQE would coalesce
-      // the ~MB shuffle right back to one partition — the bytes are small,
-      // the per-row cosine work is not); shard-hash partitioning also
-      // makes the self-join below exchange-free (localCheckpoint preserves
-      // outputPartitioning).
-      val staged = labeled(spark, "hnsw-build: shard assign") {
-        sharded.repartition(spark.sparkContext.defaultParallelism, col("shard"))
-          .localCheckpoint()
-      }
-      val n = labeled(spark, "hnsw-build: corpus count")(corpus.count())
-      // per-level node counts in ONE aggregation (level = how high the
-      // nested digest rule promotes a node); every sizing decision below
-      // (top-layer clamp, dense-vs-blocked, entry pool) reads this map
-      // instead of re-counting the staged table per question
-      val levelHist: Map[Int, Long] = labeled(spark, "hnsw-build: level hist") {
-        staged
-          .select(col("vec_id")).distinct()
-          .groupBy(levelCol(MaxLayersStatic).as("lvl")).count()
-          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      }
-      def promotedCount(l: Int): Long =
-        levelHist.collect { case (lvl, c) if lvl >= l => c }.sum
-      // engine layer count, clamped down while a top layer would be empty
-      // (a pseudorandom-digest tail case at tiny N; deterministic per
-      // corpus) — a 1-node top layer is fine (entry only, hops no-op)
-      var nLayers = nLayersFor(n)
-      while (nLayers > 2 && promotedCount(nLayers - 1) == 0) nLayers -= 1
-      // layer 0/1 (and any over-cap express layer): shard-blocked pairs —
-      // O(Σ|shard|²), never N². Two structural fixes over the naive
-      // a-join-b-window chain (round-15, both measured):
-      //
-      //  1. SLICED scoring (guide §2.5): the pair stream is byte-small
-      //     (three narrow columns) but CPU-dense (a 64-dim cosine per
-      //     row), so AQE's byte-based coalescing collapsed the join to
-      //     ONE task — 2.2 s single-threaded at sf0.1. Side A splits into
-      //     [[PairSlices]] deterministic src-slices, side B replicates
-      //     per slice (B rows are node-sized, the replication is MBs),
-      //     and the explicit repartition count pins the parallelism AQE
-      //     would take away. Work per task is bounded by
-      //     cap²/PairSlices however hot a shard is.
-      //  2. Per-(shard, src) local top-M BEFORE any exchange (guide §2.3
-      //     "aggregate before you shuffle"): a src's global top-M over
-      //     its 2 shards' candidates is the top-M of its two shard-local
-      //     top-Ms (any dst outside a local top-M is beaten by ≥M dsts of
-      //     the same shard, all global candidates), so capEdges sees
-      //     ≤ 2M rows per node instead of the full Σ|shard|² stream
-      //     (1.6M pairs → ~60k rows at sf0.1). The slice key is a pure
-      //     function of src, so the (shard, slice, src) window ≡ the
-      //     (shard, src) window and runs in the join stage (partitioning
-      //     exprs ⊆ window keys — no exchange, WindowGroupLimit keeps
-      //     the heap M-sized).
-      def blockedPairs(nodes: DataFrame): DataFrame = {
-        val p = spark.sparkContext.defaultParallelism
-        val a = nodes.select(col("shard"), col("vec_id").as("src"),
-            col("embedding").as("ea"))
-          .withColumn("__slice", pmod(col("src"), lit(PairSlices)))
-          .repartition(p, col("shard"), col("__slice"))
-        val b = nodes.select(col("shard"), col("vec_id").as("dst"),
-            col("embedding").as("eb"))
-          .withColumn("__slice",
-            explode(typedLit((0L until PairSlices.toLong).toSeq)))
-          .repartition(p, col("shard"), col("__slice"))
-        val wLocal = Window.partitionBy(col("shard"), col("__slice"), col("src"))
-          .orderBy(col("sim").desc, col("dst").asc)
-        a.join(b, Seq("shard", "__slice"))
-          .filter(col("src") =!= col("dst"))
-          .withColumn("sim",
-            round(GraftFunctions.cosineSim(col("ea"), col("eb")), 6))
-          .select(col("shard"), col("__slice"), col("src"), col("dst"), col("sim"))
-          .withColumn("__lrn", row_number().over(wLocal))
-          .filter(col("__lrn") <= M)
-          .select(col("src"), col("dst"), col("sim"))
-      }
-      // express layers ≤ DenseLayerCap: all-pairs over the deduped
-      // promoted set (metadata-sized by construction — see scaladoc)
-      def densePairs(nodes: DataFrame): DataFrame = {
-        val uniq = nodes.select(col("vec_id"), col("embedding"))
-          .dropDuplicates("vec_id")
-        val a = uniq.select(col("vec_id").as("src"), col("embedding").as("ea"))
-        val b = uniq.select(col("vec_id").as("dst"), col("embedding").as("eb"))
-        a.crossJoin(b)
-          .filter(col("src") =!= col("dst"))
-          .withColumn("sim",
-            round(GraftFunctions.cosineSim(col("ea"), col("eb")), 6))
-          .select(col("src"), col("dst"), col("sim"))
-      }
-      // hot-shard guard: over-cap shards split for the PAIRING stage only
-      // (fixture shards all sit under the cap, so this is the staged
-      // frame itself there); the sidecar below keeps trained cell ids
-      val pairNodes = labeled(spark, "hnsw-build: cap shards")(capShards(staged))
-      val layerEdges = (0 until nLayers).map { l =>
-        val nodes = if (l == 0) pairNodes else pairNodes.filter(promotedPred(l))
-        val pairs =
-          if (l >= 2 && promotedCount(l) <= DenseLayerCap) densePairs(nodes)
-          else blockedPairs(nodes)
-        capEdges(pairs, l)
-      }
-      // DiskANN layout: denormalize dst's embedding onto the adjacency
-      // row (one build-time join against the staged shards), so serving
-      // hops read ONLY the edge table and never the corpus — and
-      // partition it by (layer, src_bucket) so a hop's literal probe
-      // PLANS only the beam's bucket directories (file-level pruning,
-      // the InvertedIndex postings discipline).
-      val dstEmb = staged.select(col("vec_id").as("dst"),
-        col("embedding").as("dst_emb")).dropDuplicates("dst")
-      labeled(spark, "hnsw-build: edges write") {
-        layerEdges.reduce(_ union _).join(dstEmb, Seq("dst"))
-          .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
-          .withColumn("src_bucket", srcBucketCol(col("src")))
-          .repartition(col("layer"), col("src_bucket"))
-          .write.mode("overwrite").partitionBy("layer", "src_bucket")
-          .parquet(edgesPath(sfDir))
-      }
-      // shard-membership sidecar, partitioned by shard: appendToGraph
-      // pairs new nodes against ONLY their touched shards (pruned read)
-      labeled(spark, "hnsw-build: shards write") {
-        staged.select(col("vec_id"), col("embedding"), col("shard"))
-          .write.mode("overwrite").partitionBy("shard")
-          .parquet(shardsPath(edgesPath(sfDir)))
-      }
-      // meta carries the corpus MEMBERSHIP fingerprint beside the entry
-      // point: the order-independent (n, digest-sum) of the indexed ids,
-      // so a reader can detect "rows were appended/deleted since this
-      // graph was built" from two 1-row digests (ann_stale_check) —
-      // in-place vector mutation is out of scope for a membership digest
-      // (the id canon carries no floats; float rendering isn't
-      // cross-engine portable — the table_fingerprint caveat).
-      // entry carries ITS embedding too — hop 0 (scoring the entry point)
-      // must not touch the corpus either. n_layers rides along so every
-      // reader (walk, maintenance, oracle) sees the realized hierarchy.
-      val topPromoted = staged.filter(promotedPred(nLayers - 1))
-      val entryPool =
-        if (promotedCount(nLayers - 1) > 0) topPromoted else staged
-      val entry = entryPool.agg(min(col("vec_id")).as("entry"))
-        .join(dstEmb.select(col("dst").as("entry"),
-          col("dst_emb").as("entry_emb")), Seq("entry"))
-      val fp = graft.streaming.Streaming.fingerprintStream(
-        corpus.select(col("vec_id")), col("vec_id").cast("string"))
-        .select(col("n_rows").as("corpus_n"), col("fp").as("corpus_fp"))
-      labeled(spark, "hnsw-build: meta write") {
-        entry.crossJoin(fp).withColumn("n_layers", lit(nLayers))
-          .coalesce(1).write.mode("overwrite").parquet(metaPath(sfDir))
-      }
-      staged.unpersist()
+      if (!buildOnDriver(spark, sfDir, ivfPath)) buildDistributed(spark, sfDir, ivfPath, cents)
       edgesPath(sfDir)
     })
+
+  /** [[layout]]'s build as Spark jobs: the scale path. */
+  private def buildDistributed(spark: SparkSession, sfDir: String, ivfPath: String,
+                               cents: Seq[(Int, Array[Double])]): Unit = {
+    val corpus = spark.read.parquet(ivfPath)
+      .filter(col("vec_id") =!= 0)
+      .select(col("vec_id"), col("embedding"))
+    // overlapping shards: each node joins its 2 cosine-nearest cells
+    // (ONE assignment formula — Ann.nearestCells), map-only against
+    // the broadcast k·1 centroid metadata
+    val sharded = Ann.nearestCells(corpus,
+        Ann.centroidsDf(spark, cents), "vec_id", "embedding", n = 2)
+      .select(col("vec_id"), col("embedding"), col("cell").as("shard"))
+    // the shard table feeds both sides of the pair join — stage it once,
+    // HASH-PARTITIONED BY SHARD: the cell-partitioned corpus read packs
+    // into one ~MB input split, and without the explicit repartition the
+    // whole O(Σ|shard|²) pair scoring below ran as ONE task (measured:
+    // 1.2 s single-threaded at sf0.1 — guide §2.5 input skew). The
+    // explicit partition count pins scan parallelism (AQE would coalesce
+    // the ~MB shuffle right back to one partition — the bytes are small,
+    // the per-row cosine work is not); shard-hash partitioning also
+    // makes the self-join below exchange-free (localCheckpoint preserves
+    // outputPartitioning).
+    val staged = labeled(spark, "hnsw-build: shard assign") {
+      sharded.repartition(spark.sparkContext.defaultParallelism, col("shard"))
+        .localCheckpoint()
+    }
+    val n = labeled(spark, "hnsw-build: corpus count")(corpus.count())
+    // per-level node counts in ONE aggregation (level = how high the
+    // nested digest rule promotes a node); every sizing decision below
+    // (top-layer clamp, dense-vs-blocked, entry pool) reads this map
+    // instead of re-counting the staged table per question
+    val levelHist: Map[Int, Long] = labeled(spark, "hnsw-build: level hist") {
+      staged
+        .select(col("vec_id")).distinct()
+        .groupBy(levelCol(MaxLayersStatic).as("lvl")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
+    def promotedCount(l: Int): Long =
+      levelHist.collect { case (lvl, c) if lvl >= l => c }.sum
+    // engine layer count, clamped down while a top layer would be empty
+    // (a pseudorandom-digest tail case at tiny N; deterministic per
+    // corpus) — a 1-node top layer is fine (entry only, hops no-op)
+    var nLayers = nLayersFor(n)
+    while (nLayers > 2 && promotedCount(nLayers - 1) == 0) nLayers -= 1
+    // layer 0/1 (and any over-cap express layer): shard-blocked pairs —
+    // O(Σ|shard|²), never N². Two structural fixes over the naive
+    // a-join-b-window chain (round-15, both measured):
+    //
+    //  1. SLICED scoring (guide §2.5): the pair stream is byte-small
+    //     (three narrow columns) but CPU-dense (a 64-dim cosine per
+    //     row), so AQE's byte-based coalescing collapsed the join to
+    //     ONE task — 2.2 s single-threaded at sf0.1. Side A splits into
+    //     [[PairSlices]] deterministic src-slices, side B replicates
+    //     per slice (B rows are node-sized, the replication is MBs),
+    //     and the explicit repartition count pins the parallelism AQE
+    //     would take away. Work per task is bounded by
+    //     cap²/PairSlices however hot a shard is.
+    //  2. Per-(shard, src) local top-M BEFORE any exchange (guide §2.3
+    //     "aggregate before you shuffle"): a src's global top-M over
+    //     its 2 shards' candidates is the top-M of its two shard-local
+    //     top-Ms (any dst outside a local top-M is beaten by ≥M dsts of
+    //     the same shard, all global candidates), so capEdges sees
+    //     ≤ 2M rows per node instead of the full Σ|shard|² stream
+    //     (1.6M pairs → ~60k rows at sf0.1). The slice key is a pure
+    //     function of src, so the (shard, slice, src) window ≡ the
+    //     (shard, src) window and runs in the join stage (partitioning
+    //     exprs ⊆ window keys — no exchange, WindowGroupLimit keeps
+    //     the heap M-sized).
+    def blockedPairs(nodes: DataFrame): DataFrame = {
+      val p = spark.sparkContext.defaultParallelism
+      val a = nodes.select(col("shard"), col("vec_id").as("src"),
+          col("embedding").as("ea"))
+        .withColumn("__slice", pmod(col("src"), lit(PairSlices)))
+        .repartition(p, col("shard"), col("__slice"))
+      val b = nodes.select(col("shard"), col("vec_id").as("dst"),
+          col("embedding").as("eb"))
+        .withColumn("__slice",
+          explode(typedLit((0L until PairSlices.toLong).toSeq)))
+        .repartition(p, col("shard"), col("__slice"))
+      val wLocal = Window.partitionBy(col("shard"), col("__slice"), col("src"))
+        .orderBy(col("sim").desc, col("dst").asc)
+      a.join(b, Seq("shard", "__slice"))
+        .filter(col("src") =!= col("dst"))
+        .withColumn("sim",
+          round(GraftFunctions.cosineSim(col("ea"), col("eb")), 6))
+        .select(col("shard"), col("__slice"), col("src"), col("dst"), col("sim"))
+        .withColumn("__lrn", row_number().over(wLocal))
+        .filter(col("__lrn") <= M)
+        .select(col("src"), col("dst"), col("sim"))
+    }
+    // express layers ≤ DenseLayerCap: all-pairs over the deduped
+    // promoted set (metadata-sized by construction — see scaladoc)
+    def densePairs(nodes: DataFrame): DataFrame = {
+      val uniq = nodes.select(col("vec_id"), col("embedding"))
+        .dropDuplicates("vec_id")
+      val a = uniq.select(col("vec_id").as("src"), col("embedding").as("ea"))
+      val b = uniq.select(col("vec_id").as("dst"), col("embedding").as("eb"))
+      a.crossJoin(b)
+        .filter(col("src") =!= col("dst"))
+        .withColumn("sim",
+          round(GraftFunctions.cosineSim(col("ea"), col("eb")), 6))
+        .select(col("src"), col("dst"), col("sim"))
+    }
+    // hot-shard guard: over-cap shards split for the PAIRING stage only
+    // (fixture shards all sit under the cap, so this is the staged
+    // frame itself there); the sidecar below keeps trained cell ids
+    val pairNodes = labeled(spark, "hnsw-build: cap shards")(capShards(staged))
+    val layerEdges = (0 until nLayers).map { l =>
+      val nodes = if (l == 0) pairNodes else pairNodes.filter(promotedPred(l))
+      val pairs =
+        if (l >= 2 && promotedCount(l) <= DenseLayerCap) densePairs(nodes)
+        else blockedPairs(nodes)
+      capEdges(pairs, l)
+    }
+    // DiskANN layout: denormalize dst's embedding onto the adjacency
+    // row (one build-time join against the staged shards), so serving
+    // hops read ONLY the edge table and never the corpus — and
+    // partition it by (layer, src_bucket) so a hop's literal probe
+    // PLANS only the beam's bucket directories (file-level pruning,
+    // the InvertedIndex postings discipline).
+    val dstEmb = staged.select(col("vec_id").as("dst"),
+      col("embedding").as("dst_emb")).dropDuplicates("dst")
+    labeled(spark, "hnsw-build: edges write") {
+      layerEdges.reduce(_ union _).join(dstEmb, Seq("dst"))
+        .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
+        .withColumn("src_bucket", srcBucketCol(col("src")))
+        .repartition(col("layer"), col("src_bucket"))
+        .write.mode("overwrite").partitionBy("layer", "src_bucket")
+        .parquet(edgesPath(sfDir))
+    }
+    // shard-membership sidecar, partitioned by shard: appendToGraph
+    // pairs new nodes against ONLY their touched shards (pruned read)
+    labeled(spark, "hnsw-build: shards write") {
+      staged.select(col("vec_id"), col("embedding"), col("shard"))
+        .write.mode("overwrite").partitionBy("shard")
+        .parquet(shardsPath(edgesPath(sfDir)))
+    }
+    // meta carries the corpus MEMBERSHIP fingerprint beside the entry
+    // point: the order-independent (n, digest-sum) of the indexed ids,
+    // so a reader can detect "rows were appended/deleted since this
+    // graph was built" from two 1-row digests (ann_stale_check) —
+    // in-place vector mutation is out of scope for a membership digest
+    // (the id canon carries no floats; float rendering isn't
+    // cross-engine portable — the table_fingerprint caveat).
+    // entry carries ITS embedding too — hop 0 (scoring the entry point)
+    // must not touch the corpus either. n_layers rides along so every
+    // reader (walk, maintenance, oracle) sees the realized hierarchy.
+    val topPromoted = staged.filter(promotedPred(nLayers - 1))
+    val entryPool =
+      if (promotedCount(nLayers - 1) > 0) topPromoted else staged
+    val entry = entryPool.agg(min(col("vec_id")).as("entry"))
+      .join(dstEmb.select(col("dst").as("entry"),
+        col("dst_emb").as("entry_emb")), Seq("entry"))
+    val fp = graft.streaming.Streaming.fingerprintStream(
+      corpus.select(col("vec_id")), col("vec_id").cast("string"))
+      .select(col("n_rows").as("corpus_n"), col("fp").as("corpus_fp"))
+    labeled(spark, "hnsw-build: meta write") {
+      entry.crossJoin(fp).withColumn("n_layers", lit(nLayers))
+        .coalesce(1).write.mode("overwrite").parquet(metaPath(sfDir))
+    }
+    staged.unpersist()
+  }
+
+  /** [[layout]]'s build on the driver, when the graph fits
+    * [[DriverGraphMaxRows]]: the corpus is sized from its Parquet footers
+    * and read with the schema one footer declares (no job), collected
+    * once, built by [[driverGraph]], and its edges, shards and meta are
+    * written as local frames on three threads — four jobs in all. False,
+    * having written nothing, when the corpus or the graph exceeds the
+    * cap, a shard exceeds [[ShardCap]], or the corpus is not (long vec_id,
+    * `array<float>` embedding).
+    */
+  private def buildOnDriver(spark: SparkSession, sfDir: String, ivfPath: String): Boolean = {
+    val declared = dataFiles(spark, ivfPath).nextOption()
+      .map(ManifestIO.sparkSchema(spark.sparkContext.hadoopConfiguration, _))
+      .filter(s => s.find(_.name == "vec_id").exists(_.dataType == LongType) &&
+        s.find(_.name == "embedding").exists(f => isFloatArray(f.dataType)))
+    declared.nonEmpty && footerRows(spark, ivfPath) * MaxDegree <= DriverGraphMaxRows && {
+      val nodes = labeled(spark, "hnsw-build: corpus collect") {
+        readSidecar(spark, ivfPath, declared.get).filter(col("vec_id") =!= 0)
+          .select(col("vec_id"), col("embedding")).collect()
+      }.map(r => r.getLong(0) -> floatVec(r.getSeq[Float](1))).toSeq
+      driverGraph(nodes, nearestShards(spark, sfDir)).exists { g =>
+        val m = g.meta
+        // the edges are scored on their write's thread, while the shards
+        // and meta writes run
+        Publish.fanOut("hnsw-build", Seq(
+          () => writeRows(spark, "hnsw-build: edges write", BaseSchema, g.edges.map { case (l, src, dst, e) =>
+            InternalRow(src, dst, e, l, srcBucket(src)) }, edgesPath(sfDir), "overwrite", "layer", "src_bucket"),
+          () => writeRows(spark, "hnsw-build: shards write", ShardsSchema, g.shards.map { case (id, e, sh) =>
+            InternalRow(id, e, sh) }, shardsPath(edgesPath(sfDir)), "overwrite", "shard"),
+          () => writeRows(spark, "hnsw-build: meta write", MetaSchema, Seq(InternalRow(m.entry,
+            floatVec(m.entryEmb), m.corpusN, m.corpusFp, m.nLayers)), metaPath(sfDir), "overwrite")))
+        true
+      }
+    }
+  }
+
+  /** A graph built on the driver: its (vec_id, embedding, shard)
+    * members, its meta, and its (layer, src, dst, dst's vector) edges,
+    * scored on first use.
+    */
+  private[graft] final class BuiltGraph(val shards: Seq[(Long, ArrayData, Int)], val meta: GraphMeta,
+                                        score: => Seq[(Int, Long, Long, ArrayData)]) {
+    lazy val edges: Seq[(Int, Long, Long, ArrayData)] = score
+  }
+
+  /** [[buildDistributed]] on the driver, value for value, over the corpus
+    * `nodes` and the shards `shardsOf` assigns each vector
+    * ([[nearestShards]]): the level histogram and the layer clamp; per
+    * layer, each src's top-M within each of its shards (within all
+    * promoted nodes on a dense express layer), merged to its top-M, then
+    * the reverse edges and the [[MaxDegree]] re-cap ([[topPerSrc]], the
+    * capEdges discipline); the min-id top-layer entry; the membership
+    * fingerprint. Each src scores its candidates into a bounded top-M
+    * ([[TopM]]), so no pair list is held. None, before any pair is scored,
+    * when there are no nodes or ids repeat, when the edge bound (MaxDegree
+    * per node per layer) exceeds [[DriverGraphMaxRows]], or when a shard
+    * exceeds [[ShardCap]] (the scale path splits it).
+    */
+  private[graft] def driverGraph(nodes: Seq[(Long, ArrayData)],
+                                 shardsOf: ArrayData => Seq[Int]): Option[BuiltGraph] = {
+    val ids = nodes.map(_._1)
+    val lvl = ids.map(id => id -> level(id, MaxLayersStatic)).toMap
+    def promotedCount(l: Int): Long = lvl.valuesIterator.count(_ >= l).toLong
+    var nLayers = nLayersFor(nodes.length)
+    while (nLayers > 2 && promotedCount(nLayers - 1) == 0) nLayers -= 1
+    val shards = nodes.flatMap { case (id, e) => shardsOf(e).map(sh => (id, e, sh)) }
+    if (nodes.isEmpty || lvl.size != nodes.length ||
+        MaxDegree * (0 until nLayers).map(promotedCount).sum > DriverGraphMaxRows ||
+        shards.groupBy(_._3).valuesIterator.exists(_.length > ShardCap)) return None
+    val vec = nodes.toMap
+    def edges = (0 until nLayers).flatMap { l =>
+      val at = shards.filter(s => lvl(s._1) >= l)
+      val groups =
+        if (l >= 2 && promotedCount(l) <= DenseLayerCap) Seq(at.map(_._1).distinct)
+        else at.groupBy(_._3).values.map(_.map(_._1)).toSeq
+      val local = groups.flatMap { g =>
+        val members = g.map(id => id -> vec(id))
+        members.map { case (src, e) =>
+          val best = new TopM(M)
+          members.foreach { case (dst, d) =>
+            if (dst != src) {
+              // round(_, 6) moves a cosine by at most 5e-7, so a raw cosine
+              // 1e-6 under the current M-th sim cannot enter: skip rounding it
+              val raw = CosineSimilarity.cosine(e, true, d, true)
+              if (best.admits(raw + 1e-6)) best.offer(dst, CosineSimilarity.round6(raw))
+            }
+          }
+          src -> best.result
+        }
+      }
+      val out = local.groupBy(_._1).toSeq.flatMap { case (src, tops) =>
+        val best = new TopM(M)
+        tops.foreach(_._2.foreach { case (dst, sim) => best.offer(dst, sim) })
+        best.result.map { case (dst, sim) => (src, dst, sim) }
+      }
+      // navigability: reverse edges, re-capped at MaxDegree
+      topPerSrc(out.flatMap { case (src, dst, sim) => Seq((src, dst, sim, vec(dst)), (dst, src, sim, vec(src))) },
+        MaxDegree).map { case (src, dst, _, e) => (l, src, dst, e) }
+    }
+    val topLayer = nLayers - 1
+    val entry = (if (promotedCount(topLayer) > 0) ids.filter(lvl(_) >= topLayer) else ids).min
+    val (n, fp) = idsFingerprint(ids)
+    Some(new BuiltGraph(shards, GraphMeta(entry, vec(entry).toFloatArray().toSeq, n, fp, nLayers), edges))
+  }
+
+  /** A bounded top-`m` selection of (id, sim) by (sim desc, id asc), the
+    * order [[topPerSrc]] sorts by; one entry per id (a repeated id keeps
+    * its first sim).
+    */
+  private final class TopM(m: Int) {
+    private val top = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+
+    private def before(a: (Long, Double), b: (Long, Double)): Boolean = {
+      val c = java.lang.Double.compare(-a._2, -b._2)
+      c < 0 || (c == 0 && a._1 < b._1)
+    }
+
+    /** False when a sim of at most `bound` can no longer enter. */
+    def admits(bound: Double): Boolean = top.length < m || !(bound < top.last._2)
+
+    def offer(id: Long, sim: Double): Unit = {
+      val c = (id, sim)
+      if ((top.length < m || before(c, top.last)) && !top.exists(_._1 == id)) {
+        val at = top.indexWhere(before(c, _))
+        top.insert(if (at < 0) top.length else at, c)
+        if (top.length > m) top.remove(m)
+      }
+    }
+
+    def result: Seq[(Long, Double)] = top.toSeq
+  }
+
+  /** The driver twin of Ann.nearestCells(n = 2) against the sfDir's
+    * trained centroids: a vector's two nearest cells by (round-6 cosine
+    * desc, cell asc), the shards a build or an append assigns it to.
+    */
+  private def nearestShards(spark: SparkSession, sfDir: String): ArrayData => Seq[Int] = {
+    val cents = Ann.kmeansLayout(spark, sfDir)._2.map { case (cell, v) => cell -> ArrayData.toArrayData(v) }
+    e => cents.map { case (cell, v) => (cell, CosineSimilarity.roundedCosine(e, true, v, false)) }
+      .sortBy { case (cell, sim) => (-sim, cell) }.take(2).map(_._1)
+  }
 
   /** Beam search over the dumped graph for a batch of queries
     * (`queries`: (qid, q_emb)), per-qid beams, fixed schedule, returning
@@ -1656,20 +1818,26 @@ object Hnsw {
   private def footerRows(spark: SparkSession, dir: String): Long =
     dataFiles(spark, dir).map(ManifestIO.rowCount(spark.sparkContext.hadoopConfiguration, _)).sum
 
-  /** Write driver rows of `schema` to `dir` in one Spark job. A
-    * partitioned write's rows are sorted by their (int) partition values,
-    * so each slice of the local scan writes a contiguous run of
-    * directories: the write spreads over the cores with about one file
-    * per directory. An unpartitioned write is one file.
+  /** Write driver rows of `schema` to `dir` in one Spark job labelled
+    * `desc`. A partitioned write's rows are grouped by their (int)
+    * partition values, and whole directories, in key order, are dealt to
+    * at most defaultParallelism slices: the write spreads over the cores
+    * and writes one file per directory, as a distributed write
+    * hash-partitioned by the same columns does. An unpartitioned write is
+    * one file.
     */
-  private def writeRows(spark: SparkSession, schema: StructType, rows: Seq[InternalRow],
-                        dir: String, mode: String, partitionBy: String*): Unit = {
+  private def writeRows(spark: SparkSession, desc: String, schema: StructType, rows: Seq[InternalRow],
+                        dir: String, mode: String, partitionBy: String*): Unit = labeled(spark, desc) {
     import scala.math.Ordering.Implicits.seqOrdering
     val keys = partitionBy.map(schema.fieldIndex)
-    val frame =
-      if (keys.isEmpty) localFrame(spark, schema, rows).coalesce(1)
-      else localFrame(spark, schema, rows.sortBy(r => keys.map(r.getInt)))
-    frame.write.mode(mode).partitionBy(partitionBy: _*).parquet(dir)
+    val unsafe = UnsafeProjection.create(schema)
+    val dirs = rows.groupBy(r => keys.map(r.getInt)).toSeq.sortBy(_._1)
+      .map(_._2.map(r => unsafe(r).copy(): InternalRow))
+    val perSlice = math.ceil(dirs.length.toDouble / spark.sparkContext.defaultParallelism).toInt
+    val slices = if (dirs.isEmpty) Seq(Nil) else dirs.grouped(perSlice).map(_.flatten).toSeq
+    GraftSqlBridge.ofInternalRows(spark,
+      spark.sparkContext.parallelize(slices, slices.length).flatMap(_.iterator), schema)
+      .write.mode(mode).partitionBy(partitionBy: _*).parquet(dir)
   }
 
   /** Write a compaction's new base and shards to their `-compact-tmp`
@@ -1732,11 +1900,11 @@ object Hnsw {
     metaOf(Publish.readRepaired(spark, metaDir).head())
 
   /** Commit `m` as the graph's meta through [[Publish.commitFrame]]
-    * (tmp write, swap with rollback).
+    * (tmp write, swap with rollback), its jobs labelled as `verb`'s.
     */
-  private def commitMeta(spark: SparkSession, metaDir: String, m: GraphMeta): Unit =
-    Publish.commitFrame(spark.createDataFrame(java.util.List.of(
-      Row(m.entry, m.entryEmb, m.corpusN, m.corpusFp, m.nLayers)), MetaSchema), metaDir)
+  private def commitMeta(spark: SparkSession, verb: String, metaDir: String, m: GraphMeta): Unit =
+    labeled(spark, s"$verb: meta commit")(Publish.commitFrame(spark.createDataFrame(java.util.List.of(
+      Row(m.entry, m.entryEmb, m.corpusN, m.corpusFp, m.nLayers)), MetaSchema), metaDir))
 
   /** Resolve a graph directory to its LIVE adjacency — [[morResolve]]
     * over the UNPRUNED scans (sidecars resolved through the same
@@ -1831,12 +1999,9 @@ object Hnsw {
     */
   private def appendOnDriver(spark: SparkSession, sfDir: String, edgesDir: String, metaDir: String,
                              c: GraphCopy, nv: Seq[(Long, ArrayData)]): GraphCopy = {
-    val cents = Ann.kmeansLayout(spark, sfDir)._2.map { case (cell, v) => cell -> ArrayData.toArrayData(v) }
     val nLayers = c.meta.nLayers
-    val newShards = nv.flatMap { case (id, e) =>
-      cents.map { case (cell, v) => (cell, CosineSimilarity.roundedCosine(e, true, v, false)) }
-        .sortBy { case (cell, sim) => (-sim, cell) }.take(2).map { case (cell, _) => (id, e, cell) }
-    }
+    val shardsOf = nearestShards(spark, sfDir)
+    val newShards = nv.flatMap { case (id, e) => shardsOf(e).map(sh => (id, e, sh)) }
     val members = newShards.map(_._3).distinct
       .flatMap(sh => c.members.getOrElse(sh, Nil).map { case (id, e) => (id, e, sh) }) ++ newShards
     val memberVec = members.map(m => m._1 -> m._2).toMap
@@ -1862,19 +2027,19 @@ object Hnsw {
     }
     val replaced = delta.map(r => (r._1, r._2)).distinct
     Publish.fanOut("hnsw-append", Seq(
-      () => writeRows(spark, DeltaSchema, delta.map { case (l, src, dst, e) =>
+      () => writeRows(spark, "hnsw-append: delta write", DeltaSchema, delta.map { case (l, src, dst, e) =>
         InternalRow(src, dst, e, gen, l, srcBucket(src)) }, deltaPath(edgesDir), "append", "layer", "src_bucket"),
-      () => writeRows(spark, ReplacedSchema, replaced.map { case (l, src) => InternalRow(l, src, gen) },
-        replacedPath(edgesDir), "append"),
-      () => writeRows(spark, ShardsSchema, newShards.map { case (id, e, sh) => InternalRow(id, e, sh) },
-        shardsPath(edgesDir), "append", "shard")))
+      () => writeRows(spark, "hnsw-append: replaced write", ReplacedSchema,
+        replaced.map { case (l, src) => InternalRow(l, src, gen) }, replacedPath(edgesDir), "append"),
+      () => writeRows(spark, "hnsw-append: shards write", ShardsSchema,
+        newShards.map { case (id, e, sh) => InternalRow(id, e, sh) }, shardsPath(edgesDir), "append", "shard")))
     // incremental meta: additive fp, count, entry re-election — committed
     // LAST (see the maintenance-verbs comment)
     val (n, fp) = idsFingerprint(nv.map(_._1))
     val grown = c.meta.plus(n, fp)
     val meta = nv.filter(v => promoted(v._1, nLayers - 1)).sortBy(_._1).headOption
       .filter(_._1 < grown.entry).fold(grown) { case (id, e) => grown.enter(id, e) }
-    commitMeta(spark, metaDir, meta)
+    commitMeta(spark, "hnsw-append", metaDir, meta)
     val superseded = replaced.toSet
     GraphCopy.of(edgesDir, c.rows.filterNot(r => superseded((r._1, r._2))) ++ delta.iterator,
       c.members.iterator.flatMap { case (sh, ms) => ms.map { case (id, e) => (sh, id, e) } }.toSeq ++
@@ -1986,7 +2151,7 @@ object Hnsw {
     // incremental meta: additive fp, count, entry re-election — committed
     // LAST (see the maintenance-verbs comment)
     val grown = old.plus(deltaFp.getLong(0), deltaFp.getLong(1))
-    commitMeta(spark, metaDir, promoted.headOption.filter(_.getLong(0) < old.entry) match {
+    commitMeta(spark, "hnsw-append", metaDir, promoted.headOption.filter(_.getLong(0) < old.entry) match {
       case Some(e) => grown.copy(entry = e.getLong(0), entryEmb = e.getSeq[Float](1))
       case None => grown
     })
@@ -2025,7 +2190,8 @@ object Hnsw {
           .collect().map(_.getLong(0)).toSet)
     val fresh = candidates.filter(members)
     if (fresh.nonEmpty) mutating(spark, edgesDir, metaDir) {
-      writeRows(spark, TombstoneSchema, fresh.map(InternalRow(_)), tombstonesPath(edgesDir), "append")
+      writeRows(spark, "hnsw-delete: tombstone write", TombstoneSchema, fresh.map(InternalRow(_)),
+        tombstonesPath(edgesDir), "append")
       val old = copy.map(_.meta).getOrElse(readMeta(spark, metaDir))
       // the SAME engine digest the build's fingerprint used — additive mod
       // 2^61−1, so retiring ids is a subtraction of the batch digest
@@ -2037,7 +2203,7 @@ object Hnsw {
         if (!fresh.contains(old.entry)) shrunk
         else copy.fold(electEntry(spark, edgesDir, g.tombs, fresh, shrunk))(c =>
           electOnDriver(c.memberVecs -- c.tombs -- fresh, edgesDir, shrunk))
-      commitMeta(spark, metaDir, meta)
+      commitMeta(spark, "hnsw-delete", metaDir, meta)
       copy.map(c => c.copy(tombs = c.tombs ++ fresh, meta = meta))
     }
   }
@@ -2101,15 +2267,15 @@ object Hnsw {
     val members = c.members.toSeq.flatMap { case (sh, ms) =>
       ms.collect { case (id, e) if !c.tombs(id) => (sh, id, e) } }
     publishCompacted(spark, edgesDir)(
-      writeRows(spark, BaseSchema, live.map { case (l, src, dst, e) =>
+      writeRows(spark, "hnsw-compact: base write", BaseSchema, live.map { case (l, src, dst, e) =>
         InternalRow(src, dst, e, l, srcBucket(src)) }, _, "overwrite", "layer", "src_bucket"),
-      writeRows(spark, ShardsSchema, members.map { case (sh, id, e) => InternalRow(id, e, sh) },
-        _, "overwrite", "shard"))
+      writeRows(spark, "hnsw-compact: shards write", ShardsSchema,
+        members.map { case (sh, id, e) => InternalRow(id, e, sh) }, _, "overwrite", "shard"))
     val meta =
       if (!c.tombs(c.meta.entry)) c.meta
       else {
         val elected = electOnDriver(members.map(m => m._2 -> m._3).toMap, edgesDir, c.meta)
-        commitMeta(spark, metaDir, elected)
+        commitMeta(spark, "hnsw-compact", metaDir, elected)
         elected
       }
     dropSidecars(spark, edgesDir)
@@ -2138,7 +2304,7 @@ object Hnsw {
       // election pool is exactly the live membership; electEntry prefers
       // the highest promoted level, falls back level by level, and
       // refuses an empty graph instead of clobbering the meta
-      commitMeta(spark, metaDir, electEntry(spark, edgesDir, None, Nil, old))
+      commitMeta(spark, "hnsw-compact", metaDir, electEntry(spark, edgesDir, None, Nil, old))
     dropSidecars(spark, edgesDir)
   }
 

@@ -91,6 +91,45 @@ class HnswMaintenanceSpec extends AnyFunSuite {
 
   private def entryOf(m: String): Long = spark.read.parquet(m).head().getAs[Long]("entry")
 
+  /** Data files in each directory of a (partitioned) artifact that holds any. */
+  private def filesPerDir(dir: String): Map[String, Int] = {
+    val files = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+    Iterator.continually(files).takeWhile(_.hasNext()).map(_.next().getPath)
+      .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+      .toSeq.groupBy(_.getParent.toString).map { case (d, ps) => d -> ps.length }
+  }
+
+  private def assertOneFilePerDir(dir: String, what: String): Unit = {
+    val split = filesPerDir(dir).filter(_._2 != 1)
+    assert(split.isEmpty, s"$what: ${split.size} directories of $dir hold more than one file: ${split.take(3)}")
+  }
+
+  /** A graph's built artifacts: base, shards and meta. */
+  private def builtArtifacts(e: String, m: String): Seq[String] = Seq(e, Hnsw.shardsPath(e), m)
+
+  for (fixture <- Seq("sf0.001", "sf0.01", "sf0.1"))
+    test(s"the driver build writes the distributed build's rows, one file per directory ($fixture)") {
+      val dir = s"/root/testdata/$fixture"
+      graft.operators.Ann.kmeansLayout(spark, dir)
+      Hnsw.resetMemos()
+      val jobs = PlanTestUtil.jobsOf(spark)(Hnsw.layout(spark, dir))
+      assert(jobs <= 4, s"the graph of $fixture did not build on the driver: $jobs Spark jobs")
+      val (e, m) = (Hnsw.edgesPath(dir), Hnsw.metaPath(dir))
+      val (ae, am) = (e + "-driver-built", e + "-driver-built-meta")
+      builtArtifacts(e, m).zip(builtArtifacts(ae, am)).foreach { case (from, to) => Hnsw.fsCopy(spark, from, to) }
+      Hnsw.resetMemos()
+      withCap(0)(Hnsw.layout(spark, dir))
+      builtArtifacts(ae, am).zip(builtArtifacts(e, m)).foreach { case (d, s) =>
+        val (driver, distributed) = (contents(d), contents(s))
+        val same = driver.nonEmpty && driver == distributed
+        assert(same, s"driver-built $d ≠ distributed $s: ${driver.diff(distributed).size} rows only in the " +
+          s"driver build, ${distributed.diff(driver).size} only in the distributed one")
+      }
+      Seq(ae -> "the driver-built base", Hnsw.shardsPath(ae) -> "the driver-built shards",
+        e -> "the distributed base").foreach { case (d, what) => assertOneFilePerDir(d, what) }
+      assert(ranked(ae, am, panel(dir)) == ranked(e, m, panel(dir)), "the two builds serve other results")
+    }
+
   for (fixture <- Seq("sf0.001", "sf0.01", "sf0.1"))
     test(s"driver-path append, delete and compact ≡ the distributed verbs, row for row ($fixture)") {
       val dir = s"/root/testdata/$fixture"
@@ -125,6 +164,8 @@ class HnswMaintenanceSpec extends AnyFunSuite {
         step("delete")(Hnsw.deleteFromGraph(spark, _, _, doomed))
         assert(!doomed.contains(entryOf(dm)), s"the deleted entry was not re-elected on the $name graph")
         step("compact")(Hnsw.compactGraph(spark, _, _))
+        assertOneFilePerDir(de, s"the driver-compacted $name base")
+        assertOneFilePerDir(se, s"the distributed-compacted $name base")
       }
     }
 

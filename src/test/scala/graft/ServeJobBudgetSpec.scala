@@ -55,6 +55,14 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     */
   val UpdateJobBudget = 10
 
+  /** Jobs of a cold `Hnsw.layout` of this fixture with the k-means
+    * layout memo warm: 41 while every graph was built by the distributed
+    * shard-pair recipe; 4 once a graph within `Hnsw.DriverGraphMaxRows`
+    * builds on the driver: the corpus collect, then the edges, shards and
+    * meta writes.
+    */
+  val BuildJobBudget = 4
+
   /** Jobs started by `body` (other threads' jobs never count). */
   private def jobsOf(body: => Unit): Int = PlanTestUtil.jobsOf(spark)(body)
 
@@ -133,6 +141,42 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     assert(sims.nonEmpty && sims === sims.sorted.reverse)
     assert(jobs <= ServeJobBudget,
       s"a sorted range search ran $jobs jobs, over the serve budget of $ServeJobBudget")
+  }
+
+  test("a cold build of a small graph stays within its job budget") {
+    graft.operators.Ann.kmeansLayout(spark, sf)
+    Hnsw.resetMemos()
+    val jobs = jobsOf(Hnsw.layout(spark, sf))
+    info(s"cold graph build: $jobs Spark jobs")
+    assert(jobs <= BuildJobBudget, s"the build ran $jobs jobs, over its budget of $BuildJobBudget")
+  }
+
+  test("the row bound and a shard over ShardCap each send the build to the distributed recipe") {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    val rnd = new scala.util.Random(7)
+    def unit(): ArrayData = {
+      val v = Array.fill(16)(rnd.nextGaussian().toFloat)
+      val norm = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
+      ArrayData.toArrayData(v.map(_ / norm))
+    }
+    def built(nodes: Seq[(Long, ArrayData)], cap: Long, shardsOf: ArrayData => Seq[Int]): Boolean = {
+      val saved = Hnsw.DriverGraphMaxRows
+      Hnsw.DriverGraphMaxRows = cap
+      try Hnsw.driverGraph(nodes, shardsOf).nonEmpty finally Hnsw.DriverGraphMaxRows = saved
+    }
+    val nodes = (1L to 200L).map(_ -> unit())
+    // two shards per node, each about half the nodes
+    val twoShards: ArrayData => Seq[Int] = e => Seq(if (e.getFloat(0) < 0) 0 else 1, if (e.getFloat(1) < 0) 2 else 3)
+    val roomy = Hnsw.MaxDegree.toLong * nodes.length * Hnsw.MaxLayersStatic
+    assert(built(nodes, roomy, twoShards), "a graph within the cap did not build on the driver")
+    // every node has MaxDegree edge slots on layer 0 alone
+    assert(!built(nodes, Hnsw.MaxDegree.toLong * nodes.length - 1, twoShards),
+      "a graph over the row bound built on the driver")
+    val crowded = (1L to Hnsw.ShardCap + 1L).map(_ -> unit())
+    assert(built(crowded, Hnsw.MaxDegree.toLong * crowded.length * Hnsw.MaxLayersStatic, twoShards),
+      "a graph of shards within ShardCap did not build on the driver")
+    assert(!built(crowded, Hnsw.MaxDegree.toLong * crowded.length * Hnsw.MaxLayersStatic, _ => Seq(0, 1)),
+      "a graph with a shard over ShardCap built on the driver")
   }
 
   test("the first serve after a mutation loads the resident copy within its job budget") {
