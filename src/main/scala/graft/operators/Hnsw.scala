@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
@@ -31,10 +31,10 @@ import graft.expressions.{CosineSimilarity, GraftFunctions}
   * [[DriverGraphMaxRows]], the cap the resident copy is served and
   * maintained under, builds the same recipe on the driver instead: one
   * corpus collect, each src scored into a bounded top-M per shard, and
-  * the edges, shards and meta written as local frames on three threads —
-  * four Spark jobs against the distributed recipe's ~40, row for row the
-  * same artifacts (HnswMaintenanceSpec). The distributed recipe stays the
-  * scale path.
+  * the edges, shards and meta written straight from driver rows by
+  * [[Publish.writeRows]] on three threads — one Spark job (the collect)
+  * against the distributed recipe's ~40, row for row the same artifacts
+  * (HnswMaintenanceSpec). The distributed recipe stays the scale path.
   *
   * LAYERS: the hierarchy has n_layers = min(4, max(2, 1 +
   * ⌊log_LayerMod(N/4)⌋)) levels — the standard ~log_LayerMod(N) growth,
@@ -74,7 +74,8 @@ import graft.expressions.{CosineSimilarity, GraftFunctions}
   * shared cosine kernel, so a warm API-sized search starts no Spark job —
   * the reuse-across-a-session posture of incremental top-k search (EDBT
   * 2020). The maintenance verbs of such a graph compute from the same
-  * copy and patch it in place, so an update leaves no reload behind. A
+  * copy, write their rows with no Spark job ([[Publish.writeRows]]) and
+  * patch the copy in place, so an update leaves no reload behind. A
   * larger graph, or a bulk panel, keeps the per-hop edge probes below and
   * the distributed verbs: the scale path.
   *
@@ -294,9 +295,7 @@ object Hnsw {
   }
 
   /** Label the jobs `body` starts on this thread in the UI/listeners
-    * (guide §1.5), restoring the caller's label after. Spark local
-    * properties are per thread, so a [[Publish.fanOut]] task labels its
-    * own jobs.
+    * (guide §1.5), restoring the caller's label after.
     */
   private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
     val sc = spark.sparkContext
@@ -487,7 +486,7 @@ object Hnsw {
     * [[DriverGraphMaxRows]]: the corpus is sized from its Parquet footers
     * and read with the schema one footer declares (no job), collected
     * once, built by [[driverGraph]], and its edges, shards and meta are
-    * written as local frames on three threads — four jobs in all. False,
+    * written by [[Publish.writeRows]] on three threads — one job in all. False,
     * having written nothing, when the corpus or the graph exceeds the
     * cap, a shard exceeds [[ShardCap]], or the corpus is not (long vec_id,
     * `array<float>` embedding).
@@ -507,11 +506,11 @@ object Hnsw {
         // the edges are scored on their write's thread, while the shards
         // and meta writes run
         Publish.fanOut("hnsw-build", Seq(
-          () => writeRows(spark, "hnsw-build: edges write", BaseSchema, g.edges.map { case (l, src, dst, e) =>
+          () => Publish.writeRows(spark, BaseSchema, g.edges.map { case (l, src, dst, e) =>
             InternalRow(src, dst, e, l, srcBucket(src)) }, edgesPath(sfDir), "overwrite", "layer", "src_bucket"),
-          () => writeRows(spark, "hnsw-build: shards write", ShardsSchema, g.shards.map { case (id, e, sh) =>
+          () => Publish.writeRows(spark, ShardsSchema, g.shards.map { case (id, e, sh) =>
             InternalRow(id, e, sh) }, shardsPath(edgesPath(sfDir)), "overwrite", "shard"),
-          () => writeRows(spark, "hnsw-build: meta write", MetaSchema, Seq(InternalRow(m.entry,
+          () => Publish.writeRows(spark, MetaSchema, Seq(InternalRow(m.entry,
             floatVec(m.entryEmb), m.corpusN, m.corpusFp, m.nLayers)), metaPath(sfDir), "overwrite")))
         true
       }
@@ -1704,9 +1703,10 @@ object Hnsw {
   //
   // Two paths, picked by the one [[DriverGraphMaxRows]] cap. A graph
   // within it is maintained on the driver: each verb computes its rows
-  // from the resident [[GraphCopy]] and writes them as local frames — no
-  // Spark job but the writes — then the registry installs the patched
-  // copy, so the next search starts no reload. A graph over the cap keeps
+  // from the resident [[GraphCopy]] and writes them straight to Parquet
+  // with [[Publish.writeRows]] — no Spark job; an append collects its
+  // batch — then the registry installs the patched copy, so the next
+  // search starts no reload. A graph over the cap keeps
   // the distributed verbs (the scale path). Both paths write row-identical
   // artifacts (HnswMaintenanceSpec).
   //
@@ -1818,28 +1818,6 @@ object Hnsw {
   private def footerRows(spark: SparkSession, dir: String): Long =
     dataFiles(spark, dir).map(ManifestIO.rowCount(spark.sparkContext.hadoopConfiguration, _)).sum
 
-  /** Write driver rows of `schema` to `dir` in one Spark job labelled
-    * `desc`. A partitioned write's rows are grouped by their (int)
-    * partition values, and whole directories, in key order, are dealt to
-    * at most defaultParallelism slices: the write spreads over the cores
-    * and writes one file per directory, as a distributed write
-    * hash-partitioned by the same columns does. An unpartitioned write is
-    * one file.
-    */
-  private def writeRows(spark: SparkSession, desc: String, schema: StructType, rows: Seq[InternalRow],
-                        dir: String, mode: String, partitionBy: String*): Unit = labeled(spark, desc) {
-    import scala.math.Ordering.Implicits.seqOrdering
-    val keys = partitionBy.map(schema.fieldIndex)
-    val unsafe = UnsafeProjection.create(schema)
-    val dirs = rows.groupBy(r => keys.map(r.getInt)).toSeq.sortBy(_._1)
-      .map(_._2.map(r => unsafe(r).copy(): InternalRow))
-    val perSlice = math.ceil(dirs.length.toDouble / spark.sparkContext.defaultParallelism).toInt
-    val slices = if (dirs.isEmpty) Seq(Nil) else dirs.grouped(perSlice).map(_.flatten).toSeq
-    GraftSqlBridge.ofInternalRows(spark,
-      spark.sparkContext.parallelize(slices, slices.length).flatMap(_.iterator), schema)
-      .write.mode(mode).partitionBy(partitionBy: _*).parquet(dir)
-  }
-
   /** Write a compaction's new base and shards to their `-compact-tmp`
     * siblings on two driver threads, then, once both writes succeeded,
     * [[Publish.swap]] each in through `-compact-old`: a failed write
@@ -1900,11 +1878,11 @@ object Hnsw {
     metaOf(Publish.readRepaired(spark, metaDir).head())
 
   /** Commit `m` as the graph's meta through [[Publish.commitFrame]]
-    * (tmp write, swap with rollback), its jobs labelled as `verb`'s.
+    * (tmp write, swap with rollback).
     */
-  private def commitMeta(spark: SparkSession, verb: String, metaDir: String, m: GraphMeta): Unit =
-    labeled(spark, s"$verb: meta commit")(Publish.commitFrame(spark.createDataFrame(java.util.List.of(
-      Row(m.entry, m.entryEmb, m.corpusN, m.corpusFp, m.nLayers)), MetaSchema), metaDir))
+  private def commitMeta(spark: SparkSession, metaDir: String, m: GraphMeta): Unit =
+    Publish.commitFrame(spark, MetaSchema,
+      Seq(InternalRow(m.entry, floatVec(m.entryEmb), m.corpusN, m.corpusFp, m.nLayers)), metaDir)
 
   /** Resolve a graph directory to its LIVE adjacency — [[morResolve]]
     * over the UNPRUNED scans (sidecars resolved through the same
@@ -2027,11 +2005,11 @@ object Hnsw {
     }
     val replaced = delta.map(r => (r._1, r._2)).distinct
     Publish.fanOut("hnsw-append", Seq(
-      () => writeRows(spark, "hnsw-append: delta write", DeltaSchema, delta.map { case (l, src, dst, e) =>
+      () => Publish.writeRows(spark, DeltaSchema, delta.map { case (l, src, dst, e) =>
         InternalRow(src, dst, e, gen, l, srcBucket(src)) }, deltaPath(edgesDir), "append", "layer", "src_bucket"),
-      () => writeRows(spark, "hnsw-append: replaced write", ReplacedSchema,
+      () => Publish.writeRows(spark, ReplacedSchema,
         replaced.map { case (l, src) => InternalRow(l, src, gen) }, replacedPath(edgesDir), "append"),
-      () => writeRows(spark, "hnsw-append: shards write", ShardsSchema,
+      () => Publish.writeRows(spark, ShardsSchema,
         newShards.map { case (id, e, sh) => InternalRow(id, e, sh) }, shardsPath(edgesDir), "append", "shard")))
     // incremental meta: additive fp, count, entry re-election — committed
     // LAST (see the maintenance-verbs comment)
@@ -2039,7 +2017,7 @@ object Hnsw {
     val grown = c.meta.plus(n, fp)
     val meta = nv.filter(v => promoted(v._1, nLayers - 1)).sortBy(_._1).headOption
       .filter(_._1 < grown.entry).fold(grown) { case (id, e) => grown.enter(id, e) }
-    commitMeta(spark, "hnsw-append", metaDir, meta)
+    commitMeta(spark, metaDir, meta)
     val superseded = replaced.toSet
     GraphCopy.of(edgesDir, c.rows.filterNot(r => superseded((r._1, r._2))) ++ delta.iterator,
       c.members.iterator.flatMap { case (sh, ms) => ms.map { case (id, e) => (sh, id, e) } }.toSeq ++
@@ -2151,7 +2129,7 @@ object Hnsw {
     // incremental meta: additive fp, count, entry re-election — committed
     // LAST (see the maintenance-verbs comment)
     val grown = old.plus(deltaFp.getLong(0), deltaFp.getLong(1))
-    commitMeta(spark, "hnsw-append", metaDir, promoted.headOption.filter(_.getLong(0) < old.entry) match {
+    commitMeta(spark, metaDir, promoted.headOption.filter(_.getLong(0) < old.entry) match {
       case Some(e) => grown.copy(entry = e.getLong(0), entryEmb = e.getSeq[Float](1))
       case None => grown
     })
@@ -2190,7 +2168,7 @@ object Hnsw {
           .collect().map(_.getLong(0)).toSet)
     val fresh = candidates.filter(members)
     if (fresh.nonEmpty) mutating(spark, edgesDir, metaDir) {
-      writeRows(spark, "hnsw-delete: tombstone write", TombstoneSchema, fresh.map(InternalRow(_)),
+      Publish.writeRows(spark, TombstoneSchema, fresh.map(InternalRow(_)),
         tombstonesPath(edgesDir), "append")
       val old = copy.map(_.meta).getOrElse(readMeta(spark, metaDir))
       // the SAME engine digest the build's fingerprint used — additive mod
@@ -2203,7 +2181,7 @@ object Hnsw {
         if (!fresh.contains(old.entry)) shrunk
         else copy.fold(electEntry(spark, edgesDir, g.tombs, fresh, shrunk))(c =>
           electOnDriver(c.memberVecs -- c.tombs -- fresh, edgesDir, shrunk))
-      commitMeta(spark, "hnsw-delete", metaDir, meta)
+      commitMeta(spark, metaDir, meta)
       copy.map(c => c.copy(tombs = c.tombs ++ fresh, meta = meta))
     }
   }
@@ -2243,8 +2221,8 @@ object Hnsw {
     * reads exactly like a fresh build. The base and the shards are each
     * written beside the live directory and swapped in, so a failed write
     * leaves the served graph as it was. Within [[DriverGraphMaxRows]] the
-    * new base and shards are the resident copy's live rows, written as
-    * local frames; over it, Spark jobs (the scale path).
+    * new base and shards are the resident copy's live rows, written with
+    * no Spark job; over it, Spark jobs (the scale path).
     */
   def compactGraph(spark: SparkSession, edgesDir: String, metaDir: String): Unit =
     compactWith(spark, edgesDir, metaDir, verbCopy(spark, edgesDir, metaDir))
@@ -2267,15 +2245,15 @@ object Hnsw {
     val members = c.members.toSeq.flatMap { case (sh, ms) =>
       ms.collect { case (id, e) if !c.tombs(id) => (sh, id, e) } }
     publishCompacted(spark, edgesDir)(
-      writeRows(spark, "hnsw-compact: base write", BaseSchema, live.map { case (l, src, dst, e) =>
+      Publish.writeRows(spark, BaseSchema, live.map { case (l, src, dst, e) =>
         InternalRow(src, dst, e, l, srcBucket(src)) }, _, "overwrite", "layer", "src_bucket"),
-      writeRows(spark, "hnsw-compact: shards write", ShardsSchema,
+      Publish.writeRows(spark, ShardsSchema,
         members.map { case (sh, id, e) => InternalRow(id, e, sh) }, _, "overwrite", "shard"))
     val meta =
       if (!c.tombs(c.meta.entry)) c.meta
       else {
         val elected = electOnDriver(members.map(m => m._2 -> m._3).toMap, edgesDir, c.meta)
-        commitMeta(spark, "hnsw-compact", metaDir, elected)
+        commitMeta(spark, metaDir, elected)
         elected
       }
     dropSidecars(spark, edgesDir)
@@ -2304,7 +2282,7 @@ object Hnsw {
       // election pool is exactly the live membership; electEntry prefers
       // the highest promoted level, falls back level by level, and
       // refuses an empty graph instead of clobbering the meta
-      commitMeta(spark, "hnsw-compact", metaDir, electEntry(spark, edgesDir, None, Nil, old))
+      commitMeta(spark, metaDir, electEntry(spark, edgesDir, None, Nil, old))
     dropSidecars(spark, edgesDir)
   }
 

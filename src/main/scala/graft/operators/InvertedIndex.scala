@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Inverted-index serving layout — the TEXT twin of the trained-IVF vector
   * layout: postings (term, doc_id, tf) live partitioned by a deterministic
@@ -111,6 +113,13 @@ object InvertedIndex {
       dir
     })
 
+  /** The 1-row meta's schema: N, the docs the index knows. */
+  private val DocCountSchema = StructType(Seq(StructField("n_docs", LongType, nullable = false)))
+
+  /** Commit N as the index's meta through [[Publish.commitFrame]]. */
+  private def commitDocCount(spark: SparkSession, dir: String, n: Long): Unit =
+    Publish.commitFrame(spark, DocCountSchema, Seq(InternalRow(n)), s"$dir-meta")
+
   /** Incremental maintenance — the daily-ingest face: arriving docs'
     * postings append into their bucket directories (per-bucket appends,
     * the same shape as the IVF cell appends; the compaction/two-rename
@@ -146,7 +155,7 @@ object InvertedIndex {
     // write-tmp-then-swap (Publish.commitFrame): a plain overwrite deletes
     // the live meta before the new write commits, so a crash mid-write
     // would leave every read face unreadable, not just idf-stale
-    Publish.commitFrame(spark.range(1).select(lit(n).as("n_docs")), s"$dir-meta")
+    commitDocCount(spark, dir, n)
   }
 
   /** Sparse TF-IDF retrieval SERVED FROM THE INDEX — the lexical search
@@ -288,7 +297,7 @@ object InvertedIndex {
       // swap, and that one only costs idf nuance (N one batch high while
       // the tombstones already exclude the docs), never which docs match
       val n = Publish.readRepaired(spark, s"$dir-meta").head().getLong(0) - nNew
-      Publish.commitFrame(spark.range(1).select(lit(n).as("n_docs")), s"$dir-meta")
+      commitDocCount(spark, dir, n)
     }
   }
 

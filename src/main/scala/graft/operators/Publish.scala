@@ -1,13 +1,25 @@
 package graft.operators
 
 import java.io.IOException
+import java.nio.file.{Files, Paths}
+import java.util.UUID
 import java.util.concurrent.{Callable, ExecutionException, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.mapreduce.Job
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetWriteSupport}
+import org.apache.spark.sql.types.StructType
 
 /** The one crash-safe publish protocol behind every on-disk index
   * artifact. The reference keeps its state in SQLite, where every write
@@ -29,6 +41,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     it over the live one (HDFS-style renames refuse to clobber).
   *   - [[moveParts]]: stage a write in a tmp dir, move its `part-*`
   *     files into the target, and delete the tmp dir whatever happens.
+  *   - [[writeRows]]: write rows the driver holds as Parquet with no
+  *     Spark job — every file staged in a hidden directory, then renamed
+  *     into place once all are closed. [[commitFrame]] is its tmp write
+  *     plus a [[swap]].
   *
   * [[fanOut]] is the driver-thread pool the writers use to overlap
   * independent jobs and filesystem calls.
@@ -92,14 +108,116 @@ private[graft] object Publish {
         restore(fs, new Path(root, n.stripPrefix(".").stripSuffix(".old")), p)
     }
 
-  /** Write a small frame as one file to `dir.tmp` and [[swap]] it in
-    * for `dir` (holdout `.dir.old`).
+  /** Write driver rows of `schema` as one file to `dir.tmp` and [[swap]]
+    * it in for `dir` (holdout `.dir.old`).
     */
-  def commitFrame(df: DataFrame, dir: String): Unit = {
+  def commitFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow], dir: String): Unit = {
     val tmp = dir + ".tmp"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    writeRows(spark, schema, rows, tmp, "overwrite")
     val live = new Path(dir)
-    swap(fsOf(df.sparkSession, dir), new Path(tmp), live, holdout(live))
+    swap(fsOf(spark, dir), new Path(tmp), live, holdout(live))
+  }
+
+  /** Failure seam for tests: a [[writeRows]] whose target path starts
+    * with this prefix throws after an overwrite has cleared the target
+    * and before any file is produced — where a Spark write's job setup
+    * runs.
+    */
+  @volatile private[graft] var failingWritesUnder: Option[String] = None
+
+  /** Write driver rows of `schema` to the Parquet directory `dir`
+    * (`mode` "overwrite" or "append") with no Spark job, leaving what a
+    * Spark write of the same rows leaves: Spark's own ParquetWriteSupport,
+    * configured by `ParquetFileFormat.prepareWrite` from the session, so
+    * the footers record the same Spark schema and codec; a `_SUCCESS`
+    * marker; "overwrite" clears `dir` first.
+    *
+    * A partitioned write groups the rows by their (int) partition values,
+    * deals whole directories, in key order, to at most defaultParallelism
+    * slices on [[fanOut]] threads, and writes one file per directory,
+    * named `part-<slice>-<write uuid>.c000.<codec>.parquet` so appends
+    * into one directory never collide. An unpartitioned write is one
+    * file, a zero-row one when `rows` is empty. Every file is written
+    * under a hidden staging directory in `dir` and renamed into place
+    * once all of them are closed, so no reader lists a partial file; the
+    * staging directory is deleted whether or not the write succeeds.
+    *
+    * Local files go through java.nio (Parquet's `LocalOutputFile`):
+    * Hadoop's local filesystem forks a `chmod` for every file and
+    * directory it creates when no native library is loaded.
+    */
+  def writeRows(spark: SparkSession, schema: StructType, rows: Seq[InternalRow], dir: String,
+                mode: String, partitionBy: String*): Unit = {
+    import scala.math.Ordering.Implicits.seqOrdering
+    require(mode == "overwrite" || mode == "append", s"publish: unknown write mode $mode")
+    val data = StructType(schema.filterNot(f => partitionBy.contains(f.name)))
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    new ParquetFileFormat().prepareWrite(spark, job, Map.empty, data)
+    val conf = job.getConfiguration
+    val fs = fsOf(spark, dir)
+    val root = fs.makeQualified(new Path(dir))
+    val sink = if (root.toUri.getScheme == "file") LocalSink else new HadoopSink(fs, conf)
+    if (mode == "overwrite") fs.delete(root, true)
+    failingWritesUnder.filter(root.toUri.getPath.startsWith(_))
+      .foreach(p => throw new IOException(s"injected write failure under $p: $dir"))
+    val keys = partitionBy.map(schema.fieldIndex)
+    val dirs = rows.groupBy(r => keys.map(r.getInt)).toSeq.sortBy(_._1).map { case (k, rs) =>
+      partitionBy.zip(k).map { case (c, v) => s"$c=$v" }.mkString("/") -> rs }
+    val files = if (dirs.isEmpty && keys.isEmpty) Seq("" -> Nil) else dirs
+    val uuid = UUID.randomUUID()
+    val codec = ParquetOutputFormat.getCompression(conf)
+    val staging = new Path(root, s".staging-$uuid")
+    try {
+      val perSlice = math.max(1, math.ceil(files.length.toDouble / spark.sparkContext.defaultParallelism).toInt)
+      val written = fanOut("parquet-write", files.grouped(perSlice).zipWithIndex.map { case (slice, i) => () =>
+        val project = UnsafeProjection.create(data.map(f =>
+          BoundReference(schema.fieldIndex(f.name), f.dataType, f.nullable)))
+        slice.map { case (sub, rs) =>
+          val name = f"part-$i%05d-$uuid.c000${codec.getExtension}.parquet"
+          val rel = if (sub.isEmpty) name else s"$sub/$name"
+          val staged = new Path(staging, rel)
+          sink.mkdirs(staged.getParent)
+          val w = new RowWriter(sink.file(staged)).withConf(conf).withCompressionCodec(codec).build()
+          try rs.foreach(r => w.write(project(r))) finally w.close()
+          rel
+        }
+      }.toSeq).flatten
+      sink.mkdirs(root)
+      written.foreach { rel =>
+        val live = new Path(root, rel)
+        sink.mkdirs(live.getParent)
+        if (!fs.rename(new Path(staging, rel), live))
+          throw new IOException(s"publish: could not move $rel into $root")
+      }
+      sink.touch(new Path(root, "_SUCCESS"))
+    } finally fs.delete(staging, true)
+  }
+
+  /** A Parquet writer of Spark rows onto any Parquet `OutputFile`. */
+  private final class RowWriter(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriter](file) {
+    override def self(): RowWriter = this
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] = new ParquetWriteSupport
+  }
+
+  /** Where [[writeRows]] creates its files and directories. */
+  private sealed trait Sink {
+    def file(p: Path): OutputFile
+    def mkdirs(p: Path): Unit
+    def touch(p: Path): Unit
+  }
+
+  private object LocalSink extends Sink {
+    private def nio(p: Path) = Paths.get(p.toUri)
+    def file(p: Path): OutputFile = new LocalOutputFile(nio(p))
+    def mkdirs(p: Path): Unit = Files.createDirectories(nio(p))
+    def touch(p: Path): Unit = Files.write(nio(p), Array.emptyByteArray)
+  }
+
+  private final class HadoopSink(fs: FileSystem, conf: Configuration) extends Sink {
+    def file(p: Path): OutputFile = HadoopOutputFile.fromPath(p, conf)
+    def mkdirs(p: Path): Unit = fs.mkdirs(p)
+    def touch(p: Path): Unit = fs.create(p, true).close()
   }
 
   /** The writer's read of a [[commitFrame]] directory: [[restore]] the

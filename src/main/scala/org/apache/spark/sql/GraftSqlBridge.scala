@@ -11,11 +11,4 @@ object GraftSqlBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** A DataFrame over an RDD of internal rows of `schema`, its partitions
-    * kept as they are (no encoder, no re-slicing).
-    */
-  def ofInternalRows(spark: SparkSession, rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
-                     schema: types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

@@ -51,17 +51,20 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     * batch's collect (1), the append's three sidecar writes and meta
     * commit (4), the delete's tombstone write and meta commit (2), and no
     * job for the maintain decision; 10 once the copy's load reads the base
-    * with a footer-declared schema (3 on this clone).
+    * with a footer-declared schema (3 on this clone); 4 once the verbs
+    * write their rows straight to Parquet from the driver: the copy's
+    * load (3) and the append batch's collect (1).
     */
-  val UpdateJobBudget = 10
+  val UpdateJobBudget = 4
 
   /** Jobs of a cold `Hnsw.layout` of this fixture with the k-means
     * layout memo warm: 41 while every graph was built by the distributed
     * shard-pair recipe; 4 once a graph within `Hnsw.DriverGraphMaxRows`
     * builds on the driver: the corpus collect, then the edges, shards and
-    * meta writes.
+    * meta writes; 1 once those writes go straight to Parquet from the
+    * driver: the corpus collect.
     */
-  val BuildJobBudget = 4
+  val BuildJobBudget = 1
 
   /** Jobs started by `body` (other threads' jobs never count). */
   private def jobsOf(body: => Unit): Int = PlanTestUtil.jobsOf(spark)(body)
