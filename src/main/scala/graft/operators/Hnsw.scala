@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
@@ -10,6 +11,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.expressions.{CosineSimilarity, GraftFunctions}
+import graft.operators.HnswKernel.{appendEdges, appended, buildEdges, elect, idStats, idsFingerprint, InTasks,
+  OnDriver, shardsOf}
 
 /** Graph-based ANN: a layered small-world graph (the HNSW family —
   * Malkov & Yashunin 2016) over the embeddings corpus, replacing the
@@ -17,24 +20,27 @@ import graft.expressions.{CosineSimilarity, GraftFunctions}
   * the index class most production vector stores serve from.
   *
   * BUILD (offline, engine-specific, dumped — the trained-IVF posture):
-  * true HNSW construction is a sequential insert loop; the distributed
-  * approximation here is the public sharded-build recipe (DiskANN's
-  * overlapping-shard merge, NN-Descent's candidate blocking): each node
-  * is assigned to its 2 nearest trained-KMeans cells (overlapping shards,
-  * so near-boundary neighbors still meet), pairs are scored ONLY within a
-  * shard — O(Σ|shard|²), never N² — and each node keeps its top-M
-  * outgoing edges; reverse edges are unioned in (small-world graphs need
-  * in-links to be navigable) and the degree is re-capped at 2M with the
-  * same deterministic (sim desc, id asc) order.
+  * true HNSW construction is a sequential insert loop; the approximation
+  * here is the public sharded-build recipe (DiskANN's overlapping-shard
+  * merge, NN-Descent's candidate blocking): each node is assigned to its
+  * 2 nearest trained-KMeans cells (overlapping shards, so near-boundary
+  * neighbors still meet), pairs are scored ONLY within a shard —
+  * O(Σ|shard|²), never N² — and each node keeps its top-M outgoing
+  * edges; reverse edges are unioned in (small-world graphs need in-links
+  * to be navigable) and the degree is re-capped at 2M with the same
+  * deterministic (sim desc, id asc) order.
   *
-  * A graph whose edge bound (MaxDegree per node per layer) fits
-  * [[DriverGraphMaxRows]], the cap the resident copy is served and
-  * maintained under, builds the same recipe on the driver instead: one
-  * corpus collect, each src scored into a bounded top-M per shard, and
-  * the edges, shards and meta written straight from driver rows by
-  * [[Publish.writeRows]] on three threads — one Spark job (the collect)
-  * against the distributed recipe's ~40, row for row the same artifacts
-  * (HnswMaintenanceSpec). The distributed recipe stays the scale path.
+  * ONE KERNEL PER STEP, TWO RUNNERS: each step of the build and of an
+  * append is one pure function over rows in [[HnswKernel]] — shard
+  * assignment, promotion, per-group top-M scoring, the merge per src,
+  * reverse edges and the re-cap, entry election. A graph whose edge bound
+  * (MaxDegree per node per layer) fits [[DriverGraphMaxRows]], the cap
+  * the resident copy is served and maintained under, runs them on the
+  * driver over the collected corpus (or, for an append, the resident
+  * copy) and writes its rows straight to Parquet ([[Publish.writeRows]]):
+  * a build is one Spark job, the corpus collect. Any other graph runs the
+  * same functions inside Spark tasks, grouped by shard, then by src (the
+  * scale path). Both write the same rows (HnswMaintenanceSpec).
   *
   * LAYERS: the hierarchy has n_layers = min(4, max(2, 1 +
   * ⌊log_LayerMod(N/4)⌋)) levels — the standard ~log_LayerMod(N) growth,
@@ -99,8 +105,8 @@ import graft.expressions.{CosineSimilarity, GraftFunctions}
   * vector bytes for single-seek hops; [[searchPq]] cuts that trade ~32×
   * by serving hops from PQ codes (DiskANN §3.3) with a final exact
   * rescore. A query batch shares each hop's pass with per-qid windows
-  * (ann_hnsw_batch). The graph build's pair stage rides the existing
-  * trained-cell layout exactly like SemDeDup.
+  * (ann_hnsw_batch). The graph build's scoring groups ride the existing
+  * trained-cell layout exactly like SemDeDup, one group per task.
   */
 object Hnsw {
 
@@ -179,47 +185,23 @@ object Hnsw {
 
   private val memo = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  /** digest60 ≡ 0 (mod LayerMod^layer) — the nested promotion rule. */
-  private def promotedPred(layer: Int): Column = {
-    val mod = Seq.fill(layer)(LayerMod.toLong).product
-    pmod(graft.functions.Digests.digest60(col("vec_id").cast("string")),
-      lit(mod)) === 0
-  }
-
-  /** Promotion level of a node (0..nLayers-1) as a column — the nesting
-    * makes it a plain sum of the per-layer predicates. Used by entry
-    * election: prefer the highest-layer live node (layer-ℓ hops from a
-    * lower node are no-ops until the walk descends past ℓ).
-    */
-  private def levelCol(nLayers: Int): Column =
-    (1 until nLayers).map(l => promotedPred(l).cast("int"))
-      .reduceOption(_ + _).getOrElse(lit(0))
-
-  /** Pair-stage shard-size cap (the round-10 verdict's hot-shard guard):
-    * [[layout]]'s blocked pairing is O(Σ|shard|²), so ONE hot trained
-    * cell in a skewed corpus at 100× scale makes one shard's pair join
-    * quadratic in the hot cell. Any shard over this bound is recursively
-    * halved by [[capShards]] BEFORE pairing, keeping build work
-    * O(Σ min(|shard|, cap)²). Sized above every fixture's max shard
+  /** Scoring-group size cap (the round-10 verdict's hot-shard guard): a
+    * build scores every pair within a shard, O(Σ|shard|²), so ONE hot
+    * trained cell in a skewed corpus at 100× scale makes one group's
+    * scoring quadratic in the hot cell. Any shard over this bound is
+    * recursively halved by [[capShards]] BEFORE scoring, keeping build
+    * work O(Σ min(|shard|, cap)²). Sized above every fixture's max shard
     * (419 at sf0.1), so fixture graphs build byte-identically; at real
-    * scale the guard engages. Splits touch ONLY the pairing stage — the
+    * scale the guard engages. Splits touch ONLY the scoring groups — the
     * shards sidecar keeps the trained cell ids [[appendToGraph]] probes
     * by, and serving never sees shard ids at all.
     */
   val ShardCap = 1024
 
-  /** Deterministic src-slice count of the build's pair scoring (see
-    * blockedPairs in [[layout]]): side A of each shard's pair block is
-    * split into this many pmod(src) slices so the CPU-dense cosine
-    * scoring parallelizes even when AQE coalesces the byte-small shuffle,
-    * and so one task never scores more than cap²/PairSlices pairs.
-    */
-  val PairSlices = 8
-
   /** Bounded split recursion: 2^6 × cap covers a 64× hot cell; a
     * pathological shard that stops shrinking (all-identical vectors —
     * both split seeds coincide and every member joins side A) gives up
-    * at this depth and pays the quadratic join the cap normally
+    * at this depth and pays the quadratic scoring the cap normally
     * prevents — loud in build time, never wrong.
     */
   val ShardSplitMaxDepth = 6
@@ -276,24 +258,6 @@ object Hnsw {
     cur
   }
 
-  /** Top-M out-edges + reverse-edge union + MaxDegree re-cap over a
-    * scored pair set — the ONE capping discipline all layers share.
-    */
-  private def capEdges(pairs: DataFrame, layer: Int): DataFrame = {
-    val wSrc = Window.partitionBy(col("src"))
-      .orderBy(col("sim").desc, col("dst").asc)
-    val out = pairs
-      .groupBy(col("src"), col("dst")).agg(max(col("sim")).as("sim"))
-      .withColumn("__rn", row_number().over(wSrc))
-      .filter(col("__rn") <= M).select(col("src"), col("dst"), col("sim"))
-    // navigability: union reverse edges, re-cap at MaxDegree
-    out.union(out.select(col("dst").as("src"), col("src").as("dst"), col("sim")))
-      .groupBy(col("src"), col("dst")).agg(max(col("sim")).as("sim"))
-      .withColumn("__rn", row_number().over(wSrc))
-      .filter(col("__rn") <= MaxDegree)
-      .select(lit(layer).as("layer"), col("src"), col("dst"))
-  }
-
   /** Label the jobs `body` starts on this thread in the UI/listeners
     * (guide §1.5), restoring the caller's label after.
     */
@@ -308,178 +272,72 @@ object Hnsw {
     * (vec_id 0 is the search fixture's query vector and stays OUT of the
     * graph). Memoized per sfDir; deterministic given the (seeded, dumped)
     * KMeans layout. A graph within [[DriverGraphMaxRows]] builds on the
-    * driver ([[buildOnDriver]]), any other by Spark jobs
-    * ([[buildDistributed]], the scale path); both write the same rows.
+    * driver ([[buildOnDriver]]), any other in Spark tasks
+    * ([[buildInTasks]], the scale path); both run [[buildEdges]] and write
+    * the same rows.
     */
   def layout(spark: SparkSession, sfDir: String): String =
     memo.computeIfAbsent(sfDir, { _ =>
       GraftFunctions.register(spark)
       val (ivfPath, cents) = Ann.kmeansLayout(spark, sfDir)
-      if (!buildOnDriver(spark, sfDir, ivfPath)) buildDistributed(spark, sfDir, ivfPath, cents)
+      if (!buildOnDriver(spark, sfDir, ivfPath, cents)) buildInTasks(spark, sfDir, ivfPath, cents)
       edgesPath(sfDir)
     })
 
-  /** [[layout]]'s build as Spark jobs: the scale path. */
-  private def buildDistributed(spark: SparkSession, sfDir: String, ivfPath: String,
-                               cents: Seq[(Int, Array[Double])]): Unit = {
-    val corpus = spark.read.parquet(ivfPath)
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"), col("embedding"))
-    // overlapping shards: each node joins its 2 cosine-nearest cells
-    // (ONE assignment formula — Ann.nearestCells), map-only against
-    // the broadcast k·1 centroid metadata
-    val sharded = Ann.nearestCells(corpus,
-        Ann.centroidsDf(spark, cents), "vec_id", "embedding", n = 2)
-      .select(col("vec_id"), col("embedding"), col("cell").as("shard"))
-    // the shard table feeds both sides of the pair join — stage it once,
-    // HASH-PARTITIONED BY SHARD: the cell-partitioned corpus read packs
-    // into one ~MB input split, and without the explicit repartition the
-    // whole O(Σ|shard|²) pair scoring below ran as ONE task (measured:
-    // 1.2 s single-threaded at sf0.1 — guide §2.5 input skew). The
-    // explicit partition count pins scan parallelism (AQE would coalesce
-    // the ~MB shuffle right back to one partition — the bytes are small,
-    // the per-row cosine work is not); shard-hash partitioning also
-    // makes the self-join below exchange-free (localCheckpoint preserves
-    // outputPartitioning).
-    val staged = labeled(spark, "hnsw-build: shard assign") {
-      sharded.repartition(spark.sparkContext.defaultParallelism, col("shard"))
-        .localCheckpoint()
+  /** [[layout]]'s build in Spark tasks, the scale path: the corpus stats
+    * over ids hash-partitioned by id (a repeated id meets its twin in one
+    * task), the shard assignment, the hot-shard guard ([[capShards]]),
+    * [[buildEdges]] on the [[InTasks]] runner, and the entry elected per
+    * task, then among the tasks' picks. The edges and shards are Spark
+    * writes; the meta is written from the driver.
+    */
+  private def buildInTasks(spark: SparkSession, sfDir: String, ivfPath: String,
+                           cents: Seq[(Int, Array[Double])]): Unit = {
+    import spark.implicits._
+    val run = InTasks(spark.sparkContext.defaultParallelism)
+    val corpus = labeled(spark, "hnsw-build: corpus read")(spark.read.parquet(ivfPath))
+      .filter(col("vec_id") =!= 0).select(col("vec_id"), col("embedding"))
+    val nodes = corpus.as[(Long, Array[Float])].rdd
+    val s = labeled(spark, "hnsw-build: corpus stats") {
+      nodes.map(_._1 -> ()).partitionBy(new HashPartitioner(run.p))
+        .mapPartitions(ids => Iterator(idStats(ids.map(_._1).toSeq))).collect().reduce(_ + _).checked
     }
-    val n = labeled(spark, "hnsw-build: corpus count")(corpus.count())
-    // per-level node counts in ONE aggregation (level = how high the
-    // nested digest rule promotes a node); every sizing decision below
-    // (top-layer clamp, dense-vs-blocked, entry pool) reads this map
-    // instead of re-counting the staged table per question
-    val levelHist: Map[Int, Long] = labeled(spark, "hnsw-build: level hist") {
-      staged
-        .select(col("vec_id")).distinct()
-        .groupBy(levelCol(MaxLayersStatic).as("lvl")).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    }
-    def promotedCount(l: Int): Long =
-      levelHist.collect { case (lvl, c) if lvl >= l => c }.sum
-    // engine layer count, clamped down while a top layer would be empty
-    // (a pseudorandom-digest tail case at tiny N; deterministic per
-    // corpus) — a 1-node top layer is fine (entry only, hops no-op)
-    var nLayers = nLayersFor(n)
-    while (nLayers > 2 && promotedCount(nLayers - 1) == 0) nLayers -= 1
-    // layer 0/1 (and any over-cap express layer): shard-blocked pairs —
-    // O(Σ|shard|²), never N². Two structural fixes over the naive
-    // a-join-b-window chain (round-15, both measured):
-    //
-    //  1. SLICED scoring (guide §2.5): the pair stream is byte-small
-    //     (three narrow columns) but CPU-dense (a 64-dim cosine per
-    //     row), so AQE's byte-based coalescing collapsed the join to
-    //     ONE task — 2.2 s single-threaded at sf0.1. Side A splits into
-    //     [[PairSlices]] deterministic src-slices, side B replicates
-    //     per slice (B rows are node-sized, the replication is MBs),
-    //     and the explicit repartition count pins the parallelism AQE
-    //     would take away. Work per task is bounded by
-    //     cap²/PairSlices however hot a shard is.
-    //  2. Per-(shard, src) local top-M BEFORE any exchange (guide §2.3
-    //     "aggregate before you shuffle"): a src's global top-M over
-    //     its 2 shards' candidates is the top-M of its two shard-local
-    //     top-Ms (any dst outside a local top-M is beaten by ≥M dsts of
-    //     the same shard, all global candidates), so capEdges sees
-    //     ≤ 2M rows per node instead of the full Σ|shard|² stream
-    //     (1.6M pairs → ~60k rows at sf0.1). The slice key is a pure
-    //     function of src, so the (shard, slice, src) window ≡ the
-    //     (shard, src) window and runs in the join stage (partitioning
-    //     exprs ⊆ window keys — no exchange, WindowGroupLimit keeps
-    //     the heap M-sized).
-    def blockedPairs(nodes: DataFrame): DataFrame = {
-      val p = spark.sparkContext.defaultParallelism
-      val a = nodes.select(col("shard"), col("vec_id").as("src"),
-          col("embedding").as("ea"))
-        .withColumn("__slice", pmod(col("src"), lit(PairSlices)))
-        .repartition(p, col("shard"), col("__slice"))
-      val b = nodes.select(col("shard"), col("vec_id").as("dst"),
-          col("embedding").as("eb"))
-        .withColumn("__slice",
-          explode(typedLit((0L until PairSlices.toLong).toSeq)))
-        .repartition(p, col("shard"), col("__slice"))
-      val wLocal = Window.partitionBy(col("shard"), col("__slice"), col("src"))
-        .orderBy(col("sim").desc, col("dst").asc)
-      a.join(b, Seq("shard", "__slice"))
-        .filter(col("src") =!= col("dst"))
-        .withColumn("sim",
-          round(GraftFunctions.cosineSim(col("ea"), col("eb")), 6))
-        .select(col("shard"), col("__slice"), col("src"), col("dst"), col("sim"))
-        .withColumn("__lrn", row_number().over(wLocal))
-        .filter(col("__lrn") <= M)
-        .select(col("src"), col("dst"), col("sim"))
-    }
-    // express layers ≤ DenseLayerCap: all-pairs over the deduped
-    // promoted set (metadata-sized by construction — see scaladoc)
-    def densePairs(nodes: DataFrame): DataFrame = {
-      val uniq = nodes.select(col("vec_id"), col("embedding"))
-        .dropDuplicates("vec_id")
-      val a = uniq.select(col("vec_id").as("src"), col("embedding").as("ea"))
-      val b = uniq.select(col("vec_id").as("dst"), col("embedding").as("eb"))
-      a.crossJoin(b)
-        .filter(col("src") =!= col("dst"))
-        .withColumn("sim",
-          round(GraftFunctions.cosineSim(col("ea"), col("eb")), 6))
-        .select(col("src"), col("dst"), col("sim"))
-    }
-    // hot-shard guard: over-cap shards split for the PAIRING stage only
-    // (fixture shards all sit under the cap, so this is the staged
-    // frame itself there); the sidecar below keeps trained cell ids
-    val pairNodes = labeled(spark, "hnsw-build: cap shards")(capShards(staged))
-    val layerEdges = (0 until nLayers).map { l =>
-      val nodes = if (l == 0) pairNodes else pairNodes.filter(promotedPred(l))
-      val pairs =
-        if (l >= 2 && promotedCount(l) <= DenseLayerCap) densePairs(nodes)
-        else blockedPairs(nodes)
-      capEdges(pairs, l)
-    }
-    // DiskANN layout: denormalize dst's embedding onto the adjacency
-    // row (one build-time join against the staged shards), so serving
-    // hops read ONLY the edge table and never the corpus — and
-    // partition it by (layer, src_bucket) so a hop's literal probe
-    // PLANS only the beam's bucket directories (file-level pruning,
-    // the InvertedIndex postings discipline).
-    val dstEmb = staged.select(col("vec_id").as("dst"),
-      col("embedding").as("dst_emb")).dropDuplicates("dst")
+    val nl = s.nLayers
+    // the shards feed the scoring groups and the sidecar: staged once
+    val staged = labeled(spark, "hnsw-build: shard assign")(shardsInTasks(corpus.as[(Long, Array[Float])], cents))
+    // hot-shard guard: over-cap shards split for the scoring groups only;
+    // the sidecar below keeps the trained cell ids
+    val grouped = labeled(spark, "hnsw-build: cap shards")(capShards(staged))
+      .as[(Long, Array[Float], Int)].rdd.map { case (id, e, sh) => (id, floatVec(e), sh) }
+    // DiskANN layout: dst's embedding denormalized onto its adjacency row,
+    // partitioned by (layer, src_bucket) (see the scaladoc)
     labeled(spark, "hnsw-build: edges write") {
-      layerEdges.reduce(_ union _).join(dstEmb, Seq("dst"))
+      buildEdges(run, grouped, s).toDF("layer", "src", "dst")
+        .join(corpus.select(col("vec_id").as("dst"), col("embedding").as("dst_emb")), "dst")
         .select(col("layer"), col("src"), col("dst"), col("dst_emb"))
         .withColumn("src_bucket", srcBucketCol(col("src")))
         .repartition(col("layer"), col("src_bucket"))
-        .write.mode("overwrite").partitionBy("layer", "src_bucket")
-        .parquet(edgesPath(sfDir))
+        .write.mode("overwrite").partitionBy("layer", "src_bucket").parquet(edgesPath(sfDir))
     }
-    // shard-membership sidecar, partitioned by shard: appendToGraph
-    // pairs new nodes against ONLY their touched shards (pruned read)
     labeled(spark, "hnsw-build: shards write") {
-      staged.select(col("vec_id"), col("embedding"), col("shard"))
-        .write.mode("overwrite").partitionBy("shard")
-        .parquet(shardsPath(edgesPath(sfDir)))
+      staged.write.mode("overwrite").partitionBy("shard").parquet(shardsPath(edgesPath(sfDir)))
     }
-    // meta carries the corpus MEMBERSHIP fingerprint beside the entry
-    // point: the order-independent (n, digest-sum) of the indexed ids,
-    // so a reader can detect "rows were appended/deleted since this
-    // graph was built" from two 1-row digests (ann_stale_check) —
-    // in-place vector mutation is out of scope for a membership digest
-    // (the id canon carries no floats; float rendering isn't
-    // cross-engine portable — the table_fingerprint caveat).
-    // entry carries ITS embedding too — hop 0 (scoring the entry point)
-    // must not touch the corpus either. n_layers rides along so every
-    // reader (walk, maintenance, oracle) sees the realized hierarchy.
-    val topPromoted = staged.filter(promotedPred(nLayers - 1))
-    val entryPool =
-      if (promotedCount(nLayers - 1) > 0) topPromoted else staged
-    val entry = entryPool.agg(min(col("vec_id")).as("entry"))
-      .join(dstEmb.select(col("dst").as("entry"),
-        col("dst_emb").as("entry_emb")), Seq("entry"))
-    val fp = graft.streaming.Streaming.fingerprintStream(
-      corpus.select(col("vec_id")), col("vec_id").cast("string"))
-      .select(col("n_rows").as("corpus_n"), col("fp").as("corpus_fp"))
-    labeled(spark, "hnsw-build: meta write") {
-      entry.crossJoin(fp).withColumn("n_layers", lit(nLayers))
-        .coalesce(1).write.mode("overwrite").parquet(metaPath(sfDir))
+    val entry = labeled(spark, "hnsw-build: entry") {
+      elect(nodes.mapPartitions(elect(_, nl).iterator).collect().iterator, nl).get
     }
-    staged.unpersist()
+    Publish.writeRows(spark, MetaSchema, Seq(metaRow(s.meta(entry._1 -> floatVec(entry._2)))),
+      metaPath(sfDir), "overwrite")
+  }
+
+  /** Each (vec_id, embedding) row once per shard [[HnswKernel.shardsOf]]
+    * assigns it, computed in Spark tasks and staged.
+    */
+  private def shardsInTasks(rows: Dataset[(Long, Array[Float])], cents: Seq[(Int, Array[Double])]): DataFrame = {
+    import rows.sparkSession.implicits._
+    rows.mapPartitions { it =>
+      val of = shardsOf(cents)
+      it.flatMap { case (id, e) => of(floatVec(e)).map(sh => (id, e, sh)) }
+    }.toDF("vec_id", "embedding", "shard").localCheckpoint()
   }
 
   /** [[layout]]'s build on the driver, when the graph fits
@@ -491,7 +349,8 @@ object Hnsw {
     * cap, a shard exceeds [[ShardCap]], or the corpus is not (long vec_id,
     * `array<float>` embedding).
     */
-  private def buildOnDriver(spark: SparkSession, sfDir: String, ivfPath: String): Boolean = {
+  private def buildOnDriver(spark: SparkSession, sfDir: String, ivfPath: String,
+                            cents: Seq[(Int, Array[Double])]): Boolean = {
     val declared = dataFiles(spark, ivfPath).nextOption()
       .map(ManifestIO.sparkSchema(spark.sparkContext.hadoopConfiguration, _))
       .filter(s => s.find(_.name == "vec_id").exists(_.dataType == LongType) &&
@@ -501,8 +360,7 @@ object Hnsw {
         readSidecar(spark, ivfPath, declared.get).filter(col("vec_id") =!= 0)
           .select(col("vec_id"), col("embedding")).collect()
       }.map(r => r.getLong(0) -> floatVec(r.getSeq[Float](1))).toSeq
-      driverGraph(nodes, nearestShards(spark, sfDir)).exists { g =>
-        val m = g.meta
+      driverGraph(nodes, shardsOf(cents)).exists { g =>
         // the edges are scored on their write's thread, while the shards
         // and meta writes run
         Publish.fanOut("hnsw-build", Seq(
@@ -510,8 +368,7 @@ object Hnsw {
             InternalRow(src, dst, e, l, srcBucket(src)) }, edgesPath(sfDir), "overwrite", "layer", "src_bucket"),
           () => Publish.writeRows(spark, ShardsSchema, g.shards.map { case (id, e, sh) =>
             InternalRow(id, e, sh) }, shardsPath(edgesPath(sfDir)), "overwrite", "shard"),
-          () => Publish.writeRows(spark, MetaSchema, Seq(InternalRow(m.entry,
-            floatVec(m.entryEmb), m.corpusN, m.corpusFp, m.nLayers)), metaPath(sfDir), "overwrite")))
+          () => Publish.writeRows(spark, MetaSchema, Seq(metaRow(g.meta)), metaPath(sfDir), "overwrite")))
         true
       }
     }
@@ -526,101 +383,23 @@ object Hnsw {
     lazy val edges: Seq[(Int, Long, Long, ArrayData)] = score
   }
 
-  /** [[buildDistributed]] on the driver, value for value, over the corpus
-    * `nodes` and the shards `shardsOf` assigns each vector
-    * ([[nearestShards]]): the level histogram and the layer clamp; per
-    * layer, each src's top-M within each of its shards (within all
-    * promoted nodes on a dense express layer), merged to its top-M, then
-    * the reverse edges and the [[MaxDegree]] re-cap ([[topPerSrc]], the
-    * capEdges discipline); the min-id top-layer entry; the membership
-    * fingerprint. Each src scores its candidates into a bounded top-M
-    * ([[TopM]]), so no pair list is held. None, before any pair is scored,
-    * when there are no nodes or ids repeat, when the edge bound (MaxDegree
-    * per node per layer) exceeds [[DriverGraphMaxRows]], or when a shard
+  /** The build on the driver over the corpus `nodes` and the shards
+    * `shardsOf` assigns each vector: the corpus stats ([[idStats]], which
+    * refuse a repeated id), [[buildEdges]] on the [[OnDriver]] runner,
+    * scored on first use, and the elected entry. None, before any pair is
+    * scored, when there are no nodes, when the edge bound (MaxDegree per
+    * node per layer) exceeds [[DriverGraphMaxRows]], or when a shard
     * exceeds [[ShardCap]] (the scale path splits it).
     */
   private[graft] def driverGraph(nodes: Seq[(Long, ArrayData)],
                                  shardsOf: ArrayData => Seq[Int]): Option[BuiltGraph] = {
-    val ids = nodes.map(_._1)
-    val lvl = ids.map(id => id -> level(id, MaxLayersStatic)).toMap
-    def promotedCount(l: Int): Long = lvl.valuesIterator.count(_ >= l).toLong
-    var nLayers = nLayersFor(nodes.length)
-    while (nLayers > 2 && promotedCount(nLayers - 1) == 0) nLayers -= 1
+    val s = idStats(nodes.map(_._1)).checked
     val shards = nodes.flatMap { case (id, e) => shardsOf(e).map(sh => (id, e, sh)) }
-    if (nodes.isEmpty || lvl.size != nodes.length ||
-        MaxDegree * (0 until nLayers).map(promotedCount).sum > DriverGraphMaxRows ||
+    if (nodes.isEmpty || MaxDegree * (0 until s.nLayers).map(s.count).sum > DriverGraphMaxRows ||
         shards.groupBy(_._3).valuesIterator.exists(_.length > ShardCap)) return None
     val vec = nodes.toMap
-    def edges = (0 until nLayers).flatMap { l =>
-      val at = shards.filter(s => lvl(s._1) >= l)
-      val groups =
-        if (l >= 2 && promotedCount(l) <= DenseLayerCap) Seq(at.map(_._1).distinct)
-        else at.groupBy(_._3).values.map(_.map(_._1)).toSeq
-      val local = groups.flatMap { g =>
-        val members = g.map(id => id -> vec(id))
-        members.map { case (src, e) =>
-          val best = new TopM(M)
-          members.foreach { case (dst, d) =>
-            if (dst != src) {
-              // round(_, 6) moves a cosine by at most 5e-7, so a raw cosine
-              // 1e-6 under the current M-th sim cannot enter: skip rounding it
-              val raw = CosineSimilarity.cosine(e, true, d, true)
-              if (best.admits(raw + 1e-6)) best.offer(dst, CosineSimilarity.round6(raw))
-            }
-          }
-          src -> best.result
-        }
-      }
-      val out = local.groupBy(_._1).toSeq.flatMap { case (src, tops) =>
-        val best = new TopM(M)
-        tops.foreach(_._2.foreach { case (dst, sim) => best.offer(dst, sim) })
-        best.result.map { case (dst, sim) => (src, dst, sim) }
-      }
-      // navigability: reverse edges, re-capped at MaxDegree
-      topPerSrc(out.flatMap { case (src, dst, sim) => Seq((src, dst, sim, vec(dst)), (dst, src, sim, vec(src))) },
-        MaxDegree).map { case (src, dst, _, e) => (l, src, dst, e) }
-    }
-    val topLayer = nLayers - 1
-    val entry = (if (promotedCount(topLayer) > 0) ids.filter(lvl(_) >= topLayer) else ids).min
-    val (n, fp) = idsFingerprint(ids)
-    Some(new BuiltGraph(shards, GraphMeta(entry, vec(entry).toFloatArray().toSeq, n, fp, nLayers), edges))
-  }
-
-  /** A bounded top-`m` selection of (id, sim) by (sim desc, id asc), the
-    * order [[topPerSrc]] sorts by; one entry per id (a repeated id keeps
-    * its first sim).
-    */
-  private final class TopM(m: Int) {
-    private val top = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
-
-    private def before(a: (Long, Double), b: (Long, Double)): Boolean = {
-      val c = java.lang.Double.compare(-a._2, -b._2)
-      c < 0 || (c == 0 && a._1 < b._1)
-    }
-
-    /** False when a sim of at most `bound` can no longer enter. */
-    def admits(bound: Double): Boolean = top.length < m || !(bound < top.last._2)
-
-    def offer(id: Long, sim: Double): Unit = {
-      val c = (id, sim)
-      if ((top.length < m || before(c, top.last)) && !top.exists(_._1 == id)) {
-        val at = top.indexWhere(before(c, _))
-        top.insert(if (at < 0) top.length else at, c)
-        if (top.length > m) top.remove(m)
-      }
-    }
-
-    def result: Seq[(Long, Double)] = top.toSeq
-  }
-
-  /** The driver twin of Ann.nearestCells(n = 2) against the sfDir's
-    * trained centroids: a vector's two nearest cells by (round-6 cosine
-    * desc, cell asc), the shards a build or an append assigns it to.
-    */
-  private def nearestShards(spark: SparkSession, sfDir: String): ArrayData => Seq[Int] = {
-    val cents = Ann.kmeansLayout(spark, sfDir)._2.map { case (cell, v) => cell -> ArrayData.toArrayData(v) }
-    e => cents.map { case (cell, v) => (cell, CosineSimilarity.roundedCosine(e, true, v, false)) }
-      .sortBy { case (cell, sim) => (-sim, cell) }.take(2).map(_._1)
+    Some(new BuiltGraph(shards, s.meta(elect(nodes.iterator, s.nLayers).get),
+      buildEdges(OnDriver, shards, s).map { case (l, src, dst) => (l, src, dst, vec(dst)) }))
   }
 
   /** Beam search over the dumped graph for a batch of queries
@@ -802,7 +581,7 @@ object Hnsw {
     * ([[hopEdges]], over bucket-pruned scans), the whole-graph face
     * ([[readGraphFrom]] — compaction, stats, the maintenance plan), the
     * resident copy's load ([[loadCopy]], tombstones kept) and the scale
-    * path's append ([[appendDistributed]], its re-cap lists, tombstones
+    * path's append ([[appendInTasks]], its re-cap lists, tombstones
     * kept).
     */
   private def morResolve(all: DataFrame,
@@ -1701,24 +1480,26 @@ object Hnsw {
   // (layer, src) and subtract the tombstone sidecar — [[morResolve]] over
   // the sidecar state [[openGraph]] read.
   //
-  // Two paths, picked by the one [[DriverGraphMaxRows]] cap. A graph
+  // Two runners, picked by the one [[DriverGraphMaxRows]] cap. A graph
   // within it is maintained on the driver: each verb computes its rows
   // from the resident [[GraphCopy]] and writes them straight to Parquet
   // with [[Publish.writeRows]] — no Spark job; an append collects its
   // batch — then the registry installs the patched copy, so the next
-  // search starts no reload. A graph over the cap keeps
-  // the distributed verbs (the scale path). Both paths write row-identical
-  // artifacts (HnswMaintenanceSpec).
+  // search starts no reload. A graph over the cap runs as Spark jobs (the
+  // scale path); an append runs the same [[HnswKernel]] steps in tasks.
+  // Both write row-identical artifacts (HnswMaintenanceSpec).
   //
   // Crash-consistency: each verb first repairs the holdouts a crash inside
   // a swap left (the meta's, and compaction's base and shards), reads the
   // meta once as a [[GraphMeta]] value and commits its successor through
   // [[Publish.swap]] — a failed promote rolls back to the old meta (the
-  // single-writer repair rule; the serving walk never mutates). The
-  // remaining (documented) window is BETWEEN a sidecar append and its
-  // meta swap — a crash there leaves the fingerprint one batch behind the
-  // sidecars, which the staleness probe reports as stale (loud, not
-  // silent) and the next compaction repairs.
+  // single-writer repair rule; the serving walk never mutates). An
+  // append's delta, replaced and shards rows land together or not at all
+  // ([[Publish.appendAll]]), a compaction's base and shards likewise
+  // ([[publishCompacted]]). The remaining (documented) window is BETWEEN
+  // the sidecar writes and the meta swap — a crash there leaves the
+  // fingerprint one batch behind the sidecars, which the staleness probe
+  // reports as stale (loud, not silent) and the next compaction repairs.
 
   /** Run a maintenance verb's body, then bump the graph's generation
     * however the body ends: a verb that throws after some of its writes
@@ -1881,8 +1662,10 @@ object Hnsw {
     * (tmp write, swap with rollback).
     */
   private def commitMeta(spark: SparkSession, metaDir: String, m: GraphMeta): Unit =
-    Publish.commitFrame(spark, MetaSchema,
-      Seq(InternalRow(m.entry, floatVec(m.entryEmb), m.corpusN, m.corpusFp, m.nLayers)), metaDir)
+    Publish.commitFrame(spark, MetaSchema, Seq(metaRow(m)), metaDir)
+
+  private def metaRow(m: GraphMeta): InternalRow =
+    InternalRow(m.entry, floatVec(m.entryEmb), m.corpusN, m.corpusFp, m.nLayers)
 
   /** Resolve a graph directory to its LIVE adjacency — [[morResolve]]
     * over the UNPRUNED scans (sidecars resolved through the same
@@ -1896,28 +1679,6 @@ object Hnsw {
 
   private def readGraphFrom(g: GraphRefs): DataFrame =
     morResolve(g.all, g.latest, g.tombs).select(col("layer"), col("src"), col("dst"), col("dst_emb"))
-
-  /** Driver twin of [[promotedPred]]. */
-  private def promoted(id: Long, layer: Int): Boolean =
-    graft.functions.Digests.digest60Of(id.toString) % Seq.fill(layer)(LayerMod.toLong).product == 0
-
-  /** Driver twin of [[levelCol]]. */
-  private def level(id: Long, nLayers: Int): Int = (1 until nLayers).count(promoted(id, _))
-
-  /** Driver twin of [[Streaming.fingerprintStream]] over ids: (n, fp). */
-  private def idsFingerprint(ids: Seq[Long]): (Long, Long) =
-    graft.functions.Digests.fingerprintOf(ids.map(_.toString))
-
-  /** Per-src top-`n` of scored (src, dst, sim, dst_emb) candidates —
-    * [[capEdges]]' discipline on the driver: one row per (src, dst) with
-    * its max sim and its first vector, then (sim desc, dst asc).
-    */
-  private def topPerSrc(rows: Seq[(Long, Long, Double, ArrayData)],
-                        n: Int): Seq[(Long, Long, Double, ArrayData)] =
-    rows.groupBy(_._1).toSeq.flatMap { case (_, out) =>
-      out.groupBy(_._2).values.map(ps => ps.head.copy(_3 = ps.map(_._3).max)).toSeq
-        .sortBy(r => (-r._3, r._2)).take(n)
-    }
 
   /** APPEND new vectors ((vec_id, embedding) rows) to a caller-owned
     * graph clone WITHOUT a rebuild: assign each new node to its 2 nearest
@@ -1936,11 +1697,14 @@ object Hnsw {
     * existing id would count twice in the fingerprint and land twice in
     * the shards. A graph within [[DriverGraphMaxRows]] with an
     * `array<float>` batch appends on the driver, from its resident copy;
-    * any other appends through the distributed verb (the scale path),
-    * whose membership check is a shards-sidecar point lookup.
+    * any other in Spark tasks ([[appendInTasks]], the scale path), whose
+    * membership check is a shards-sidecar point lookup. Both run
+    * [[appendEdges]], and both land the delta, replaced and shards rows
+    * together or not at all ([[Publish.appendAll]]): a failed append
+    * leaves the graph as it was, and may be retried.
     */
   def appendToGraph(spark: SparkSession, sfDir: String, edgesDir: String,
-                    metaDir: String, newVecs: DataFrame): Unit = {
+                    metaDir: String, newVecs: DataFrame): Unit = labeled(spark, "hnsw-append") {
     GraftFunctions.register(spark)
     val vecs = newVecs.select(col("vec_id"), col("embedding"))
     // on the driver: the copy and the batch, collected
@@ -1961,62 +1725,35 @@ object Hnsw {
       s"hnsw: appendToGraph ids ${present.sorted.take(5).mkString(", ")} are already members of $edgesDir")
     mutating(spark, edgesDir, metaDir) {
       onDriver.map { case (c, nv) => appendOnDriver(spark, sfDir, edgesDir, metaDir, c, nv) }.orElse {
-        appendDistributed(spark, sfDir, edgesDir, metaDir, vecs)
+        appendInTasks(spark, sfDir, edgesDir, metaDir, vecs, ids)
         None
       }
     }
   }
 
-  /** [[appendToGraph]] computed on the driver from the resident copy —
-    * the distributed verb's twin, step for step: nearest-2 cells by
-    * (round-6 cosine desc, cell asc) as in Ann.nearestCells, top-M
-    * out-edges within the touched shards, reverse edges, the re-cap of
-    * the in-link targets' gen-resolved lists at MaxDegree, gen, the
-    * additive fingerprint and the promoted entry. Returns the patched
-    * copy.
+  /** [[appendToGraph]] on the driver from the resident copy: [[appendEdges]]
+    * on the [[OnDriver]] runner over the copy's touched-shard members and
+    * gen-resolved lists. Returns the patched copy.
     */
   private def appendOnDriver(spark: SparkSession, sfDir: String, edgesDir: String, metaDir: String,
                              c: GraphCopy, nv: Seq[(Long, ArrayData)]): GraphCopy = {
-    val nLayers = c.meta.nLayers
-    val shardsOf = nearestShards(spark, sfDir)
-    val newShards = nv.flatMap { case (id, e) => shardsOf(e).map(sh => (id, e, sh)) }
+    val of = shardsOf(Ann.kmeansLayout(spark, sfDir)._2)
+    val newShards = nv.flatMap { case (id, e) => of(e).map(sh => (id, e, sh)) }
     val members = newShards.map(_._3).distinct
       .flatMap(sh => c.members.getOrElse(sh, Nil).map { case (id, e) => (id, e, sh) }) ++ newShards
-    val memberVec = members.map(m => m._1 -> m._2).toMap
-    val newVec = nv.toMap
     val gen = c.maxGen + 1
-    val delta = (0 until nLayers).flatMap { layer =>
-      def at(id: Long): Boolean = promoted(id, layer)
-      val mems = members.filter(m => at(m._1)).groupBy(_._3)
-      // new-node out-edges: top-M within the touched shards
-      val newOut = topPerSrc(newShards.filter(n => at(n._1)).flatMap { case (src, ea, sh) =>
-        mems.getOrElse(sh, Nil).collect { case (dst, eb, _) if dst != src =>
-          (src, dst, CosineSimilarity.roundedCosine(ea, true, eb, true), eb) }
-      }, M)
-      // navigability: the in-link targets take the reverse edge and
-      // re-cap at MaxDegree, their current sims recomputed from the
-      // member vector and each row's dst vector
-      val rev = newOut.collect { case (src, dst, sim, _) if !newVec.contains(dst) => (dst, src, sim, newVec(src)) }
-      val old = rev.map(_._1).distinct.flatMap { src =>
-        c.edges(layer).getOrElse(src, Array.emptyLongArray).toSeq.map(dst =>
-          (src, dst, CosineSimilarity.roundedCosine(memberVec(src), true, c.vecs(dst), true), c.vecs(dst)))
-      }
-      (newOut ++ topPerSrc(old ++ rev, MaxDegree)).map { case (src, dst, _, e) => (layer, src, dst, e) }
-    }
+    val delta = appendEdges(OnDriver, members, nv.map(_._1).toSet, c.meta.nLayers)(_.flatMap { case (l, t) =>
+      c.edges(l).getOrElse(t, Array.emptyLongArray).toSeq.map(d => (l, t, d, c.vecs(d))) })
     val replaced = delta.map(r => (r._1, r._2)).distinct
-    Publish.fanOut("hnsw-append", Seq(
-      () => Publish.writeRows(spark, DeltaSchema, delta.map { case (l, src, dst, e) =>
-        InternalRow(src, dst, e, gen, l, srcBucket(src)) }, deltaPath(edgesDir), "append", "layer", "src_bucket"),
-      () => Publish.writeRows(spark, ReplacedSchema,
-        replaced.map { case (l, src) => InternalRow(l, src, gen) }, replacedPath(edgesDir), "append"),
-      () => Publish.writeRows(spark, ShardsSchema,
-        newShards.map { case (id, e, sh) => InternalRow(id, e, sh) }, shardsPath(edgesDir), "append", "shard")))
-    // incremental meta: additive fp, count, entry re-election — committed
-    // LAST (see the maintenance-verbs comment)
-    val (n, fp) = idsFingerprint(nv.map(_._1))
-    val grown = c.meta.plus(n, fp)
-    val meta = nv.filter(v => promoted(v._1, nLayers - 1)).sortBy(_._1).headOption
-      .filter(_._1 < grown.entry).fold(grown) { case (id, e) => grown.enter(id, e) }
+    Publish.appendAll(spark, Seq(
+      deltaPath(edgesDir) -> (Publish.writeRows(spark, DeltaSchema, delta.map { case (l, src, dst, e) =>
+        InternalRow(src, dst, e, gen, l, srcBucket(src)) }, _, "overwrite", "layer", "src_bucket")),
+      replacedPath(edgesDir) -> (Publish.writeRows(spark, ReplacedSchema,
+        replaced.map { case (l, src) => InternalRow(l, src, gen) }, _, "overwrite")),
+      shardsPath(edgesDir) -> (Publish.writeRows(spark, ShardsSchema,
+        newShards.map { case (id, e, sh) => InternalRow(id, e, sh) }, _, "overwrite", "shard"))))
+    // the meta is committed LAST (see the maintenance-verbs comment)
+    val meta = appended(c.meta, nv.map(_._1), nv.toMap)
     commitMeta(spark, metaDir, meta)
     val superseded = replaced.toSet
     GraphCopy.of(edgesDir, c.rows.filterNot(r => superseded((r._1, r._2))) ++ delta.iterator,
@@ -2026,113 +1763,42 @@ object Hnsw {
       c.deltaRows + delta.length, meta)
   }
 
-  /** [[appendToGraph]] as distributed jobs — the scale path. */
-  private def appendDistributed(spark: SparkSession, sfDir: String, edgesDir: String,
-                                metaDir: String, newVecs: DataFrame): Unit = {
+  /** [[appendToGraph]] in Spark tasks, the scale path: [[appendEdges]] on
+    * the [[InTasks]] runner over the batch and its touched shards' members
+    * (a partition-pruned sidecar read); the in-link targets' lists are the
+    * graph's [[morResolve]] resolution with tombstones kept, as on the
+    * driver path.
+    */
+  private def appendInTasks(spark: SparkSession, sfDir: String, edgesDir: String, metaDir: String,
+                            vecs: DataFrame, ids: Seq[Long]): Unit = {
+    import spark.implicits._
     val cents = Ann.kmeansLayout(spark, sfDir)._2
     val old = readMeta(spark, metaDir)
-    val nLayers = old.nLayers
-    val newShards = Ann.nearestCells(newVecs, Ann.centroidsDf(spark, cents), "vec_id", "embedding", n = 2)
-      .select(col("vec_id"), col("embedding"), col("cell").as("shard"))
-      .localCheckpoint()
-    val touched = newShards.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val members = readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
-      .filter(col("shard").isin(touched: _*))
-      .unionByName(newShards)
-      .localCheckpoint()
-    val newIds = newShards.select(col("vec_id")).distinct().localCheckpoint()
-    // the graph opened ONCE for all layers (a fresh read per layerDelta
-    // re-listed the (layer, src_bucket) tree per layer — ~0.2 s of pure
-    // FileIndex planning each): the in-link targets' current lists are the
-    // merge-on-read resolution with tombstones kept, as on the driver
-    // path, and the per-layer filters below still partition-prune it
+    val newShards = shardsInTasks(vecs.select(col("vec_id"), col("embedding").cast("array<float>"))
+      .as[(Long, Array[Float])], cents)
+    val touched = newShards.select(col("shard")).distinct().collect().map(_.getInt(0)).toSeq
+    val members = readSidecar(spark, shardsPath(edgesDir), ShardsSchema).filter(col("shard").isin(touched: _*))
+      .unionByName(newShards).as[(Long, Array[Float], Int)].rdd.map { case (id, e, sh) => (id, floatVec(e), sh) }
     val g = openGraph(spark, edgesDir)
-    val lists = morResolve(g.all, g.latest, None)
     val gen = g.maxGen + 1
-    def layerDelta(layer: Int): DataFrame = {
-      val news = if (layer >= 1) newShards.filter(promotedPred(layer)) else newShards
-      val mems = if (layer >= 1) members.filter(promotedPred(layer)) else members
-      // new-node out-edges: top-M within the touched shards
-      val pairs = news
-        .select(col("shard"), col("vec_id").as("src"), col("embedding").as("ea"))
-        .join(mems.select(col("shard"), col("vec_id").as("dst"),
-          col("embedding").as("dst_emb")), Seq("shard"))
-        .filter(col("src") =!= col("dst"))
-        .withColumn("sim",
-          round(GraftFunctions.cosineSim(col("ea"), col("dst_emb")), 6))
-        .groupBy(col("src"), col("dst"))
-        .agg(max(col("sim")).as("sim"), first(col("dst_emb")).as("dst_emb"))
-      val wSrc = Window.partitionBy(col("src"))
-        .orderBy(col("sim").desc, col("dst").asc)
-      val newOut = pairs.withColumn("__rn", row_number().over(wSrc))
-        .filter(col("__rn") <= M)
-        .select(col("src"), col("dst"), col("sim"), col("dst_emb"))
-        .localCheckpoint()
-      // navigability: the in-link targets (existing nodes a new node now
-      // points at) take the reverse edge and re-cap at MaxDegree —
-      // their current sims recompute from the member/new embeddings
-      val touchedDst = newOut
-        .join(newIds.select(col("vec_id").as("dst")), Seq("dst"), "left_anti")
-        .select(col("dst").as("src")).distinct()
-      val srcEmb = members.select(col("vec_id").as("src"),
-        col("embedding").as("__se")).dropDuplicates("src")
-      val rev = newOut
-        .join(newShards.select(col("vec_id").as("src"),
-          col("embedding").as("__ne")).dropDuplicates("src"), Seq("src"))
-        .select(col("dst").as("src"), col("src").as("dst"),
-          col("sim"), col("__ne").as("dst_emb"))
-        .join(newIds.select(col("vec_id").as("src")), Seq("src"), "left_anti")
-      val recapped = lists.filter(col("layer") === layer)
-        .join(broadcast(touchedDst), Seq("src"), "left_semi")
-        .join(srcEmb, Seq("src"))
-        .withColumn("sim",
-          round(GraftFunctions.cosineSim(col("__se"), col("dst_emb")), 6))
-        .select(col("src"), col("dst"), col("sim"), col("dst_emb"))
-        .unionByName(rev)
-        .groupBy(col("src"), col("dst"))
-        .agg(max(col("sim")).as("sim"), first(col("dst_emb")).as("dst_emb"))
-        .withColumn("__rn", row_number().over(wSrc))
-        .filter(col("__rn") <= MaxDegree)
-        .select(col("src"), col("dst"), col("sim"), col("dst_emb"))
-      newOut.unionByName(recapped)
-        .select(lit(layer).as("layer"), col("src"), col("dst"),
-          col("dst_emb"), lit(gen).as("gen"))
-    }
-    // the per-layer delta builds are independent jobs over disjoint layer
-    // filters — overlap them on driver threads (guide §2.6) so one
-    // layer's straggler tail back-fills with the next layer's stages
-    // (each layerDelta materializes a localCheckpoint mid-build); the
-    // union keeps the deterministic 0..nLayers order either way
-    val delta = Publish.fanOut("hnsw-append",
-      (0 until nLayers).map(l => () => layerDelta(l))).reduce(_ unionByName _).localCheckpoint()
-    // the three sidecar writes land in independent trees and the two meta
-    // reads scan already-checkpointed frames — overlap all five on driver
-    // threads (guide §2.6); the meta COMMIT still happens strictly after
-    // every task finished, preserving the sidecars-then-meta crash ordering
-    val Seq(_, _, _, deltaFp: Row, promoted: Array[Row]) =
-      Publish.fanOut[Any]("hnsw-append", Seq(
-        () => delta
-          .withColumn("src_bucket", srcBucketCol(col("src")))
-          .write.mode("append").partitionBy("layer", "src_bucket")
-          .parquet(deltaPath(edgesDir)),
-        () => delta.select(col("layer"), col("src")).distinct()
-          .withColumn("gen", lit(gen))
-          .write.mode("append").parquet(replacedPath(edgesDir)),
-        () => newShards.write.mode("append").partitionBy("shard")
-          .parquet(shardsPath(edgesDir)),
-        () => graft.streaming.Streaming.fingerprintStream(
-          newIds, col("vec_id").cast("string")).head(),
-        // the min-id new node promoted to the top layer, with its vector
-        () => newShards.filter(promotedPred(nLayers - 1))
-          .orderBy(col("vec_id")).select(col("vec_id"), col("embedding")).head(1)))
-    // incremental meta: additive fp, count, entry re-election — committed
-    // LAST (see the maintenance-verbs comment)
-    val grown = old.plus(deltaFp.getLong(0), deltaFp.getLong(1))
-    commitMeta(spark, metaDir, promoted.headOption.filter(_.getLong(0) < old.entry) match {
-      case Some(e) => grown.copy(entry = e.getLong(0), entryEmb = e.getSeq[Float](1))
-      case None => grown
-    })
+    val delta = appendEdges(InTasks(spark.sparkContext.defaultParallelism), members, ids.toSet, old.nLayers) {
+      targets =>
+        // the targets' lists, read from their src buckets only, as a hop reads
+        val ts = targets.map(_._2).distinct().collect().toSeq
+        morResolve(g.all.filter(col("src_bucket").isin(ts.map(srcBucket).distinct: _*) && col("src").isin(ts: _*)),
+          g.latest, None).select(col("layer"), col("src"), col("dst"), col("dst_emb"))
+          .as[(Int, Long, Long, Array[Float])].rdd.map { case (l, t, d, e) => (l, t, d, floatVec(e)) }
+    }.map { case (l, src, dst, e) => (l, src, dst, e.toFloatArray(), gen) }
+      .toDF("layer", "src", "dst", "dst_emb", "gen").localCheckpoint()
+    Publish.appendAll(spark, Seq(
+      deltaPath(edgesDir) -> (delta.withColumn("src_bucket", srcBucketCol(col("src")))
+        .write.mode("overwrite").partitionBy("layer", "src_bucket").parquet(_)),
+      replacedPath(edgesDir) -> (delta.select(col("layer"), col("src"), col("gen")).distinct()
+        .write.mode("overwrite").parquet(_)),
+      shardsPath(edgesDir) -> (newShards.write.mode("overwrite").partitionBy("shard").parquet(_))))
+    // the meta is committed LAST (see the maintenance-verbs comment)
+    commitMeta(spark, metaDir, appended(old, ids, id =>
+      floatVec(newShards.filter(col("vec_id") === id).head().getSeq[Float](1))))
   }
 
   /** Logical DELETE: append the ids to the tombstone sidecar (KBs per
@@ -2150,7 +1816,7 @@ object Hnsw {
     * the resident copy; over it, as Spark jobs (the scale path).
     */
   def deleteFromGraph(spark: SparkSession, edgesDir: String, metaDir: String,
-                      ids: Seq[Long]): Unit = {
+                      ids: Seq[Long]): Unit = labeled(spark, "hnsw-delete") {
     val copy = verbCopy(spark, edgesDir, metaDir)
     lazy val g = openGraph(spark, edgesDir)
     // already-tombstoned ids drop out: checked against the copy, or the
@@ -2179,39 +1845,37 @@ object Hnsw {
       // compaction — a beam must start somewhere on the next search
       val meta =
         if (!fresh.contains(old.entry)) shrunk
-        else copy.fold(electEntry(spark, edgesDir, g.tombs, fresh, shrunk))(c =>
-          electOnDriver(c.memberVecs -- c.tombs -- fresh, edgesDir, shrunk))
+        else copy.fold(electInTasks(spark, edgesDir, g.tombs, fresh, shrunk))(c =>
+          electOnDriver((c.memberVecs -- c.tombs -- fresh).iterator, edgesDir, shrunk))
       commitMeta(spark, metaDir, meta)
       copy.map(c => c.copy(tombs = c.tombs ++ fresh, meta = meta))
     }
   }
 
-  /** Elect an entry point from the live shard members — those neither
-    * in the tombstone state `tombs` (a literal when small, an anti-join
-    * when not) nor in `fresh`: the min-id node of the HIGHEST promotion
-    * level present (the build's rule generalized to the hierarchy),
-    * falling down level by level when a whole layer's membership is gone
-    * (layer-ℓ hops from a lower-level entry are no-ops; lower layers
-    * still navigate). One job; returns `meta` with the elected entry.
-    * Refuses an empty graph loudly instead of writing a 0-row meta.
+  /** [[elect]] in Spark tasks over the shards sidecar's members that are
+    * neither in the tombstone state `tombs` (a literal when small, an
+    * anti-join when not) nor in `fresh`: each task elects among its rows,
+    * then [[electOnDriver]] among the tasks' picks.
     */
-  private def electEntry(spark: SparkSession, edgesDir: String, tombs: Option[SidecarState[Seq[Long]]],
-                         fresh: Seq[Long], meta: GraphMeta): GraphMeta = {
-    val members = readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
-    val pick = minusTombs(if (fresh.isEmpty) members else members.filter(!col("vec_id").isin(fresh: _*)),
-        "vec_id", tombs)
-      .orderBy(levelCol(meta.nLayers).desc, col("vec_id").asc)
-      .select(col("vec_id"), col("embedding")).head(1)
-    require(pick.nonEmpty,
-      s"hnsw: cannot elect an entry — no live nodes remain in $edgesDir")
-    meta.copy(entry = pick(0).getLong(0), entryEmb = pick(0).getSeq[Float](1))
+  private def electInTasks(spark: SparkSession, edgesDir: String, tombs: Option[SidecarState[Seq[Long]]],
+                           fresh: Seq[Long], meta: GraphMeta): GraphMeta = {
+    import spark.implicits._
+    val nl = meta.nLayers
+    val picks = minusTombs(readSidecar(spark, shardsPath(edgesDir), ShardsSchema)
+        .filter(!col("vec_id").isInCollection(fresh)), "vec_id", tombs)
+      .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+      .mapPartitions(elect(_, nl).iterator).collect()
+    electOnDriver(picks.iterator.map { case (id, e) => id -> floatVec(e) }, edgesDir, meta)
   }
 
-  /** [[electEntry]] over a driver-held live membership. */
-  private def electOnDriver(live: Map[Long, ArrayData], edgesDir: String, meta: GraphMeta): GraphMeta = {
-    require(live.nonEmpty, s"hnsw: cannot elect an entry — no live nodes remain in $edgesDir")
-    val id = live.keys.minBy(id => (-level(id, meta.nLayers), id))
-    meta.enter(id, live(id))
+  /** `meta` entered at the [[elect]]ed node of a driver-held live
+    * membership. Refuses an empty graph loudly instead of writing a 0-row
+    * meta.
+    */
+  private def electOnDriver(live: Iterator[(Long, ArrayData)], edgesDir: String, meta: GraphMeta): GraphMeta = {
+    val pick = elect(live, meta.nLayers)
+    require(pick.nonEmpty, s"hnsw: cannot elect an entry — no live nodes remain in $edgesDir")
+    meta.enter(pick.get._1, pick.get._2)
   }
 
   /** PHYSICAL repair: fold base + deltas − tombstones into a fresh base
@@ -2229,12 +1893,12 @@ object Hnsw {
 
   private def compactWith(spark: SparkSession, edgesDir: String, metaDir: String,
                           copy: Option[GraphCopy]): Unit =
-    mutating(spark, edgesDir, metaDir) {
+    labeled(spark, "hnsw-compact")(mutating(spark, edgesDir, metaDir) {
       copy.map(compactOnDriver(spark, edgesDir, metaDir, _)).orElse {
         compactDistributed(spark, edgesDir, metaDir)
         None
       }
-    }
+    })
 
   /** [[compactGraph]] from the resident copy; returns the patched copy. */
   private def compactOnDriver(spark: SparkSession, edgesDir: String, metaDir: String,
@@ -2252,7 +1916,7 @@ object Hnsw {
     val meta =
       if (!c.tombs(c.meta.entry)) c.meta
       else {
-        val elected = electOnDriver(members.map(m => m._2 -> m._3).toMap, edgesDir, c.meta)
+        val elected = electOnDriver(members.iterator.map(m => m._2 -> m._3), edgesDir, c.meta)
         commitMeta(spark, metaDir, elected)
         elected
       }
@@ -2260,7 +1924,7 @@ object Hnsw {
     GraphCopy.of(edgesDir, live.iterator, members, Set.empty, Map.empty, live.length, 0L, meta)
   }
 
-  /** [[compactGraph]] as distributed jobs — the scale path. */
+  /** [[compactGraph]] as Spark jobs — the scale path. */
   private def compactDistributed(spark: SparkSession, edgesDir: String, metaDir: String): Unit = {
     GraftFunctions.register(spark)
     val g = openGraph(spark, edgesDir)
@@ -2279,10 +1943,8 @@ object Hnsw {
     val old = readMeta(spark, metaDir)
     if (g.dead(Seq(old.entry)).nonEmpty)
       // shards were already rewritten minus the tombstones above, so the
-      // election pool is exactly the live membership; electEntry prefers
-      // the highest promoted level, falls back level by level, and
-      // refuses an empty graph instead of clobbering the meta
-      commitMeta(spark, metaDir, electEntry(spark, edgesDir, None, Nil, old))
+      // election pool is exactly the live membership
+      commitMeta(spark, metaDir, electInTasks(spark, edgesDir, None, Nil, old))
     dropSidecars(spark, edgesDir)
   }
 
@@ -2405,7 +2067,8 @@ object Hnsw {
   def maintainGraph(spark: SparkSession, edgesDir: String, metaDir: String): Boolean = {
     val copy = verbCopy(spark, edgesDir, metaDir)
     val compact = copy.map(_.decision).getOrElse(
-      maintenancePlan(spark, edgesDir).select(col("decision")).head().getString(0)) == "compact"
+      labeled(spark, "hnsw-maintain: plan")(
+        maintenancePlan(spark, edgesDir).select(col("decision")).head().getString(0))) == "compact"
     if (compact) compactWith(spark, edgesDir, metaDir, copy)
     compact
   }

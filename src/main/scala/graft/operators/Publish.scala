@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.StructType
   * artifact. The reference keeps its state in SQLite, where every write
   * commits atomically; here an artifact is a Parquet directory (or a
   * pointer file) made visible by renames, and a rename is the only
-  * atomic step a Hadoop filesystem offers. Four moves cover every writer:
+  * atomic step a Hadoop filesystem offers. These moves cover every writer:
   *
   *   - [[swap]]: rename the live directory aside to its holdout, promote
   *     the fully written tmp, roll back if the promote fails (the rename
@@ -45,6 +45,9 @@ import org.apache.spark.sql.types.StructType
   *     Spark job — every file staged in a hidden directory, then renamed
   *     into place once all are closed. [[commitFrame]] is its tmp write
   *     plus a [[swap]].
+  *   - [[appendAll]]: stage several appends, each in its own tmp
+  *     directory, and move their files into place only once all of them
+  *     were written.
   *
   * [[fanOut]] is the driver-thread pool the writers use to overlap
   * independent jobs and filesystem calls.
@@ -156,7 +159,7 @@ private[graft] object Publish {
     val conf = job.getConfiguration
     val fs = fsOf(spark, dir)
     val root = fs.makeQualified(new Path(dir))
-    val sink = if (root.toUri.getScheme == "file") LocalSink else new HadoopSink(fs, conf)
+    val sink = sinkOf(fs, root, conf)
     if (mode == "overwrite") fs.delete(root, true)
     failingWritesUnder.filter(root.toUri.getPath.startsWith(_))
       .foreach(p => throw new IOException(s"injected write failure under $p: $dir"))
@@ -200,12 +203,54 @@ private[graft] object Publish {
     override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] = new ParquetWriteSupport
   }
 
+  /** Append several writes to their target directories all or nothing.
+    * Each `(target, write)` writes a fresh staging sibling,
+    * `<target>-append-tmp`, on [[fanOut]] threads; once every write has
+    * succeeded, each staged tree's data files move to the same relative
+    * paths under their target. On any failure every staging directory,
+    * Spark's `_temporary` included, is removed and no target has changed.
+    */
+  def appendAll(spark: SparkSession, writes: Seq[(String, String => Unit)]): Unit = {
+    val fs = fsOf(spark, writes.head._1)
+    val staged = writes.map { case (target, write) =>
+      (fs.makeQualified(new Path(target + "-append-tmp")), fs.makeQualified(new Path(target)), write) }
+    try {
+      fanOut("append", staged.map { case (tmp, _, write) => () =>
+        fs.delete(tmp, true)
+        write(tmp.toString)
+      })
+      staged.foreach { case (tmp, target, _) => moveTree(fs, tmp, target) }
+    } finally staged.foreach(s => fs.delete(s._1, true))
+  }
+
+  /** Move the data files under `tmp` to the same relative paths under
+    * `target` (directories made through java.nio when local), then mark
+    * `target` with `_SUCCESS`.
+    */
+  private def moveTree(fs: FileSystem, tmp: Path, target: Path): Unit = {
+    val sink = sinkOf(fs, target, fs.getConf)
+    def files(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq
+      .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+      .flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st.getPath))
+    val root = tmp.toUri.getPath.length + 1
+    files(tmp).foreach { f =>
+      val live = new Path(target, f.toUri.getPath.substring(root))
+      sink.mkdirs(live.getParent)
+      if (!fs.rename(f, live)) throw new IOException(s"publish: could not move $f into $target")
+    }
+    sink.mkdirs(target)
+    sink.touch(new Path(target, "_SUCCESS"))
+  }
+
   /** Where [[writeRows]] creates its files and directories. */
   private sealed trait Sink {
     def file(p: Path): OutputFile
     def mkdirs(p: Path): Unit
     def touch(p: Path): Unit
   }
+
+  private def sinkOf(fs: FileSystem, root: Path, conf: Configuration): Sink =
+    if (root.toUri.getScheme == "file") LocalSink else new HadoopSink(fs, conf)
 
   private object LocalSink extends Sink {
     private def nio(p: Path) = Paths.get(p.toUri)

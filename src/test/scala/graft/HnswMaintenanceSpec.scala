@@ -13,8 +13,9 @@ import graft.plans.HnswGraphRegistry
   * the driver from its resident copy, a larger one by the distributed
   * verbs. Both must write the same rows, the copy a verb patches must
   * equal a fresh load of what it wrote, a failed compaction must leave the
-  * served graph as it was, and an append must refuse ids the graph
-  * already holds.
+  * served graph as it was, so must a failed append, an append must refuse
+  * ids the graph already holds, and a build must refuse a corpus that
+  * repeats an id.
   */
 class HnswMaintenanceSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -186,6 +187,45 @@ class HnswMaintenanceSpec extends AnyFunSuite {
       withCap(cap)(Hnsw.compactGraph(spark, ce, cm))
       assert(!exists(Hnsw.tombstonesPath(ce)) && ranked(ce, cm, panel(sf)) == served)
     }
+
+  for ((path, cap) <- Seq("driver" -> Hnsw.DriverGraphMaxRows, "distributed" -> 0L))
+    test(s"an append whose delta write fails leaves the graph and its results as before, and a retry lands ($path path)") {
+      val (de, dm) = Hnsw.maintDemoLayout(spark, sf)
+      val (ce, cm) = cloneGraph(de, dm, s"-append-crash-$path")
+      val before = artifacts(ce, cm).map(contents)
+      val served = ranked(ce, cm, panel(sf))
+      val nv = fresh(sf, Seq((960001L, 5L, 9L), (960002L, 101L, 202L)))
+      withCap(cap) {
+        intercept[Exception](FailingCommitProtocol.failingWritesUnder(spark, Hnsw.deltaPath(ce))(
+          Hnsw.appendToGraph(spark, sf, ce, cm, nv)))
+      }
+      assert(artifacts(ce, cm).map(contents) == before, "the failed append changed the graph")
+      Seq(Hnsw.deltaPath(ce), Hnsw.replacedPath(ce), Hnsw.shardsPath(ce)).foreach { d =>
+        assert(!exists(d + "-append-tmp") && !exists(d + "/_temporary"), s"the failed append left staging files by $d")
+      }
+      assert(ranked(ce, cm, panel(sf)) == served, "the failed append changed the served results")
+      withCap(0)(assert(ranked(ce, cm, panel(sf)) == served, "the per-hop walk serves other results"))
+      // the retry is not refused as "already members", and lands whole
+      val n = spark.read.parquet(cm).head().getAs[Long]("corpus_n")
+      withCap(cap)(Hnsw.appendToGraph(spark, sf, ce, cm, nv))
+      assert(spark.read.parquet(cm).head().getAs[Long]("corpus_n") == n + 2)
+      assert(spark.read.parquet(Hnsw.shardsPath(ce)).filter(col("vec_id").isin(960001L, 960002L))
+        .select("vec_id").distinct().count() == 2)
+      assert(spark.read.parquet(Hnsw.deltaPath(ce)).filter(col("src") === 960001L).count() > 0)
+    }
+
+  test("a build refuses a corpus that repeats a vec_id, on the driver and in Spark tasks") {
+    // the sf0.001 corpus plus a second row for id 7, carrying row 8's vector
+    val dir = s"${sys.props("java.io.tmpdir")}/graft-hnsw-repeated-id-sf"
+    val emb = Tables.embeddings(spark, sf)
+    emb.unionByName(emb.filter(col("vec_id") === 8L).withColumn("vec_id", lit(7L)))
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    graft.operators.Ann.kmeansLayout(spark, dir)
+    Seq("driver" -> Hnsw.DriverGraphMaxRows, "distributed" -> 0L).foreach { case (path, cap) =>
+      val e = withCap(cap)(intercept[IllegalArgumentException](Hnsw.layout(spark, dir)))
+      assert(e.getMessage.contains("repeats vec_id 7"), s"$path path: ${e.getMessage}")
+    }
+  }
 
   for ((path, cap) <- Seq("driver" -> Hnsw.DriverGraphMaxRows, "distributed" -> 0L))
     test(s"an append refuses repeated ids and ids already in the graph, tombstoned ones included ($path path)") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
@@ -44,13 +42,19 @@ object PlanTestUtil {
     * (inherited by staging and broadcast jobs), so other threads' jobs
     * never count.
     */
-  def jobsOf(spark: SparkSession)(body: => Unit): Int = {
+  def jobsOf(spark: SparkSession)(body: => Unit): Int = jobDescriptionsOf(spark)(body).length
+
+  /** The `spark.job.description` of each Spark job `body` starts, in start
+    * order, under a unique job group as in [[jobsOf]]. A job nobody
+    * labelled carries the group's own description and reads None.
+    */
+  def jobDescriptionsOf(spark: SparkSession)(body: => Unit): Seq[Option[String]] = {
     val tag = s"counted-jobs-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null &&
-            tag == j.properties.getProperty("spark.jobGroup.id")) jobs.incrementAndGet()
+        if (j.properties != null && tag == j.properties.getProperty("spark.jobGroup.id"))
+          jobs.add(Option(j.properties.getProperty("spark.job.description")).filter(_ != tag))
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -61,6 +65,6 @@ object PlanTestUtil {
       spark.sparkContext.clearJobGroup()
       spark.sparkContext.removeSparkListener(listener)
     }
-    jobs.get()
+    jobs.toArray(Array.empty[Option[String]]).toSeq
   }
 }

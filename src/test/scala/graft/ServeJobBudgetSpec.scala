@@ -66,6 +66,19 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     */
   val BuildJobBudget = 1
 
+  /** Jobs of a cold scale-path `Hnsw.layout` of this fixture
+    * (`Hnsw.DriverGraphMaxRows` = 0) with the k-means layout memo warm:
+    * ~40 while the scale path scored shard-pair joins as DataFrames;
+    * 10 once it runs the graph kernel in Spark tasks.
+    */
+  val ScaleBuildJobBudget = 10
+
+  /** Jobs of a scale-path append of two vectors to a clone of this
+    * fixture's graph: 13 once it runs the graph kernel in Spark
+    * tasks.
+    */
+  val ScaleAppendJobBudget = 13
+
   /** Jobs started by `body` (other threads' jobs never count). */
   private def jobsOf(body: => Unit): Int = PlanTestUtil.jobsOf(spark)(body)
 
@@ -243,6 +256,31 @@ class ServeJobBudgetSpec extends AnyFunSuite {
     assert(spark.read.parquet(cm).head().getAs[Long]("entry") !== entry)
     assert(jobs <= UpdateJobBudget,
       s"the update round ran $jobs jobs, over its budget of $UpdateJobBudget")
+  }
+
+  test("the scale path's build, append and compaction label every job, within their job budgets") {
+    graft.operators.Ann.kmeansLayout(spark, sf)
+    Hnsw.resetMemos()
+    val saved = Hnsw.DriverGraphMaxRows
+    Hnsw.DriverGraphMaxRows = 0
+    try {
+      val build = PlanTestUtil.jobDescriptionsOf(spark)(Hnsw.layout(spark, sf))
+      val (ce, cm) = baseClone("-scale-jobs-test")
+      val fresh = Tables.embeddings(spark, sf).filter(col("vec_id").isin(3L, 7L))
+        .select((col("vec_id") + 930000L).as("vec_id"), transform(col("embedding"), x => -x).as("embedding"))
+        .localCheckpoint()
+      val append = PlanTestUtil.jobDescriptionsOf(spark)(Hnsw.appendToGraph(spark, sf, ce, cm, fresh))
+      val compact = PlanTestUtil.jobDescriptionsOf(spark)(Hnsw.compactGraph(spark, ce, cm))
+      Seq("build" -> build, "append" -> append, "compaction" -> compact).foreach { case (verb, jobs) =>
+        info(s"scale-path $verb: ${jobs.length} Spark jobs: ${jobs.flatten.distinct.mkString(", ")}")
+        assert(jobs.nonEmpty && jobs.forall(_.nonEmpty),
+          s"the scale-path $verb ran ${jobs.count(_.isEmpty)} of its ${jobs.length} jobs unlabelled")
+      }
+      assert(build.length <= ScaleBuildJobBudget,
+        s"the scale-path build ran ${build.length} jobs, over its budget of $ScaleBuildJobBudget")
+      assert(append.length <= ScaleAppendJobBudget,
+        s"the scale-path append ran ${append.length} jobs, over its budget of $ScaleAppendJobBudget")
+    } finally Hnsw.DriverGraphMaxRows = saved
   }
 
   /** A private clone of this fixture's base graph (edges, shards, meta). */
